@@ -100,6 +100,15 @@ object Dsl {
     df
   }
 
+  /** Persist `df` DISK_ONLY (ring-tracked) and return a frame whose
+    * plan IS the cached relation: every consumer — self-union branches
+    * included — reads the one cache, lineage is kept, and nothing
+    * runs until an action. An RDD wrap (`createDataFrame(df.rdd)`)
+    * shares the same way but executes the frame when it is BUILT. */
+  private def sharedFrame(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(trackPersist(
+      df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)))
+
   /** Unpersist every tracked barrier frame (lineage keeps later
     * actions correct — they recompute). Called by `Search.invalidate`
     * and usable directly by a serving layer between batches. */
@@ -6407,15 +6416,15 @@ object Dsl {
   }
 
   /** Served-path lookup fetcher: the same 1-row GET against the
-    * indices' docmeta doc-values. */
-  private def servedFetcher(spark: SparkSession, indexDirs: Seq[String])(
+    * RESOLVED roots' docmeta doc-values — a footer probe per member
+    * for the path, then one pruned read across every member. */
+  private def servedFetcher(spark: SparkSession, roots: Seq[String])(
       id: Long, path: String): Seq[Scalar] = {
-    indexDirs.map(Search.requireIndex(spark, _)).flatMap { root =>
-      val d = spark.read.parquet(s"$root/docmeta")
-      if (!d.columns.contains(path))
-        fail(s"terms lookup path '$path' is not a stored doc-value")
-      d.filter(col("doc_id") === id).select(col(path)).collect().toSeq
-    }.flatMap(r => Option(r.get(0))).map(rowScalar(_, path))
+    if (roots.exists(r => !Search.familyColumns(spark, r, "docmeta").contains(path)))
+      fail(s"terms lookup path '$path' is not a stored doc-value")
+    Search.indexTable(spark, roots, "docmeta")
+      .filter(col("doc_id") === id).select(col(path)).collect().toSeq
+      .flatMap(r => Option(r.get(0))).map(rowScalar(_, path))
   }
 
   /** The plan of a query compiled in FILTER CONTEXT (scored = false,
@@ -6814,14 +6823,13 @@ object Dsl {
     import spark.implicits._
     val suggs = parseSuggestBody(json)
     val root = Search.requireIndex(spark, indexDir)
-    val live = spark.read.parquet(s"$root/postings")
+    val live = Search.indexTable(spark, Seq(root), "postings")
       .filter($"field" === Search.DefaultField)
-      .join(Search.tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(Search.indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
     // vocab-grain barrier — the dslSuggestOf sharing, served form
-    val vocab0 = trackPersist(live.select($"doc_id", $"tok", $"tf")
-      .groupBy($"tok".as("token")).agg(sum($"tf").as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val vocab = spark.createDataFrame(vocab0.rdd, vocab0.schema)
+    val vocab = sharedFrame(live.select($"doc_id", $"tok", $"tf")
+      .groupBy($"tok".as("token")).agg(sum($"tf").as("freq")))
     // phrase freq, served shape: candidate-pair adjacency counted from
     // the POSITIONAL postings (y = x + 1), summed across docs — the
     // candidate semi-join prunes the postings to ≤|cands| terms before
@@ -7855,7 +7863,7 @@ object Dsl {
     // not localCheckpoint: lineage survives, so an executor loss
     // recomputes instead of failing the job (the msearchOf contract);
     // the frame is bucket-grain — tiny either way
-    val groupedCached = (
+    val grouped = sharedFrame(
       if (gkNames.isEmpty) prep.agg(statAgg.head, statAgg.tail: _*)
       else {
         // one set per parent key; {parent, child} for bucket subs —
@@ -7871,8 +7879,7 @@ object Dsl {
           grouping(col(n)).as(s"g_$n"))
         prep.groupingSets(sets, gkNames.map(col): _*)
           .agg(aggOut.head, aggOut.tail: _*)
-      }).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    trackPersist(groupedCached)
+      })
     // The per-bucket/per-spec consumers below SELF-UNION this frame
     // (one branch per bucket, one cut per spec). Catalyst's cached-plan
     // matching does not survive the union deduplication when the frame
@@ -7881,13 +7888,11 @@ object Dsl {
     // re-ran the whole scan+aggregate lineage — measured: the 10-cell
     // adjacency matrix executed 11 corpus scans (PLANS r12 caught 4 on
     // an earlier shape; the grouping-sets form re-opened it). Pinning
-    // the branches to ONE RDD over the persisted frame makes the one
-    // corpus pass actually one: every branch scans the same bucket-
-    // grain RDD, which reads the DISK_ONLY cache, which keeps full
-    // lineage (the executor-loss stance of the persist is unchanged).
-    // Row→InternalRow round-trip is bucket-grain — a few hundred rows.
-    val grouped = groupedCached.sparkSession.createDataFrame(
-      groupedCached.rdd, groupedCached.schema)
+    // the branches to the cached relation itself ([[sharedFrame]])
+    // makes the one corpus pass actually one: every branch reads the
+    // same DISK_ONLY cache, which keeps full lineage (the executor-loss
+    // stance of the persist is unchanged), and building the request
+    // runs nothing.
     val nullD = lit(null).cast("double")
     val nullL = lit(null).cast("long")
     // output (v_count…v_avg) for a metric kind, from lazily-built
@@ -9799,9 +9804,10 @@ object Dsl {
     val p = if (scoreSort) planOf(b.query, 0) else filterPlanOf(b.query)
     val scored = topHitsScoreSort(th, p)
     val extra = topHitsExtra(t, th)
-    val parts = servedParts(spark, indexDirs, p, extra)
+    val roots = servedRoots(spark, indexDirs)
+    val parts = servedParts(spark, roots, p, extra)
     val withStats =
-      (if (scored) servedStats(spark, parts, p, indexDirs.size > 1)
+      (if (scored) servedStats(spark, parts, p, roots.size > 1)
        else None)
         .map(st => parts.f.crossJoin(broadcast(st))).getOrElse(parts.f)
     val m0 = withStats.filter(p.c.pred)
@@ -10211,7 +10217,7 @@ object Dsl {
     val p = filterPlanOf(cs.query)
     val fields = (cs.sources.map(_.field) ++ cs.subs.map(_._3))
       .distinct.filter(_ != "doc_id")
-    val parts = servedParts(spark, indexDirs, p, fields)
+    val parts = servedParts(spark, servedRoots(spark, indexDirs), p, fields)
     compositeTail(parts.f, p, cs)
   }
 
@@ -10477,13 +10483,22 @@ object Dsl {
       posts: Option[DataFrame], phFrames: Seq[DataFrame],
       zPivot: Option[DataFrame], dlen: (String, String) => DataFrame)
 
-  /** Build [[ServedParts]] for a plan over the resolved index roots —
-    * shared by the served search and served aggregations paths. */
-  private def servedParts(spark: SparkSession, indexDirs: Seq[String],
+  /** Resolve each index's active version root ONCE per request: every
+    * read of the request (lookups, candidates, stats, fetch) takes
+    * these roots, so a concurrent compaction repoint can never mix two
+    * versions in one response. */
+  private def servedRoots(spark: SparkSession,
+      indexDirs: Seq[String]): Seq[String] = {
+    require(indexDirs.nonEmpty, "served DSL: no indices given")
+    indexDirs.map(Search.requireIndex(spark, _))
+  }
+
+  /** Build [[ServedParts]] for a plan over the RESOLVED index roots
+    * ([[servedRoots]]) — shared by the served search and served
+    * aggregations paths. */
+  private def servedParts(spark: SparkSession, roots: Seq[String],
       p: Plan, extraFields: Seq[String]): ServedParts = {
     import spark.implicits._
-    require(indexDirs.nonEmpty, "servedParts: no indices given")
-    val roots = indexDirs.map(Search.requireIndex(spark, _))
     val servable = "doc_id" +: (Search.DocValueFields ++
       Search.NumDocValueFields ++ Search.NestedDocValueFields)
     (p.exact ++ extraFields).distinct.foreach { f =>
@@ -10492,18 +10507,15 @@ object Dsl {
           s"doc-value fields: ${servable.mkString(", ")}")
     }
     val metaFields = (p.exact ++ extraFields).distinct.filter(_ != "doc_id")
-    // one multi-path docmeta relation over every member (the
-    // Search.familyScan shape: one listing + one scan, not |roots|);
-    // the refuse-loudly schema check stays PER ROOT — a multi-path
-    // read would silently null-fill a column one stale member lacks,
-    // which is exactly what the check exists to refuse. The probe
-    // reads ONE parquet footer per root (ADVICE r17: the old
-    // spark.read.parquet(...).columns form re-listed each root and
-    // cost the 'one listing' claim its truth).
+    // one docmeta relation over every member (Search.indexTable); the
+    // refuse-loudly schema check stays PER ROOT — the declared schema
+    // would silently null-fill a column one stale member lacks, which
+    // is exactly what the check exists to refuse. The probe reads ONE
+    // parquet footer per root on the driver.
     if (metaFields.nonEmpty)
       try Search.requireFamilyColumns(spark, roots, "docmeta", metaFields)
       catch { case e: IllegalStateException => fail(e.getMessage) }
-    val meta = Search.familyScan(spark, roots, "docmeta")
+    val meta = Search.indexTable(spark, roots, "docmeta")
       .select(($"doc_id" +: metaFields.map(col)): _*)
     checkFieldTypes(meta.schema, p)
     val allToks = (p.tkeys.map(_._2) ++ p.pkeys.flatMap(_._2) ++
@@ -10511,13 +10523,12 @@ object Dsl {
     val posts =
       if (allToks.isEmpty) None
       else {
-        val buckets = allToks.map(Search.tokBucket).distinct
-        Some(Search.postingsScan(spark, roots)
-          .filter($"b".isin(buckets: _*) && $"tok".isin(allToks: _*) &&
-            $"field".isin(p.usedFields: _*)))
+        Some(Search.indexTable(spark, roots, "postings",
+            Some(allToks.map(Search.tokBucket)))
+          .filter($"tok".isin(allToks: _*) && $"field".isin(p.usedFields: _*)))
       }
     def dlen(field: String, as: String): DataFrame =
-      Search.familyScan(spark, roots, "doclen")
+      Search.indexTable(spark, roots, "doclen")
         .filter($"field" === field).select($"doc_id", $"dl".as(as))
     // ---- features: tf pivot (df-bounded) + positional phrase counts
     //      + fuzzy expansions (vocab-filtered, unpruned — see below)
@@ -10540,7 +10551,7 @@ object Dsl {
           // prefix leg: term-dictionary walk (UNPRUNED — prefixed
           // tokens hash to any bucket; Lucene's prefix automaton does
           // the same walk), the expansions' positions flattened per doc
-          Search.postingsScan(spark, roots)
+          Search.indexTable(spark, roots, "postings")
             .filter($"field" === fld && $"tok".startsWith(w))
             .groupBy($"doc_id")
             .agg(array_sort(flatten(collect_list($"positions")))
@@ -10577,7 +10588,7 @@ object Dsl {
         def hit(k: (String, String, Int)): Column =
           col("field") === k._1 &&
             levenshtein($"tok", lit(k._2)) <= k._3
-        val po = Search.postingsScan(spark, roots)
+        val po = Search.indexTable(spark, roots, "postings")
           .filter(p.zkeys.map(hit).reduce(_ || _))
         val cols = p.zkeys.map { k =>
           coalesce(sum(when(hit(k), $"tf")), lit(0L)).cast("int")
@@ -10594,7 +10605,7 @@ object Dsl {
       else {
         def hit(k: (String, String)): Column =
           col("field") === k._1 && $"tok".rlike("^(?:" + k._2 + ")$")
-        val po = Search.postingsScan(spark, roots)
+        val po = Search.indexTable(spark, roots, "postings")
           .filter(p.rkeys.map(hit).reduce(_ || _))
         val cols = p.rkeys.map { k =>
           coalesce(sum(when(hit(k), $"tf")), lit(0L)).cast("int")
@@ -10683,7 +10694,7 @@ object Dsl {
     val f0 =
       if (needHdl) withDl.join(dlen(Search.HeadField, "hdl"), "doc_id")
       else withDl
-    val dead = Search.tombstonesAcross(spark, roots)
+    val dead = Search.indexTable(spark, roots, "tombstones")
     ServedParts(f0.join(dead, Seq("doc_id"), "left_anti"), meta, posts,
       phFrames, zPivot, dlen)
   }
@@ -10767,8 +10778,8 @@ object Dsl {
 
   def searchDslFromIndexes(spark: SparkSession, indexDirs: Seq[String],
       json: String): DataFrame = {
-    val b = resolveBodyLookups(parseBody(json),
-      servedFetcher(spark, indexDirs))
+    val roots = servedRoots(spark, indexDirs)
+    val b = resolveBodyLookups(parseBody(json), servedFetcher(spark, roots))
     if (b.aggs.nonEmpty)
       fail("body has \"aggs\" — index-served aggregations are " +
         "dslAggsFromIndexes' job; hits come from the DSL")
@@ -10778,18 +10789,16 @@ object Dsl {
         "per-member recomputation over docmeta; run the body through " +
         "searchDslOf")
     val p = planOfBody(b)
-    val parts = servedParts(spark, indexDirs, p, Seq.empty)
+    val parts = servedParts(spark, roots, p, Seq.empty)
     val page =
-      rankTail(parts.f, servedStats(spark, parts, p, indexDirs.size > 1), p)
+      rankTail(parts.f, servedStats(spark, parts, p, roots.size > 1), p)
     p.highlight match {
       case None => page
       case Some(hf) =>
         // the served fetch phase reads the index's STORED `_source`
-        // table (union across members), never the live corpus — same
-        // page-sized broadcast join as the scan path's fetch
-        val stored = indexDirs.map(Search.requireIndex(spark, _))
-          .map(Search.storedFields(spark, _)).reduce(_ unionByName _)
-        highlightJoin(stored, page, p, hf)
+        // table (one relation across members), never the live corpus —
+        // same page-sized broadcast join as the scan path's fetch
+        highlightJoin(Search.indexTable(spark, roots, "stored"), page, p, hf)
     }
   }
 
@@ -10803,7 +10812,8 @@ object Dsl {
   def msearchFromIndexes(spark: SparkSession, indexDirs: Seq[String],
       bodies: Seq[String]): DataFrame = {
     import spark.implicits._
-    val pages = msearchGroups(spark, indexDirs, bodies).flatMap {
+    val pages = msearchGroups(spark, servedRoots(spark, indexDirs), bodies)
+        .flatMap {
       case (_, f, stats, gp) => gp.map { case (p, i) =>
         rankTail(f, if (p.needsStats) stats else None, p)
           .withColumn("req", lit(i))
@@ -10823,7 +10833,7 @@ object Dsl {
     * run's, and the batch still reads postings/doclen/docmeta once per
     * GROUP, not per request. Returns (text-bound?, persisted candidate
     * frame, group stats, that group's (plan, original index) pairs). */
-  private def msearchGroups(spark: SparkSession, indexDirs: Seq[String],
+  private def msearchGroups(spark: SparkSession, roots: Seq[String],
       bodies: Seq[String])
       : Seq[(Boolean, DataFrame, Option[DataFrame], Seq[(Plan, Int)])] = {
     val (framePlan0, plans) = msearchPlans(bodies)
@@ -10849,15 +10859,12 @@ object Dsl {
           c = C(lit(true), "TRUE",
             if (gPlans.exists(_.needsStats)) Some((lit(0.0), "0.0"))
             else None))
-        val parts = servedParts(spark, indexDirs, gFrame, Seq.empty)
-        // DISK_ONLY persist, lineage kept — [[msearchOf]]'s barrier note
-        val f0 = trackPersist(parts.f
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-        // one RDD over the persisted frame, shared by every rank tail
+        val parts = servedParts(spark, roots, gFrame, Seq.empty)
+        // one DISK_ONLY cache, lineage kept, shared by every rank tail
         // of the group — the msearchOf union-sharing fix, served form
-        val f = spark.createDataFrame(f0.rdd, f0.schema)
+        val f = sharedFrame(parts.f)
         (textBound, f,
-          servedStats(spark, parts, gFrame, indexDirs.size > 1), gp)
+          servedStats(spark, parts, gFrame, roots.size > 1), gp)
       }
   }
 
@@ -10867,7 +10874,8 @@ object Dsl {
   private[graft] def msearchServedFrames(spark: SparkSession,
       indexDirs: Seq[String], bodies: Seq[String])
       : Seq[(Boolean, DataFrame)] =
-    msearchGroups(spark, indexDirs, bodies).map(g => (g._1, g._2))
+    msearchGroups(spark, servedRoots(spark, indexDirs), bodies)
+      .map(g => (g._1, g._2))
 
   /** Registered query: [[MsearchBodies]] SERVED from the session
     * index — same oracle as the scan batch. */
@@ -10892,8 +10900,8 @@ object Dsl {
     * text. */
   def dslAggsFromIndexes(spark: SparkSession, indexDirs: Seq[String],
       json: String): DataFrame = {
-    val b = resolveBodyLookups(parseBody(json),
-      servedFetcher(spark, indexDirs))
+    val roots = servedRoots(spark, indexDirs)
+    val b = resolveBodyLookups(parseBody(json), servedFetcher(spark, roots))
     if (b.aggs.isEmpty)
       fail("no aggs in body — hits are served by searchDslFromIndexes")
     if (b.runtime.nonEmpty)
@@ -10935,13 +10943,12 @@ object Dsl {
     val sigTextFields = b.aggs.map(_.agg).collect {
       case SigTextAgg(f2, _) => f2
     }.distinct
-    val parts = servedParts(spark, indexDirs, pServe,
+    val parts = servedParts(spark, roots, pServe,
       aggFields.filterNot(sigTextFields.contains))
     val fFull =
       if (sigTextFields.isEmpty) parts.f
       else parts.f.join(
-        indexDirs.map(Search.requireIndex(spark, _))
-          .map(Search.storedFields(spark, _)).reduce(_ unionByName _),
+        Search.indexTable(spark, roots, "stored").select("doc_id", "text"),
         Seq("doc_id"), "left")
     val matched = fFull.filter(p.c.pred)
     val (samplers, rest) = b.aggs.partition(_.agg.isInstanceOf[SamplerAgg])
@@ -10957,8 +10964,8 @@ object Dsl {
     // sampler scopes draw through the index-SERVED search pipeline —
     // all samplers rank the SAME query (only shard_size / the
     // diversity collapse differ), so ONE servedParts candidate frame
-    // (built for the union field inventory, persisted DISK_ONLY behind
-    // one RDD — the msearchGroups barrier) and ONE statistics
+    // (built for the union field inventory, one [[sharedFrame]] — the
+    // msearchGroups barrier) and ONE statistics
     // aggregate serve every sampler's rank tail. Before r18 each
     // sampler ran a full searchDslFromIndexes: its own postings read,
     // doclen/docmeta joins and stats aggregate per sampler.
@@ -10966,17 +10973,15 @@ object Dsl {
       val sbs = samplers.map { spec =>
         val sa = spec.agg.asInstanceOf[SamplerAgg]
         resolveBodyLookups(parseBody(samplerHitsJson(json, sa)),
-          servedFetcher(spark, indexDirs))
+          servedFetcher(spark, roots))
       }
       val sps = sbs.map(planOfBody)
       // identical clause inventory across samplers (same query) — the
       // union touches only the exact-field list (collapse fields)
       val pU = sps.head.copy(exact = sps.flatMap(_.exact).distinct)
-      val sparts = servedParts(spark, indexDirs, pU, Seq.empty)
-      val f0 = trackPersist(sparts.f.persist(
-        org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      val f = spark.createDataFrame(f0.rdd, f0.schema)
-      val stats = servedStats(spark, sparts, sps.head, indexDirs.size > 1)
+      val sparts = servedParts(spark, roots, pU, Seq.empty)
+      val f = sharedFrame(sparts.f)
+      val stats = servedStats(spark, sparts, sps.head, roots.size > 1)
       samplers.zip(sps).map { case (spec, sp) =>
         val ids = rankTail(f, if (sp.needsStats) stats else None, sp)
           .select(col("doc_id"))
@@ -11833,18 +11838,19 @@ object Dsl {
     import spark.implicits._
     val r = parseTermsEnum(json)
     val root = Search.requireIndex(spark, indexDir)
+    val dead = Search.indexTable(spark, Seq(root), "tombstones")
     val base =
       if (AnalyzedFields.contains(r.field))
-        spark.read.parquet(s"$root/postings")
+        Search.indexTable(spark, Seq(root), "postings")
           .filter($"field" === r.field)
-          .join(Search.tombstones(spark, root), Seq("doc_id"),
-            "left_anti")
+          .join(dead, Seq("doc_id"), "left_anti")
           .select($"tok".as("term"))
-      else
-        spark.read.parquet(s"$root/docmeta")
-          .join(Search.tombstones(spark, root), Seq("doc_id"),
-            "left_anti")
+      else {
+        Search.requireFamilyColumns(spark, Seq(root), "docmeta", Seq(r.field))
+        Search.indexTable(spark, Seq(root), "docmeta")
+          .join(dead, Seq("doc_id"), "left_anti")
           .select(col(r.field).cast("string").as("term"))
+      }
     termsEnumCut(base, r)
   }
 
@@ -12923,7 +12929,7 @@ object Dsl {
       case other => fail(s"body must be a JSON object, got $other")
     }
     val p = filterPlanOf(parseBody(json).query)
-    val parts = servedParts(spark, indexDirs, p, Seq.empty)
+    val parts = servedParts(spark, servedRoots(spark, indexDirs), p, Seq.empty)
     parts.f.filter(p.c.pred).agg(count(lit(1)).as("total"))
   }
 

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Full-text retrieval over `documents` — the QUERY side of the
   * reference's dataflow. The reference ships every document INTO
@@ -749,19 +750,20 @@ object Search {
     val root = requireIndex(spark, indexDir)
     val terms = BoolMust ++ BoolShould
     val allTerms = terms ++ BoolMustNot
-    val buckets = allTerms.map(tokBucket).distinct
-    val post = spark.read.parquet(s"$root/postings")
-      .filter($"b".isin(buckets: _*) && $"tok".isin(allTerms: _*) &&
-        $"field" === DefaultField)
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
-    val langDocs = spark.read.parquet(s"$root/docmeta")
+    val dead = indexTable(spark, Seq(root), "tombstones")
+    val post = indexTable(spark, Seq(root), "postings",
+        Some(allTerms.map(tokBucket)))
+      .filter($"tok".isin(allTerms: _*) && $"field" === DefaultField)
+      .join(dead, Seq("doc_id"), "left_anti")
+    requireFamilyColumns(spark, Seq(root), "docmeta", Seq("lang"))
+    val langDocs = indexTable(spark, Seq(root), "docmeta")
       .filter($"lang" === BoolFilterLang).select($"doc_id")
     val scoring = post.filter($"tok".isin(terms: _*))
       .join(langDocs, "doc_id")
     val veto = post.filter($"tok".isin(BoolMustNot: _*)).select($"doc_id")
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(dead, Seq("doc_id"), "left_anti")
       .join(langDocs, "doc_id")
       .select($"doc_id", $"dl")
     val stats = doclen.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
@@ -823,13 +825,12 @@ object Search {
     val ct = graft.ops.TrainPrep.ChunkTokens
     val cs = graft.ops.TrainPrep.ChunkStride
     val root = requireIndex(spark, indexDir)
-    val buckets = terms.map(tokBucket).distinct
-    val dead = tombstones(spark, root)
-    val post = spark.read.parquet(s"$root/postings")
-      .filter($"b".isin(buckets: _*) && $"tok".isin(terms: _*) &&
-        $"field" === DefaultField)
+    val dead = indexTable(spark, Seq(root), "tombstones")
+    val post = indexTable(spark, Seq(root), "postings",
+        Some(terms.map(tokBucket)))
+      .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
       .join(dead, Seq("doc_id"), "left_anti")
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
       .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"dl")
@@ -1083,12 +1084,12 @@ object Search {
       terms: Seq[String], fbDocs: Int, fbTerms: Int, k: Int): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val dead = tombstones(spark, root)
-    val post = spark.read.parquet(s"$root/postings")
+    val dead = indexTable(spark, Seq(root), "tombstones")
+    val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"tok", $"tf")
       .join(dead, Seq("doc_id"), "left_anti")
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
       .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"dl")
@@ -1756,11 +1757,12 @@ object Search {
       docId: Long, nTerms: Int, k: Int): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val post = spark.read.parquet(s"$root/postings")
+    val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"dl")
+    val dead = indexTable(spark, Seq(root), "tombstones")
     val stats = doclen.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
     val dfT = post.groupBy($"tok").agg(count(lit(1)).as("df"))
     // a tombstoned SOURCE doc's terms must not seed the query — its
@@ -1769,7 +1771,7 @@ object Search {
     // empties qterms, so the result is empty rather than derived
     // from deleted text
     val qterms = post.filter($"doc_id" === docId)
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(dead, Seq("doc_id"), "left_anti")
       .select($"tok", $"tf".as("qtf"))
       .join(dfT, "tok")
       .crossJoin(broadcast(stats))
@@ -1779,7 +1781,7 @@ object Search {
       .select($"tok", $"df")
     val tf = post.filter($"doc_id" =!= docId)
       .join(broadcast(qterms), "tok")
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"df", $"tf")
     mltRank(tf, doclen, stats, k)
   }
@@ -2256,27 +2258,58 @@ object Search {
     s"(SELECT *, DATE '$PersistEpoch' + CAST(doc_id % $PersistDays AS INT) " +
       "AS persist_date FROM documents)"
 
+  /** One index family's declared layout: its data columns, then the
+    * partition columns its directories encode. */
+  private[graft] case class IndexFamily(data: StructType, parts: StructType) {
+    def schema: StructType = StructType(data.fields ++ parts.fields)
+  }
+
+  /** The declared schema of every index family, declared once: the
+    * writers ([[writeEpoch]], compaction, deletes) conform to it and
+    * [[indexTable]] reads with it, so no read infers a schema from
+    * parquet footers. Every column is nullable, as a footer-inferred
+    * read reports it. */
+  private[graft] val IndexFamilies: Map[String, IndexFamily] = {
+    val epoch = StructType.fromDDL("epoch STRING")
+    def fam(ddl: String) = IndexFamily(StructType.fromDDL(ddl), epoch)
+    Map(
+      "postings" -> IndexFamily(StructType.fromDDL(
+        "tok STRING, doc_id BIGINT, field STRING, tf BIGINT, positions ARRAY<INT>"),
+        StructType.fromDDL("epoch STRING, b INT")),
+      "doclen" -> fam("doc_id BIGINT, field STRING, dl BIGINT"),
+      "docmeta" -> fam((Seq("doc_id BIGINT") ++
+        DocValueFields.map(f => s"$f STRING") ++
+        NumDocValueFields.map(f => s"$f BIGINT") ++
+        NestedDocValueFields.map(f => s"$f $TagsType")).mkString(", ")),
+      "stored" -> fam("doc_id BIGINT, text STRING"),
+      "tombstones" -> fam("doc_id BIGINT"))
+  }
+
+  /** Write `df` as `family` at `path`: its declared columns that `df`
+    * carries, cast to the declared types, partitioned by the declared
+    * partition columns; dynamic overwrite replaces only the partitions
+    * written (the epoch-keyed idempotence every writer relies on). */
+  private def writeFamily(df: DataFrame, family: String, path: String): Unit = {
+    val fam = IndexFamilies(family)
+    df.select(fam.schema.fields.toSeq.filter(f => df.columns.contains(f.name))
+        .map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(fam.parts.fieldNames.toSeq: _*).parquet(path)
+  }
+
   private def writeEpoch(docs: DataFrame, root: String, epoch: String): Unit = {
     import docs.sparkSession.implicits._
-    val metaCols = DocValueFields.map(c =>
-      (if (docs.columns.contains(c)) col(c).cast("string")
-       else lit(null).cast("string")).as(c)) ++
-      NumDocValueFields.map(c =>
-        (if (docs.columns.contains(c)) col(c).cast("long")
-         else lit(null).cast("long")).as(c)) ++
-      NestedDocValueFields.map(c =>
-        (if (docs.columns.contains(c)) col(c).cast(TagsType)
-         else lit(null).cast(TagsType)).as(c))
-    docs.select(($"doc_id" +: metaCols) :+ lit(epoch).as("epoch"): _*)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(s"$root/docmeta")
+    def write(df: DataFrame, family: String): Unit =
+      writeFamily(df.withColumn("epoch", lit(epoch)), family, s"$root/$family")
+    // every declared doc-value field; null when the input lacks it
+    write(docs.select(IndexFamilies("docmeta").data.fieldNames.toSeq.map(c =>
+      if (docs.columns.contains(c)) col(c) else lit(null).as(c)): _*),
+      "docmeta")
     // stored fields — ES's `_source`: the fetch phase (highlight,
     // response bodies) reads THIS, never the live corpus, so serving
     // is decoupled from the source-of-truth table. Fetch is always a
     // page-sized broadcast join into a doc_id-pruned read.
-    docs.select($"doc_id", $"text", lit(epoch).as("epoch"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(s"$root/stored")
+    write(docs.select($"doc_id", $"text"), "stored")
     // ONE corpus scan: the field dimension explodes from a 2-entry map
     // per doc (no union — a union of two projections would scan the
     // input once per branch)
@@ -2285,21 +2318,16 @@ object Search {
         lit(DefaultField), TextAnalysis.toks($"text"),
         lit(HeadField), slice(TextAnalysis.toks($"text"), 1, HeadLen)))
         .as(Seq("field", "toks")))
-    fields.select($"doc_id", $"field", size($"toks").cast("long").as("dl"),
-        lit(epoch).as("epoch"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(s"$root/doclen")
+    write(fields.select($"doc_id", $"field",
+      size($"toks").cast("long").as("dl")), "doclen")
     // POSITIONAL postings (what ES/Lucene store): tf for ranked
     // queries, the sorted 0-based position list for phrase queries —
     // both from the one posexplode + map-side-combined aggregate
-    fields.select($"doc_id", $"field", posexplode($"toks").as(Seq("pos", "tok")))
+    write(fields.select($"doc_id", $"field", posexplode($"toks").as(Seq("pos", "tok")))
       .groupBy($"doc_id", $"field", $"tok")
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list($"pos")).as("positions"))
-      .select($"tok", $"doc_id", $"field", $"tf", $"positions",
-        lit(epoch).as("epoch"), tokBucketCol($"tok").as("b"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch", "b").parquet(s"$root/postings")
+      .withColumn("b", tokBucketCol($"tok")), "postings")
   }
 
   /** Phrase match served FROM the index: for phrase (w1, w2), join the
@@ -2319,15 +2347,16 @@ object Search {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
     val Seq(w1, w2) = phrase
-    val post = spark.read.parquet(s"$root/postings")
-      .filter($"b".isin(phrase.map(tokBucket).distinct: _*) &&
-        $"field" === DefaultField)
+    val post = indexTable(spark, Seq(root), "postings",
+        Some(phrase.map(tokBucket)))
+      .filter($"field" === DefaultField)
     val p1 = post.filter($"tok" === w1)
       .select($"doc_id", $"positions".as("p1"))
     val p2 = post.filter($"tok" === w2)
       .select($"doc_id", $"positions".as("p2"))
     p1.join(p2, "doc_id")
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
       .select($"doc_id",
         size(array_intersect(transform($"p1", p => p + 1), $"p2"))
           .as("n_occur"))
@@ -2415,8 +2444,9 @@ object Search {
     * contract every index here is built under — a doc_id lives in
     * exactly one index — so the union never double-counts a document.
     *
-    * Shape at 100 TB: the per-index reads keep their pruning (the
-    * union is of ALREADY bucket-pruned, term-filtered postings scans),
+    * Shape at 100 TB: the per-index reads keep their pruning (one
+    * [[indexTable]] relation over every member's bucket-pruned
+    * listing, term filters pushed to parquet),
     * the stats stay two 1-row broadcast aggregates over the union, and
     * candidates stay term-df-sized. Cost is the sum of the per-index
     * query costs — independent of how many OTHER indices exist, which
@@ -2424,15 +2454,13 @@ object Search {
   private def scoredFromIndexes(spark: SparkSession, roots: Seq[String],
       terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    val buckets = terms.map(tokBucket).distinct
-    val post = postingsScan(spark, roots)
-      .filter($"b".isin(buckets: _*) && $"tok".isin(terms: _*) &&
-        $"field" === DefaultField)
+    val post = indexTable(spark, roots, "postings", Some(terms.map(tokBucket)))
+      .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
       .select($"tok", $"doc_id", $"tf")
-    val doclen = familyScan(spark, roots, "doclen")
+    val doclen = indexTable(spark, roots, "doclen")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"dl")
-    val dead = tombstonesAcross(spark, roots)
+    val dead = indexTable(spark, roots, "tombstones")
     // the merged statistics are only correct under the disjointness
     // contract (one index per doc_id) — ENFORCE it on the aggregate
     // the query already pays for, folded into n so the score
@@ -2623,10 +2651,10 @@ object Search {
       terms: Seq[String], k: Int): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val buckets = terms.map(tokBucket).distinct
-    val post = spark.read.parquet(s"$root/postings")
-      .filter($"b".isin(buckets: _*) && $"tok".isin(terms: _*))
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val post = indexTable(spark, Seq(root), "postings",
+        Some(terms.map(tokBucket)))
+      .filter($"tok".isin(terms: _*))
+    val doclen = indexTable(spark, Seq(root), "doclen")
     val stats = doclen.agg(
       count(when($"field" === DefaultField, 1)).as("n"),
       sum(when($"field" === DefaultField, $"dl")).as("sumdlb"),
@@ -2647,7 +2675,8 @@ object Search {
           lit(0L)).cast("int").as(s"tfh${i + 1}")
       }
     val cand = post.groupBy($"doc_id").agg(tfCols.head, tfCols.tail: _*)
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
     // the per-doc field-length pivot runs AFTER the candidate join, so
     // the groupBy aggregates candidate-grain rows (term-df-sized), not
     // the corpus-grain doclen table — the join prunes, then the pivot
@@ -2677,10 +2706,8 @@ object Search {
   private def matchedFromIndex(spark: SparkSession, root: String,
       terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    val buckets = terms.map(tokBucket).distinct
-    spark.read.parquet(s"$root/postings")
-      .filter($"b".isin(buckets: _*) && $"tok".isin(terms: _*) &&
-        $"field" === DefaultField)
+    indexTable(spark, Seq(root), "postings", Some(terms.map(tokBucket)))
+      .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
       .select($"doc_id").distinct()
   }
 
@@ -2713,17 +2740,16 @@ object Search {
     import spark.implicits._
     require(indexDirs.nonEmpty, "facetsAcrossIndexes: no indices given")
     val roots = indexDirs.map(requireIndex(spark, _))
-    val dead = tombstonesAcross(spark, roots)
-    val buckets = terms.map(tokBucket).distinct
-    val matched = postingsScan(spark, roots)
-      .filter($"b".isin(buckets: _*) && $"tok".isin(terms: _*) &&
-        $"field" === DefaultField)
+    val matched = indexTable(spark, roots, "postings",
+        Some(terms.map(tokBucket)))
+      .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
       .select($"doc_id").distinct()
-      .join(dead, Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, roots, "tombstones"), Seq("doc_id"),
+        "left_anti")
     // refuse loudly if a stale member's docmeta predates a facet
-    // column (ADVICE r17): the multi-path read would null-fill it
+    // column: the declared schema would null-fill it
     requireFamilyColumns(spark, roots, "docmeta", Seq("lang", "source"))
-    familyScan(spark, roots, "docmeta")
+    indexTable(spark, roots, "docmeta")
       .select($"doc_id", $"lang", $"source")
       .join(matched, "doc_id")
       .groupBy($"lang", $"source")
@@ -2754,10 +2780,11 @@ object Search {
       terms: Seq[String]): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val live = spark.read.parquet(s"$root/postings")
+    val live = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"tok", $"tf")
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
     val matched = matchedFromIndex(spark, root, terms)
       .withColumn("in_a", lit(true))
     val counts = live.join(matched, Seq("doc_id"), "left")
@@ -2785,10 +2812,11 @@ object Search {
       term: String, maxDist: Int): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val post = spark.read.parquet(s"$root/postings")
+    val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"tok", $"tf")
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
     val matched = post.select($"tok").distinct()
       .filter(levenshtein($"tok", lit(term)) <= maxDist)
     post.join(broadcast(matched), "tok")
@@ -2812,10 +2840,11 @@ object Search {
       prefix: String, k: Int): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    spark.read.parquet(s"$root/postings")
+    indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"tok", $"tf")
-      .join(tombstones(spark, root), Seq("doc_id"), "left_anti")
+      .join(indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
+        "left_anti")
       .filter($"tok".startsWith(prefix))
       .groupBy($"tok").agg(sum($"tf").as("freq"))
       .select($"tok".as("token"), $"freq")
@@ -2869,14 +2898,15 @@ object Search {
   def indexStats(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val dead = tombstones(spark, root)
+    val dead = indexTable(spark, Seq(root), "tombstones")
+      .select($"doc_id").distinct()
     // the deleted-doc count rides the plan as a broadcast 1-row
     // aggregate instead of a driver-blocking count() action (r18):
     // one fewer job barrier, same integer
     val deadCount = dead.agg(count(lit(1)).as("n_deleted"))
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .join(dead, Seq("doc_id"), "left_anti")
-    val post = spark.read.parquet(s"$root/postings")
+    val post = indexTable(spark, Seq(root), "postings")
       .join(dead, Seq("doc_id"), "left_anti")
     val dlStats = doclen.groupBy($"field")
       .agg(count(lit(1)).as("n_docs"), sum($"dl").as("sum_dl"))
@@ -2904,11 +2934,12 @@ object Search {
   def indexSegments(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
     val root = requireIndex(spark, indexDir)
-    val dead = tombstones(spark, root).withColumn("is_dead", lit(1L))
-    val doclen = spark.read.parquet(s"$root/doclen")
+    val dead = indexTable(spark, Seq(root), "tombstones")
+      .select($"doc_id").distinct().withColumn("is_dead", lit(1L))
+    val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
       .join(dead, Seq("doc_id"), "left")
-    val post = spark.read.parquet(s"$root/postings")
+    val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .groupBy($"epoch").agg(count(lit(1)).as("n_postings"))
     doclen.groupBy($"epoch")
@@ -2990,11 +3021,12 @@ object Search {
     // path — this is the right-to-be-forgotten surface, so refuse
     // LOUDLY rather than return an empty frame a caller could read as
     // "doc has no terms". The check is tombstone-table-grain (tiny).
-    if (!tombstones(spark, root).filter($"doc_id" === docId).isEmpty)
+    if (!indexTable(spark, Seq(root), "tombstones")
+        .filter($"doc_id" === docId).isEmpty)
       throw new IllegalStateException(
         s"termVectors: doc $docId is tombstoned in $indexDir — " +
           "deleted content is not servable (compaction will purge it)")
-    val post = spark.read.parquet(s"$root/postings")
+    val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
     // df still counts tombstoned docs until compaction — the
     // documented deleted-but-unmerged Lucene statistics semantics;
@@ -3036,71 +3068,144 @@ object Search {
     // write into the RESOLVED tombstone dir: on a synced follower the
     // _tombstones pointer names a generation dir, and a write to the
     // flat path would be shadowed (invisible to every query path)
-    val tomb = tombDir(spark, root)
-    val existing = {
-      val p = new org.apache.hadoop.fs.Path(s"$tomb/epoch=$epoch")
-      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-        spark.read.parquet(p.toString).select($"doc_id")
-      else spark.emptyDataset[Long].toDF("doc_id")
+    val existing = indexTable(spark, Seq(root), "tombstones")
+      .filter($"epoch" === epoch).select($"doc_id")
+    writeFamily(docIds.select($"doc_id").union(existing).distinct()
+      .withColumn("epoch", lit(epoch)).localCheckpoint(),
+      "tombstones", tombDir(spark, root))
+  }
+
+  /** The one reader of index families: a parquet relation over
+    * `family` under every RESOLVED root in `roots`, built with no
+    * Spark job. Every serving, maintenance and ingest-screen read of
+    * an index goes through it.
+    *
+    *  - Listing runs on the driver: per root, the family dir's
+    *    `epoch=*` dirs, then their leaf files. With `buckets` (postings
+    *    only) it opens only the `epoch=E/b=K` dirs of the query's
+    *    buckets, so the listing is pruned exactly like the scan, and
+    *    the frame keeps the `b IN (…)` partition filter. Hidden entries
+    *    (`_*`, `.*`, `*._COPYING_`: `_SUCCESS`, `.crc`, `_temporary`,
+    *    append and sync staging dirs) are skipped, as Spark's own
+    *    listing does. The result reaches an [[InMemoryFileIndex]]
+    *    through a pre-filled [[FileStatusCache]] plus an explicit
+    *    partition spec, so neither a listing job nor partition
+    *    inference runs.
+    *  - The schema is [[IndexFamilies]]' declaration (shared with
+    *    [[writeEpoch]]), never inferred from footers, so no footer job
+    *    runs either. A declared column a stale member's files lack
+    *    reads as null: callers that read doc-value columns keep the
+    *    per-root footer guard [[requireFamilyColumns]], which refuses
+    *    that drift loudly.
+    *  - Many roots make ONE relation (one scan node, tasks packed
+    *    across members), row-equal to the union of per-root reads.
+    *  - `tombstones` resolves each root's live generation
+    *    ([[tombDir]]) and is empty when none was written; a missing
+    *    `stored` table refuses (an index built before stored fields
+    *    must not re-couple fetch to the corpus); any other missing
+    *    family refuses as an incomplete index. A family with no data
+    *    file reads as an empty local relation, which the optimizer
+    *    folds away (an anti-join against no tombstones is no join).
+    *
+    * Cost at 100 TB: driver listing calls = epochs × query buckets for
+    * a term-pruned postings read (epochs × [[IndexBuckets]] for a
+    * term-dictionary walk), and about one per epoch for the doc-grain
+    * families. [[compactSearchIndex]] folds epochs back into one, so
+    * compaction is what bounds the listing, not corpus size. */
+  private[graft] def indexTable(spark: SparkSession, roots: Seq[String],
+      family: String, buckets: Option[Seq[Int]] = None): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val fam = IndexFamilies.getOrElse(family, throw new IllegalArgumentException(
+      s"indexTable: unknown index family '$family' — one of " +
+        IndexFamilies.keys.toSeq.sorted.mkString(", ")))
+    require(buckets.isEmpty || family == "postings",
+      s"indexTable: bucket pruning applies to postings, not $family")
+    val conf = spark.sessionState.newHadoopConf()
+    def visible(p: Path): Boolean = {
+      val n = p.getName
+      !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
     }
-    docIds.select($"doc_id").union(existing).distinct()
-      .select($"doc_id", lit(epoch).as("epoch"))
-      .localCheckpoint()
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(tomb)
+    val leaves = scala.collection.mutable.LinkedHashMap.empty[Path, Array[FileStatus]]
+    val partitions = Seq.newBuilder[PartitionPath]
+    roots.foreach { root =>
+      val dir = new Path(
+        if (family == "tombstones") tombDir(spark, root) else s"$root/$family")
+      val fs = dir.getFileSystem(conf)
+      def ls(p: Path): Seq[FileStatus] =
+        try fs.listStatus(p).toSeq.filter(s => visible(s.getPath))
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      if (!fs.exists(dir)) family match {
+        case "tombstones" =>
+        case "stored" => throw new IllegalStateException(
+          s"index at $root has no stored (_source) table — built before " +
+            "stored fields existed; rebuild to serve fetch-phase features")
+        case _ => throw new IllegalStateException(
+          s"index at $root has no $family table — incomplete build or " +
+            "partial delete; re-run buildSearchIndex")
+      }
+      // walk the declared partition levels (`col=value` dirs only); a
+      // pruned bucket level opens its `b=K` dirs by name, unlisted
+      def walk(d: Path, depth: Int, values: Vector[Any]): Seq[FileStatus] =
+        if (depth == fam.parts.size) {
+          val files = ls(d).filter(_.isFile)
+          if (files.nonEmpty)
+            partitions += PartitionPath(InternalRow.fromSeq(values),
+              files.head.getPath.getParent)
+          files
+        } else {
+          val part = fam.parts(depth)
+          val named = (part.name, buckets) match {
+            case ("b", Some(bs)) =>
+              bs.distinct.map(k => new Path(d, s"b=$k") -> k.toString)
+            case _ => ls(d).filter(_.isDirectory).flatMap { s =>
+              s.getPath.getName.split("=", 2) match {
+                case Array(part.name, v) =>
+                  Some(s.getPath -> ExternalCatalogUtils.unescapePathName(v))
+                case _ => None
+              }
+            }
+          }
+          named.flatMap { case (p, v) =>
+            val typed = part.dataType match {
+              case StringType => UTF8String.fromString(v)
+              case IntegerType => v.toInt
+            }
+            walk(p, depth + 1, values :+ typed)
+          }
+        }
+      val files = walk(dir, 0, Vector.empty)
+      if (files.nonEmpty) leaves(fs.makeQualified(dir)) = files.toArray
+    }
+    val parts = partitions.result()
+    val df =
+      if (parts.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          fam.schema)
+      else {
+        val cache = new FileStatusCache {
+          override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+            leaves.get(path)
+          override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }
+        val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
+          Some(fam.schema), cache, Some(PartitionSpec(fam.parts, parts)))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, fam.parts,
+          fam.data, None, new parquet.ParquetFileFormat, Map.empty)(spark))
+      }
+    buckets.fold(df)(bs => df.filter(col("b").isin(bs.distinct: _*)))
   }
-
-  /** The tombstone set of an index, empty when none were ever
-    * written. */
-  private[ops] def tombstones(spark: SparkSession, indexDir: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(tombDir(spark, indexDir))
-    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      spark.read.parquet(p.toString).select($"doc_id").distinct()
-    else spark.emptyDataset[Long].toDF("doc_id")
-  }
-
-  /** ONE parquet relation over the same index family of many RESOLVED
-    * roots — row-equivalent to unioning per-root reads (each member
-    * contributes exactly its rows; filters/pruning apply per file as
-    * before) but one file listing and one scan operator instead of
-    * |roots| of each. An alias over k daily indices plans k× fewer
-    * scan nodes, its scan tasks pack across members, and the plan
-    * stops growing with the member count — the per-member UNION form
-    * made every multi-index query pay k listings + k scans per family
-    * (measured: dsl_alias over 3 members planned 24 scans). */
-  private[ops] def familyScan(spark: SparkSession, roots: Seq[String],
-      family: String): DataFrame =
-    // recursiveFileLookup disables partition-directory inference —
-    // required because Spark refuses a multi-path read of partitioned
-    // layouts (CONFLICTING_DIRECTORY_STRUCTURES) — so the partition
-    // column (epoch) does not surface. Safe ONLY for families whose
-    // consumers never read epoch and whose other columns are all data
-    // columns: doclen, docmeta, tombstones. NOT for postings (its `b`
-    // bucket is a partition directory the term filters prune on — use
-    // [[postingsScan]]) and NOT for `stored` (epoch is read).
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(roots.map(r => s"$r/$family"): _*)
-
-  /** Postings across members: per-root reads unioned — postings keep
-    * their b=bucket partition DIRECTORIES (the term filters prune
-    * whole buckets at the listing), which a flattened multi-path read
-    * would forfeit. The union is of already bucket-pruned scans, so
-    * the per-member cost stays term-df-shaped. */
-  private[ops] def postingsScan(spark: SparkSession,
-      roots: Seq[String]): DataFrame =
-    roots.map(r => spark.read.parquet(s"$r/postings"))
-      .reduce(_ unionByName _)
 
   /** Column names from ONE parquet footer of `root/family` — the
-    * refuse-loudly schema guards' probe. A full
-    * `spark.read.parquet(dir).columns` pays DataFrame construction +
-    * directory listing + schema inference per root (ADVICE r17: the
-    * servedParts guard cost |roots| listings on top of familyScan's
-    * one); this walks to the first data file and reads its footer.
-    * Empty when the family directory has no parquet file — callers
-    * treat that as "column absent" and refuse, which is the safe
-    * direction. */
+    * refuse-loudly schema guards' probe. Reads the first data file's
+    * footer on the driver (no Spark job). Empty when the family
+    * directory has no parquet file — callers treat that as "column
+    * absent" and refuse, which is the safe direction. */
   private[ops] def familyColumns(spark: SparkSession, root: String,
       family: String): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -3126,9 +3231,9 @@ object Search {
   }
 
   /** Refuse loudly unless every root's `family` footer carries all of
-    * `fields` — the guard every familyScan consumer of doc-value
-    * columns needs: a multi-path read silently NULL-FILLS a column a
-    * stale member lacks, turning a schema drift into wrong rows. */
+    * `fields` — the guard every [[indexTable]] consumer of doc-value
+    * columns needs: the declared schema silently NULL-FILLS a column
+    * a stale member lacks, turning a schema drift into wrong rows. */
   private[ops] def requireFamilyColumns(spark: SparkSession,
       roots: Seq[String], family: String, fields: Seq[String]): Unit =
     roots.foreach { root =>
@@ -3138,40 +3243,6 @@ object Search {
           s"field '$f' is not stored in the index $family under $root — " +
             "rebuild the index from a corpus carrying it"))
     }
-
-  /** The union of every member's ACTIVE tombstone generation as one
-    * multi-path read. NOT the [[familyScan]] recursiveFileLookup shape:
-    * tombstone generations are epoch-partitioned and `doc_id` is the
-    * only column read, so plain multi-path partition discovery works —
-    * but ONLY while every generation dir keeps the uniform `epoch=`
-    * layout ([[deleteFromSearchIndex]] writes it; a mixed layout would
-    * fail the read loudly with CONFLICTING_DIRECTORY_STRUCTURES). */
-  private[ops] def tombstonesAcross(spark: SparkSession,
-      roots: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val dirs = roots.map(tombDir(spark, _)).filter { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).exists(p)
-    }
-    if (dirs.isEmpty) spark.emptyDataset[Long].toDF("doc_id")
-    else spark.read.parquet(dirs: _*).select($"doc_id").distinct()
-  }
-
-  /** The stored `_source` table under a RESOLVED version root — what
-    * the fetch phase (highlight, response bodies) reads instead of the
-    * live corpus. Refuses loudly when the index predates stored
-    * fields: serving a fetch from the source-of-truth table would
-    * silently re-couple serving to it. */
-  private[ops] def storedFields(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$root/stored")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      throw new IllegalStateException(
-        s"index at $root has no stored (_source) table — built before " +
-          "stored fields existed; rebuild to serve fetch-phase features")
-    spark.read.parquet(p.toString).select($"doc_id", $"text")
-  }
 
   /** Pointer file naming the ACTIVE tombstone generation under a
     * version root. Local deletes write the flat `tombstones` table
@@ -3241,32 +3312,23 @@ object Search {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val ver = nextVersion(fs, indexDir)
-    val dead = tombstones(spark, root)
-    spark.read.parquet(s"$root/doclen")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"field", $"dl", lit("base").as("epoch"))
-      .write.mode("overwrite").partitionBy("epoch")
-      .parquet(s"$indexDir/$ver/doclen")
-    spark.read.parquet(s"$root/postings")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .select($"tok", $"doc_id", $"field", $"tf", $"positions",
-        lit("base").as("epoch"), $"b")
-      .write.mode("overwrite").partitionBy("epoch", "b")
-      .parquet(s"$indexDir/$ver/postings")
-    spark.read.parquet(s"$root/docmeta")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .select(($"doc_id" +: (DocValueFields ++ NumDocValueFields).map(col)) :+
-        lit("base").as("epoch"): _*)
-      .write.mode("overwrite").partitionBy("epoch")
-      .parquet(s"$indexDir/$ver/docmeta")
+    val dead = indexTable(spark, Seq(root), "tombstones").select($"doc_id")
     // the merge is when deleted documents' BYTES leave the index —
-    // including their stored _source text
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/stored")))
-      spark.read.parquet(s"$root/stored")
-        .join(dead, Seq("doc_id"), "left_anti")
-        .select($"doc_id", $"text", lit("base").as("epoch"))
-        .write.mode("overwrite").partitionBy("epoch")
-        .parquet(s"$indexDir/$ver/stored")
+    // including their stored _source text. Each family keeps exactly
+    // the columns this version stores (a declared column its files
+    // lack must stay absent, so the drift guard still refuses it).
+    IndexTables.filter(t => t != "stored" ||
+        fs.exists(new org.apache.hadoop.fs.Path(s"$root/stored")))
+      .foreach { t =>
+        val kept = familyColumns(spark, root, t)
+        val absent =
+          if (kept.isEmpty) Seq.empty
+          else IndexFamilies(t).data.fieldNames.toSeq.filterNot(kept.contains)
+        writeFamily(indexTable(spark, Seq(root), t).drop(absent: _*)
+            .join(dead, Seq("doc_id"), "left_anti")
+            .withColumn("epoch", lit("base")),
+          t, s"$indexDir/$ver/$t")
+      }
     commitPointer(spark, indexDir, ver)
     val keepPrev =
       if (root == indexDir)

@@ -385,7 +385,7 @@ object CuratedPipeline {
       // append — compaction concurrent with an in-flight batch is the
       // operator's quiesce responsibility (compactSearchIndex doc)
       val root = Search.indexRoot(spark, idx)
-      val already = spark.read.parquet(s"$root/doclen")
+      val already = Search.indexTable(spark, Seq(root), "doclen")
         .filter($"epoch" =!= s"e$epochId").select($"doc_id")
       // carry the doc-values fields so the index serves facets over
       // curated batches too (Search.DocValueFields)

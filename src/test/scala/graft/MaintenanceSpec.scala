@@ -542,4 +542,30 @@ class MaintenanceSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains(Search.SnapshotMarker))
   }
+
+  test("a highlighted served request built before a compaction keeps its version's hits and fragments") {
+    import spark.implicits._
+    import graft.ops.{Dsl, Search}
+    val root = Files.createTempDirectory("graftidxhl").resolve("idx").toString
+    val docs = graft.Tables.documentsPar(spark, sfDir).select($"doc_id", $"text")
+    Search.buildSearchIndexOf(docs.filter($"doc_id" % 2 === 0), root)
+    Search.appendToSearchIndex(spark, root,
+      docs.filter($"doc_id" % 2 =!= 0), epoch = "e1")
+    val body = s"""{"query": {"match": {"text": "${Search.QueryTerms.mkString(" ")}"}},
+      "highlight": {"fields": {"text": {}}}, "size": 10}"""
+    def served = Dsl.searchDslFromIndexes(spark, Seq(root), body)
+    // tombstone the top hit: the compaction purges it and re-derives
+    // the statistics, so the two versions hold different bytes
+    val top = served.collect().head.getAs[Long]("doc_id")
+    Search.deleteFromSearchIndex(spark, root, Seq(top).toDF("doc_id"), "d1")
+    val expected = served.collect().map(_.toSeq).toSeq
+    assert(expected.nonEmpty && expected.forall(r => r.last != null),
+      s"every hit carries a fragment: $expected")
+    val inFlight = served // resolved and built on the pre-compaction version
+    val v1 = Search.indexRoot(spark, root)
+    Search.compactSearchIndex(spark, root)
+    assert(Search.indexRoot(spark, root) != v1, "compaction commits a new version")
+    assert(inFlight.collect().map(_.toSeq).toSeq == expected,
+      "a request built before the repoint must serve its own version's hits and fragments")
+  }
 }

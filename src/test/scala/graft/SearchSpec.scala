@@ -1013,4 +1013,140 @@ class SearchSpec extends SparkSpec {
     assert("TakeOrderedAndProject".r.findAllIn(plan).size >= 2,
       s"both modality lists must be limit-cut before fusion:\n$plan")
   }
+
+  // ------------------------------------------------ the index-family reader
+
+  /** An index over the fixture corpus in three epochs (base, e1, e2). */
+  private def threeEpochIndex(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+      .resolve("idx").toString
+    val docs = Tables.documentsPar(spark, sfDir)
+    Search.buildSearchIndexOf(docs.filter($"doc_id" % 3 === 0), root)
+    Search.appendToSearchIndex(spark, root, docs.filter($"doc_id" % 3 === 1), "e1")
+    Search.appendToSearchIndex(spark, root, docs.filter($"doc_id" % 3 === 2), "e2")
+    root
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  test("served DSL requests over a multi-epoch index build with no Spark job") {
+    import graft.ops.Dsl
+    val root = threeEpochIndex("graftidxjobs")
+    val terms = Search.QueryTerms
+    val matchB = s"""{"query": {"match": {"text": "${terms.mkString(" ")}"}}, "size": 10}"""
+    val boolB = s"""{"query": {"bool": {
+      "must": [{"match": {"text": "${terms.head}"}}],
+      "should": [{"match": {"text": "${terms(1)}"}}],
+      "must_not": [{"match_phrase": {"text": "${Search.PhraseTerms.mkString(" ")}"}}],
+      "filter": [{"range": {"n_chars": {"gte": 10}}}, {"term": {"lang": "en"}}]}},
+      "size": 10}"""
+    val phraseB = s"""{"query": {"match_phrase": {"text": "${Search.PhraseTerms.mkString(" ")}"}}, "size": 10}"""
+    val aggB = s"""{"query": {"match": {"text": "${terms.head}"}}, "size": 0,
+      "aggs": {"langs": {"terms": {"field": "lang", "size": 4}}}}"""
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    val built =
+      try {
+        val frames = Seq(matchB, boolB, phraseB).map(Dsl.searchDslFromIndexes(spark, Seq(root), _)) ++
+          Seq(Dsl.dslAggsFromIndexes(spark, Seq(root), aggB),
+            Dsl.msearchFromIndexes(spark, Seq(root), Seq(matchB, boolB, phraseB)))
+        org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+        frames
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0,
+      s"building served requests launched ${jobs.get} Spark jobs (listing or schema inference)")
+    // the job-free relations still serve what the scan path computes
+    val docs = Tables.documentsPar(spark, sfDir)
+    Seq(matchB, boolB, phraseB).zip(built).foreach { case (b, df) =>
+      assert(rows(df) == rows(Dsl.searchDslOf(docs, b)), s"served != scan for $b")
+    }
+    assert(rows(built(3)) == rows(Dsl.dslAggsOf(docs, aggB)), "served aggs != scan")
+  }
+
+  test("index reads are fresh: appends show on the next request, a re-append replaces its epoch") {
+    val root = java.nio.file.Files.createTempDirectory("graftidxfresh")
+      .resolve("idx").toString
+    Search.buildSearchIndexOf(Seq((1L, "alpha beta"), (2L, "beta gamma"))
+      .toDF("doc_id", "text"), root)
+    def hits(term: String): Seq[Long] =
+      Search.searchWithIndex(spark, root, Seq(term), 100)
+        .select($"doc_id").as[Long].collect().toSeq.sorted
+    assert(hits("zeta").isEmpty)
+    Search.appendToSearchIndex(spark, root,
+      Seq((3L, "zeta beta"), (4L, "zeta zeta")).toDF("doc_id", "text"), "e1")
+    assert(hits("zeta") == Seq(3L, 4L), "an append must be visible on the next request")
+    // replaying epoch e1 with different rows REPLACES them: doc 4 is
+    // gone, doc 5 is in, nothing duplicates
+    Search.appendToSearchIndex(spark, root,
+      Seq((3L, "zeta beta"), (5L, "zeta")).toDF("doc_id", "text"), "e1")
+    assert(hits("zeta") == Seq(3L, 5L), "a re-append must replace its epoch's rows")
+    assert(hits("beta") == Seq(1L, 2L, 3L))
+    val dl = Search.indexTable(spark, Seq(Search.indexRoot(spark, root)), "doclen")
+      .filter($"field" === Search.DefaultField)
+    assert(dl.count() == 4 && dl.select($"doc_id").distinct().count() == 4,
+      "one doclen row per doc after the replay")
+  }
+
+  test("index reads skip stray _SUCCESS, .crc, _temporary and ._COPYING_ entries") {
+    val root = threeEpochIndex("graftidxstray")
+    val before = rows(Search.searchWithIndex(spark, root, Search.QueryTerms, 20))
+    val vroot = Search.indexRoot(spark, root)
+    val garbage = "not parquet".getBytes("UTF-8")
+    def put(rel: String): Unit = {
+      val f = new java.io.File(vroot, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, garbage)
+    }
+    val b = Search.tokBucket(Search.QueryTerms.head)
+    Seq("postings", "doclen", "docmeta", "stored").foreach { t =>
+      val leaf = if (t == "postings") s"$t/epoch=e1/b=$b" else s"$t/epoch=e1"
+      put(s"$leaf/_SUCCESS")
+      put(s"$leaf/.part-00000-stray.parquet.crc")
+      put(s"$leaf/part-00099-stray.parquet._COPYING_")
+      put(s"$t/_temporary/0/epoch=e9/part-00000.parquet")
+      put(s"$t/epoch=e1/_temporary/0/part-00000.parquet")
+    }
+    put(s"tombstones/_temporary/0/epoch=d9/part-00000.parquet")
+    assert(rows(Search.searchWithIndex(spark, root, Search.QueryTerms, 20)) == before,
+      "hidden entries must never reach a served read")
+    assert(Search.indexTable(spark, Seq(vroot), "tombstones").count() == 0)
+  }
+
+  test("one index-family relation across roots equals the union of per-member reads") {
+    val docs = Tables.documentsPar(spark, sfDir)
+    val tmp = java.nio.file.Files.createTempDirectory("graftidxroots")
+    val dirs = (0 until 3).map { i =>
+      val d = tmp.resolve(s"m$i").toString
+      Search.buildSearchIndexOf(docs.filter($"doc_id" % 3 === i), d)
+      d
+    }
+    Search.appendToSearchIndex(spark, dirs(1),
+      Seq((900001L, "zeta beta")).toDF("doc_id", "text"), "e1")
+    Search.deleteFromSearchIndex(spark, dirs(2),
+      docs.filter($"doc_id" % 3 === 2).select($"doc_id").limit(2), "d1")
+    val roots = dirs.map(Search.indexRoot(spark, _))
+    Search.IndexFamilies.keys.toSeq.sorted.foreach { fam =>
+      val one = Search.indexTable(spark, roots, fam)
+      val union = roots.map(r => Search.indexTable(spark, Seq(r), fam)).reduce(_ union _)
+      assert(rows(one) == rows(union), s"$fam: one relation != union of members")
+      assert(one.schema == Search.IndexFamilies(fam).schema)
+    }
+    val b = Seq(Search.tokBucket("beta"), Search.tokBucket("zeta"))
+    val pruned = Search.indexTable(spark, roots, "postings", Some(b))
+    assert(rows(pruned) == rows(Search.indexTable(spark, roots, "postings")
+      .filter($"b".isin(b: _*))), "a bucket-pruned listing drops no row of its buckets")
+    val plan = pruned.filter($"tok" === "zeta").queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("PushedFilters"),
+      s"the pruned relation keeps both filters in the scan:\n$plan")
+  }
 }

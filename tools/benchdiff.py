@@ -4,6 +4,14 @@ parsed line) and print per-query deltas, worst regressions first.
 
 Usage: python3 tools/benchdiff.py OLD.json NEW.json [--threshold 1.2]
 
+Given two perfbench reports (perfbench/work/report-*.json) instead, it
+prints their named metrics side by side with the relative change, headed
+by each run's workload, seed, trace flag, loadavg and calib_cpu_s, so a
+matched-window before/after is one command:
+
+    python3 tools/benchdiff.py before/report-search-s51-t1.json \
+        after/report-search-s51-t1.json
+
 Round-over-round per-query history was lost in r4/r5 because the
 driver's stdout capture truncated the line; Bench now writes BENCH.out
 whole, so from r6 on each round can diff against the previous round's
@@ -26,6 +34,33 @@ def load(path):
     return d
 
 
+def is_report(d):
+    """A perfbench report: named metrics plus host telemetry."""
+    return isinstance(d, dict) and "named" in d and "host" in d
+
+
+def report_diff(old, new):
+    """Named metrics of two perfbench reports side by side."""
+    for tag, d in (("old", old), ("new", new)):
+        h = d.get("host", {})
+        checks = d.get("checks", [])
+        passed = sum(1 for c in checks if c.get("ok", c.get("passed")))
+        print(f"{tag}: {d.get('workload')} seed={d.get('seed')} trace={d.get('trace')}  "
+              f"loadavg {h.get('loadavg_start', '?')} -> {h.get('loadavg_end', '?')}  "
+              f"calib_cpu_s {h.get('calib_cpu_s', '?')}  checks {passed}/{len(checks)}")
+    on, nn = old.get("named", {}), new.get("named", {})
+    names = list(on) + [k for k in nn if k not in on]
+    width = max([len(k) for k in names] + [6])
+    print(f"\n{'metric':{width}s} {'old':>14s} {'new':>14s} {'change':>8s}  unit")
+    for k in names:
+        o, n = on.get(k, {}).get("value"), nn.get(k, {}).get("value")
+        unit = (on.get(k) or nn.get(k)).get("unit", "")
+        cell = lambda v: f"{v:14.6g}" if isinstance(v, (int, float)) else f"{'-':>14s}"
+        change = (f"{n / o - 1:+8.1%}" if isinstance(o, (int, float)) and
+                  isinstance(n, (int, float)) and o != 0 else f"{'':>8s}")
+        print(f"{k:{width}s} {cell(o)} {cell(n)} {change}  {unit}")
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     thr = 1.2
@@ -33,6 +68,9 @@ def main():
         if a.startswith("--threshold"):
             thr = float(a.split("=", 1)[1]) if "=" in a else thr
     old, new = load(args[0]), load(args[1])
+    if is_report(old) and is_report(new):
+        report_diff(old, new)
+        return
     oq, nq = old.get("queries", {}), new.get("queries", {})
     shared = sorted(set(oq) & set(nq))
     added = sorted(set(nq) - set(oq))
