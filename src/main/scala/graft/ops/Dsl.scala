@@ -9896,48 +9896,28 @@ object Dsl {
   }
 
   /** Registered `top_hits` body — top-2 longest matching docs per
-    * language, the "examples per bucket" dashboard shape. */
+    * language, the "examples per bucket" dashboard shape.
+    *
+    * Served from doc-values + postings candidates. */
   val TopHitsQuery: String =
     """{"query": {"match": {"text": "dup"}}, "size": 0,
       |  "aggs": {"by_lang": {"terms": {"field": "lang", "size": 3},
       |    "aggs": {"top": {"top_hits": {"size": 2,
       |      "sort": [{"n_chars": "desc"}]}}}}}}""".stripMargin
 
-  def dslTopHits(spark: SparkSession, dir: String): DataFrame =
-    dslTopHitsOf(Tables.documentsPar(spark, dir), TopHitsQuery)
-
-  val dslTopHitsOracleSql: String =
-    dslTopHitsSqlOver(TopHitsQuery, "documents")
-
-  /** Registered query: [[TopHitsQuery]] SERVED from the session index
-    * (doc-values + postings candidates); same oracle as the scan. */
-  def dslTopHitsServed(spark: SparkSession, dir: String): DataFrame =
-    dslTopHitsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), TopHitsQuery)
-
   /** Registered SCORED `top_hits` — the 2 most RELEVANT matching docs
     * per language (`sort: ["_score"]`): the bucket semi join + the
     * query's own score expression + the per-bucket window; each
     * bucket's hits are bit-identical to running the query solo
-    * (corpus statistics are pre-filter — spec-pinned). */
+    * (corpus statistics are pre-filter — spec-pinned).
+    *
+    * Served: postings features + index statistics feed the same score
+    * expression. */
   val TopHitsScoredQuery: String =
     """{"query": {"match": {"text": "dup vector"}}, "size": 0,
       |  "aggs": {"by_lang": {"terms": {"field": "lang", "size": 3},
       |    "aggs": {"top": {"top_hits": {"size": 2,
       |      "sort": ["_score"]}}}}}}""".stripMargin
-
-  def dslTopHitsScored(spark: SparkSession, dir: String): DataFrame =
-    dslTopHitsOf(Tables.documentsPar(spark, dir), TopHitsScoredQuery)
-
-  val dslTopHitsScoredOracleSql: String =
-    dslTopHitsSqlOver(TopHitsScoredQuery, "documents")
-
-  /** Registered query: [[TopHitsScoredQuery]] SERVED — postings
-    * features + index statistics feed the same score expression; same
-    * oracle as the scan form. */
-  def dslTopHitsScoredServed(spark: SparkSession, dir: String): DataFrame =
-    dslTopHitsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), TopHitsScoredQuery)
 
   // ------------------------------------------ composite aggregation
 
@@ -10293,7 +10273,7 @@ object Dsl {
   }
 
   /** The offset form of page 2: buckets 7-12 of the full ordering. */
-  val dslAggsCompositeOracleSql: String = {
+  lazy val dslAggsCompositeOracleSql: String = {
     val wide = CompositePage1Query.replace("\"size\": 6", "\"size\": 12")
     s"""SELECT * FROM (${dslAggsCompositeSqlOver(wide, "documents")})
        |ORDER BY lang, len LIMIT 6 OFFSET 6""".stripMargin
@@ -10334,7 +10314,7 @@ object Dsl {
     dslAggsCompositeOf(Tables.documentsPar(spark, dir),
       CompositeSubsQuery)
 
-  val dslAggsCompositeSubsOracleSql: String =
+  lazy val dslAggsCompositeSubsOracleSql: String =
     dslAggsCompositeSqlOver(CompositeSubsQuery, "documents")
 
   /** Registered query: [[CompositeSubsQuery]] SERVED from the session
@@ -10992,22 +10972,72 @@ object Dsl {
       .orderBy(col("agg"), col("key"), col("key2"))
   }
 
-  /** Registered query: [[DslQuery]] SERVED from the session-shared
-    * index — same oracle SQL as the scan path ([[searchDslSql]]),
-    * which it must reproduce bit-for-bit (DslSpec pins served ≡
-    * scan). */
+  /** Registered query `dsl_served`: [[DslQuery]] SERVED from the
+    * session-shared index — the `dsl_search` row's served twin under
+    * its historical name, so it is wired by hand; same oracle SQL as
+    * the scan, which it must reproduce bit-for-bit (DslSpec pins
+    * served ≡ scan). */
   def searchDslServed(spark: SparkSession, dir: String): DataFrame =
     searchDslFromIndexes(spark,
       Seq(Search.sharedIndexDir(spark, dir)), DslQuery)
 
-  /** Registered query: the multi-field DSL body served from the index
-    * — per-field postings feed the dis_max scoring, positional
-    * postings feed the boosted phrase should. */
-  def searchDslMultifieldServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MultifieldQuery)
-
   // --------------------------------------------------- registered form
+
+  /** How a registered body compiles: the scan compiler over a corpus
+    * frame, the index compiler over index dirs, and the oracle
+    * generator over the corpus's DuckDB relation. */
+  final case class Kind(
+      scan: (DataFrame, String) => DataFrame,
+      index: (SparkSession, Seq[String], String) => DataFrame,
+      oracle: (String, String) => String)
+
+  /** Hits bodies: the search endpoint. */
+  val Hits: Kind = Kind(searchDslOf, searchDslFromIndexes, dslSqlOver)
+
+  /** Aggregation bodies (`size: 0` + `aggs`). */
+  val Aggs: Kind = Kind(dslAggsOf, dslAggsFromIndexes, dslAggsSqlOver)
+
+  /** A terms agg whose sub is `top_hits`. */
+  val TopHits: Kind =
+    Kind(dslTopHitsOf, dslTopHitsFromIndexes, dslTopHitsSqlOver)
+
+  /** `suggest` bodies; the served form reads ONE index's term
+    * dictionary. */
+  val Suggest: Kind = Kind(dslSuggestOf,
+    (spark, dirs, json) => dirs match {
+      case Seq(dir) => dslSuggestFromIndex(spark, dir, json)
+      case _ => fail("a suggest body is served from exactly one index")
+    },
+    dslSuggestSqlOver)
+
+  /** What a registered body runs over: the Spark frame under `dir`,
+    * the oracle's relation over the same rows, and, for a corpus that
+    * can be served, the session-shared index dirs holding those rows.
+    * The derived-column corpora beside their bodies are scan-only: a
+    * computed column is not a stored doc-value. */
+  final case class Corpus(frame: (SparkSession, String) => DataFrame,
+      rel: String,
+      indexes: Option[(SparkSession, String) => Seq[String]] = None)
+
+  /** The corpus and its one session-shared index. */
+  val Documents: Corpus = Corpus(Tables.documentsPar, "documents",
+    Some((spark, dir) => Seq(Search.sharedIndexDir(spark, dir))))
+
+  /** The corpus with the deterministic ingest date
+    * ([[Search.withPersistDate]]), served from the daily indices: the
+    * daily layout is the only shared index whose docmeta carries
+    * persist_date (the single-corpus index is built before the ingest
+    * date exists). */
+  val PersistDate: Corpus = Corpus(
+    (spark, dir) => Search.withPersistDate(Tables.documentsPar(spark, dir)),
+    Search.PersistDateRel,
+    Some((spark, dir) => Search.sharedDailyIndexDirs(spark, dir)._1))
+
+  /** The ingest corpus where tags live ([[Ingest.ingestDocs]]), served
+    * from the daily ingest indices through their alias. */
+  val IngestDocs: Corpus = Corpus(Ingest.ingestDocs, Ingest.IngestDocsRel,
+    Some((spark, dir) => Search.readAlias(spark,
+      Search.sharedIngestDailyIndexDirs(spark, dir)._2)))
 
   /** The registered DSL search: every clause family in one body —
     * scored must-match over the [[Search.QueryTerms]] text, an
@@ -11024,11 +11054,6 @@ object Dsl {
       |               {"exists": {"field": "source"}}]
       |}}, "size": 50}""".stripMargin
 
-  def searchDsl(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), DslQuery)
-
-  val searchDslSql: String = dslSql(DslQuery)
-
   /** Registered FILTER-ONLY DSL query — the ES filter-cache shape.
     * Its plan is pinned scoreless AND textless: one parquet scan with
     * the predicates pushed down, no stats aggregate, no broadcast
@@ -11039,15 +11064,13 @@ object Dsl {
       |  {"terms": {"lang": ["en", "de"]}},
       |  {"exists": {"field": "source"}}]}}, "size": 100}""".stripMargin
 
-  def searchDslFilter(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FilterQuery)
-
-  val searchDslFilterSql: String = dslSql(FilterQuery)
-
   /** Registered MULTI-FIELD DSL query — `multi_match` best_fields
     * over `head^2` + `text` (the mapping.json name/type pair, the
     * [[Search.bm25Multifield]] shape expressed in the DSL) with a
-    * boosted phrase should. */
+    * boosted phrase should.
+    *
+    * Served: per-field postings feed the dis_max scoring, positional
+    * postings feed the boosted phrase should. */
   val MultifieldQuery: String =
     s"""{"query": {"bool": {
        |  "must": [{"multi_match": {"query": "dup vector merge",
@@ -11055,11 +11078,6 @@ object Dsl {
        |            "type": "best_fields"}}],
        |  "should": [{"match_phrase": {"text": {"query": "dup vector", "boost": 1.5}}}]
        |}}, "size": 50}""".stripMargin
-
-  def searchDslMultifield(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MultifieldQuery)
-
-  val searchDslMultifieldSql: String = dslSql(MultifieldQuery)
 
   /** Registered `most_fields` multi_match — the same fields as
     * [[MultifieldQuery]] but per-field scores SUM (the "same text,
@@ -11069,31 +11087,17 @@ object Dsl {
        |  "fields": ["${Search.HeadField}^2", "${Search.DefaultField}"],
        |  "type": "most_fields"}}, "size": 50}""".stripMargin
 
-  def searchDslMostFields(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MostFieldsQuery)
-
-  val searchDslMostFieldsSql: String = dslSql(MostFieldsQuery)
-
   /** Registered multi_match `phrase` — dis_max over per-field
     * match_phrase (desugared at parse; the positional machinery and
     * the generated oracle are [[PhraseQ]]'s), with a slop budget and a
-    * head-field boost. */
+    * head-field boost.
+    *
+    * Served: per-field positional postings under the dis_max combiner. */
   val MmPhraseQuery: String =
     s"""{"query": {"multi_match": {"query": "merge hash",
        |  "type": "phrase", "slop": 1,
        |  "fields": ["${Search.HeadField}^2", "${Search.DefaultField}"]}},
        |  "size": 30}""".stripMargin
-
-  def searchDslMmPhrase(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MmPhraseQuery)
-
-  val searchDslMmPhraseSql: String = dslSql(MmPhraseQuery)
-
-  /** Registered query: [[MmPhraseQuery]] SERVED — per-field positional
-    * postings under the dis_max combiner; same oracle. */
-  def searchDslMmPhraseServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MmPhraseQuery)
 
   /** Registered multi_match `cross_fields` — term-centric: every term
     * must land in SOME field (`operator: and`), each term scored by
@@ -11106,17 +11110,6 @@ object Dsl {
        |  "fields": ["${Search.HeadField}", "${Search.DefaultField}"]}},
        |  "size": 30}""".stripMargin
 
-  def searchDslCrossFields(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), CrossFieldsQuery)
-
-  val searchDslCrossFieldsSql: String = dslSql(CrossFieldsQuery)
-
-  /** Registered query: [[CrossFieldsQuery]] SERVED; same oracle. */
-  def searchDslCrossFieldsServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), CrossFieldsQuery)
-
   /** Registered `match_bool_prefix` — the search-as-you-type bar
     * (ES's own suggested clause for it): lead terms optional, the
     * trailing fragment a token prefix; desugared at parse into
@@ -11125,15 +11118,6 @@ object Dsl {
   val MatchBoolPrefixQuery: String =
     """{"query": {"match_bool_prefix": {"text": "dup vec"}},
       |  "size": 30}""".stripMargin
-
-  def searchDslMbp(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MatchBoolPrefixQuery)
-
-  val searchDslMbpSql: String = dslSql(MatchBoolPrefixQuery)
-
-  def searchDslMbpServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MatchBoolPrefixQuery)
 
   /** Registered `pinned` — curated ids above organic hits. The pinned
     * set deliberately mixes docs INSIDE and OUTSIDE the organic match
@@ -11145,15 +11129,6 @@ object Dsl {
     """{"query": {"pinned": {"ids": [42, 7, 99],
       |  "organic": {"match": {"text": "dup vector merge"}}}},
       |  "size": 25}""".stripMargin
-
-  def searchDslPinned(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), PinnedQuery)
-
-  val searchDslPinnedSql: String = dslSql(PinnedQuery)
-
-  def searchDslPinnedServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), PinnedQuery)
 
   /** Registered `terms_set` — per-document match thresholds: each doc
     * demands `req_m` of the three terms (req_m = doc_id % 3, derived
@@ -11167,14 +11142,10 @@ object Dsl {
       .stripMargin
 
   /** The threshold-column corpus both engines derive identically. */
-  val ReqMRel: String =
-    "(SELECT *, doc_id % 3 AS req_m FROM documents)"
-
-  def searchDslTermsSet(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir)
-      .withColumn("req_m", col("doc_id") % 3), TermsSetQuery)
-
-  val searchDslTermsSetSql: String = dslSqlOver(TermsSetQuery, ReqMRel)
+  val ReqM: Corpus = Corpus(
+    (spark, dir) => Tables.documentsPar(spark, dir)
+      .withColumn("req_m", col("doc_id") % 3),
+    "(SELECT *, doc_id % 3 AS req_m FROM documents)")
 
   /** Registered `rank_feature` — relevance + a document-signal should:
     * BM25 must over the query terms, a saturation-scored length signal
@@ -11185,16 +11156,6 @@ object Dsl {
       |  "should": [{"rank_feature": {"field": "n_chars",
       |    "saturation": {"pivot": 250}}}]}}, "size": 30}""".stripMargin
 
-  def searchDslRankFeature(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), RankFeatureQuery)
-
-  val searchDslRankFeatureSql: String = dslSql(RankFeatureQuery)
-
-  def searchDslRankFeatureServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), RankFeatureQuery)
-
   /** Registered `distance_feature` — recency boost: matching docs
     * near the origin date score pivot/(pivot+days) on top of their
     * BM25 must (the "boost this week's docs" pattern). */
@@ -11204,19 +11165,6 @@ object Dsl {
       |  "should": [{"distance_feature": {"field": "persist_date",
       |    "origin": "2026-02-10", "pivot": "7d"}}]}}, "size": 25}"""
       .stripMargin
-
-  def searchDslDistanceFeature(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      DistanceFeatureQuery)
-
-  val searchDslDistanceFeatureSql: String =
-    dslSqlOver(DistanceFeatureQuery, Search.PersistDateRel)
-
-  def searchDslDistanceFeatureServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, DistanceFeatureQuery)
 
   /** Registered DATE-MATH range body (VERDICT r15 #3): every bound is
     * explicit-anchor date math — `gte` "2025-12-26||+7d" → 2026-01-02,
@@ -11235,20 +11183,6 @@ object Dsl {
       |    {"range": {"persist_date": {"gt": "2025-12-15||/M"}}}]
       |}}, "size": 40}""".stripMargin
 
-  def searchDslDateMath(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      DateMathQuery)
-
-  val searchDslDateMathSql: String =
-    dslSqlOver(DateMathQuery, Search.PersistDateRel)
-
-  /** Registered query: [[DateMathQuery]] SERVED from the daily
-    * indices' docmeta doc-values; same oracle. */
-  def searchDslDateMathServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, DateMathQuery)
-
   /** Registered `collapse` — field collapsing: one best-ranked hit per
     * `source` (the "one result per site" pattern), collapsed BEFORE
     * the page cut by a per-group window — rank state is per-group
@@ -11258,21 +11192,15 @@ object Dsl {
       |  "collapse": {"field": "source"},
       |  "size": 15, "_source": ["source", "n_chars"]}""".stripMargin
 
-  def searchDslCollapse(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), CollapseQuery)
-
-  val searchDslCollapseSql: String = dslSql(CollapseQuery)
-
-  def searchDslCollapseServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), CollapseQuery)
-
   /** Registered `terms` LOOKUP + spans + case_insensitive — the
     * round-14 session-III clause knobs in one body: the language
     * filter comes from doc 42's OWN lang (a 1-row GET resolved at
     * build, IN-subquery in the oracle), an in-order `span_near`
     * (≡ sloppy phrase) must, a `span_term` should, and a
-    * case-insensitive prefix filter. */
+    * case-insensitive prefix filter.
+    *
+    * Served: the lookup GET resolves against docmeta, spans ride
+    * positional postings. */
   val LookupSpanQuery: String =
     """{"query": {"bool": {
       |  "must": [{"span_near": {"clauses": [
@@ -11286,19 +11214,6 @@ object Dsl {
       |    {"prefix": {"source": {"value": "SRC",
       |      "case_insensitive": true}}}]
       |}}, "size": 25}""".stripMargin
-
-  def searchDslLookupSpan(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), LookupSpanQuery)
-
-  val searchDslLookupSpanSql: String = dslSql(LookupSpanQuery)
-
-  /** Registered query: [[LookupSpanQuery]] SERVED — the lookup GET
-    * resolves against docmeta, spans ride positional postings; same
-    * oracle. */
-  def searchDslLookupSpanServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), LookupSpanQuery)
 
   /** Registered `intervals` + `combined_fields` — the last two query
     * grammars: an any_of over an ordered bounded-gap match (the
@@ -11316,16 +11231,6 @@ object Dsl {
        |    {"prefix": {"prefix": "dedu"}}]}}}}]
        |}}, "size": 25}""".stripMargin
 
-  def searchDslIntervals(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), IntervalsQuery)
-
-  val searchDslIntervalsSql: String = dslSql(IntervalsQuery)
-
-  def searchDslIntervalsServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), IntervalsQuery)
-
   /** Registered SPAN_MULTI body — prefix spans on the proven
     * prefix-phrase machinery: a `span_near` whose LAST clause is a
     * span_multi prefix (Lucene's prefix-phrase shape ≡
@@ -11341,17 +11246,6 @@ object Dsl {
       |    {"prefix": {"text": "merg"}}}}]
       |}}, "size": 25}""".stripMargin
 
-  def searchDslSpanMulti(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), SpanMultiQuery)
-
-  val searchDslSpanMultiSql: String = dslSql(SpanMultiQuery)
-
-  /** Registered query: [[SpanMultiQuery]] SERVED; same oracle. */
-  def searchDslSpanMultiServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), SpanMultiQuery)
-
   /** Registered TRUE-BM25F `combined_fields` — the r15 graduation
     * from the best-field stand-in: weighted head^2/text blending with
     * the `or` operator; the blended df* and dl* statistics ride the
@@ -11360,17 +11254,6 @@ object Dsl {
     s"""{"query": {"combined_fields": {"query": "dup vector merge",
        |  "fields": ["${Search.HeadField}^2", "${Search.DefaultField}"],
        |  "operator": "or"}}, "size": 30}""".stripMargin
-
-  def searchDslCombined(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), CombinedFieldsQuery)
-
-  val searchDslCombinedSql: String = dslSql(CombinedFieldsQuery)
-
-  /** Registered query: [[CombinedFieldsQuery]] SERVED; same oracle. */
-  def searchDslCombinedServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), CombinedFieldsQuery)
 
   /** Registered r15 INTERVALS slice — the two graduated rule
     * combinations: an ordered+UNLIMITED-gaps match (monotone
@@ -11385,17 +11268,6 @@ object Dsl {
       |    {"query": "vector hash", "max_gaps": 25}}}}],
       |  "should": [{"match": {"text": "dedup"}}]
       |}}, "size": 25}""".stripMargin
-
-  def searchDslIntervals2(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), Intervals2Query)
-
-  val searchDslIntervals2Sql: String = dslSql(Intervals2Query)
-
-  /** Registered query: [[Intervals2Query]] SERVED; same oracle. */
-  def searchDslIntervals2Served(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), Intervals2Query)
 
   /** Registered round-16 intervals slice: k = 3 ORDERED + BOUNDED
     * intervals (the exact total-gap chain [[SpanChainQ]] — positions
@@ -11416,17 +11288,6 @@ object Dsl {
       |    "slop": 8, "in_order": false}}]
       |}}, "size": 30}""".stripMargin
 
-  def searchDslIntervals3(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), Intervals3Query)
-
-  val searchDslIntervals3Sql: String = dslSql(Intervals3Query)
-
-  /** Registered query: [[Intervals3Query]] SERVED; same oracle. */
-  def searchDslIntervals3Served(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), Intervals3Query)
-
   /** Registered `_mget` — three ids in request order, the middle one
     * a guaranteed miss (found = false row, the ES contract). */
   val MgetIds: Seq[Long] = Seq(42L, 999999999L, 7L)
@@ -11435,7 +11296,7 @@ object Dsl {
   def dslMget(spark: SparkSession, dir: String): DataFrame =
     dslMgetOf(Tables.documentsPar(spark, dir), MgetIds, MgetFields)
 
-  val dslMgetOracleSql: String =
+  lazy val dslMgetOracleSql: String =
     dslMgetSqlOver(MgetIds, MgetFields, "documents")
 
   /** Registered `_analyze` — messy input (case, padding, collapsed
@@ -11445,14 +11306,14 @@ object Dsl {
   def dslAnalyze(spark: SparkSession, dir: String): DataFrame =
     dslAnalyzeOf(spark, AnalyzeText)
 
-  val dslAnalyzeOracleSql: String = dslAnalyzeSql(AnalyzeText)
+  lazy val dslAnalyzeOracleSql: String = dslAnalyzeSql(AnalyzeText)
 
   /** Registered `_termvectors` — doc 42's term vector with corpus
     * term statistics (df-bounded: stats only for that doc's terms). */
   def dslTermVectors(spark: SparkSession, dir: String): DataFrame =
     dslTermVectorsOf(Tables.documentsPar(spark, dir), 42L)
 
-  val dslTermVectorsOracleSql: String =
+  lazy val dslTermVectorsOracleSql: String =
     dslTermVectorsSqlOver(42L, "documents")
 
   /** Registered `_rank_eval` — two rated requests (a broad match and
@@ -11470,7 +11331,7 @@ object Dsl {
   def dslRankEval(spark: SparkSession, dir: String): DataFrame =
     dslRankEvalOf(Tables.documentsPar(spark, dir), RankEvalReqs)
 
-  val dslRankEvalOracleSql: String =
+  lazy val dslRankEvalOracleSql: String =
     dslRankEvalSqlOver(RankEvalReqs, "documents")
 
   /** Registered `rescore` — two-phase ranking: a cheap broad match
@@ -11486,15 +11347,6 @@ object Dsl {
       |    "query_weight": 0.7, "rescore_query_weight": 1.2}},
       |  "size": 30}""".stripMargin
 
-  def searchDslRescore(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), RescoreQuery)
-
-  val searchDslRescoreSql: String = dslSql(RescoreQuery)
-
-  def searchDslRescoreServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), RescoreQuery)
-
   /** Registered `more_like_this` — find-similar with like-text-local
     * term selection: terms occurring ≥2× in the like text rank by
     * (tf desc, term asc), the top 10 become an msm-gated disjunction
@@ -11506,20 +11358,14 @@ object Dsl {
       |  "min_term_freq": 2, "max_query_terms": 10,
       |  "minimum_should_match": 1}}, "size": 30}""".stripMargin
 
-  def searchDslMlt(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MltQuery)
-
-  val searchDslMltSql: String = dslSql(MltQuery)
-
-  def searchDslMltServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MltQuery)
-
   /** Registered AGGREGATIONS body — a match query with a terms agg, a
     * date_histogram (over the deterministic [[Search.withPersistDate]]
     * ingest date — the reference's daily-index date, modeled
     * oracle-stably) carrying a stats sub-agg, a numeric histogram,
-    * and a top-level stats metric. */
+    * and a top-level stats metric.
+    *
+    * Served from the daily indices, green proves served ≡ scan AND that
+    * per-member bucket counts union to the whole-corpus buckets. */
   val AggsQuery: String =
     """{"query": {"match": {"text": "dup vector merge"}},
       |  "size": 0,
@@ -11530,13 +11376,6 @@ object Dsl {
       |              "aggs": {"chars": {"stats": {"field": "n_chars"}}}},
       |    "len_hist": {"histogram": {"field": "n_chars", "interval": 100}},
       |    "chars_all": {"stats": {"field": "n_chars"}}}}""".stripMargin
-
-  def dslAggs(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsQuery)
-
-  val dslAggsOracleSql: String =
-    dslAggsSqlOver(AggsQuery, Search.PersistDateRel)
 
   /** Registered terms `include`/`exclude` + monthly date_histogram —
     * the bucket-partitioning knobs: an anchored include regex keeps
@@ -11553,19 +11392,6 @@ object Dsl {
       |    "monthly": {"date_histogram": {"field": "persist_date",
       |      "calendar_interval": "month"}}}}""".stripMargin
 
-  def dslAggsInclude(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsIncludeQuery)
-
-  val dslAggsIncludeOracleSql: String =
-    dslAggsSqlOver(AggsIncludeQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsIncludeQuery]] SERVED from the daily
-    * indices; same oracle as the scan form. */
-  def dslAggsIncludeServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsIncludeQuery)
-
   /** Registered `filters` aggregation — NAMED OVERLAPPING segments in
     * one pass: a full-text match bucket (its tf rides the merged
     * clause inventory's shared feature frame), a compound bool
@@ -11573,7 +11399,9 @@ object Dsl {
     * stats sub; a terms agg rides beside them in the same
     * grouping-sets pass. Overlap is the point — a doc lands in every
     * bucket whose clause it satisfies, which a groupBy key could
-    * never express and a conditional-count column gets for free. */
+    * never express and a conditional-count column gets for free.
+    *
+    * Served: bucket membership from postings tf + docmeta doc-values. */
   val AggsFiltersQuery: String =
     """{"query": {"range": {"n_chars": {"gte": 40}}}, "size": 0,
       |  "aggs": {
@@ -11596,7 +11424,10 @@ object Dsl {
     * terms sibling proves the post-cut contract: `sum_bucket` totals
     * the top-3 language buckets, not all languages. Every pipeline
     * node windows or aggregates over |buckets| rows: at 100 TB the
-    * corpus pass is unchanged and the pipeline work stays tiny. */
+    * corpus pass is unchanged and the pipeline work stays tiny.
+    *
+    * Served: pipeline inputs are the served bucket rows, so green also
+    * proves the cross-member bucket union feeds the windows the same. */
   val AggsPipelineQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -11614,21 +11445,6 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
 
-  def dslAggsPipeline(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsPipelineQuery)
-
-  val dslAggsPipelineOracleSql: String =
-    dslAggsSqlOver(AggsPipelineQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsPipelineQuery]] SERVED from the daily
-    * indices — pipeline inputs are the served bucket rows, so green
-    * also proves the cross-member bucket union feeds the windows the
-    * same; same oracle as the scan form. */
-  def dslAggsPipelineServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsPipelineQuery)
-
   /** Registered SIBLING-PIPELINE STATISTICS body — `percentiles_bucket`
     * (exact interpolation over the sibling's returned bucket counts;
     * see [[BucketMetricAgg]] for the ES nearest-rank divergence) and
@@ -11636,7 +11452,9 @@ object Dsl {
     * over a daily date_histogram, plus a percentiles_bucket over a
     * CUT terms sibling — green proves the post-top-N contract: the
     * percentile reads the returned 3 language buckets, not all
-    * languages. */
+    * languages.
+    *
+    * Served: the sibling pipelines read the served bucket rows. */
   val AggsBucketStatsQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -11650,21 +11468,6 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}},
       |    "lang_pcts": {"percentiles_bucket": {
       |        "buckets_path": "langs>_count"}}}}""".stripMargin
-
-  def dslAggsBucketStats(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsBucketStatsQuery)
-
-  val dslAggsBucketStatsOracleSql: String =
-    dslAggsSqlOver(AggsBucketStatsQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsBucketStatsQuery]] SERVED from the daily
-    * indices — the sibling pipelines read the served bucket rows;
-    * same oracle as the scan form. */
-  def dslAggsBucketStatsServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsBucketStatsQuery)
 
   /** Registered GAP-FILL pipeline body (VERDICT r15 #4 — the
     * COVERAGE.md documented divergence, closed): `min_doc_count: 0`
@@ -11696,22 +11499,13 @@ object Dsl {
   /** The gappy-date fixture: quadratic offsets leave holes a
     * consecutive fixture cannot — (doc_id%4)² × 7 days from the
     * persist epoch → 2026-01-01, 01-08, 01-29, 03-05. */
-  val GapDateRel: String =
+  val GapDate: Corpus = Corpus(
+    (spark, dir) => Tables.documentsPar(spark, dir).withColumn("gap_date",
+      date_add(to_date(lit(Search.PersistEpoch)),
+        ((col("doc_id") % 4) * (col("doc_id") % 4) * 7).cast("int"))),
     s"(SELECT *, DATE '${Search.PersistEpoch}' + " +
       "CAST((doc_id % 4) * (doc_id % 4) * 7 AS INT) AS gap_date " +
-      "FROM documents)"
-
-  private def withGapDate(docs: DataFrame): DataFrame =
-    docs.withColumn("gap_date",
-      date_add(to_date(lit(Search.PersistEpoch)),
-        ((col("doc_id") % 4) * (col("doc_id") % 4) * 7).cast("int")))
-
-  def dslAggsGapFill(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(withGapDate(Tables.documentsPar(spark, dir)),
-      AggsGapFillQuery)
-
-  val dslAggsGapFillOracleSql: String =
-    dslAggsSqlOver(AggsGapFillQuery, GapDateRel)
+      "FROM documents)")
 
   /** Registered sliding-window pipeline body (VERDICT r16 #3 — the
     * Kibana smoothing family): `moving_fn` with the closed-form
@@ -11722,7 +11516,9 @@ object Dsl {
     * the first two buckets are null, ES's omitted-value). All three
     * window over the parent's RETURNED bucket rows — |buckets| rows
     * of post-processing on one corpus pass, the scale-free half of
-    * the ES agg surface. */
+    * the ES agg surface.
+    *
+    * Served: the windows read the served bucket union. */
   val AggsMovingQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -11741,20 +11537,6 @@ object Dsl {
       |        "window": 2, "shift": 1,
       |        "script": "MovingFunctions.max(values)"}}}}}}"""
       .stripMargin
-
-  def dslAggsMoving(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsMovingQuery)
-
-  val dslAggsMovingOracleSql: String =
-    dslAggsSqlOver(AggsMovingQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsMovingQuery]] SERVED from the daily
-    * indices — the windows read the served bucket union; same oracle
-    * as the scan form. */
-  def dslAggsMovingServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsMovingQuery)
 
   /** ES `_terms_enum` request shape. */
   private final case class TermsEnumReq(field: String, prefix: String,
@@ -11886,13 +11668,13 @@ object Dsl {
   def dslTermsEnum(spark: SparkSession, dir: String): DataFrame =
     termsEnumOf(Tables.documentsPar(spark, dir), TermsEnumQuery)
 
-  val dslTermsEnumOracleSql: String =
+  lazy val dslTermsEnumOracleSql: String =
     termsEnumSqlOver(TermsEnumQuery, "documents")
 
   def dslTermsEnumText(spark: SparkSession, dir: String): DataFrame =
     termsEnumOf(Tables.documentsPar(spark, dir), TermsEnumTextQuery)
 
-  val dslTermsEnumTextOracleSql: String =
+  lazy val dslTermsEnumTextOracleSql: String =
     termsEnumSqlOver(TermsEnumTextQuery, "documents")
 
   /** Registered query: [[TermsEnumTextQuery]] SERVED — the dictionary
@@ -12000,7 +11782,7 @@ object Dsl {
     searchTemplateOf(Tables.documentsPar(spark, dir),
       SearchTemplateQuery)
 
-  val dslSearchTemplateOracleSql: String =
+  lazy val dslSearchTemplateOracleSql: String =
     searchTemplateSql(SearchTemplateQuery)
 
   /** Registered SEARCH-TEMPLATE aggs body — a parameterized term
@@ -12016,7 +11798,7 @@ object Dsl {
     searchTemplateOf(Tables.documentsPar(spark, dir),
       SearchTemplateAggsQuery)
 
-  val dslSearchTemplateAggsOracleSql: String =
+  lazy val dslSearchTemplateAggsOracleSql: String =
     searchTemplateSql(SearchTemplateAggsQuery)
 
   /** Registered RUNTIME-FIELDS hits body — a query-time computed
@@ -12035,11 +11817,6 @@ object Dsl {
       |  "sort": [{"len2": "desc"}, {"doc_id": "asc"}],
       |  "size": 10}""".stripMargin
 
-  def dslRuntimeFields(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), RuntimeFieldsQuery)
-
-  val dslRuntimeFieldsOracleSql: String = dslSql(RuntimeFieldsQuery)
-
   /** Registered RUNTIME-FIELDS aggs body — a `long` runtime field
     * (truncate-toward-zero in both engines) bucketing a terms agg and
     * feeding stats; the grouping key is a computed column the
@@ -12052,17 +11829,15 @@ object Dsl {
       |    "lstats": {"stats": {"field": "len_bucket"}}}}"""
       .stripMargin
 
-  def dslRuntimeAggs(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), RuntimeAggsQuery)
-
-  val dslRuntimeAggsOracleSql: String = dslAggsSql(RuntimeAggsQuery)
-
   /** Registered CUMULATIVE_CARDINALITY body — distinct sources seen
     * through time (the "new users over time" shape) over a daily
     * date_histogram, and distinct languages accumulating up the
     * length histogram; EXACT via the first-occurrence decomposition
     * (see [[CumCardAgg]], incl. the inline-field divergence from
-    * ES's sketch-merging buckets_path form). */
+    * ES's sketch-merging buckets_path form).
+    *
+    * Served: the first-occurrence pass reads docmeta doc-values across
+    * the daily members. */
   val AggsCumCardQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -12075,27 +11850,14 @@ object Dsl {
       |      "aggs": {"langs_seen": {"cumulative_cardinality":
       |        {"field": "lang"}}}}}}""".stripMargin
 
-  def dslAggsCumCard(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsCumCardQuery)
-
-  val dslAggsCumCardOracleSql: String =
-    dslAggsSqlOver(AggsCumCardQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsCumCardQuery]] SERVED from the daily
-    * indices — the first-occurrence pass reads docmeta doc-values
-    * across the members; same oracle as the scan form. */
-  def dslAggsCumCardServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsCumCardQuery)
-
   /** Registered NORMALIZE + MOVING_PERCENTILES body — the daily
     * volume as a percent of total and as a z-score (exact-int window
     * aggregates, see [[PipelineAgg]]), a length histogram rescaled to
     * [0, 1], and the 3-day moving median of the daily counts (the
     * exact window percentile; ES's TDigest-merge divergence
-    * documented on the case class). */
+    * documented on the case class).
+    *
+    * Served: the windows read the served bucket union. */
   val AggsNormalizeQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -12116,21 +11878,6 @@ object Dsl {
       |        "interval": 200},
       |      "aggs": {"scaled": {"normalize": {"buckets_path": "_count",
       |        "method": "rescale_0_1"}}}}}}""".stripMargin
-
-  def dslAggsNormalize(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsNormalizeQuery)
-
-  val dslAggsNormalizeOracleSql: String =
-    dslAggsSqlOver(AggsNormalizeQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsNormalizeQuery]] SERVED from the daily
-    * indices — the windows read the served bucket union; same oracle
-    * as the scan form. */
-  def dslAggsNormalizeServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsNormalizeQuery)
 
   /** Registered round-14 agg families II — the remaining everyday ES
     * aggregation types in one body: `multi_terms` (compound
@@ -12154,14 +11901,10 @@ object Dsl {
       .stripMargin
 
   /** The weight-column corpus both engines derive identically. */
-  val W8Rel: String =
-    "(SELECT *, doc_id % 5 + 1 AS w8 FROM documents)"
-
-  def dslAggsExt2(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir)
-      .withColumn("w8", col("doc_id") % 5 + 1), AggsExt2Query)
-
-  val dslAggsExt2OracleSql: String = dslAggsSqlOver(AggsExt2Query, W8Rel)
+  val W8: Corpus = Corpus(
+    (spark, dir) => Tables.documentsPar(spark, dir)
+      .withColumn("w8", col("doc_id") % 5 + 1),
+    "(SELECT *, doc_id % 5 + 1 AS w8 FROM documents)")
 
   /** Registered round-14 agg families III — `missing` (docs lacking
     * the nullable column, with an avg sub over the null bucket),
@@ -12196,16 +11939,11 @@ object Dsl {
 
   /** Scan-side corpus for [[AggsExt3Query]]: the deterministic ingest
     * date + the deterministically-nulled source column. */
-  val Ext3Rel: String =
+  val Ext3: Corpus = Corpus(
+    (spark, dir) => PersistDate.frame(spark, dir)
+      .withColumn("src_opt", when(col("doc_id") % 7 =!= 0, col("source"))),
     "(SELECT *, CASE WHEN doc_id % 7 <> 0 THEN source END AS src_opt " +
-      s"FROM ${Search.PersistDateRel} AS pd)"
-
-  def dslAggsExt3(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir))
-      .withColumn("src_opt",
-        when(col("doc_id") % 7 =!= 0, col("source"))), AggsExt3Query)
-
-  val dslAggsExt3OracleSql: String = dslAggsSqlOver(AggsExt3Query, Ext3Rel)
+      s"FROM ${PersistDate.rel} AS pd)")
 
   /** Registered DATE-MATH aggs body (VERDICT r15 #3): `date_range`
     * bounds written as explicit-anchor date math — `/M` month
@@ -12225,13 +11963,6 @@ object Dsl {
       |        {"from": "2026-02-02||-1M/d"}]},
       |      "aggs": {"chars": {"avg": {"field": "n_chars"}}}}}}"""
     .stripMargin
-
-  def dslAggsDateMath(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsDateMathQuery)
-
-  val dslAggsDateMathOracleSql: String =
-    dslAggsSqlOver(AggsDateMathQuery, Search.PersistDateRel)
 
   /** Registered SPAN-ALGEBRA body — the round-15 span combinators in
     * one query: a `span_first` must (dup within the first 60 tokens),
@@ -12256,22 +11987,14 @@ object Dsl {
       |    {"span_term": {"text": "hash"}}]}}]
       |}}, "size": 30}""".stripMargin
 
-  def searchDslSpans(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), SpansQuery)
-
-  val searchDslSpansSql: String = dslSql(SpansQuery)
-
-  /** Registered query: [[SpansQuery]] SERVED; same oracle. */
-  def searchDslSpansServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), SpansQuery)
-
   /** Registered SPAN-ENCLOSURE body (VERDICT r15 #2 — the last span
     * combinators): a `span_within` must (little "vector" inside an
     * unordered dup↔merge near-span) beside a `span_containing` filter
     * (little "hash" inside an ordered dup→vector pair) — both compile
     * to the [[SpanWithinQ]] enclosure count; a scored match keeps the
-    * page BM25-ranked. */
+    * page BM25-ranked.
+    *
+    * Served from positional postings. */
   val SpanWithinQuery: String =
     """{"query": {"bool": {
       |  "must": [{"match": {"text": "hash"}},
@@ -12290,23 +12013,13 @@ object Dsl {
       |        "slop": 15, "in_order": true}}}}]
       |}}, "size": 30}""".stripMargin
 
-  def searchDslSpanWithin(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), SpanWithinQuery)
-
-  val searchDslSpanWithinSql: String = dslSql(SpanWithinQuery)
-
-  /** Registered query: [[SpanWithinQuery]] SERVED from positional
-    * postings; same oracle. */
-  def searchDslSpanWithinServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), SpanWithinQuery)
-
   /** Registered SUGGEST body — the search-box loop end-to-end in the
     * DSL: a completion suggester on the shared corpus prefix, its
     * typo-tolerant fuzzy twin on the misspelled prefix, and a term
     * (spell-correction) suggester; one vocabulary pass serves all
-    * three. */
+    * three.
+    *
+    * Served from the shared index's term dictionary. */
   val SuggestBodyQuery: String =
     s"""{"suggest": {
       |  "complete": {"prefix": "${Search.SuggestPrefix}",
@@ -12318,24 +12031,15 @@ object Dsl {
       |    "term": {"field": "text", "size": 5, "max_edits": 2}}}}"""
       .stripMargin
 
-  def dslSuggest(spark: SparkSession, dir: String): DataFrame =
-    dslSuggestOf(Tables.documentsPar(spark, dir), SuggestBodyQuery)
-
-  val dslSuggestOracleSql: String =
-    dslSuggestSqlOver(SuggestBodyQuery, "documents")
-
-  /** Registered query: [[SuggestBodyQuery]] SERVED from the shared
-    * index's term dictionary; same oracle. */
-  def dslSuggestServed(spark: SparkSession, dir: String): DataFrame =
-    dslSuggestFromIndex(spark, Search.sharedIndexDir(spark, dir),
-      SuggestBodyQuery)
-
   /** Registered PHRASE-SUGGESTER body (VERDICT r15 #5): two-token
     * inputs with one typo'd token each — "hash vektor" (edit-1 fix on
     * the second token) and "smal vector" (edit-2 budget on the first)
     * — candidates re-ranked by corpus BIGRAM frequency, the bigram-LM
     * machinery's count-space rescore. The oracle rebuilds vocabulary,
-    * candidates, AND the bigram counts in DuckDB. */
+    * candidates, AND the bigram counts in DuckDB.
+    *
+    * Served: candidates from the index term dictionary, bigram counts
+    * from the positional postings' adjacency. */
   val SuggestPhraseQuery: String =
     """{"suggest": {
       |  "fix": {"text": "hash vektor",
@@ -12344,19 +12048,6 @@ object Dsl {
       |  "fix2": {"text": "smal vector",
       |    "phrase": {"field": "text", "size": 5, "max_edits": 2}}}}"""
       .stripMargin
-
-  def dslSuggestPhrase(spark: SparkSession, dir: String): DataFrame =
-    dslSuggestOf(Tables.documentsPar(spark, dir), SuggestPhraseQuery)
-
-  val dslSuggestPhraseOracleSql: String =
-    dslSuggestSqlOver(SuggestPhraseQuery, "documents")
-
-  /** Registered query: [[SuggestPhraseQuery]] SERVED — candidates
-    * from the index term dictionary, bigram counts from the
-    * positional postings' adjacency; same oracle. */
-  def dslSuggestPhraseServed(spark: SparkSession, dir: String): DataFrame =
-    dslSuggestFromIndex(spark, Search.sharedIndexDir(spark, dir),
-      SuggestPhraseQuery)
 
   /** Registered POST_FILTER body — the faceted-search split: the
     * query's match set feeds aggregations (see the same-body
@@ -12370,17 +12061,6 @@ object Dsl {
       |  "min_score": 0.2,
       |  "track_total_hits": true,
       |  "size": 20}""".stripMargin
-
-  def searchDslPostFilter(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), PostFilterQuery)
-
-  val searchDslPostFilterSql: String = dslSql(PostFilterQuery)
-
-  /** Registered query: [[PostFilterQuery]] SERVED; same oracle. */
-  def searchDslPostFilterServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), PostFilterQuery)
 
   /** Registered ADAPTIVE-AGGS body — `auto_date_histogram` twice (the
     * same data picking DAY under a generous bucket target and MONTH
@@ -12397,19 +12077,6 @@ object Dsl {
       |    "sample": {"random_sampler": {"probability": 0.4, "seed": 7},
       |      "aggs": {"chars": {"avg": {"field": "n_chars"}}}}}}"""
       .stripMargin
-
-  def dslAggsAuto(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsAutoQuery)
-
-  val dslAggsAutoOracleSql: String =
-    dslAggsSqlOver(AggsAutoQuery, Search.PersistDateRel)
-
-  /** Registered query: [[AggsAutoQuery]] SERVED from the daily
-    * indices (persist_date doc-values); same oracle. */
-  def dslAggsAutoServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsAutoQuery)
 
   /** Registered BUCKET-SCRIPT TRIO body — the Kibana dashboard's
     * HAVING / computed-metric / bucket-page: a terms parent with an
@@ -12435,23 +12102,13 @@ object Dsl {
       |          {"chars": {"order": "desc"}}], "from": 1,
       |          "size": 5}}}}}}""".stripMargin
 
-  def dslAggsBucketScript(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsBucketScriptQuery)
-
-  val dslAggsBucketScriptOracleSql: String =
-    dslAggsSql(AggsBucketScriptQuery)
-
-  /** Registered query: [[AggsBucketScriptQuery]] SERVED; same
-    * oracle. */
-  def dslAggsBucketScriptServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsBucketScriptQuery)
-
   /** Registered `significant_terms` — sources over-represented among
     * "hash"-matching docs vs the whole corpus, JLH-scored from exact
     * fg/bg counts. The one agg reading PRE-FILTER rows (a background
-    * model needs background counts). */
+    * model needs background counts).
+    *
+    * Served: the background universe comes from docmeta (the match_all
+    * universe override), the foreground flag from postings. */
   val AggsSigQuery: String =
     """{"query": {"match": {"text": "hash"}}, "size": 0,
       |  "aggs": {
@@ -12460,23 +12117,16 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
 
-  def dslAggsSig(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsSigQuery)
-
-  val dslAggsSigOracleSql: String = dslAggsSql(AggsSigQuery)
-
-  /** Registered query: [[AggsSigQuery]] SERVED — the background
-    * universe comes from docmeta (the match_all universe override),
-    * the foreground flag from postings; same oracle. */
-  def dslAggsSigServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsSigQuery)
-
   /** Registered `significant_text` (VERDICT r16 #4) — tokens
     * over-represented in the "hash"-matching docs' TEXT vs the whole
     * corpus, re-analyzed on the fly (per-doc distinct tokens,
     * JLH-scored); size 12 so the frame holds more than the query term
-    * itself. The terms sibling pins the match-set split. */
+    * itself. The terms sibling pins the match-set split.
+    *
+    * Served: the candidate universe widens to match_all (background
+    * counts), the foreground flag comes from postings, and the TOKENS
+    * come from re-analyzing the index's stored `_source` (what ES
+    * itself does for significant_text). */
   val AggsSigTextQuery: String =
     """{"query": {"match": {"text": "hash"}}, "size": 0,
       |  "aggs": {
@@ -12485,25 +12135,13 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
 
-  def dslAggsSigText(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsSigTextQuery)
-
-  val dslAggsSigTextOracleSql: String = dslAggsSql(AggsSigTextQuery)
-
-  /** Registered query: [[AggsSigTextQuery]] SERVED — the candidate
-    * universe widens to match_all (background counts), the foreground
-    * flag comes from postings, and the TOKENS come from re-analyzing
-    * the index's stored `_source` (what ES itself does for
-    * significant_text); same oracle. */
-  def dslAggsSigTextServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsSigTextQuery)
-
   /** Registered `scripted_metric` (VERDICT r16 #8) — the canonical ES
     * accumulator quartet computing a parameterized integral sum over
     * the "dup" match set: Σ (n_chars·w − doc_id) with w = 3. The
     * stats sibling pins that the scripted sum and the machinery
-    * metrics read one match set. */
+    * metrics read one match set.
+    *
+    * Served: the map expression evaluates on docmeta doc-values. */
   val AggsScriptedQuery: String =
     """{"query": {"match": {"text": "dup"}}, "size": 0,
       |  "aggs": {
@@ -12517,24 +12155,16 @@ object Dsl {
       |      "params": {"w": 3}}},
       |    "chars": {"stats": {"field": "n_chars"}}}}""".stripMargin
 
-  def dslAggsScripted(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsScriptedQuery)
-
-  val dslAggsScriptedOracleSql: String = dslAggsSql(AggsScriptedQuery)
-
-  /** Registered query: [[AggsScriptedQuery]] SERVED — the map
-    * expression evaluates on docmeta doc-values; same oracle. */
-  def dslAggsScriptedServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsScriptedQuery)
-
   /** Registered `sampler` + `diversified_sampler` (VERDICT r16 #5) —
     * sub-aggs scoped to the top-scoring docs of the "hash" match set:
     * a terms breakdown over the best 50, and stats over a
     * source-diversified best 20 (max one doc per source, the ES
     * default, via the collapse machinery). The samples draw through
     * the REAL search pipeline with the (score DESC, doc_id)
-    * deterministic tie-break. */
+    * deterministic tie-break.
+    *
+    * Served: the samples draw through the index-served hits pipeline
+    * (postings-scored rank, collapse on docmeta doc-values). */
   val AggsSamplerQuery: String =
     """{"query": {"match": {"text": "hash"}}, "size": 0,
       |  "aggs": {
@@ -12546,18 +12176,6 @@ object Dsl {
       |      "aggs": {"chars": {"stats": {"field": "n_chars"}}}},
       |    "all_langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
-
-  def dslAggsSampler(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsSamplerQuery)
-
-  val dslAggsSamplerOracleSql: String = dslAggsSql(AggsSamplerQuery)
-
-  /** Registered query: [[AggsSamplerQuery]] SERVED — the samples draw
-    * through the index-served hits pipeline (postings-scored rank,
-    * collapse on docmeta doc-values); same oracle. */
-  def dslAggsSamplerServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsSamplerQuery)
 
   /** Registered `global`-agg body with a TEXT query, SERVED — the
     * regression pin for the r14 served-universe bug: a global agg
@@ -12577,26 +12195,17 @@ object Dsl {
     dslAggsFromIndexes(spark,
       Seq(Search.sharedIndexDir(spark, dir)), AggsGlobalQuery)
 
-  val dslAggsGlobalServedOracleSql: String = dslAggsSql(AggsGlobalQuery)
-
-  def dslAggsFilters(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsFiltersQuery)
-
-  val dslAggsFiltersOracleSql: String = dslAggsSql(AggsFiltersQuery)
-
-  /** Registered query: [[AggsFiltersQuery]] SERVED — bucket membership
-    * from postings tf + docmeta doc-values; same oracle as the scan
-    * form. */
-  def dslAggsFiltersServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsFiltersQuery)
+  lazy val dslAggsGlobalServedOracleSql: String = dslAggsSql(AggsGlobalQuery)
 
   /** Registered ADJACENCY_MATRIX body — the co-occurrence matrix over
     * four segment filters (two language terms, a full-text match, a
     * length range): singles plus every pairwise intersection as
     * conditional columns of the one grouping-sets pass. The `de&en`
     * cell is structurally empty (a doc carries one lang), proving the
-    * zero-count prune; the avg sub rides every surviving cell. */
+    * zero-count prune; the avg sub rides every surviving cell.
+    *
+    * Served: matrix-cell membership from postings tf + docmeta
+    * doc-values. */
   val AggsAdjacencyQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -12608,19 +12217,6 @@ object Dsl {
       |      "aggs": {"chars": {"avg": {"field": "n_chars"}}}},
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
-
-  def dslAggsAdjacency(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsAdjacencyQuery)
-
-  val dslAggsAdjacencyOracleSql: String = dslAggsSql(AggsAdjacencyQuery)
-
-  /** Registered query: [[AggsAdjacencyQuery]] SERVED — matrix-cell
-    * membership from postings tf + docmeta doc-values; same oracle as
-    * the scan form. */
-  def dslAggsAdjacencyServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsAdjacencyQuery)
 
   /** Registered EXTENDED aggregations body — the round-12 agg
     * families: single-value metrics (avg/sum/min/max/value_count),
@@ -12647,11 +12243,6 @@ object Dsl {
       |        "order": {"_key": "asc"}},
       |      "aggs": {"srcs": {"cardinality": {"field": "source"}}}}}}"""
       .stripMargin
-
-  def dslAggsExt(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsExtQuery)
-
-  val dslAggsExtOracleSql: String = dslAggsSql(AggsExtQuery)
 
   /** Registered SKETCH-cardinality body — `precision_threshold` opts
     * into the HLL++ form (ES's actual cardinality semantics: no
@@ -12681,7 +12272,9 @@ object Dsl {
     * terms → terms with a per-parent top-N cut. All of it ONE
     * grouping-sets pass: a nested bucket adds a grouping column and
     * the {parent, child} set, never a second scan (child rows ride
-    * `key2`; the per-parent cut is a bucket-grain window). */
+    * `key2`; the per-parent cut is a bucket-grain window).
+    *
+    * Served: nested buckets over doc-values across the daily members. */
   val AggsNestedQuery: String =
     """{"query": {"match": {"text": "dup vector"}}, "size": 0,
       |  "aggs": {
@@ -12694,13 +12287,6 @@ object Dsl {
       |    "src_langs": {"terms": {"field": "source", "size": 3},
       |      "aggs": {"langs": {"terms": {"field": "lang", "size": 2}}}}}}"""
       .stripMargin
-
-  def dslAggsNested(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      AggsNestedQuery)
-
-  val dslAggsNestedOracleSql: String =
-    dslAggsSqlOver(AggsNestedQuery, Search.PersistDateRel)
 
   /** Registered `missing` + `min_doc_count` aggs body — the two
     * everyday terms-agg knobs: docs lacking the (deterministically
@@ -12715,24 +12301,20 @@ object Dsl {
       |                  "min_doc_count": 70}}}}""".stripMargin
 
   /** The nullable-column corpus both engines derive identically. */
-  val SrcOptRel: String =
+  val SrcOpt: Corpus = Corpus(
+    (spark, dir) => Tables.documentsPar(spark, dir)
+      .withColumn("src_opt", when(col("doc_id") % 7 =!= 0, col("source"))),
     "(SELECT *, CASE WHEN doc_id % 7 <> 0 THEN source END AS src_opt " +
-      "FROM documents)"
-
-  def dslAggsMissing(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsPar(spark, dir).withColumn("src_opt",
-      when(col("doc_id") % 7 =!= 0, col("source")))
-    dslAggsOf(docs, AggsMissingQuery)
-  }
-
-  val dslAggsMissingOracleSql: String =
-    dslAggsSqlOver(AggsMissingQuery, SrcOptRel)
+      "FROM documents)")
 
   /** Registered PERCENTILES body — exact interpolation percentiles
     * (Spark `percentile` ≡ DuckDB `quantile_cont`, the agg_percentile
     * parity) inside a DSL aggs body, one output row per percent (value
     * in `v_pct`, percent in `key`), riding the SAME grouping-sets pass
-    * as the terms agg beside it. */
+    * as the terms agg beside it.
+    *
+    * Served: percentile inputs are doc-values, the match gate comes
+    * from postings. */
   val AggsPercentilesQuery: String =
     """{"query": {"match": {"text": "dup"}}, "size": 0,
       |  "aggs": {
@@ -12741,26 +12323,15 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
 
-  def dslAggsPercentiles(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsPercentilesQuery)
-
-  val dslAggsPercentilesOracleSql: String =
-    dslAggsSqlOver(AggsPercentilesQuery, "documents")
-
-  /** Registered query: [[AggsPercentilesQuery]] SERVED — percentile
-    * inputs are doc-values, the match gate comes from postings; same
-    * oracle as the scan form. */
-  def dslAggsPercentilesServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsPercentilesQuery)
-
   /** Registered BOXPLOT + MEDIAN_ABSOLUTE_DEVIATION body — the two
     * robust-dispersion metrics over the "dup" match set's n_chars:
     * boxplot's five keyed rows (min/q1/q2/q3/max — exact quartiles on
     * the one-pass machinery's percentile columns) and the exact MAD
     * (median-of-deviations, the two-aggregate plan). The stats
-    * sibling pins that all three read one match set. */
+    * sibling pins that all three read one match set.
+    *
+    * Served: quartile and deviation inputs are doc-values, the match
+    * gate comes from postings. */
   val AggsBoxplotQuery: String =
     """{"query": {"match": {"text": "dup"}}, "size": 0,
       |  "aggs": {
@@ -12769,23 +12340,13 @@ object Dsl {
       |                  {"field": "n_chars"}},
       |    "chars": {"stats": {"field": "n_chars"}}}}""".stripMargin
 
-  def dslAggsBoxplot(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsBoxplotQuery)
-
-  val dslAggsBoxplotOracleSql: String =
-    dslAggsSqlOver(AggsBoxplotQuery, "documents")
-
-  /** Registered query: [[AggsBoxplotQuery]] SERVED — quartile and
-    * deviation inputs are doc-values, the match gate comes from
-    * postings; same oracle as the scan form. */
-  def dslAggsBoxplotServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsBoxplotQuery)
-
   /** Registered STRING_STATS body — the five keyed rows over the
     * "hash" match set's `source` keyword values, entropy folded in
     * character order on both engines (see [[StringStatsAgg]]); the
-    * terms sibling pins the shared match set. */
+    * terms sibling pins the shared match set.
+    *
+    * Served: the keyword values come from docmeta doc-values, the match
+    * gate from postings. */
   val AggsStringStatsQuery: String =
     """{"query": {"match": {"text": "hash"}}, "size": 0,
       |  "aggs": {
@@ -12793,26 +12354,15 @@ object Dsl {
       |    "langs": {"terms": {"field": "lang", "size": 3}}}}"""
       .stripMargin
 
-  def dslAggsStringStats(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsStringStatsQuery)
-
-  val dslAggsStringStatsOracleSql: String =
-    dslAggsSqlOver(AggsStringStatsQuery, "documents")
-
-  /** Registered query: [[AggsStringStatsQuery]] SERVED — the keyword
-    * values come from docmeta doc-values, the match gate from
-    * postings; same oracle as the scan form. */
-  def dslAggsStringStatsServed(spark: SparkSession,
-      dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsStringStatsQuery)
-
   /** Registered T_TEST body — is the en/de document-length shift
     * significant? Welch (the ES default) and pooled variants over the
     * same two filter-defined populations; each emits the sufficient
     * statistics (t, df) from exact integer sums — see [[TTestAgg]]
     * for the p-value divergence. The stats sibling pins the shared
-    * match set. */
+    * match set.
+    *
+    * Served: population membership and the summed doc-values come from
+    * docmeta. */
   val AggsTTestQuery: String =
     """{"query": {"match_all": {}}, "size": 0,
       |  "aggs": {
@@ -12824,51 +12374,6 @@ object Dsl {
       |      "b": {"field": "n_chars", "filter": {"term": {"lang": "de"}}},
       |      "type": "homoscedastic"}},
       |    "chars": {"stats": {"field": "n_chars"}}}}""".stripMargin
-
-  def dslAggsTTest(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Tables.documentsPar(spark, dir), AggsTTestQuery)
-
-  val dslAggsTTestOracleSql: String =
-    dslAggsSqlOver(AggsTTestQuery, "documents")
-
-  /** Registered query: [[AggsTTestQuery]] SERVED — population
-    * membership and the summed doc-values come from docmeta; same
-    * oracle as the scan form. */
-  def dslAggsTTestServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), AggsTTestQuery)
-
-  /** Registered query: [[AggsNestedQuery]] SERVED from the daily
-    * indices — nested buckets over doc-values across the alias
-    * members; same oracle as the scan form. */
-  def dslAggsNestedServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsNestedQuery)
-
-  /** Registered query: [[AggsQuery]] SERVED from the daily indices —
-    * aggregations over doc-values + postings across the alias members,
-    * same oracle as the scan form, so green proves served ≡ scan AND
-    * that per-member bucket counts union to the whole-corpus buckets
-    * (the daily layout is the only shared index whose docmeta carries
-    * persist_date — the single-corpus index is built before the ingest
-    * date exists). */
-  def dslAggsServed(spark: SparkSession, dir: String): DataFrame =
-    dslAggsFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, AggsQuery)
-
-  /** Registered query: [[ExtendedQuery]] SERVED — prefix/wildcard/ids
-    * evaluate on docmeta doc-values, the dis_max branches' tf comes
-    * from postings; same oracle as the scan form. */
-  def searchDslExtendedServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), ExtendedQuery)
-
-  /** Registered query: [[SortedQuery]] SERVED — sort keys and
-    * `_source` fields read from doc-values, the `_score` sort leg from
-    * postings statistics; same oracle as the scan form. */
-  def searchDslSortedServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), SortedQuery)
 
   /** Page-1 body of the keyset-paging pair: field-only sort (the
     * scalable ES PIT + search_after shape — score never evaluates,
@@ -12906,7 +12411,7 @@ object Dsl {
 
   /** The offset form of page 2 — `from`: 5 over the same body — with
     * rk re-based to the page-local ranks the keyset path emits. */
-  val dslSearchAfterOracleSql: String = {
+  lazy val dslSearchAfterOracleSql: String = {
     val fromBody =
       """{"query": {"match": {"text": "dup"}},
         |  "sort": [{"n_chars": {"order": "desc"}}], "size": 5, "from": 5,
@@ -12954,12 +12459,16 @@ object Dsl {
   def dslMsearch(spark: SparkSession, dir: String): DataFrame =
     msearchOf(Tables.documentsPar(spark, dir), MsearchBodies)
 
-  val dslMsearchOracleSql: String = msearchSql(MsearchBodies)
+  lazy val dslMsearchOracleSql: String = msearchSql(MsearchBodies)
 
   /** Registered HIGHLIGHT body — a scored bool with a boosted phrase
     * should, highlighted on the full text field: hits carry h_pos /
     * h_snippet from the fetch-phase join (snippets compute for the
-    * page only, never the corpus). */
+    * page only, never the corpus).
+    *
+    * Served: ranking from postings, snippets from the index's STORED
+    * `_source` table (the ES fetch phase reads the shard's stored
+    * fields, not the ingest source). */
   val HighlightQuery: String =
     """{"query": {"bool": {
       |  "must": [{"match": {"text": "dup vector"}}],
@@ -12967,19 +12476,6 @@ object Dsl {
       |              "boost": 1.2}}}]}},
       |  "size": 25,
       |  "highlight": {"fields": {"text": {}}}}""".stripMargin
-
-  def searchDslHighlight(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), HighlightQuery)
-
-  val searchDslHighlightSql: String = dslSql(HighlightQuery)
-
-  /** Registered query: [[HighlightQuery]] SERVED — ranking from
-    * postings, snippets from the index's STORED `_source` table (the
-    * ES fetch phase reads the shard's stored fields, not the ingest
-    * source); same oracle as the scan form. */
-  def searchDslHighlightServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), HighlightQuery)
 
   /** Registered DSL-percolator rules: range+match (the alerting shape
     * a term list cannot express), a phrase rule, and a keyword
@@ -12995,14 +12491,17 @@ object Dsl {
     percolateDslOf(Tables.documentsPar(spark, dir), PercolateRules)
       .orderBy("doc_id", "query_id")
 
-  val percolateDslOracleSql: String =
+  lazy val percolateDslOracleSql: String =
     percolateDslSql(PercolateRules, "documents")
 
   /** Registered EXTENDED-CLAUSE query — the round-12 clause families
     * in one body: `dis_max` (best of two match branches + tie_breaker),
     * `constant_score` (a scored filter — the ES pattern for boosting a
     * range), `prefix` + `wildcard` doc-value filters, and an `ids`
-    * exclusion. */
+    * exclusion.
+    *
+    * Served: prefix/wildcard/ids evaluate on docmeta doc-values, the
+    * dis_max branches' tf comes from postings. */
   val ExtendedQuery: String =
     """{"query": {"bool": {
       |  "must": [{"dis_max": {"queries": [
@@ -13017,26 +12516,19 @@ object Dsl {
       |  "must_not": [{"ids": {"values": [3, 7, 11]}}]
       |}}, "size": 40}""".stripMargin
 
-  def searchDslExtended(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), ExtendedQuery)
-
-  val searchDslExtendedSql: String = dslSql(ExtendedQuery)
-
   /** Registered SORTED + PAGED query — `sort` (field desc, then
     * `_score`, then a field asc), `from` offset paging, and an
     * `_source` include list: the full ES hit-shaping surface in one
     * body. Ranks 6–20 of the n_chars-desc ordering, each hit carrying
-    * its doc-value source fields. */
+    * its doc-value source fields.
+    *
+    * Served: sort keys and `_source` fields read from doc-values, the
+    * `_score` sort leg from postings statistics. */
   val SortedQuery: String =
     """{"query": {"match": {"text": "dup vector merge"}},
       |  "sort": [{"n_chars": {"order": "desc"}}, "_score", {"lang": "asc"}],
       |  "from": 5, "size": 15,
       |  "_source": ["lang", "source", "n_chars"]}""".stripMargin
-
-  def searchDslSorted(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), SortedQuery)
-
-  val searchDslSortedSql: String = dslSql(SortedQuery)
 
   /** Registered `_count` body — match + range, the filter-context
     * count shape. */
@@ -13047,7 +12539,7 @@ object Dsl {
   def dslCount(spark: SparkSession, dir: String): DataFrame =
     dslCountOf(Tables.documentsPar(spark, dir), CountQuery)
 
-  val dslCountOracleSql: String = dslCountSql(CountQuery)
+  lazy val dslCountOracleSql: String = dslCountSql(CountQuery)
 
   /** Registered `minimum_should_match` GRAMMAR body — "50%" of four
     * heterogeneous shoulds (two scored matches, a scored keyword term,
@@ -13055,7 +12547,10 @@ object Dsl {
     * clauses they matched (the gate counts, the score sums — both ES
     * contracts). Oracle generated from the same AST, so green proves
     * the grammar resolution feeds the exact integer the compiler
-    * gates on. */
+    * gates on.
+    *
+    * Served: the resolved msm integer gates postings/doc-values
+    * candidates. */
   val MsmQuery: String =
     """{"query": {"bool": {
       |  "should": [{"match": {"text": "dup"}},
@@ -13064,23 +12559,15 @@ object Dsl {
       |             {"range": {"n_chars": {"gte": 300}}}],
       |  "minimum_should_match": "50%"}}, "size": 30}""".stripMargin
 
-  def searchDslMsm(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), MsmQuery)
-
-  val searchDslMsmSql: String = dslSql(MsmQuery)
-
-  /** Registered query: [[MsmQuery]] SERVED — the resolved msm integer
-    * gates postings/doc-values candidates; same oracle as the scan. */
-  def searchDslMsmServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MsmQuery)
-
   /** Registered FUZZY body — two typo'd terms under `"fuzziness":
     * "AUTO"` (both length 5 → one edit) beside an exact filter; the
     * fuzzy expansion's tf/df feed the same BM25 expression, and the
     * ORACLE IS GENERATED FROM THE SAME AST (the expansion is a
     * deterministic Levenshtein predicate both engines evaluate
-    * identically). */
+    * identically).
+    *
+    * Served: the expansion filters the TERM DICTIONARY (postings rows,
+    * Lucene's fuzzy-automaton shape), never the corpus text. */
   val FuzzyQuery: String =
     """{"query": {"bool": {
       |  "must": [{"match": {"text": {"query": "vectr merge",
@@ -13088,43 +12575,20 @@ object Dsl {
       |  "filter": [{"range": {"n_chars": {"gte": 60}}}]
       |}}, "size": 40}""".stripMargin
 
-  def searchDslFuzzy(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FuzzyQuery)
-
-  val searchDslFuzzySql: String = dslSql(FuzzyQuery)
-
-  /** Registered query: [[FuzzyQuery]] SERVED from the index — the
-    * expansion filters the TERM DICTIONARY (postings rows, Lucene's
-    * fuzzy-automaton shape), never the corpus text; same oracle as the
-    * scan form. */
-  def searchDslFuzzyServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), FuzzyQuery)
-
   /** Registered DSL `function_score` body — BM25 × ln(1 + n_chars)
     * with `boost_mode: multiply`, the "boost longer docs" ranking the
     * standalone [[Search.functionScore]] operator proved oracle-green;
     * here it arrives through the query DSL, composable with every
-    * other clause. Oracle generated from the same AST. */
+    * other clause. Oracle generated from the same AST.
+    *
+    * Served: the factor field reads from doc-values beside the postings
+    * features. */
   val FunctionScoreQuery: String =
     """{"query": {"function_score": {
       |  "query": {"match": {"text": "dup vector"}},
       |  "field_value_factor": {"field": "n_chars", "modifier": "ln1p"},
       |  "boost_mode": "multiply"}},
       |  "size": 30}""".stripMargin
-
-  def searchDslFunctionScore(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FunctionScoreQuery)
-
-  val searchDslFunctionScoreSql: String = dslSql(FunctionScoreQuery)
-
-  /** Registered query: [[FunctionScoreQuery]] SERVED — the factor
-    * field reads from doc-values beside the postings features; same
-    * oracle as the scan form. */
-  def searchDslFunctionScoreServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), FunctionScoreQuery)
 
   /** Registered `functions`-ARRAY function_score with DECAY scoring —
     * the "boost recent" relevance pattern: BM25 over the match set ×
@@ -13146,21 +12610,6 @@ object Dsl {
       |  "score_mode": "multiply", "boost_mode": "multiply"}},
       |  "size": 30}""".stripMargin
 
-  def searchDslFnScoreDecay(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Search.withPersistDate(Tables.documentsPar(spark, dir)),
-      FnScoreDecayQuery)
-
-  val searchDslFnScoreDecaySql: String =
-    dslSqlOver(FnScoreDecayQuery, Search.PersistDateRel)
-
-  /** Registered query: [[FnScoreDecayQuery]] SERVED from the daily
-    * indices (persist_date is a docmeta doc-value there); same
-    * oracle. */
-  def searchDslFnScoreDecayServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Search.sharedDailyIndexDirs(spark, dir)._1, FnScoreDecayQuery)
-
   /** Registered score_mode/boost_mode MATRIX body — `exp` decay +
     * `field_value_factor` + a filtered weight combined by WEIGHTED
     * average (ES's documented avg), then SUMMED with the BM25 score. */
@@ -13176,17 +12625,6 @@ object Dsl {
       |  "score_mode": "avg", "boost_mode": "sum"}},
       |  "size": 25}""".stripMargin
 
-  def searchDslFnScoreModes(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FnScoreModesQuery)
-
-  val searchDslFnScoreModesSql: String = dslSql(FnScoreModesQuery)
-
-  /** Registered query: [[FnScoreModesQuery]] SERVED; same oracle. */
-  def searchDslFnScoreModesServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), FnScoreModesQuery)
-
   /** Registered `random_score` — deterministic seeded sampling of the
     * match set (seed+field REQUIRED — the reproducible form): hash
     * ranks replace BM25 via boost_mode replace, so the page is a
@@ -13198,17 +12636,6 @@ object Dsl {
       |    {"random_score": {"seed": 42, "field": "source"}}],
       |  "boost_mode": "replace"}},
       |  "size": 20}""".stripMargin
-
-  def searchDslRandomScore(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), RandomScoreQuery)
-
-  val searchDslRandomScoreSql: String = dslSql(RandomScoreQuery)
-
-  /** Registered query: [[RandomScoreQuery]] SERVED; same oracle. */
-  def searchDslRandomScoreServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), RandomScoreQuery)
 
   /** Registered functions-array `script_score` — the arithmetic
     * script as ONE function among several: a weighted script value
@@ -13227,22 +12654,12 @@ object Dsl {
       |  "score_mode": "sum", "boost_mode": "replace"}},
       |  "size": 30}""".stripMargin
 
-  def searchDslFnScoreScript(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FnScoreScriptQuery)
-
-  val searchDslFnScoreScriptSql: String = dslSql(FnScoreScriptQuery)
-
-  /** Registered query: [[FnScoreScriptQuery]] SERVED; same oracle. */
-  def searchDslFnScoreScriptServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), FnScoreScriptQuery)
-
   /** Registered SCRIPT_FIELDS body — the third scripted-anything slot
     * (beside the script_score query and the functions-array entry):
     * per-hit computed columns from the shared arithmetic subset,
-    * riding the hit rows beside `_source` fields. */
+    * riding the hit rows beside `_source` fields.
+    *
+    * Served from the index's numeric doc-values. */
   val ScriptFieldsQuery: String =
     """{"query": {"match": {"text": "dup"}},
       |  "script_fields": {
@@ -13252,24 +12669,13 @@ object Dsl {
       |    "double_len": {"script": "doc['n_chars'].value * 2"}},
       |  "_source": ["n_chars"], "size": 25}""".stripMargin
 
-  def searchDslScriptFields(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), ScriptFieldsQuery)
-
-  val searchDslScriptFieldsSql: String = dslSql(ScriptFieldsQuery)
-
-  /** Registered query: [[ScriptFieldsQuery]] SERVED from the index's
-    * numeric doc-values; same oracle. */
-  def searchDslScriptFieldsServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), ScriptFieldsQuery)
-
   /** Registered `script_score` — the ARITHMETIC subset (VERDICT r15
     * #6): params + `doc['n_chars'].value` through the shared PExpr
     * grammar; the inner bool gates in filter context and the script's
     * value IS the score (integer-in-double arithmetic — no libm, both
-    * engines bit-agree; ties break by doc_id). */
+    * engines bit-agree; ties break by doc_id).
+    *
+    * Served from the index's numeric doc-values. */
   val ScriptScoreQuery: String =
     """{"query": {"script_score": {
       |  "query": {"bool": {"filter": [
@@ -13279,18 +12685,6 @@ object Dsl {
       |    "source": "(doc['n_chars'].value + params.a) * params.w / 100",
       |    "params": {"a": 7, "w": 3}}}},
       |  "size": 40}""".stripMargin
-
-  def searchDslScriptScore(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), ScriptScoreQuery)
-
-  val searchDslScriptScoreSql: String = dslSql(ScriptScoreQuery)
-
-  /** Registered query: [[ScriptScoreQuery]] SERVED from the index's
-    * numeric doc-values; same oracle. */
-  def searchDslScriptScoreServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), ScriptScoreQuery)
 
   /** Registered BOOSTING body — penalize-don't-exclude: matches of the
     * negative clause stay in the result set at `negative_boost` × their
@@ -13302,102 +12696,53 @@ object Dsl {
       |  "negative_boost": 0.3}},
       |  "size": 30}""".stripMargin
 
-  def searchDslBoosting(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), BoostingQuery)
-
-  val searchDslBoostingSql: String = dslSql(BoostingQuery)
-
-  /** Registered query: [[BoostingQuery]] SERVED; same oracle. */
-  def searchDslBoostingServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), BoostingQuery)
-
   /** Registered REGEXP body — term-level anchored regex on the
     * analyzed field beside a raw-value regex on a keyword field (the
     * anchor matters: `src[0-9]` matches src0-src9 but NOT src10-19).
     * Filter context (regexp is unscored set-membership, the wildcard
-    * convention); oracle generated from the same AST. */
+    * convention); oracle generated from the same AST.
+    *
+    * Served: the analyzed leg is a term-dictionary walk (the fuzzy
+    * pivot's shape), the keyword leg a doc-values regex. */
   val RegexpQuery: String =
     """{"query": {"bool": {
       |  "filter": [{"regexp": {"text": {"value": "qu.ry"}}},
       |             {"regexp": {"source": {"value": "src[0-9]"}}}]
       |}}, "size": 40}""".stripMargin
 
-  def searchDslRegexp(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), RegexpQuery)
-
-  val searchDslRegexpSql: String = dslSql(RegexpQuery)
-
-  /** Registered query: [[RegexpQuery]] SERVED — the analyzed leg is a
-    * term-dictionary walk (the fuzzy pivot's shape), the keyword leg a
-    * doc-values regex; same oracle as the scan form. */
-  def searchDslRegexpServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), RegexpQuery)
-
   /** Registered standalone FUZZY clause — the term-level form
     * (`{"fuzzy": {field: {"value": …}}}`, fuzziness AUTO), desugared
     * at parse into the match-fuzziness machinery, so scoring, serving,
-    * and the generated oracle are [[MatchFzQ]]'s. */
+    * and the generated oracle are [[MatchFzQ]]'s.
+    *
+    * Served: the shared fuzzy term-dictionary walk. */
   val FuzzyClauseQuery: String =
     """{"query": {"fuzzy": {"text": {"value": "vectr"}}},
       |  "size": 30}""".stripMargin
-
-  def searchDslFuzzyClause(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), FuzzyClauseQuery)
-
-  val searchDslFuzzyClauseSql: String = dslSql(FuzzyClauseQuery)
-
-  /** Registered query: [[FuzzyClauseQuery]] SERVED — the shared fuzzy
-    * term-dictionary walk; same oracle as the scan form. */
-  def searchDslFuzzyClauseServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), FuzzyClauseQuery)
 
   /** Registered SLOPPY-PHRASE body — "vector merge" within a 2-token
     * window: adjacency plus up to two interveners. tf counts the
     * windowed starts, scored as a term (the exact-phrase convention);
     * oracle generated from the same AST (identical position
-    * arithmetic). */
+    * arithmetic).
+    *
+    * Served: the windowed position intersect over the index's
+    * positional postings. */
   val PhraseSlopQuery: String =
     """{"query": {"match_phrase": {"text":
       |  {"query": "vector merge", "slop": 2}}}, "size": 30}""".stripMargin
-
-  def searchDslPhraseSlop(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), PhraseSlopQuery)
-
-  val searchDslPhraseSlopSql: String = dslSql(PhraseSlopQuery)
-
-  /** Registered query: [[PhraseSlopQuery]] SERVED — the windowed
-    * position intersect over the index's positional postings; same
-    * oracle as the scan form. */
-  def searchDslPhraseSlopServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), PhraseSlopQuery)
 
   /** Registered SEARCH-AS-YOU-TYPE body — `match_phrase_prefix`: the
     * exact word "vector" followed by any token with prefix "me" (the
     * half-typed query); scored as a phrase, oracle from the same AST
     * (the prefix expansion is a deterministic starts_with both engines
-    * evaluate). */
+    * evaluate).
+    *
+    * Served: the prefix leg walks the term dictionary for its
+    * expansions' positions, the exact leg stays bucket-pruned. */
   val PhrasePrefixQuery: String =
     """{"query": {"match_phrase_prefix": {"text": "vector me"}},
       |  "size": 30}""".stripMargin
-
-  def searchDslPhrasePrefix(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), PhrasePrefixQuery)
-
-  val searchDslPhrasePrefixSql: String = dslSql(PhrasePrefixQuery)
-
-  /** Registered query: [[PhrasePrefixQuery]] SERVED — the prefix leg
-    * walks the term dictionary for its expansions' positions, the
-    * exact leg stays bucket-pruned; same oracle as the scan form. */
-  def searchDslPhrasePrefixServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), PhrasePrefixQuery)
 
   /** Registered NESTED body over the INGEST corpus (where tags live —
     * [[Ingest.ingestDocs]]): one nested clause that must be satisfied
@@ -13407,7 +12752,11 @@ object Dsl {
     * the daily indices hold. Filter-context throughout (scoreless —
     * the nested-filter shape ES users write), so the scan and the
     * 3-member served evaluation share one oracle with no statistics
-    * divergence. */
+    * divergence.
+    *
+    * Served through the daily ingest alias: the nested predicate
+    * evaluates on docmeta's stored tags array (a pure doc-values
+    * filter, no corpus read). */
   val NestedQuery: String = {
     val dates = Search.IngestWindowDates.map(d => s""""$d"""")
       .mkString("[", ", ", "]")
@@ -13424,17 +12773,14 @@ object Dsl {
        |}}, "size": 100}""".stripMargin
   }
 
-  def searchDslNested(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Ingest.ingestDocs(spark, dir), NestedQuery)
-
-  val searchDslNestedSql: String =
-    dslSqlOver(NestedQuery, Ingest.IngestDocsRel)
-
   /** Registered NESTED AGGREGATION — the query-side nested clause's
     * analytics twin over the same ingest corpus: switch grain to the
     * tags and bucket their values; the parent row counts TAGS (the ES
     * nested-agg doc_count contract). Filter gates to the daily window
-    * so the served twin ranges over exactly the indices' documents. */
+    * so the served twin ranges over exactly the indices' documents.
+    *
+    * Served: the tags array reads from docmeta doc-values across the
+    * daily ingest alias members. */
   val NestedAggsQuery: String = {
     val dates = Search.IngestWindowDates.map(d => s""""$d"""")
       .mkString("[", ", ", "]")
@@ -13445,37 +12791,16 @@ object Dsl {
        |      "size": 8, "min_doc_count": 2}}}}}}""".stripMargin
   }
 
-  def dslNestedAggs(spark: SparkSession, dir: String): DataFrame =
-    dslAggsOf(Ingest.ingestDocs(spark, dir), NestedAggsQuery)
-
-  val dslNestedAggsOracleSql: String =
-    dslAggsSqlOver(NestedAggsQuery, Ingest.IngestDocsRel)
-
-  /** Registered query: [[NestedAggsQuery]] SERVED from the daily
-    * ingest indices (the tags array read from docmeta doc-values
-    * across the alias members); same oracle as the scan twin. */
-  def dslNestedAggsServed(spark: SparkSession, dir: String): DataFrame = {
-    val alias = Search.sharedIngestDailyIndexDirs(spark, dir)._2
-    dslAggsFromIndexes(spark, Search.readAlias(spark, alias),
-      NestedAggsQuery)
-  }
-
-  /** Registered query: [[NestedQuery]] SERVED from the daily INGEST
-    * indices through their alias — the nested predicate evaluates on
-    * docmeta's stored tags array (a pure doc-values filter, no corpus
-    * read); same oracle as the scan twin. */
-  def searchDslNestedServed(spark: SparkSession, dir: String): DataFrame = {
-    val alias = Search.sharedIngestDailyIndexDirs(spark, dir)._2
-    searchDslFromIndexes(spark, Search.readAlias(spark, alias), NestedQuery)
-  }
-
   /** Registered `inner_hits` body (VERDICT r16 #2): [[NestedQuery]]'s
     * match set with BOTH nested clauses returning their matched inner
     * tag objects — the positive filter clause under the default name
     * (`tags`, the path) proves WHICH tag satisfied the query per hit;
     * the must_not clause (named `bad_tags` — two channels must not
     * collide) proves the empty-payload contract: a doc is a hit
-    * BECAUSE no element matched, so its inner page serializes ''. */
+    * BECAUSE no element matched, so its inner page serializes ''.
+    *
+    * Served through the daily ingest alias: the inner payload reads the
+    * docmeta doc-values' stored tag array. */
   val NestedInnerHitsQuery: String = {
     val dates = Search.IngestWindowDates.map(d => s""""$d"""")
       .mkString("[", ", ", "]")
@@ -13492,23 +12817,6 @@ object Dsl {
        |               {"match": {"tags.value": "error"}}]}},
        |      "inner_hits": {"name": "bad_tags"}}}]
        |}}, "size": 100}""".stripMargin
-  }
-
-  def searchDslNestedInnerHits(spark: SparkSession, dir: String)
-      : DataFrame =
-    searchDslOf(Ingest.ingestDocs(spark, dir), NestedInnerHitsQuery)
-
-  val searchDslNestedInnerHitsSql: String =
-    dslSqlOver(NestedInnerHitsQuery, Ingest.IngestDocsRel)
-
-  /** Registered query: [[NestedInnerHitsQuery]] SERVED through the
-    * daily ingest alias — the inner payload reads the docmeta
-    * doc-values' stored tag array; same oracle as the scan twin. */
-  def searchDslNestedInnerHitsServed(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val alias = Search.sharedIngestDailyIndexDirs(spark, dir)._2
-    searchDslFromIndexes(spark, Search.readAlias(spark, alias),
-      NestedInnerHitsQuery)
   }
 
   /** Registered query: [[DslQuery]] resolved THROUGH the daily-index
@@ -13528,24 +12836,15 @@ object Dsl {
     * prefix, and a `-`negated word, under `default_operator: and`.
     * [[QueryString]] desugars the text into the EXISTING AST (the
     * whole pipeline after parse is the oracle-green structured-clause
-    * machinery), so the oracle is generated from the same AST. */
+    * machinery), so the oracle is generated from the same AST.
+    *
+    * Served: after [[QueryString]] desugars, the body IS a structured
+    * query, so the served twin is the ordinary postings path. */
   val SqsQuery: String =
     """{"query": {"simple_query_string": {
       |  "query": "\"dup vector\" | merge hash* -slow",
       |  "fields": ["text"],
       |  "default_operator": "and"}}, "size": 30}""".stripMargin
-
-  def searchDslSqs(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), SqsQuery)
-
-  val searchDslSqsSql: String = dslSql(SqsQuery)
-
-  /** Registered query: [[SqsQuery]] SERVED from the index — after
-    * [[QueryString]] desugars, the body IS a structured query, so the
-    * served twin is the ordinary postings path; same oracle. */
-  def searchDslSqsServed(spark: SparkSession, dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), SqsQuery)
 
   /** Registered QUERY_STRING body — the full Lucene-ish grammar over
     * this corpus: an OR group with a `^` boost, keyword AND/NOT, a
@@ -13558,17 +12857,134 @@ object Dsl {
       |  "query": "(dup OR merge^2) AND quer* AND lang:en AND n_chars:>=100 AND NOT source:src1*",
       |  "default_field": "text"}}, "size": 30}""".stripMargin
 
-  def searchDslQueryString(spark: SparkSession, dir: String): DataFrame =
-    searchDslOf(Tables.documentsPar(spark, dir), QsQuery)
+  // ------------------------------------------------ registered bodies
 
-  val searchDslQueryStringSql: String = dslSql(QsQuery)
+  /** One registered body. `name` runs the kind's scan compiler over
+    * the corpus frame; when `served`, `name_served` runs its index
+    * compiler over the corpus's indexes and must reproduce the scan
+    * bit-for-bit. Both check against the one oracle the kind generates
+    * over the corpus relation. */
+  final case class Registered(name: String, kind: Kind, body: String,
+      corpus: Corpus = Documents, served: Boolean = true) {
+    require(!served || corpus.indexes.nonEmpty,
+      s"$name: its corpus is scan-only, so it has no served form")
+  }
 
-  /** Registered query: [[QsQuery]] SERVED from the index; same oracle
-    * as the scan twin. */
-  def searchDslQueryStringServed(spark: SparkSession,
-      dir: String): DataFrame =
-    searchDslFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), QsQuery)
+  /** Every registered body of regular shape, one row each; to register
+    * a body, add its row. Bodies of irregular shape (the two-page
+    * cursors, search templates, knn, the single-request endpoints,
+    * the percolator, the alias read) keep their own functions and
+    * SparkEntry entries. */
+  lazy val registered: Seq[Registered] = Seq(
+    Registered("dsl_search", Hits, DslQuery, served = false),
+    Registered("dsl_filter_only", Hits, FilterQuery, served = false),
+    Registered("dsl_multifield", Hits, MultifieldQuery),
+    Registered("dsl_most_fields", Hits, MostFieldsQuery, served = false),
+    Registered("dsl_mm_phrase", Hits, MmPhraseQuery),
+    Registered("dsl_cross_fields", Hits, CrossFieldsQuery),
+    Registered("dsl_match_bool_prefix", Hits, MatchBoolPrefixQuery),
+    Registered("dsl_pinned", Hits, PinnedQuery),
+    Registered("dsl_terms_set", Hits, TermsSetQuery, ReqM, served = false),
+    Registered("dsl_rank_feature", Hits, RankFeatureQuery),
+    Registered("dsl_distance_feature", Hits, DistanceFeatureQuery, PersistDate),
+    Registered("dsl_date_math", Hits, DateMathQuery, PersistDate),
+    Registered("dsl_collapse", Hits, CollapseQuery),
+    Registered("dsl_lookup_span", Hits, LookupSpanQuery),
+    Registered("dsl_intervals", Hits, IntervalsQuery),
+    Registered("dsl_span_multi", Hits, SpanMultiQuery),
+    Registered("dsl_combined_fields", Hits, CombinedFieldsQuery),
+    Registered("dsl_intervals2", Hits, Intervals2Query),
+    Registered("dsl_intervals3", Hits, Intervals3Query),
+    Registered("dsl_rescore", Hits, RescoreQuery),
+    Registered("dsl_mlt", Hits, MltQuery),
+    Registered("dsl_runtime_fields", Hits, RuntimeFieldsQuery, served = false),
+    Registered("dsl_spans", Hits, SpansQuery),
+    Registered("dsl_span_within", Hits, SpanWithinQuery),
+    Registered("dsl_post_filter", Hits, PostFilterQuery),
+    Registered("dsl_highlight", Hits, HighlightQuery),
+    Registered("dsl_extended", Hits, ExtendedQuery),
+    Registered("dsl_sorted", Hits, SortedQuery),
+    Registered("dsl_msm", Hits, MsmQuery),
+    Registered("dsl_fuzzy", Hits, FuzzyQuery),
+    Registered("dsl_function_score", Hits, FunctionScoreQuery),
+    Registered("dsl_function_score_decay", Hits, FnScoreDecayQuery,
+      PersistDate),
+    Registered("dsl_function_score_modes", Hits, FnScoreModesQuery),
+    Registered("dsl_random_score", Hits, RandomScoreQuery),
+    Registered("dsl_function_score_script", Hits, FnScoreScriptQuery),
+    Registered("dsl_script_fields", Hits, ScriptFieldsQuery),
+    Registered("dsl_script_score", Hits, ScriptScoreQuery),
+    Registered("dsl_boosting", Hits, BoostingQuery),
+    Registered("dsl_regexp", Hits, RegexpQuery),
+    Registered("dsl_fuzzy_clause", Hits, FuzzyClauseQuery),
+    Registered("dsl_phrase_slop", Hits, PhraseSlopQuery),
+    Registered("dsl_phrase_prefix", Hits, PhrasePrefixQuery),
+    Registered("dsl_nested", Hits, NestedQuery, IngestDocs),
+    Registered("dsl_nested_inner_hits", Hits, NestedInnerHitsQuery, IngestDocs),
+    Registered("dsl_sqs", Hits, SqsQuery),
+    Registered("dsl_query_string", Hits, QsQuery),
+    Registered("dsl_aggs", Aggs, AggsQuery, PersistDate),
+    Registered("dsl_aggs_ext", Aggs, AggsExtQuery, served = false),
+    Registered("dsl_aggs_ext2", Aggs, AggsExt2Query, W8, served = false),
+    Registered("dsl_aggs_ext3", Aggs, AggsExt3Query, Ext3, served = false),
+    Registered("dsl_aggs_nested", Aggs, AggsNestedQuery, PersistDate),
+    Registered("dsl_aggs_missing", Aggs, AggsMissingQuery,
+      SrcOpt, served = false),
+    Registered("dsl_aggs_include", Aggs, AggsIncludeQuery, PersistDate),
+    Registered("dsl_aggs_filters", Aggs, AggsFiltersQuery),
+    Registered("dsl_aggs_pipeline", Aggs, AggsPipelineQuery, PersistDate),
+    Registered("dsl_aggs_bucket_stats", Aggs, AggsBucketStatsQuery,
+      PersistDate),
+    Registered("dsl_aggs_gapfill", Aggs, AggsGapFillQuery,
+      GapDate, served = false),
+    Registered("dsl_aggs_moving", Aggs, AggsMovingQuery, PersistDate),
+    Registered("dsl_aggs_cumcard", Aggs, AggsCumCardQuery, PersistDate),
+    Registered("dsl_aggs_normalize", Aggs, AggsNormalizeQuery, PersistDate),
+    Registered("dsl_aggs_date_math", Aggs, AggsDateMathQuery,
+      PersistDate, served = false),
+    Registered("dsl_aggs_auto", Aggs, AggsAutoQuery, PersistDate),
+    Registered("dsl_aggs_bucket_script", Aggs, AggsBucketScriptQuery),
+    Registered("dsl_aggs_sig", Aggs, AggsSigQuery),
+    Registered("dsl_aggs_sig_text", Aggs, AggsSigTextQuery),
+    Registered("dsl_aggs_scripted", Aggs, AggsScriptedQuery),
+    Registered("dsl_aggs_sampler", Aggs, AggsSamplerQuery),
+    Registered("dsl_aggs_adjacency", Aggs, AggsAdjacencyQuery),
+    Registered("dsl_aggs_percentiles", Aggs, AggsPercentilesQuery),
+    Registered("dsl_aggs_boxplot", Aggs, AggsBoxplotQuery),
+    Registered("dsl_aggs_string_stats", Aggs, AggsStringStatsQuery),
+    Registered("dsl_aggs_ttest", Aggs, AggsTTestQuery),
+    Registered("dsl_runtime_aggs", Aggs, RuntimeAggsQuery, served = false),
+    Registered("dsl_nested_aggs", Aggs, NestedAggsQuery, IngestDocs),
+    Registered("dsl_top_hits", TopHits, TopHitsQuery),
+    Registered("dsl_top_hits_scored", TopHits, TopHitsScoredQuery),
+    Registered("dsl_suggest", Suggest, SuggestBodyQuery),
+    Registered("dsl_suggest_phrase", Suggest, SuggestPhraseQuery)
+  )
+
+  /** The registered bodies' queries: `name` and `name_served`. */
+  lazy val registeredQueries
+      : Map[String, (SparkSession, String) => DataFrame] =
+    registered.flatMap { r =>
+      val scan = r.name -> { (spark: SparkSession, dir: String) =>
+        r.kind.scan(r.corpus.frame(spark, dir), r.body)
+      }
+      val served = r.corpus.indexes.filter(_ => r.served).map { idx =>
+        s"${r.name}_served" -> { (spark: SparkSession, dir: String) =>
+          r.kind.index(spark, idx(spark, dir), r.body)
+        }
+      }
+      scan +: served.toSeq
+    }.toMap
+
+  /** The registered bodies' oracle SQL, one string per query name.
+    * Generated on first use, so building the query map does not
+    * generate any. */
+  lazy val registeredOracles: Map[String, String] =
+    registered.flatMap { r =>
+      val sql = r.kind.oracle(r.body, r.corpus.rel)
+      (r.name -> sql) +:
+        (if (r.served) Seq(s"${r.name}_served" -> sql) else Seq.empty)
+    }.toMap
 
   // ------------------------------------------------- ES 8 knn search
 
@@ -13678,7 +13094,7 @@ object Dsl {
     dslKnnOf(Tables.embeddings(spark, dir),
       s"""{"knn": ${knnSectionFromCorpus(spark, dir, 10)}}""")
 
-  val dslKnnOracleSql: String =
+  lazy val dslKnnOracleSql: String =
     s"""SELECT vec_id, label,
        |  ${Similarity.dotSql("embedding", "qv")} /
        |    sqrt(${Similarity.dotSql("embedding", "embedding")} *
@@ -13705,7 +13121,7 @@ object Dsl {
       Similarity.bucketOf(kn.qv.toArray), k = kn.k)
   }
 
-  val dslKnnServedOracleSql: String = Similarity.knnProbedSql(10)
+  lazy val dslKnnServedOracleSql: String = Similarity.knnProbedSql(10)
 
   /** The hybrid body's rank section: `{"rrf": {...}}` — fusion must
     * be explicit (ES's default knn-beside-query score SUM is a
@@ -13811,7 +13227,7 @@ object Dsl {
          | "query": $KnnHybridTextQuery,
          | "rank": {"rrf": {}}, "size": ${Search.RrfTopK}}""".stripMargin)
 
-  val dslKnnHybridOracleSql: String = {
+  lazy val dslKnnHybridOracleSql: String = {
     val textSql = dslSql(
       s"""{"query": $KnnHybridTextQuery, "size": ${Search.RrfPool}}""")
     val cos = s"${Similarity.dotSql("embedding", "qv")} / " +

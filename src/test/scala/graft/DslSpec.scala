@@ -226,7 +226,7 @@ class DslSpec extends SparkSpec {
   }
 
   test("the generated oracle SQL mirrors the compiled clause structure") {
-    val sql = Dsl.searchDslSql
+    val sql = SparkEntry.oracleSql("dsl_search")
     // every clause family of the registered query appears
     assert(sql.contains("qtf1 > 0 OR"), "match OR-of-terms")
     assert(sql.contains("NOT f.qpf1 > 0"), "must_not phrase")
@@ -413,11 +413,9 @@ class DslSpec extends SparkSpec {
       """{"query": {"match_phrase_prefix": {"text":
         {"query": "alpha b", "max_expansions": 10}}}}""", tiny))
     assert(e.getMessage.contains("max_expansions"), e.getMessage)
-    // served ≡ scan on the real corpus (term-dictionary prefix leg)
-    val scan = Dsl.searchDslPhrasePrefix(spark, sfDir).collect().toSeq
+    val scan = SparkEntry.queries("dsl_phrase_prefix")(spark, sfDir)
+      .collect().toSeq
     assert(scan.nonEmpty, "registered prefix body must hit")
-    assert(Dsl.searchDslPhrasePrefixServed(spark, sfDir).collect().toSeq
-      == scan, "term-dictionary-served phrase_prefix diverged from scan")
     // most_fields SUMS per-field scores: a doc matching in head AND
     // text must outrank under most_fields wherever best_fields took
     // only the max — rank sets stay equal, order may not
@@ -488,12 +486,10 @@ class DslSpec extends SparkSpec {
     assert(msg("""{"query": {"nested": {"path": "tags", "score_mode":
       "avg", "query": {"term": {"tags.type": "k"}}}}}""")
       .contains("score_mode"))
-    // the REGISTERED body over the real ingest corpus: served (daily
-    // ingest indices via the alias, tags from docmeta) ≡ scan
-    val scan = Dsl.searchDslNested(spark, sfDir).collect().toSeq
+    // the REGISTERED body over the real ingest corpus
+    val scan = SparkEntry.queries("dsl_nested")(spark, sfDir)
+      .collect().toSeq
     assert(scan.nonEmpty, "the registered nested body must hit")
-    assert(Dsl.searchDslNestedServed(spark, sfDir).collect().toSeq == scan,
-      "docmeta-served nested diverged from the scan path")
   }
 
   test("match_phrase slop: windowed starts; slop 0 ≡ exact adjacency bit-for-bit") {
@@ -522,11 +518,8 @@ class DslSpec extends SparkSpec {
     assert(run("""{"query": {"match_phrase": {"text":
       {"query": "alpha beta", "slop": 0}}}}""", gaps) ==
       run("""{"query": {"match_phrase": {"text": "alpha beta"}}}""", gaps))
-    // served twin ≡ scan on the real corpus (positional postings)
-    assert(Dsl.searchDslPhraseSlopServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslPhraseSlop(spark, sfDir).collect().toSeq,
-      "position-window-served slop diverged from the scan path")
-    assert(Dsl.searchDslPhraseSlop(spark, sfDir).collect().nonEmpty,
+    assert(SparkEntry.queries("dsl_phrase_slop")(spark, sfDir)
+      .collect().nonEmpty,
       "the registered slop body must hit on the fixture corpus")
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -652,10 +645,6 @@ class DslSpec extends SparkSpec {
         "aggs": {"s": {"stats": {"field": "n_chars"}}}}}}""")
       .contains("SINGLE-VALUE"),
       "order by a multi-valued stats sub must refuse")
-    // served nested aggs ≡ scan (daily indices)
-    assert(Dsl.dslAggsNestedServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslAggsNested(spark, sfDir).collect().toSeq,
-      "served nested aggs diverged from the scan path")
   }
 
   test("percolator rules may use the r13 clause families (fuzzy, slop, nested)") {
@@ -718,11 +707,9 @@ class DslSpec extends SparkSpec {
       "aggs": {"tv": {"nested": {"path": "tags"},
         "aggs": {"v": {"terms": {"field": "value"}}}}}}""")
       .contains("tags.<subfield>"), "full-path addressing inside the agg")
-    // served (ingest daily indices, tags from docmeta) ≡ scan
-    val scan = Dsl.dslNestedAggs(spark, sfDir).collect().toSeq
+    val scan = SparkEntry.queries("dsl_nested_aggs")(spark, sfDir)
+      .collect().toSeq
     assert(scan.nonEmpty)
-    assert(Dsl.dslNestedAggsServed(spark, sfDir).collect().toSeq == scan,
-      "docmeta-served nested agg diverged from the scan path")
   }
 
   test("top_hits: per-bucket top documents, loud routing both ways") {
@@ -874,28 +861,24 @@ class DslSpec extends SparkSpec {
     // the DSL compiled onto the persisted index must reproduce the
     // scan path exactly — same integers into the same shared score
     // expressions, so the ranking (and every echoed column) is
-    // bit-identical, not approximately equal
-    val scan = Dsl.searchDsl(spark, sfDir).collect().map(_.toSeq).toSeq
-    val served = Dsl.searchDslServed(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(served == scan, "served DSL ranking diverged from the scan path")
-    val mfScan = Dsl.searchDslMultifield(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val mfServed = Dsl.searchDslMultifieldServed(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(mfServed == mfScan,
-      "served multi-field DSL diverged from the scan path")
-    // the round-12 bodies serve too: extended clauses on doc-values,
-    // sort/from/_source, and the aggs body across the daily indices
-    assert(Dsl.searchDslExtendedServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslExtended(spark, sfDir).collect().toSeq,
-      "served extended-clause DSL diverged from the scan path")
-    assert(Dsl.searchDslSortedServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslSorted(spark, sfDir).collect().toSeq,
-      "served sorted/paged DSL diverged from the scan path")
-    assert(Dsl.dslAggsServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslAggs(spark, sfDir).collect().toSeq,
-      "daily-index-served aggregations diverged from the scan path")
+    // bit-identical, not approximately equal. One pair per row of the
+    // registered table with a served form, plus the hand-wired pairs.
+    // Every one of these bodies defines its row order (hits by rk,
+    // buckets by agg/key/key2, suggestions by sugg/rk, top_hits by
+    // agg/key/rk, msearch by req/rk, count is one row), so none needs
+    // a sorted-multiset comparison: every pair compares ordered.
+    def rows(name: String): Seq[Seq[Any]] =
+      SparkEntry.queries(name)(spark, sfDir).collect().map(_.toSeq).toSeq
+    val pairs = Dsl.registered.filter(_.served)
+      .map(r => r.name -> s"${r.name}_served") ++ Seq(
+        "dsl_search" -> "dsl_served",
+        "dsl_count" -> "dsl_count_served",
+        "dsl_msearch" -> "dsl_msearch_served")
+    assert(pairs.size >= 65, s"only ${pairs.size} served pairs")
+    pairs.foreach { case (scanName, servedName) =>
+      assert(rows(servedName) == rows(scanName),
+        s"$servedName diverged from the scan path ($scanName)")
+    }
     // r14 regression pin: a global agg beside a TEXT query must widen
     // the served candidate universe to the whole corpus (like
     // significant_terms) — without it "all docs" counted only
@@ -904,15 +887,6 @@ class DslSpec extends SparkSpec {
       Dsl.dslAggsOf(Tables.documentsPar(spark, sfDir),
         Dsl.AggsGlobalQuery).collect().toSeq,
       "served global agg diverged from the scan path (universe bug)")
-    assert(Dsl.dslCountServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslCount(spark, sfDir).collect().toSeq,
-      "index-served _count diverged from the scan count")
-    assert(Dsl.dslMsearchServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslMsearch(spark, sfDir).collect().toSeq,
-      "index-served _msearch diverged from the scan batch")
-    assert(Dsl.searchDslFuzzyServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslFuzzy(spark, sfDir).collect().toSeq,
-      "term-dictionary-served fuzzy DSL diverged from the scan path")
     // a doc-value-less field refuses loudly instead of scanning text
     val idx = Dsl.searchDslServed(spark, sfDir) // memo warm
     val e = intercept[IllegalArgumentException](
@@ -1199,15 +1173,11 @@ class DslSpec extends SparkSpec {
       """{"query": {"match": {"text": "beta"}},
         "highlight": {"fields": {"text": {"number_of_fragments": 3}}}}"""))
     assert(e2.getMessage.contains("number_of_fragments"), e2.getMessage)
-    // the served fetch phase reads the index's stored _source table —
-    // snippets bit-identical to the scan path's
-    assert(Dsl.searchDslHighlightServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslHighlight(spark, sfDir).collect().toSeq,
-      "stored-fields highlight diverged from the scan fetch")
   }
 
   test("dsl_alias: the DSL resolved through the daily-index alias ≡ the scan path") {
-    val scan = Dsl.searchDsl(spark, sfDir).collect().map(_.toSeq).toSeq
+    val scan = SparkEntry.queries("dsl_search")(spark, sfDir)
+      .collect().map(_.toSeq).toSeq
     val viaAlias = Dsl.searchDslAlias(spark, sfDir)
       .collect().map(_.toSeq).toSeq
     assert(viaAlias == scan,
@@ -2016,13 +1986,6 @@ class DslSpec extends SparkSpec {
         "fuzziness": 0}}}}""", tiny) ==
       run("""{"query": {"match": {"text": "beta"}}}""", tiny),
       "fuzzy@0 must compile to the match clause bit-for-bit")
-    // the served twins reproduce the scan rows exactly
-    assert(Dsl.searchDslRegexpServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslRegexp(spark, sfDir).collect().toSeq,
-      "served regexp diverged from the scan form")
-    assert(Dsl.searchDslFuzzyClauseServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslFuzzyClause(spark, sfDir).collect().toSeq,
-      "served fuzzy clause diverged from the scan form")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -2083,7 +2046,8 @@ class DslSpec extends SparkSpec {
   }
 
   test("top_hits _score sort: bucket hits ≡ the query run solo, gated per bucket") {
-    val rows = Dsl.dslTopHitsScored(spark, sfDir).collect()
+    val rows = SparkEntry.queries("dsl_top_hits_scored")(spark, sfDir)
+      .collect()
     assert(rows.nonEmpty, "scored top_hits returned nothing")
     // per bucket: the scored hits are EXACTLY the solo query's page
     // with the bucket as a filter (corpus stats are pre-filter, so
@@ -2097,9 +2061,6 @@ class DslSpec extends SparkSpec {
       assert(hits.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq == solo,
         s"bucket '$k' scored hits must equal the solo run")
     }
-    // served twin reproduces the scan rows exactly
-    assert(Dsl.dslTopHitsScoredServed(spark, sfDir).collect().toSeq ==
-      rows.toSeq, "served scored top_hits diverged from the scan form")
     // a scoreless query cannot rank its buckets' hits by _score
     val e = intercept[IllegalArgumentException](Dsl.dslTopHitsOf(tiny,
       """{"query": {"bool": {"filter": [{"term": {"lang": "en"}}]}},
@@ -2136,11 +2097,6 @@ class DslSpec extends SparkSpec {
     assert(boosted.toSet == ids(run(
       """{"query": {"match": {"text": "beta"}}}""", tiny)).toSet,
       "boosting must never change the match set")
-    // served twins reproduce the scan rows exactly
-    assert(Dsl.searchDslFunctionScoreServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslFunctionScore(spark, sfDir).collect().toSeq)
-    assert(Dsl.searchDslBoostingServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslBoosting(spark, sfDir).collect().toSeq)
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -2678,12 +2634,11 @@ class DslSpec extends SparkSpec {
     assert(ids(run("""{"query": {"span_or": {"clauses": [
       {"span_term": {"text": "rare"}}, {"span_term": {"text":
       "gamma"}}]}}}""", tiny)).toSet == Set(0L, 2L, 3L, 4L))
-    // served ≡ scan for the registered combinator body, which must
-    // actually match rows on the real corpus
-    val scan = Dsl.searchDslSpans(spark, sfDir).collect().toSeq
+    // the registered combinator body must actually match rows on the
+    // real corpus
+    val scan = SparkEntry.queries("dsl_spans")(spark, sfDir)
+      .collect().toSeq
     assert(scan.nonEmpty, "SpansQuery matches nothing at sf0.001")
-    assert(Dsl.searchDslSpansServed(spark, sfDir).collect().toSeq ==
-      scan, "served span body diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -2726,10 +2681,7 @@ class DslSpec extends SparkSpec {
       "slop": 1, "in_order": false}}}""").contains("LAST"))
     assert(msg("""{"query": {"span_multi": {"match":
       {"wildcard": {"text": "a*b"}}}}}""").contains("prefix"))
-    // served ≡ scan for the registered prefix-span body
-    assert(Dsl.searchDslSpanMultiServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslSpanMulti(spark, sfDir).collect().toSeq)
-    assert(Dsl.searchDslSpanMulti(spark, sfDir).count() > 0)
+    assert(SparkEntry.queries("dsl_span_multi")(spark, sfDir).count() > 0)
   }
 
   test("suggest body: completion, fuzzy completion, term spell-correction") {
@@ -2760,10 +2712,6 @@ class DslSpec extends SparkSpec {
     val fz = sg("""{"suggest": {"f": {"prefix": "alpa", "completion":
       {"field": "text", "fuzzy": {"fuzziness": 1}}}}}""")
     assert(fz == Seq(("f", 1, "alpha", 4L)), s"got $fz")
-    // served ≡ scan on the real corpus
-    assert(Dsl.dslSuggestServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslSuggest(spark, sfDir).collect().toSeq,
-      "term-dictionary-served suggest diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](
@@ -2805,10 +2753,6 @@ class DslSpec extends SparkSpec {
     // nothing attested → no suggestions (count-space: no smoothing mass)
     assert(sg("""{"suggest": {"p": {"text": "gamma rare",
       "phrase": {"field": "text", "max_edits": 1}}}}""").isEmpty)
-    // served ≡ scan on the real corpus (positional-postings adjacency)
-    assert(Dsl.dslSuggestPhraseServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslSuggestPhrase(spark, sfDir).collect().toSeq,
-      "postings-served phrase suggest diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](
@@ -2868,9 +2812,6 @@ class DslSpec extends SparkSpec {
       "min_score": 50}""", tiny))
     assert(floored == Seq(0L),
       s"min_score must drop sub-floor hits: $floored")
-    // served ≡ scan for the registered body
-    assert(Dsl.searchDslPostFilterServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslPostFilter(spark, sfDir).collect().toSeq)
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -2922,10 +2863,6 @@ class DslSpec extends SparkSpec {
       {"s": {"random_sampler": {"probability": 0.5, "seed": 7}}}}""")
       .collect().map(_.getAs[Long]("doc_count")).toSeq
     assert(draw() == draw(), "seeded sample must be deterministic")
-    // served ≡ scan for the registered adaptive body
-    assert(Dsl.dslAggsAutoServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslAggsAuto(spark, sfDir).collect().toSeq,
-      "served adaptive aggs diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](
@@ -2989,10 +2926,6 @@ class DslSpec extends SparkSpec {
       "aggs": {"page": {"bucket_sort": {"sort": [
         {"_count": {"order": "desc"}}], "from": 1, "size": 2}}}}}}""")
     assert(srt.map(_._2) == Seq("src1", "src2"), s"bucket page: $srt")
-    // served twin ≡ scan on the real corpus
-    assert(Dsl.dslAggsBucketScriptServed(spark, sfDir).collect().toSeq ==
-      Dsl.dslAggsBucketScript(spark, sfDir).collect().toSeq,
-      "served bucket-script trio diverged from the scan path")
     // ADVICE r15: '/' NULLIFs its divisor in BOTH engines — a
     // zero-valued denominator yields NULL, not Spark-NULL-vs-DuckDB-inf
     val dz = Dsl.dslAggsOf(tiny, """{"size": 0, "aggs": {"s": {"terms":
@@ -3085,10 +3018,8 @@ class DslSpec extends SparkSpec {
     // date form: whole-day distance — gauss around Feb 10 ranks the
     // nearest ingest day first (daily corpus from sfDir exercises the
     // real date type end-to-end via the registered query below)
-    assert(Dsl.searchDslFnScoreDecayServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslFnScoreDecay(spark, sfDir).collect().toSeq,
-      "served decay body diverged from the scan path")
-    assert(Dsl.searchDslFnScoreDecay(spark, sfDir).count() > 0)
+    assert(SparkEntry.queries("dsl_function_score_decay")(spark, sfDir)
+      .count() > 0)
   }
 
   test("functions array: weight/filter, score_mode and boost_mode matrix") {
@@ -3142,9 +3073,6 @@ class DslSpec extends SparkSpec {
     // max with a weight above every BM25 score → flat → doc_id order
     assert(fsRun("""{"weight": 100}""", "multiply", "max",
       """{"match": {"text": "alpha"}}""") == Seq(0L, 1L, 4L))
-    // served twins ≡ scan
-    assert(Dsl.searchDslFnScoreModesServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslFnScoreModes(spark, sfDir).collect().toSeq)
   }
 
   test("script_score: arithmetic subset over doc values and params") {
@@ -3161,10 +3089,6 @@ class DslSpec extends SparkSpec {
       "query": {"term": {"lang": "en"}},
       "script": "doc['n_chars'].value"}}}""", tiny))
     assert(gated == Seq(0L, 1L, 3L), "inner query must gate the set")
-    // served twin equality on the shared index
-    assert(Dsl.searchDslScriptScoreServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslScriptScore(spark, sfDir).collect().toSeq,
-      "served script_score diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -3195,10 +3119,6 @@ class DslSpec extends SparkSpec {
         r.getLong(r.fieldIndex("n_chars")) / 2.0,
         "script column must compute from the hit's own doc values")
     }
-    // served twin equality
-    assert(Dsl.searchDslScriptFieldsServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslScriptFields(spark, sfDir).collect().toSeq,
-      "served script_fields diverged from the scan path")
     // refusals
     def msg(json: String): String =
       intercept[IllegalArgumentException](
@@ -3334,8 +3254,6 @@ class DslSpec extends SparkSpec {
     assert(page(7L) != Seq(0L, 1L, 2L, 3L, 4L) || page(42L) != page(7L))
     // seed participates in the hash: two seeds, two permutations
     assert(page(42L) != page(7L), "seed must change the draw")
-    assert(Dsl.searchDslRandomScoreServed(spark, sfDir).collect().toSeq
-      == Dsl.searchDslRandomScore(spark, sfDir).collect().toSeq)
     // refusals: the functions-array surface
     def msg(json: String): String =
       intercept[IllegalArgumentException](run(json, tiny)).getMessage
@@ -4055,10 +3973,6 @@ class DslSpec extends SparkSpec {
     assert(ids(run("""{"query": {"combined_fields": {"query":
       "alpha gamma", "fields": ["text"], "operator": "and"}},
       "size": 10}""", tiny)) == Seq(4L))
-    // served ≡ scan for the registered blended body
-    assert(Dsl.searchDslCombinedServed(spark, sfDir).collect().toSeq ==
-      Dsl.searchDslCombined(spark, sfDir).collect().toSeq,
-      "served combined_fields diverged from the scan path")
     // refusals
     assert(intercept[IllegalArgumentException](run("""{"query":
       {"combined_fields": {"query": "a", "fields": ["text^0"]}}}""",

@@ -9,6 +9,12 @@ class QueriesSmokeSpec extends SparkSpec {
     SparkEntry.oracleSql.keys.foreach { k =>
       assert(SparkEntry.queries.contains(k), s"oracleSql '$k' has no query")
     }
+    // and the reverse: every query has an oracle except these rows-only
+    // ones (approximate sketches, and an enrichment stamped with now())
+    val rowsOnly = Set("agg_approx_percentile", "agg_hll", "dsl_aggs_hll",
+      "ingest_enrich")
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet ==
+      rowsOnly, "queries without an oracle must be exactly the rows-only set")
   }
 
   test("README/COVERAGE tallies equal the registry (drift guard)") {
