@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Test-table access for the driver's parquet fixtures (TESTDATA.md).
   * All queries take the sf directory as a parameter so the same code runs
@@ -167,4 +168,98 @@ object Tables {
   def documentsPar(spark: SparkSession, dir: String): DataFrame =
     par(documents(spark, dir))
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
+
+  /** A parquet relation over the partitioned tables at `dirs` (one
+    * relation, row-equal to the union of per-dir reads), built with no
+    * Spark job.
+    *
+    *  - Listing runs on the driver: per dir, the `col=value` dirs of
+    *    each level of `parts` in order, then their leaf files. A column
+    *    in `pinned` is not listed: only its named `col=value` dirs are
+    *    opened, so the listing is pruned to them (callers keep the
+    *    matching filter). Hidden entries (`_*`, `.*`, `*._COPYING_`:
+    *    `_SUCCESS`, `.crc`, `_temporary`, checkpoint and staging dirs)
+    *    are skipped, as Spark's own listing does; a missing dir lists
+    *    as empty.
+    *  - The result reaches an [[InMemoryFileIndex]] through a pre-filled
+    *    [[FileStatusCache]] plus an explicit partition spec, so neither
+    *    Spark's listing (a parallel listing job once a level holds more
+    *    than `parallelPartitionDiscovery.threshold` dirs) nor partition
+    *    inference runs. The schema is `data` then `parts` as declared,
+    *    never inferred from footers.
+    *  - No data file reads as an empty local relation.
+    *
+    * Partition values may be STRING, INT or BIGINT. */
+  private[graft] def listedParquet(spark: SparkSession, dirs: Seq[String],
+      data: StructType, parts: StructType,
+      pinned: Map[String, Seq[String]] = Map.empty): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val conf = spark.sessionState.newHadoopConf()
+    def visible(p: Path): Boolean = {
+      val n = p.getName
+      !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+    }
+    val leaves = scala.collection.mutable.LinkedHashMap.empty[Path, Array[FileStatus]]
+    val partitions = Seq.newBuilder[PartitionPath]
+    dirs.foreach { d0 =>
+      val dir = new Path(d0)
+      val fs = dir.getFileSystem(conf)
+      def ls(p: Path): Seq[FileStatus] =
+        try fs.listStatus(p).toSeq.filter(s => visible(s.getPath))
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      def walk(d: Path, depth: Int, values: Vector[Any]): Seq[FileStatus] =
+        if (depth == parts.size) {
+          val files = ls(d).filter(_.isFile)
+          if (files.nonEmpty)
+            partitions += PartitionPath(InternalRow.fromSeq(values),
+              files.head.getPath.getParent)
+          files
+        } else {
+          val part = parts(depth)
+          val named = pinned.get(part.name) match {
+            case Some(vs) => vs.map(v =>
+              new Path(d, s"${part.name}=${ExternalCatalogUtils.escapePathName(v)}") -> v)
+            case None => ls(d).filter(_.isDirectory).flatMap { s =>
+              s.getPath.getName.split("=", 2) match {
+                case Array(part.name, v) =>
+                  Some(s.getPath -> ExternalCatalogUtils.unescapePathName(v))
+                case _ => None
+              }
+            }
+          }
+          named.flatMap { case (p, v) =>
+            val typed = part.dataType match {
+              case StringType => UTF8String.fromString(v)
+              case IntegerType => v.toInt
+              case LongType => v.toLong
+            }
+            walk(p, depth + 1, values :+ typed)
+          }
+        }
+      val files = walk(dir, 0, Vector.empty)
+      if (files.nonEmpty) leaves(fs.makeQualified(dir)) = files.toArray
+    }
+    val found = partitions.result()
+    val schema = StructType(data.fields ++ parts.fields)
+    if (found.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        schema)
+    else {
+      val cache = new FileStatusCache {
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+          leaves.get(path)
+        override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
+        Some(schema), cache, Some(PartitionSpec(parts, found)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+        data, None, new parquet.ParquetFileFormat, Map.empty)(spark))
+    }
+  }
 }

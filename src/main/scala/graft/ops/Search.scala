@@ -3080,17 +3080,13 @@ object Search {
     * Spark job. Every serving, maintenance and ingest-screen read of
     * an index goes through it.
     *
-    *  - Listing runs on the driver: per root, the family dir's
-    *    `epoch=*` dirs, then their leaf files. With `buckets` (postings
-    *    only) it opens only the `epoch=E/b=K` dirs of the query's
-    *    buckets, so the listing is pruned exactly like the scan, and
-    *    the frame keeps the `b IN (…)` partition filter. Hidden entries
-    *    (`_*`, `.*`, `*._COPYING_`: `_SUCCESS`, `.crc`, `_temporary`,
-    *    append and sync staging dirs) are skipped, as Spark's own
-    *    listing does. The result reaches an [[InMemoryFileIndex]]
-    *    through a pre-filled [[FileStatusCache]] plus an explicit
-    *    partition spec, so neither a listing job nor partition
-    *    inference runs.
+    *  - Listing runs on the driver through [[Tables.listedParquet]]:
+    *    per root, the family dir's `epoch=*` dirs, then their leaf
+    *    files. With `buckets` (postings only) it opens only the
+    *    `epoch=E/b=K` dirs of the query's buckets, so the listing is
+    *    pruned exactly like the scan, and the frame keeps the `b IN (…)`
+    *    partition filter. Neither a listing job nor partition inference
+    *    runs.
     *  - The schema is [[IndexFamilies]]' declaration (shared with
     *    [[writeEpoch]]), never inferred from footers, so no footer job
     *    runs either. A declared column a stale member's files lack
@@ -3114,32 +3110,16 @@ object Search {
     * compaction is what bounds the listing, not corpus size. */
   private[graft] def indexTable(spark: SparkSession, roots: Seq[String],
       family: String, buckets: Option[Seq[Int]] = None): DataFrame = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    import org.apache.spark.sql.execution.datasources._
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
     val fam = IndexFamilies.getOrElse(family, throw new IllegalArgumentException(
       s"indexTable: unknown index family '$family' — one of " +
         IndexFamilies.keys.toSeq.sorted.mkString(", ")))
     require(buckets.isEmpty || family == "postings",
       s"indexTable: bucket pruning applies to postings, not $family")
     val conf = spark.sessionState.newHadoopConf()
-    def visible(p: Path): Boolean = {
-      val n = p.getName
-      !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
-    }
-    val leaves = scala.collection.mutable.LinkedHashMap.empty[Path, Array[FileStatus]]
-    val partitions = Seq.newBuilder[PartitionPath]
-    roots.foreach { root =>
-      val dir = new Path(
-        if (family == "tombstones") tombDir(spark, root) else s"$root/$family")
-      val fs = dir.getFileSystem(conf)
-      def ls(p: Path): Seq[FileStatus] =
-        try fs.listStatus(p).toSeq.filter(s => visible(s.getPath))
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      if (!fs.exists(dir)) family match {
+    val dirs = roots.map { root =>
+      val dir = if (family == "tombstones") tombDir(spark, root) else s"$root/$family"
+      val p = new org.apache.hadoop.fs.Path(dir)
+      if (!p.getFileSystem(conf).exists(p)) family match {
         case "tombstones" =>
         case "stored" => throw new IllegalStateException(
           s"index at $root has no stored (_source) table — built before " +
@@ -3148,56 +3128,10 @@ object Search {
           s"index at $root has no $family table — incomplete build or " +
             "partial delete; re-run buildSearchIndex")
       }
-      // walk the declared partition levels (`col=value` dirs only); a
-      // pruned bucket level opens its `b=K` dirs by name, unlisted
-      def walk(d: Path, depth: Int, values: Vector[Any]): Seq[FileStatus] =
-        if (depth == fam.parts.size) {
-          val files = ls(d).filter(_.isFile)
-          if (files.nonEmpty)
-            partitions += PartitionPath(InternalRow.fromSeq(values),
-              files.head.getPath.getParent)
-          files
-        } else {
-          val part = fam.parts(depth)
-          val named = (part.name, buckets) match {
-            case ("b", Some(bs)) =>
-              bs.distinct.map(k => new Path(d, s"b=$k") -> k.toString)
-            case _ => ls(d).filter(_.isDirectory).flatMap { s =>
-              s.getPath.getName.split("=", 2) match {
-                case Array(part.name, v) =>
-                  Some(s.getPath -> ExternalCatalogUtils.unescapePathName(v))
-                case _ => None
-              }
-            }
-          }
-          named.flatMap { case (p, v) =>
-            val typed = part.dataType match {
-              case StringType => UTF8String.fromString(v)
-              case IntegerType => v.toInt
-            }
-            walk(p, depth + 1, values :+ typed)
-          }
-        }
-      val files = walk(dir, 0, Vector.empty)
-      if (files.nonEmpty) leaves(fs.makeQualified(dir)) = files.toArray
+      dir
     }
-    val parts = partitions.result()
-    val df =
-      if (parts.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          fam.schema)
-      else {
-        val cache = new FileStatusCache {
-          override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
-            leaves.get(path)
-          override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
-          override def invalidateAll(): Unit = ()
-        }
-        val index = new InMemoryFileIndex(spark, leaves.keys.toSeq, Map.empty,
-          Some(fam.schema), cache, Some(PartitionSpec(fam.parts, parts)))
-        spark.baseRelationToDataFrame(HadoopFsRelation(index, fam.parts,
-          fam.data, None, new parquet.ParquetFileFormat, Map.empty)(spark))
-      }
+    val df = Tables.listedParquet(spark, dirs, fam.data, fam.parts,
+      buckets.fold(Map.empty[String, Seq[String]])(bs => Map("b" -> bs.distinct.map(_.toString))))
     buckets.fold(df)(bs => df.filter(col("b").isin(bs.distinct: _*)))
   }
 

@@ -4,6 +4,7 @@ import graft.model.Schemas
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Boot configuration — the reference's `.env` envelope (reference
   * .env:1-26, read at main.go:204-250). Only the knobs with a Spark
@@ -112,13 +113,17 @@ object Boot {
   }
 
   /** Point `alias` at the `date` partition of the index at `tableDir`,
-    * tolerating a still-empty index dir: the read is schema'd with the
-    * index layout (Schemas.index) so no parquet footer needs to exist
-    * yet — the reference aliases right after creating the (empty) daily
-    * index the same way (es.go:92-116). The date filter lands in the
-    * scan's PartitionFilters once data exists (same pruning contract as
-    * Ingest.pointIndexAlias, which serves the SQL-text form for tables
-    * that already have data).
+    * tolerating a still-empty index dir: the relation is declared with
+    * the index layout (Schemas.index) so no parquet footer needs to
+    * exist yet — the reference aliases right after creating the (empty)
+    * daily index the same way (es.go:92-116).
+    *
+    * The relation is listed on the driver, and only under
+    * `persist_date=<date>` (Tables.listedParquet), so a re-point runs no
+    * Spark job and never lists other days; the date filter stays on the
+    * frame. Spark's own listing of the whole root would launch a
+    * listing job on every re-point once a day holds more than 32 epoch
+    * dirs, its work growing with the epoch count.
     *
     * A file-backed DataFrame freezes its file LISTING at read time, so
     * this view serves the files present NOW — which is why the running
@@ -130,15 +135,20 @@ object Boot {
       tableDir: String, date: String): Unit = {
     require(date.matches("\\d{4}-\\d{2}-\\d{2}"),
       s"date must be yyyy-MM-dd, got: $date")
-    spark.read.schema(Schemas.index).parquet(tableDir)
+    // partition columns persist_date then epoch_id, the writer's order
+    // (IngestPipeline.writeBatch) and Schemas.index's
+    val (parts, data) = Schemas.index.fields.toSeq
+      .partition(f => f.name == "persist_date" || f.name == "epoch_id")
+    graft.Tables.listedParquet(spark, Seq(tableDir), StructType(data),
+      StructType(parts), pinned = Map("persist_date" -> Seq(date)))
       .filter(col("persist_date") === date)
       .createOrReplaceTempView(alias)
   }
 
   /** Decorates the index sink so the boot alias re-points after each
     * epoch commit — the moment (and the only moment) the file listing
-    * under the alias can change. Driver-side and O(one directory
-    * listing) per epoch. */
+    * under the alias can change. Driver-side, no Spark job: one listing
+    * of today's epoch dirs per epoch. */
   private final case class AliasRefreshingSink(
       inner: Sink, spark: SparkSession, alias: String,
       tableDir: String, date: String) extends Sink {

@@ -63,15 +63,19 @@ object Health {
     }
 
   /** Per-stream slice of the reference's `Info` field: identity,
-    * liveness, last-batch throughput, and the batch's observed metrics
-    * flattened to `"<observation>.<column>" -> value`. */
+    * liveness, last-batch throughput, the batch's observed metrics
+    * flattened to `"<observation>.<column>" -> value`, and the batch's
+    * phase durations (`StreamingQueryProgress.durationMs`: addBatch,
+    * latestOffset, walCommit, commitOffsets, queryPlanning, getBatch,
+    * triggerExecution). */
   final case class StreamInfo(
       name: String,
       id: String,
       isActive: Boolean,
       batchId: Long,
       numInputRows: Long,
-      observed: Map[String, String])
+      observed: Map[String, String],
+      durationsMs: Map[String, Long])
 
   /** ≈ reference model.go:69-76 `HealthStatus`; goVersion → sparkVersion,
     * numRoutines → numActiveStreams. */
@@ -114,7 +118,9 @@ object Health {
       StreamInfo(Option(q.name).getOrElse(""), q.id.toString, q.isActive,
         p.map(_.batchId).getOrElse(-1L),
         p.map(_.numInputRows).getOrElse(0L),
-        observed)
+        observed,
+        p.map(_.durationMs.asScala.toMap.map { case (k, v) => k -> v.longValue })
+          .getOrElse(Map.empty[String, Long]))
     }
     HealthStatus(
       app = app,
@@ -138,7 +144,8 @@ object Health {
     * progress (n_received / n_valid / n_dlq — the analogue of the
     * reference's received/inserted/failed message counters) surface as
     * one family per metric with `stream`/`id` labels; liveness and
-    * last-batch progress ride along as gauges. Families are emitted
+    * last-batch progress ride along as gauges, the last batch's phase
+    * durations with a further `phase` label. Families are emitted
     * once with their `# HELP`/`# TYPE` header followed by every
     * stream's sample, as the exposition format requires. */
   def renderPrometheus(s: HealthStatus): String = {
@@ -148,8 +155,8 @@ object Health {
     }
     def lbl(v: String): String =
       "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n") + "\""
-    def labels(i: StreamInfo): String =
-      s"""{stream=${lbl(i.name)},id=${lbl(i.id)}}"""
+    def labels(i: StreamInfo, more: String = ""): String =
+      s"""{stream=${lbl(i.name)},id=${lbl(i.id)}$more}"""
     val sb = new StringBuilder
     def family(name: String, typ: String, help: String,
         samples: Seq[(String, String)]): Unit =
@@ -169,6 +176,12 @@ object Health {
     family("graft_stream_last_batch_input_rows", "gauge",
       "Input rows of the last micro-batch.",
       s.info.map(i => labels(i) -> i.numInputRows.toString))
+    family("graft_stream_last_batch_duration_seconds", "gauge",
+      "Time the last micro-batch spent in each phase.",
+      for {
+        i <- s.info
+        (phase, ms) <- i.durationsMs.toSeq.sortBy(_._1)
+      } yield labels(i, s",phase=${lbl(phase)}") -> (ms / 1000.0).toString)
     // observed metrics, grouped into one family per metric name across
     // streams; only numeric values are representable in the format
     val observed = for {

@@ -1,9 +1,15 @@
 package graft.streaming
 
 import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** Running per-identifier counters maintained by [[IngestPipeline.runningCounts]]. */
 final case class IdentifierStats(identifier: String, n_records: Long, n_tags: Long)
@@ -93,21 +99,23 @@ object IngestPipeline {
       .withColumn("valid", col("rec").isNotNull)
 
   /** P1 — the ToIndex projection/enrichment (reference model.go:28-44):
-    * epoch-millis → timestamp, persist_time = now(), daily partition
-    * date (≈ index name es.go:79-81). persist_date derives from the
-    * record's EVENT time, not persist_time: the daily layout is then
-    * deterministic under replay — the reference's now()-based index
-    * naming would re-date a replay that crosses midnight, leaving the
-    * original day's copy behind (the one hole in [[writeBatch]]'s
-    * rewrite guarantee if the partition key were wall-clock). */
-  def toIndex(parsed: DataFrame): DataFrame =
+    * epoch-millis → timestamp, persist_time = `now`, daily partition
+    * date (≈ index name es.go:79-81). `now` is the batch clock as a
+    * column ([[writeBatch]] binds it once per batch). persist_date
+    * derives from the record's EVENT time, not persist_time: the daily
+    * layout is then deterministic under replay — the reference's
+    * now()-based index naming would re-date a replay that crosses
+    * midnight, leaving the original day's copy behind (the one hole in
+    * [[writeBatch]]'s rewrite guarantee if the partition key were
+    * wall-clock). */
+  def toIndex(parsed: DataFrame, now: Column): DataFrame =
     parsed.select(
       col("rec.identifier").as("identifier"),
       col("rec.name").as("name"),
       col("rec.uuid").as("uuid"),
       col("rec.type").as("type"),
       timestamp_millis(col("rec.ingestion_time")).as("ingestion_time"),
-      current_timestamp().as("persist_time"),
+      now.as("persist_time"),
       col("rec.tags").as("tags"))
       .withColumn("persist_date", date_format(col("ingestion_time"), "yyyy-MM-dd"))
 
@@ -140,34 +148,79 @@ object IngestPipeline {
     * The DLQ carries a `reason` column: `parse_failure` (malformed
     * payload) or `event_time_outlier` (valid payload, event time outside
     * the freshness window — see [[MaxEventAgeDays]]). Both keep the raw
-    * `value` for replay after correction. */
+    * `value` for replay after correction. One predicate routes every
+    * row: a valid record inside the window goes to the index, every
+    * other row to the DLQ, so each record lands in exactly one sink.
+    *
+    * Per-batch cost. The batch is persisted and built once; then the DLQ
+    * write and the index write run concurrently, each on a sink thread
+    * carrying the stream thread's Spark thread-locals (job group, so a
+    * stopped query cancels them; job tags; the active session). The call
+    * returns, or throws, only after both writes ended: the first failure
+    * is rethrown with any other as suppressed, and a replay of the epoch
+    * rewrites whatever a failed write left. `now` is the batch clock,
+    * read once on the driver. It, the freshness bounds and the epoch id
+    * enter the plans as [[Bridge.batchConstant]]s, never as literals, so
+    * each epoch's generated code is the previous epoch's and compiles
+    * nothing. */
   def writeBatch(batch: DataFrame, epochId: Long,
       indexDir: String, dlqDir: String,
       maxPastDays: Int = MaxEventAgeDays,
-      maxFutureDays: Int = MaxEventFutureDays): Unit = {
+      maxFutureDays: Int = MaxEventFutureDays,
+      now: java.time.Instant = java.time.Instant.now()): Unit = {
+    val nowUs = DateTimeUtils.instantToMicros(now)
+    val dayUs = 86400L * 1000000L
+    def at(us: Long): Column = Bridge.batchConstant(us, TimestampType)
+    val eventTs = timestamp_millis(col("rec.ingestion_time"))
+    val indexed = col("valid") &&
+      eventTs >= at(nowUs - maxPastDays * dayUs) &&
+      eventTs <= at(nowUs + maxFutureDays * dayUs)
+    val epoch = Bridge.batchConstant(epochId, LongType).as("epoch_id")
     val b = batch.persist()
     try {
-      val eventTs = timestamp_millis(col("rec.ingestion_time"))
-      val fresh =
-        eventTs >= current_timestamp() - expr(s"INTERVAL $maxPastDays DAYS") &&
-        eventTs <= current_timestamp() + expr(s"INTERVAL $maxFutureDays DAYS")
+      // built here, in one job, so that neither concurrent write's plan
+      // starts a build of its own
+      Bridge.buildCache(b)
       // DLQ side-output (K3/ST4): malformed payloads + event-time
       // outliers, with provenance and the routing reason
-      b.filter(!col("valid"))
-        .select(col("value"), lit("parse_failure").as("reason"),
-          lit(epochId).as("epoch_id"))
-        .union(b.filter(col("valid") && !fresh)
-          .select(col("value"), lit("event_time_outlier").as("reason"),
-            lit(epochId).as("epoch_id")))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id").parquet(dlqDir)
+      val dlq = b.filter(!indexed)
+        .select(col("value"),
+          when(col("valid"), "event_time_outlier").otherwise("parse_failure").as("reason"),
+          epoch)
       // idempotent upsert half (K2): one writer per uuid per batch
-      toIndex(b.filter(col("valid") && fresh))
+      val index = toIndex(b.filter(indexed), at(nowUs))
         .dropDuplicates("uuid")
-        .withColumn("epoch_id", lit(epochId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("persist_date", "epoch_id").parquet(indexDir)
+        .withColumn("epoch_id", epoch)
+      def overwrite(df: DataFrame, dir: String, parts: String*): () => Unit = () =>
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy(parts: _*).parquet(dir)
+      runAll(b.sparkSession, Seq(overwrite(dlq, dlqDir, "epoch_id"),
+        overwrite(index, indexDir, "persist_date", "epoch_id")))
     } finally { b.unpersist(); () }
+  }
+
+  /** Threads the sink writes run on: daemon, created on demand and
+    * retired after a minute idle. */
+  private lazy val sinkThreads = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-epoch-sink")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run `tasks` concurrently, each with the calling thread's Spark
+    * thread-locals, and wait for every one of them. Then rethrow the
+    * failure that happened first, with the later ones as suppressed. */
+  private def runAll(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val running = tasks.map(task => SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], sinkThreads) {
+      try task() catch { case e: Throwable => failures.add(e); throw e }
+    })
+    running.foreach(f => scala.util.Try(f.join()))
+    failures.asScala.toList match {
+      case first :: rest => rest.foreach(first.addSuppressed); throw first
+      case Nil =>
+    }
   }
 
   /** Assemble and start the pipeline. Returns the running query; callers

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Boot, BootConfig, FrameSource}
+import graft.streaming.{Boot, BootConfig, FrameSource, IngestPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 
@@ -51,6 +51,47 @@ class BootSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Boot.pointBootAlias(spark, "bad", dir, "not-a-date")
     }
+  }
+
+  test("re-pointing the alias over 40 epochs of a day runs no Spark job") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = tmp("fortyidx")
+    val now = java.time.Instant.parse("2026-02-02T10:00:00Z")
+    val day = "2026-02-02"
+    val dayBefore = now.toEpochMilli - 24L * 3600 * 1000
+    IngestPipeline.writeBatch(IngestPipeline.parse(Seq(json("a1", now.toEpochMilli),
+      json("a2", now.toEpochMilli), json("other_day", dayBefore)).toDF("value")),
+      0L, dir, tmp("fortydlq"), now = now)
+    // epochs 1-39 of the same day: copies of epoch 0's files
+    val e0 = java.nio.file.Paths.get(dir, s"persist_date=$day", "epoch_id=0")
+    val files = { val l = Files.list(e0); try l.iterator().asScala.toList finally l.close() }
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    (1 until 40).foreach { e =>
+      val d = Files.createDirectories(e0.resolveSibling(s"epoch_id=$e"))
+      files.foreach(f => Files.copy(f, d.resolve(f.getFileName)))
+    }
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      Boot.pointBootAlias(spark, "forty_alias", dir, day)
+      org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"re-pointing the alias launched ${jobs.get} Spark jobs")
+    // the alias serves exactly what a full read filtered to the day does
+    val cols = graft.model.Schemas.index.fields.toSeq
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(cols.map(f => $"${f.name}".cast(f.dataType)): _*)
+        .collect().map(_.toString).toSeq.sorted
+    val alias = rows(spark.table("forty_alias"))
+    assert(alias.size == 80)
+    assert(alias == rows(spark.read.parquet(dir).filter($"persist_date" === day)))
   }
 
   test("boot composes schema, alias, health, pipeline, and drains cleanly") {

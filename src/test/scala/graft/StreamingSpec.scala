@@ -107,6 +107,69 @@ class StreamingSpec extends SparkSpec {
     assert(reasons == Map("parse_failure" -> 1L, "event_time_outlier" -> 2L), reasons.toString)
   }
 
+  test("one batch clock: a record at each freshness bound lands in exactly one sink") {
+    import spark.implicits._
+    val (indexDir, dlqDir) = (tmp("bidx"), tmp("bdlq"))
+    val now = java.time.Instant.parse("2026-03-01T12:00:00.123Z")
+    val dayMs = 24L * 3600 * 1000
+    val bounds = Seq(
+      "past" -> (now.toEpochMilli - IngestPipeline.MaxEventAgeDays * dayMs),
+      "future" -> (now.toEpochMilli + IngestPipeline.MaxEventFutureDays * dayMs))
+    // each bound itself and 1 ms either side of it
+    val records = for ((name, b) <- bounds; d <- Seq(-1L, 0L, 1L)) yield s"$name$d" -> (b + d)
+    val batch = IngestPipeline.parse(
+      records.map { case (u, ms) => json(u, ms = ms) }.toDF("value"))
+    IngestPipeline.writeBatch(batch, 3L, indexDir, dlqDir, now = now)
+    val idx = spark.read.parquet(indexDir)
+    val indexed = idx.select($"uuid").as[String].collect().toSeq
+    val quarantined = spark.read.parquet(dlqDir)
+      .select(get_json_object($"value", "$.uuid")).as[String].collect().toSeq
+    assert((indexed ++ quarantined).sorted == records.map(_._1).sorted,
+      s"indexed $indexed, quarantined $quarantined")
+    assert(quarantined.toSet == Set("past-1", "future1"), quarantined.toString)
+    // the index stamps the same clock the bounds were drawn from
+    assert(idx.select($"persist_time").distinct().as[java.sql.Timestamp]
+      .collect().map(_.toInstant).toSeq == Seq(now))
+  }
+
+  test("epochs after the first compile no generated code") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (indexDir, dlqDir) = (tmp("cgidx"), tmp("cgdlq"))
+    val now = System.currentTimeMillis()
+    def batch(e: Int) = IngestPipeline.parse(Seq(json(s"cg$e-a", ms = now),
+      json(s"cg$e-b", ms = now), json(s"cg$e-old", ms = 0L), "garbage").toDF("value"))
+    IngestPipeline.writeBatch(batch(1), 1L, indexDir, dlqDir)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    IngestPipeline.writeBatch(batch(2), 2L, indexDir, dlqDir)
+    IngestPipeline.writeBatch(batch(3), 3L, indexDir, dlqDir)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles == 0,
+      "a later epoch compiled generated code: a per-epoch value was inlined")
+    assert(spark.read.parquet(indexDir).count() == 6)
+    assert(spark.read.parquet(dlqDir).count() == 6)
+  }
+
+  test("a failed sink write fails the epoch after every write ended; the replay leaves one copy") {
+    import spark.implicits._
+    val indexDir = tmp("fpidx")
+    // a regular file where the DLQ root should be
+    val badDlq = Files.createTempFile("fpdlq", ".file").toString
+    val batch = IngestPipeline.parse(Seq(json("fp1"), json("fp2"), "garbage").toDF("value"))
+    val sc = spark.sparkContext
+    val e = intercept[Exception] {
+      IngestPipeline.writeBatch(batch, 5L, indexDir, badDlq)
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(String.valueOf(_)).mkString(" <- ")
+    assert(chain.contains(badDlq), chain)
+    org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"write jobs still running after writeBatch threw: ${sc.statusTracker.getActiveJobIds.toSeq}")
+    IngestPipeline.writeBatch(batch, 5L, indexDir, tmp("fpdlq"))
+    val idx = spark.read.parquet(indexDir)
+    assert(idx.count() == 2 && idx.select($"uuid").distinct().count() == 2)
+  }
+
   test("health reports a crashed stream via the termination listener") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -251,6 +314,11 @@ class StreamingSpec extends SparkSpec {
           .find(l => l.startsWith("graft_observed_ingest_metrics_n_dlq{") &&
             l.contains(q.id.toString))
         assert(dlq.exists(_.endsWith(" 1")), s"dlq sample: $dlq\n$body")
+        // the last batch's phase durations, one sample per phase
+        assert(body.contains("# TYPE graft_stream_last_batch_duration_seconds gauge"), body)
+        assert(body.linesIterator.exists(l =>
+          l.startsWith("graft_stream_last_batch_duration_seconds{") &&
+            l.contains(q.id.toString) && l.contains("phase=\"addBatch\"")), body)
       } finally q.stop()
       // with no active stream the page still serves (scrapes never 500 on
       // quiet systems); graft_up stays 1 because nothing failed
