@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The production connector boundary (SURVEY §7.4.6).
   *
@@ -33,13 +34,21 @@ trait Sink {
 /** File-based source: each line of `path` is one wire payload — the
   * zero-egress stand-in for a topic subscription. `maxFilesPerTrigger`
   * caps per-batch intake like the reference's gobatch MaxItems
-  * (reference main.go:94-104). */
+  * (reference main.go:94-104).
+  *
+  * A trigger's files are listed on the driver. Spark's file stream
+  * builds a file index over each micro-batch's files in `getBatch`, and
+  * above 32 paths (`spark.sql.sources.parallelPartitionDiscovery.threshold`)
+  * that index lists them in a Spark job of one task per file — a job on
+  * every full trigger, only to stat files the source listed a moment
+  * before. [[Bridge.driverListed]] raises the threshold to
+  * `maxFilesPerTrigger` for this stream alone, so the driver listing is
+  * bounded by the same cap, and the caller's session conf is unchanged. */
 final case class FileSource(path: String, maxFilesPerTrigger: Int = 1000)
     extends Source {
   override def read(spark: SparkSession): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(path)
+    Bridge.driverListed(spark, maxFilesPerTrigger)(
+      _.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger).text(path))
 }
 
 /** An already-constructed streaming DataFrame (MemoryStream in tests,

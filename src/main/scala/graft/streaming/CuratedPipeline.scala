@@ -4,7 +4,10 @@ import graft.Tables
 import graft.ops.{Classifier, Dedup, Pq, Search, Select, TextAnalysis, Unigram}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The trained serving bundle of one corpus version — every model the
   * engine trains, loaded under ONE manifest so a mixed-version serve
@@ -240,12 +243,15 @@ object CuratedPipeline {
       epochId: Long, outDir: String, dlqDir: String,
       alertsDir: Option[String] = None): Unit = {
     import spark.implicits._
+    // the epoch id enters every plan as a batch constant, not a literal,
+    // so each epoch reuses the previous epoch's generated code
+    val epoch = Bridge.batchConstant(epochId, LongType).as("epoch_id")
     val b = batch.localCheckpoint()
     // DLQ side-output: replay-stable (invalid rows are never admitted,
     // so a replayed epoch rewrites the same partition identically)
     b.filter(!validPred)
       .select($"doc_id", $"source", $"text",
-        lit("invalid_document").as("reason"), lit(epochId).as("epoch_id"))
+        lit("invalid_document").as("reason"), epoch)
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("epoch_id").parquet(dlqDir)
     // one writer per key per batch (appendToFunnel's new-ids contract
@@ -293,7 +299,7 @@ object CuratedPipeline {
           dedupedValid.withColumn("n_chars", length($"text")),
           dslRules.map(r => (r.getLong(0), r.getString(1))).toSeq))
       alerts
-        .withColumn("epoch_id", lit(epochId))
+        .withColumn("epoch_id", epoch)
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("epoch_id").parquet(ad)
     }
@@ -326,7 +332,7 @@ object CuratedPipeline {
         .withColumn("curated", TextAnalysis.scrubExpr(cleaned))
         .select($"doc_id", $"source", $"lang", $"curated",
           size(TextAnalysis.toks($"curated")).cast("long").as("n_tokens"),
-          $"score", $"weight", lit(epochId).as("epoch_id"))
+          $"score", $"weight", epoch)
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("epoch_id").parquet(outDir)
       // PQ maintenance: encode arrivals that carry an embedding under
@@ -386,7 +392,9 @@ object CuratedPipeline {
       // operator's quiesce responsibility (compactSearchIndex doc)
       val root = Search.indexRoot(spark, idx)
       val already = Search.indexTable(spark, Seq(root), "doclen")
-        .filter($"epoch" =!= s"e$epochId").select($"doc_id")
+        .filter($"epoch" =!= Bridge.batchConstant(
+          UTF8String.fromString(s"e$epochId"), StringType))
+        .select($"doc_id")
       // carry the doc-values fields so the index serves facets over
       // curated batches too (Search.DocValueFields)
       val idxDocs = dedupedValid.select($"doc_id", $"text", $"lang", $"source")

@@ -37,6 +37,11 @@ object Health {
     new java.util.WeakHashMap[SparkSession, Recorded]())
   private val lastStart = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Long]())
+  // per active stream id: the ingest counters summed over every batch
+  // reported since the listener was installed or the stream started
+  private val totals = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, IngestTotals]]())
   private val installed = java.util.Collections.newSetFromMap(
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
@@ -55,19 +60,38 @@ object Health {
           import org.apache.spark.sql.streaming.StreamingQueryListener._
           override def onQueryStarted(e: QueryStartedEvent): Unit =
             { lastStart.put(spark, seq.incrementAndGet()); () }
-          override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+          override def onQueryProgress(e: QueryProgressEvent): Unit =
+            Option(e.progress.observedMetrics.get("ingest_metrics")).foreach { row =>
+              def n(f: String): Long =
+                Option(row.getAs[java.lang.Long](f)).fold(0L)(_.longValue)
+              totals.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+                .merge(e.progress.id.toString,
+                  IngestTotals(n("n_received"), n("n_valid"), n("n_dlq")), _ + _)
+              ()
+            }
+          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
+            Option(totals.get(spark)).foreach(_.remove(e.id.toString))
             e.exception.foreach(msg =>
               lastFailure.put(spark, Recorded(seq.incrementAndGet(), msg)))
+          }
         })
     }
+
+  /** Records an ingest stream received, decoded as valid, and routed to
+    * the DLQ as malformed, summed over its batches (its
+    * `ingest_metrics` observation). */
+  final case class IngestTotals(received: Long, valid: Long, dlq: Long) {
+    def +(o: IngestTotals): IngestTotals =
+      IngestTotals(received + o.received, valid + o.valid, dlq + o.dlq)
+  }
 
   /** Per-stream slice of the reference's `Info` field: identity,
     * liveness, last-batch throughput, the batch's observed metrics
     * flattened to `"<observation>.<column>" -> value`, and the batch's
     * phase durations (`StreamingQueryProgress.durationMs`: addBatch,
     * latestOffset, walCommit, commitOffsets, queryPlanning, getBatch,
-    * triggerExecution). */
+    * triggerExecution), and an ingest stream's running totals, counted
+    * from the first batch after [[install]]. */
   final case class StreamInfo(
       name: String,
       id: String,
@@ -75,7 +99,8 @@ object Health {
       batchId: Long,
       numInputRows: Long,
       observed: Map[String, String],
-      durationsMs: Map[String, Long])
+      durationsMs: Map[String, Long],
+      totals: Option[IngestTotals])
 
   /** ≈ reference model.go:69-76 `HealthStatus`; goVersion → sparkVersion,
     * numRoutines → numActiveStreams. */
@@ -108,6 +133,7 @@ object Health {
     val activeErrors = qs.flatMap(q => q.exception.map(_.getMessage))
     val errors = activeErrors ++
       recorded.filterNot(_ => startedSince).map(_.message)
+    val streamTotals = Option(totals.get(spark))
     val infos = qs.map { q =>
       val p = Option(q.lastProgress)
       val observed = p.map(_.observedMetrics.asScala.toMap.flatMap {
@@ -120,7 +146,8 @@ object Health {
         p.map(_.numInputRows).getOrElse(0L),
         observed,
         p.map(_.durationMs.asScala.toMap.map { case (k, v) => k -> v.longValue })
-          .getOrElse(Map.empty[String, Long]))
+          .getOrElse(Map.empty[String, Long]),
+        streamTotals.flatMap(t => Option(t.get(q.id.toString))))
     }
     HealthStatus(
       app = app,
@@ -143,7 +170,9 @@ object Health {
     * metrics.go:9-41). The observed ingest metrics riding each stream's
     * progress (n_received / n_valid / n_dlq — the analogue of the
     * reference's received/inserted/failed message counters) surface as
-    * one family per metric with `stream`/`id` labels; liveness and
+    * one family per metric with `stream`/`id` labels, holding the last
+    * batch's values; their running sums are the true counters
+    * `graft_stream_{received,valid,dlq}_total`. Liveness and
     * last-batch progress ride along as gauges, the last batch's phase
     * durations with a further `phase` label. Families are emitted
     * once with their `# HELP`/`# TYPE` header followed by every
@@ -182,6 +211,15 @@ object Health {
         i <- s.info
         (phase, ms) <- i.durationsMs.toSeq.sortBy(_._1)
       } yield labels(i, s",phase=${lbl(phase)}") -> (ms / 1000.0).toString)
+    def total(name: String, help: String, get: IngestTotals => Long): Unit =
+      family(name, "counter", help,
+        s.info.flatMap(i => i.totals.map(t => labels(i) -> get(t).toString)))
+    total("graft_stream_received_total",
+      "Records the stream received, summed over its batches.", _.received)
+    total("graft_stream_valid_total",
+      "Records the stream decoded as valid, summed over its batches.", _.valid)
+    total("graft_stream_dlq_total",
+      "Malformed records the stream routed to the DLQ, summed over its batches.", _.dlq)
     // observed metrics, grouped into one family per metric name across
     // streams; only numeric values are representable in the format
     val observed = for {

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DataType
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 hides the classic
@@ -43,6 +44,29 @@ object Bridge {
     if (!builder.isCachedColumnBuffersLoaded)
       df.sparkSession.sparkContext.runJob(builder.cachedColumnBuffers,
         (_: Iterator[_]) => ())
+  }
+
+  /** The streaming frame `read` builds, with every file listing of its
+    * source kept on the driver up to `maxPaths` paths. Spark lists more
+    * paths than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (default 32) in a Spark job of one task per path, and a file
+    * stream's `getBatch` lists each micro-batch's files again. `read`
+    * runs on a clone of `spark` whose threshold is raised to `maxPaths`;
+    * the analyzed plan is then re-homed on `spark`. Its file stream's
+    * data source keeps the clone, so every per-batch listing reads the
+    * raised threshold, while the query runs on, and registers with,
+    * `spark`, whose conf is untouched. The plan must be the analyzed
+    * one: the streaming reader resolves its data source in the session
+    * that analyzes it. */
+  def driverListed(spark: SparkSession, maxPaths: Int)(
+      read: SparkSession => DataFrame): DataFrame = {
+    val user = spark.asInstanceOf[classic.SparkSession]
+    val clone = user.cloneSession()
+    val conf = clone.sessionState.conf
+    conf.setConf(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD,
+      math.max(maxPaths, conf.parallelPartitionDiscoveryThreshold))
+    val analyzed = read(clone).asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+    classic.Dataset.ofRows(user, analyzed)
   }
 
   private def cached(df: DataFrame): CachedData = {

@@ -428,4 +428,71 @@ class CuratedPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() == 2)
     assert(spark.read.parquet(m.pqDir.get).count() == pqBefore - 1)
   }
+
+  test("curated epochs inline no per-epoch value in generated code; a replay rewrites the same rows") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val m = CuratedModels.load(spark, modelsDir)
+    val (outDir, dlqDir, alertsDir) = (tmp("graftcgout"), tmp("graftcgdlq"), tmp("graftcgalerts"))
+    // shuffled corpus twins (see the streamed-curation test), three per
+    // corpus document; every epoch takes the same branches: an arrival
+    // that clears every gate, two that do not, one of them with an
+    // embedding, and one invalid row
+    val rnd = new scala.util.Random(7)
+    val corpusRows = Tables.documents(spark, corpusDir)
+      .select($"source", $"lang", $"text").collect()
+    val cands = (0 until 3).flatMap(k => corpusRows.zipWithIndex.map { case (r, i) =>
+        (970000L + k * corpusRows.length + i, r.getString(0), r.getString(1),
+          rnd.shuffle(r.getString(2).split(' ').toSeq).mkString(" "))
+      }).toDF("doc_id", "source", "lang", "text").localCheckpoint()
+    val accepted = Classifier.scoreWithModel(cands.select($"doc_id", $"text"), m.classifier)
+      .filter($"score" >= m.keepBar).select($"doc_id")
+      .join(Select.sampleWithRatios(cands.select($"doc_id", $"text"), m.ratios), "doc_id")
+      .join(Select.sampleWithRates(cands.select($"doc_id", $"source"), m.rates), "doc_id")
+      .collect().map(_.getLong(0)).sorted
+    assert(accepted.length >= 6, s"battery too weak: ${accepted.length} accepted twins")
+    val rejected = cands.select($"doc_id").collect().map(_.getLong(0)).toSet
+      .diff(accepted.toSet).toSeq.sorted
+    val embs = Tables.embeddings(spark, corpusDir).select($"embedding")
+      .limit(6).collect().map(_.getSeq[Float](0).toArray)
+    val byId = cands.collect().map(r => r.getLong(0) -> r).toMap
+    def rec(id: Long, emb: Array[Float]): CuratedRec = {
+      val r = byId(id)
+      CuratedRec(id, r.getString(1), r.getString(2), r.getString(3), emb, 0)
+    }
+    val batches = (0 until 6).map(e => Seq(rec(accepted(e), null),
+      rec(rejected(2 * e), embs(e)), rec(rejected(2 * e + 1), null),
+      CuratedRec(969000L + e, "src0", "en", " ", null, 0))
+      .toDF("doc_id", "source", "lang", "text", "embedding", "label")
+      .localCheckpoint(eager = true))
+    def curate(e: Int): Unit =
+      CuratedPipeline.curateBatch(spark, m, batches(e), e.toLong, outDir, dlqDir, Some(alertsDir))
+    // A generated class is named after its whole-stage codegen id, which
+    // adaptive execution assigns in stage-completion order; unnamed
+    // classes leave only the per-epoch values to tell epochs apart. An
+    // inlined per-epoch value compiles in every epoch. A data shape seen
+    // for the first time compiles once, in whichever epoch brings it: a
+    // join whose broadcast side was empty in the earlier epochs and is
+    // not now generates other code (an empty hashed relation). So some
+    // epoch after the first must compile nothing at all.
+    val byStageId = "spark.sql.codegen.useIdInClassName"
+    val deltas = try {
+      spark.conf.set(byStageId, "false")
+      (0 until 6).map { e =>
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        curate(e)
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+    } finally spark.conf.unset(byStageId)
+    assert(deltas.drop(1).contains(0L),
+      s"every epoch compiled generated code (per epoch: $deltas): a per-epoch value was inlined")
+    def rows(dir: String): Set[Seq[Any]] =
+      spark.read.parquet(dir).collect().map(_.toSeq).toSet
+    val (out, dlq, alerts) = (rows(outDir), rows(dlqDir), rows(alertsDir))
+    // the near-dup screen against the funnel may still drop a twin
+    assert(out.nonEmpty && out.map(_.head).subsetOf(accepted.take(6).toSet), out)
+    assert(dlq.size == 6)
+    curate(5)
+    assert(rows(outDir) == out && rows(dlqDir) == dlq && rows(alertsDir) == alerts)
+  }
 }

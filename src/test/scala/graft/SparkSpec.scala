@@ -16,6 +16,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "true")
     .config("spark.sql.session.timeZone", "UTC")
+    // one curated-pipeline epoch compiles about 200 classes; Spark's
+    // default 100-entry codegen cache would evict and recompile them all
+    // every epoch, and no compile count could tell an inlined per-epoch
+    // value from an eviction (CuratedPipelineSpec)
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.ui.enabled", "false")
     .getOrCreate()

@@ -327,6 +327,37 @@ class StreamingSpec extends SparkSpec {
     } finally { server.stop(0); graft.streaming.Health.clearFailures(spark) }
   }
 
+  test("metrics endpoint counts each stream's ingest totals over its batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    graft.streaming.Health.install(spark)
+    val mem = MemoryStream[String]
+    val q = IngestPipeline.start(spark, mem.toDF(),
+      tmp("totidx"), tmp("totdlq"), tmp("totck"),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      mem.addData(json("tot1"), json("tot2"), "bad payload")
+      q.processAllAvailable()
+      mem.addData(json("tot3"), "bad again", "and again")
+      q.processAllAvailable()
+      org.apache.spark.graftbench.BenchBridge.drainListeners(spark.sparkContext)
+      val batches = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get("ingest_metrics")))
+      assert(batches.size == 2, q.recentProgress.mkString("\n"))
+      def sum(f: String): Long = batches.map(_.getAs[Long](f)).sum
+      val mine = graft.streaming.Health.status(spark).info.find(_.id == q.id.toString).get
+      assert(mine.totals.contains(graft.streaming.Health.IngestTotals(6L, 3L, 3L)), mine)
+      assert((sum("n_received"), sum("n_valid"), sum("n_dlq")) == ((6L, 3L, 3L)))
+      val body = graft.streaming.Health.prometheusText(spark)
+      for ((name, v) <- Seq("received" -> 6, "valid" -> 3, "dlq" -> 3)) {
+        val family = s"graft_stream_${name}_total"
+        assert(body.contains(s"# TYPE $family counter"), body)
+        val sample = body.linesIterator.find(l => l.startsWith(s"$family{") && l.contains(q.id.toString))
+        assert(sample.exists(_.endsWith(s" $v")), s"$family sample: $sample\n$body")
+      }
+    } finally q.stop()
+  }
+
   test("health status mirrors the reference HealthStatus shape") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -365,6 +396,49 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(spark.read.parquet(indexDir).select("uuid").distinct().count() == 2)
     assert(spark.read.parquet(dlqDir).count() == 1)
+  }
+
+  test("a file-source trigger over more than 32 files lists them on the driver") {
+    import graft.streaming.{FileSource, ParquetIndexSink}
+    import spark.implicits._
+    val srcDir = tmp("lsrc")
+    val (indexDir, dlqDir, ckDir) = (tmp("lidx"), tmp("ldlq"), tmp("lck"))
+    // 40 files (Spark lists more than 32 paths in a job by default); one
+    // valid record each, and every fourth file adds a malformed one
+    (0 until 40).foreach { i =>
+      val lines = json(s"ls$i") +: (if (i % 4 == 0) Seq(s"garbage $i") else Nil)
+      Files.writeString(java.nio.file.Path.of(srcDir, f"part-$i%02d.txt"),
+        lines.mkString("\n"))
+    }
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val threshold = spark.conf.get(key)
+    val source = FileSource(srcDir)
+    source.read(spark)
+    assert(spark.conf.get(key) == threshold, "reading the source changed the caller's conf")
+    val sc = spark.sparkContext
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files and directories"))
+          .foreach(listings.add(_))
+    }
+    org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = IngestPipeline.startWith(spark, source, ParquetIndexSink(indexDir, dlqDir), ckDir)
+      q.awaitTermination(60000)
+      org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
+      q
+    } finally sc.removeSparkListener(listener)
+    assert(listings.isEmpty, s"listing jobs ran: ${listings.toArray.mkString("; ")}")
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1, "expected one trigger")
+    assert(spark.read.parquet(indexDir).select($"uuid").as[String].collect().toSet ==
+      (0 until 40).map(i => s"ls$i").toSet)
+    assert(spark.read.parquet(dlqDir).select($"value").as[String].collect().toSet ==
+      (0 until 40 by 4).map(i => s"garbage $i").toSet)
+    assert(spark.conf.get(key) == threshold)
   }
 
   test("dropDuplicatesWithinWatermark dedupes the stream with bounded state") {

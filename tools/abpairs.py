@@ -6,6 +6,7 @@ Usage:
 
     python3 tools/abpairs.py --parent ../parent --change . \\
         --workload ingest --seeds 21-30 [--seconds 5] [--trace 0] \\
+        [--named ingest_capacity_docs_per_s,streaming.getBatch_s_p50] \\
         [--out pairs.jsonl]
 
 For every seed it runs `perfbench/run.py` in both checkouts (each builds
@@ -23,6 +24,12 @@ median beats the parent's by more than the parent's interquartile
 distance. A metric whose median is worse than the parent's by more than
 its bound is marked WORSE; one whose parent interquartile distance
 exceeds the bound is marked unresolved.
+
+--named m1,m2,... also reads, after each run, that checkout's
+perfbench/work/report-<workload>-s<seed>-t<trace>.json, keeps the named
+report metrics in the run's line, and prints each side's median of each
+beside the verdicts (a traced run reports the per-layer ones, such as
+streaming.getBatch_s_p50 and streaming.queue_wait_s_p50).
 
 Exit status: 1 if any run failed a correctness check or did not finish,
 else 0. Nothing is written under perfbench/ by this tool (the runs write
@@ -63,6 +70,18 @@ def run_one(checkout, workload, seed, seconds, trace):
     return load1, proc.returncode, result
 
 
+def report_values(checkout, workload, seed, trace, names):
+    path = os.path.join(checkout, "perfbench", "work",
+                        f"report-{workload}-s{seed}-t{trace}.json")
+    try:
+        with open(path) as f:
+            report = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return {}
+    found = {**report.get("result", {}).get("metrics", {}), **report.get("named", {})}
+    return {n: found[n]["value"] for n in names if n in found}
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -80,6 +99,9 @@ def main():
                     help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--out", default=None, help="append each run's JSON line here")
+    ap.add_argument("--named", default="", type=lambda t: [n for n in t.split(",") if n],
+                    help="report metrics to print each side's median of, e.g. "
+                         "ingest_capacity_docs_per_s,streaming.getBatch_s_p50")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
@@ -96,6 +118,8 @@ def main():
             load1, code, result = run_one(sides[side], a.workload, seed, seconds, a.trace)
             rec = {"side": side, "seed": seed, "pos": pos, "workload": a.workload,
                    "trace": a.trace, "loadavg_1m": load1, "exit": code, "result": result}
+            if a.named:
+                rec["named"] = report_values(sides[side], a.workload, seed, a.trace, a.named)
             runs.append(rec)
             line = json.dumps(rec, separators=(",", ":"))
             print(line, flush=True)
@@ -147,6 +171,18 @@ def main():
         cell = lambda q: f"{q[1]:.4g} [{q[0]:.4g},{q[2]:.4g}]"
         print(f"{name:22s} {cell(pq):>28s} {cell(cq):>28s} {rel:+8.1%} "
               f"{wins:>3d}/{len(pairs):<2d}  {'; '.join(verdict)}")
+    if a.named:
+        print(f"\n{'report metric':34s} {'parent median':>14s} {'change median':>14s} {'change':>8s}")
+        for name in a.named:
+            med = {}
+            for side in sides:
+                xs = [r["named"][name] for r in runs
+                      if r["side"] == side and name in r.get("named", {})]
+                med[side] = statistics.median(xs) if xs else None
+            p, c = med["parent"], med["change"]
+            cell = lambda v: f"{v:14.4g}" if v is not None else f"{'-':>14s}"
+            rel = f"{c / p - 1:+8.1%}" if p and c is not None else f"{'-':>8s}"
+            print(f"{name:34s} {cell(p)} {cell(c)} {rel}")
     sys.exit(1 if bad else 0)
 
 
