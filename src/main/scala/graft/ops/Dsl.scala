@@ -77,7 +77,7 @@ import graft.Tables
 object Dsl {
 
   /** Handles of the DISK_ONLY barrier frames the shared-pass paths
-    * persist ([[aggsOver]], [[msearchOf]], `msearchGroups`). Those
+    * persist ([[aggsOver]], [[msearchOf]], [[Source.share]]). Those
     * functions return LAZY DataFrames — the final consuming action
     * happens at the caller — so a frame cannot self-unpersist after
     * "its" action. Instead every barrier persist registers here and
@@ -5872,33 +5872,34 @@ object Dsl {
     * Shape at 100 TB: the alternative is N corpus scans; here the
     * corpus text is read ONCE and the persisted frame holds a few integers
     * per doc — the shared-scan batching a distributed engine can offer
-    * that per-request ES cannot. */
-  def msearchOf(docs: DataFrame, bodies: Seq[String]): DataFrame = {
-    import docs.sparkSession.implicits._
+    * that per-request ES cannot.
+    *
+    * Served ([[msearchFromIndexes]]): one candidate frame per
+    * [[Source]] group — the postings read prunes to all the group's
+    * terms at once, the doc-values and length tables join once, and
+    * one union statistics aggregate serves every scored request. */
+  def msearchOf(docs: DataFrame, bodies: Seq[String]): DataFrame =
+    msearch(Scan(docs), bodies)
+
+  def msearchFromIndexes(spark: SparkSession, indexDirs: Seq[String],
+      bodies: Seq[String]): DataFrame =
+    msearch(Served(spark, indexDirs), bodies)
+
+  /** The `_msearch` compiler: each of the source's groups shares one
+    * candidate frame ([[Source.share]]) and one statistics aggregate
+    * across its requests' rank tails. */
+  private def msearch(src: Source, bodies: Seq[String]): DataFrame = {
     val (framePlan, plans) = msearchPlans(bodies)
-    checkFields(docs, framePlan.exact)
-    // persist(DISK_ONLY), not localCheckpoint: the barrier must survive
-    // executor loss. localCheckpoint TRUNCATES lineage and stores blocks
-    // on executors — losing one (preemption, dynamic allocation) fails
-    // the whole job; persist keeps the lineage, so a lost block
-    // recomputes its partition and the batch completes. The frame is a
-    // few integers per doc — disk-only keeps it out of executor heaps.
-    val f0 = trackPersist(scanF(docs, framePlan, Seq.empty)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    // pin the N rank tails to ONE RDD over the persisted frame — the
-    // union deduplication otherwise defeats cached-plan matching and
-    // each request re-scans the corpus (the aggsOver barrier finding,
-    // measured: 3-request msearch ran 4 corpus scans). Lineage and the
-    // executor-loss stance are unchanged; the conversion is a few
-    // integer columns per doc.
-    val f = docs.sparkSession.createDataFrame(f0.rdd, f0.schema)
-    val stats = scanStats(f, framePlan)
-    val pages = plans.zipWithIndex.map { case (p, i) =>
-      rankTail(f, if (p.needsStats) stats else None, p)
-        .withColumn("req", lit(i))
-        .select($"req", $"rk", $"doc_id", $"n_matched", $"tf_total", $"dl")
+    val pages = src.groups(framePlan, plans).flatMap { case (gFrame, gp) =>
+      val c = src.features(gFrame, shared = true)
+      gp.map { case (p, i) =>
+        rankTail(c.f, if (p.needsStats) c.stats else None, p)
+          .withColumn("req", lit(i))
+          .select(col("req"), col("rk"), col("doc_id"), col("n_matched"),
+            col("tf_total"), col("dl"))
+      }
     }
-    pages.reduce(_ unionByName _).orderBy($"req", $"rk")
+    pages.reduce(_ unionByName _).orderBy(col("req"), col("rk"))
   }
 
   /** Oracle for [[msearchOf]] — the same shared f/s CTEs, one branch
@@ -6287,17 +6288,28 @@ object Dsl {
 
   /** Compile and run a DSL search over a documents frame (the SCAN
     * path — [[Search.bm25TopK]]'s shape). See class doc. */
-  def searchDslOf(docs: DataFrame, json: String): DataFrame = {
-    val b = resolveBodyLookups(parseBody(json), scanFetcher(docs))
+  def searchDslOf(docs: DataFrame, json: String): DataFrame =
+    searchDsl(Scan(docs), json)
+
+  /** [[searchDslOf]] SERVED from the persisted index ([[Served]]):
+    * postings features, doc-values and index statistics feed the same
+    * score expressions, so the page is bit-identical to the scan's. */
+  def searchDslFromIndexes(spark: SparkSession, indexDirs: Seq[String],
+      json: String): DataFrame =
+    searchDsl(Served(spark, indexDirs), json)
+
+  /** The hits compiler. A highlighted page's fetch phase reads the
+    * source's stored text ([[Source.stored]]). */
+  private def searchDsl(src: Source, json: String): DataFrame = {
+    val b = resolveBodyLookups(parseBody(json), src.fetch)
     if (b.aggs.nonEmpty)
       fail("body has \"aggs\" — aggregations are served by dslAggsOf, " +
         "hits by searchDslOf")
-    val docsR = withRuntime(docs, b)
+    val srcR = src.runtime(b)
     val p = planOfBody(b)
-    checkFields(docsR, p.exact)
-    val f = scanF(docsR, p, Seq.empty)
-    val page = rankTail(f, scanStats(f, p), p)
-    p.highlight.map(highlightJoin(docsR, page, p, _)).getOrElse(page)
+    val c = srcR.features(p)
+    val page = rankTail(c.f, c.stats, p)
+    p.highlight.map(highlightJoin(srcR.stored, page, p, _)).getOrElse(page)
   }
 
   /** The FETCH phase of highlighting: snippets compute for the PAGE's
@@ -6407,25 +6419,11 @@ object Dsl {
       "scalar keyword/numeric fields")
   }
 
-  /** Scan-path lookup fetcher: one pruned 1-row probe of the corpus. */
-  private def scanFetcher(docs: DataFrame)(
-      id: Long, path: String): Seq[Scalar] = {
-    checkFields(docs, Seq(path))
+  /** The lookup GET's values: one pruned 1-row probe of `docs`. */
+  private def lookupValues(docs: DataFrame, id: Long,
+      path: String): Seq[Scalar] =
     docs.filter(col("doc_id") === id).select(col(path)).collect().toSeq
       .flatMap(r => Option(r.get(0))).map(rowScalar(_, path))
-  }
-
-  /** Served-path lookup fetcher: the same 1-row GET against the
-    * RESOLVED roots' docmeta doc-values — a footer probe per member
-    * for the path, then one pruned read across every member. */
-  private def servedFetcher(spark: SparkSession, roots: Seq[String])(
-      id: Long, path: String): Seq[Scalar] = {
-    if (roots.exists(r => !Search.familyColumns(spark, r, "docmeta").contains(path)))
-      fail(s"terms lookup path '$path' is not a stored doc-value")
-    Search.indexTable(spark, roots, "docmeta")
-      .filter(col("doc_id") === id).select(col(path)).collect().toSeq
-      .flatMap(r => Option(r.get(0))).map(rowScalar(_, path))
-  }
 
   /** The plan of a query compiled in FILTER CONTEXT (scored = false,
     * no statistic keys) — what `_count`, aggregations, and percolation
@@ -6463,8 +6461,17 @@ object Dsl {
     * refuse loudly). Filter-context compile: no statistics aggregate,
     * and a text-free query never reads the text column.
     *
-    * Shape at 100 TB: one pruned scan + a 1-row count. */
-  def dslCountOf(docs: DataFrame, json: String): DataFrame = {
+    * Shape at 100 TB: one pruned scan + a 1-row count. Served
+    * ([[dslCountFromIndexes]]): one pruned index read + a 1-row count,
+    * tombstones excluded, never the corpus. */
+  def dslCountOf(docs: DataFrame, json: String): DataFrame =
+    countDsl(Scan(docs), json)
+
+  def dslCountFromIndexes(spark: SparkSession, indexDirs: Seq[String],
+      json: String): DataFrame =
+    countDsl(Served(spark, indexDirs), json)
+
+  private def countDsl(src: Source, json: String): DataFrame = {
     JsonMethods.parse(json) match {
       case o: JObject =>
         o.obj.collectFirst { case (k, _) if k != "query" => k }
@@ -6472,17 +6479,13 @@ object Dsl {
             s"got '$k'"))
       case other => fail(s"body must be a JSON object, got $other")
     }
-    val b = resolveBodyLookups(parseBody(json), scanFetcher(docs))
+    val b = resolveBodyLookups(parseBody(json), src.fetch)
     val p = filterPlanOf(b.query)
-    checkFields(docs, p.exact)
-    scanF(docs, p, Seq.empty).filter(p.c.pred)
-      .agg(count(lit(1)).as("total"))
+    src.features(p).f.filter(p.c.pred).agg(count(lit(1)).as("total"))
   }
 
   /** Oracle for [[dslCountOf]] — same AST, same filter-context
     * predicate. */
-  def dslCountSql(json: String): String = dslCountSqlOver(json, "documents")
-
   def dslCountSqlOver(json: String, rel: String): String = {
     val p = filterPlanOf(parseBody(json).query)
     s"""WITH ${fCteSql(p, Seq.empty, rel)}
@@ -7437,9 +7440,30 @@ object Dsl {
     * doc-grain matched frame (only the referenced columns), each a
     * map-side-combined hash aggregate at bucket grain; the terms cut
     * is bucket-grain top-N. */
-  def dslAggsOf(docs: DataFrame, json: String): DataFrame = {
-    import docs.sparkSession.implicits._
-    val b = resolveBodyLookups(parseBody(json), scanFetcher(docs))
+  def dslAggsOf(docs: DataFrame, json: String): DataFrame =
+    aggsDsl(Scan(docs), json)
+
+  /** `"aggs"` SERVED from the persisted index: the match set comes
+    * from doc-values + (for text clauses) postings tf features — the
+    * same candidate construction the served search uses — and the
+    * one-pass [[aggsOver]] emission runs unchanged, so served
+    * aggregations reproduce the scan path's buckets bit-for-bit (same
+    * integers in, same arithmetic). Multi-index capable: bucket counts
+    * across members are plain sums over the union (no global statistic
+    * exists to guard — the members' disjointness contract is
+    * [[Search.syncIndex]]'s admission screen). Tombstoned docs never
+    * aggregate.
+    *
+    * Shape at 100 TB: postings prune to the referenced terms' buckets;
+    * docmeta is doc-grain and column-pruned to the referenced fields;
+    * then ONE hash aggregate — aggregations never touch the corpus
+    * text. */
+  def dslAggsFromIndexes(spark: SparkSession, indexDirs: Seq[String],
+      json: String): DataFrame =
+    aggsDsl(Served(spark, indexDirs), json)
+
+  private def aggsDsl(src: Source, json: String): DataFrame = {
+    val b = resolveBodyLookups(parseBody(json), src.fetch)
     if (b.aggs.isEmpty)
       fail("no aggs in body — hits are served by searchDslOf")
     if (b.size != 0)
@@ -7459,11 +7483,27 @@ object Dsl {
     // filter-agg clauses join the query's clause inventory so ONE
     // feature frame serves the predicate and every stored bucket
     val filterNodes = aggClauseNodes(b)
-    val docsR = withRuntime(docs, b)
+    val srcR = src.runtime(b)
     val p = mergedFilterPlan(b.query +: filterNodes)
     val aggFields = b.aggs.flatMap(aggSpecFields).distinct
-    checkFields(docsR, (p.exact ++ aggFields).distinct)
-    val fullF = scanF(docsR, p, aggFields)
+    // significant_terms needs BACKGROUND counts and global aggregates
+    // over the PRE-filter frame: for both, the candidate universe must
+    // stay the whole corpus even when every match carries a query term
+    // — a match_all frame plan disables the served path's df-bounded
+    // restriction (features still fill 0; a scan frame is always the
+    // whole corpus)
+    val pFrame =
+      if (b.aggs.exists(s => s.agg.isInstanceOf[SigTermsAgg] ||
+          s.agg.isInstanceOf[SigTextAgg] ||
+          s.agg.isInstanceOf[GlobalAgg]))
+        p.copy(q = MatchAllQ)
+      else p
+    // significant_text re-analyzes the text field: the source's stored
+    // text, never a doc-value (the ES semantics)
+    val sigTextFields = b.aggs.map(_.agg).collect {
+      case SigTextAgg(f2, _) => f2
+    }.distinct
+    val fullF = srcR.features(pFrame, aggFields, sigTextFields).f
     val matched = fullF.filter(p.c.pred)
     val (samplers, rest) = b.aggs.partition(_.agg.isInstanceOf[SamplerAgg])
     // sampler scopes make `matched` a multi-consumer frame (the base
@@ -7484,28 +7524,21 @@ object Dsl {
     // form) — but every sampler ranks the SAME query (samplerHitsJson
     // passes the body's query through verbatim; only shard_size and
     // the diversity collapse differ), so the scored feature pass and
-    // the BM25 statistics build ONCE (persisted DISK_ONLY behind one
-    // RDD — the msearchOf barrier) and each sampler runs only its own
-    // rank tail over them. Before r18 each sampler ran a full
-    // searchDslOf (its own scan + tokenize + stats passes): the
-    // registered two-sampler body paid 4 extra corpus passes.
+    // the BM25 statistics build ONCE (one shared frame for the union
+    // field inventory, [[Source.share]]) and each sampler runs only
+    // its own rank tail over them
     val sFrames = if (samplers.isEmpty) Seq.empty else {
       val sbs = samplers.map { spec =>
         val sa = spec.agg.asInstanceOf[SamplerAgg]
-        resolveBodyLookups(parseBody(samplerHitsJson(json, sa)),
-          scanFetcher(docs))
+        resolveBodyLookups(parseBody(samplerHitsJson(json, sa)), src.fetch)
       }
       val sps = sbs.map(planOfBody)
-      val docsS = withRuntime(docs, sbs.head)
-      sps.foreach(sp => checkFields(docsS, sp.exact))
-      val exactU = sps.flatMap(_.exact).distinct
-      val f0 = trackPersist(scanF(docsS, sps.head,
-        exactU.filterNot(sps.head.exact.contains))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      val f = docs.sparkSession.createDataFrame(f0.rdd, f0.schema)
-      val stats = scanStats(f, sps.head)
+      // identical clause inventory across samplers (same query) — the
+      // union touches only the exact-field list (collapse fields)
+      val pU = sps.head.copy(exact = sps.flatMap(_.exact).distinct)
+      val c = src.runtime(sbs.head).features(pU, shared = true)
       samplers.zip(sps).map { case (spec, sp) =>
-        val ids = rankTail(f, if (sp.needsStats) stats else None, sp)
+        val ids = rankTail(c.f, if (sp.needsStats) c.stats else None, sp)
           .select(col("doc_id"))
         samplerFrames(matchedS, fullF, spec, p, b, ids)
       }
@@ -9773,44 +9806,31 @@ object Dsl {
     (t.field +: th.sort.map(_._1)).distinct
       .filter(f => f != "doc_id" && f != "_score")
 
-  def dslTopHitsOf(docs: DataFrame, json: String): DataFrame = {
-    import docs.sparkSession.implicits._
-    val (b, pname, t, sn, th) = topHitsShape(json)
-    if (b.runtime.nonEmpty)
-      fail("runtime_mappings on the top_hits endpoint are " +
-        "unsupported — compute the field upstream, or query through " +
-        "searchDslOf/dslAggsOf (the scan-path runtime-field homes)")
-    val scoreSort = th.sort.exists(_._1 == "_score")
-    val p = if (scoreSort) planOf(b.query, 0) else filterPlanOf(b.query)
-    val scored = topHitsScoreSort(th, p)
-    val extra = topHitsExtra(t, th)
-    checkFields(docs, (p.exact ++ extra).distinct)
-    val f = scanF(docs, p, extra)
-    val withStats = (if (scored) scanStats(f, p) else None)
-      .map(st => f.crossJoin(broadcast(st))).getOrElse(f)
-    val m0 = withStats.filter(p.c.pred)
-    val matched =
-      if (scored) m0.withColumn("graft_score", p.c.score.get._1) else m0
-    topHitsTail(matched, pname, t, sn, th)
-  }
+  def dslTopHitsOf(docs: DataFrame, json: String): DataFrame =
+    topHitsDsl(Scan(docs), json)
 
   /** [[dslTopHitsOf]] SERVED from the persisted index — the match set
     * and the sort fields come from doc-values (+ postings features for
     * text clauses); same per-bucket cut and window. */
   def dslTopHitsFromIndexes(spark: SparkSession, indexDirs: Seq[String],
-      json: String): DataFrame = {
-    val (b, pname, t, sn, th) = topHitsShape(json)
+      json: String): DataFrame =
+    topHitsDsl(Served(spark, indexDirs), json)
+
+  private def topHitsDsl(src: Source, json: String): DataFrame = {
+    val (b0, pname, t, sn, th) = topHitsShape(json)
+    if (b0.runtime.nonEmpty)
+      fail("runtime_mappings on the top_hits endpoint are " +
+        "unsupported — compute the field upstream, or query through " +
+        "searchDslOf/dslAggsOf (the scan-path runtime-field homes)")
+    val b = resolveBodyLookups(b0, src.fetch)
     val scoreSort = th.sort.exists(_._1 == "_score")
     val p = if (scoreSort) planOf(b.query, 0) else filterPlanOf(b.query)
     val scored = topHitsScoreSort(th, p)
-    val extra = topHitsExtra(t, th)
-    val roots = servedRoots(spark, indexDirs)
-    val parts = servedParts(spark, roots, p, extra)
-    val withStats =
-      (if (scored) servedStats(spark, parts, p, roots.size > 1)
-       else None)
-        .map(st => parts.f.crossJoin(broadcast(st))).getOrElse(parts.f)
-    val m0 = withStats.filter(p.c.pred)
+    // a scored sort's plan carries the statistics; a field sort's
+    // filter-context plan carries none
+    val c = src.features(p, topHitsExtra(t, th))
+    val m0 = c.stats.map(st => c.f.crossJoin(broadcast(st))).getOrElse(c.f)
+      .filter(p.c.pred)
     val matched =
       if (scored) m0.withColumn("graft_score", p.c.score.get._1) else m0
     topHitsTail(matched, pname, t, sn, th)
@@ -10180,25 +10200,24 @@ object Dsl {
       .orderBy(ord: _*).limit(cs.pageSize)
   }
 
-  def dslAggsCompositeOf(docs: DataFrame, json: String): DataFrame = {
-    val cs = compositeShape(json)
-    val p = filterPlanOf(cs.query)
-    val fields = (cs.sources.map(_.field) ++ cs.subs.map(_._3))
-      .distinct.filter(_ != "doc_id")
-    checkFields(docs, fields)
-    compositeTail(scanF(docs, p, fields), p, cs)
-  }
+  def dslAggsCompositeOf(docs: DataFrame, json: String): DataFrame =
+    compositeDsl(Scan(docs), json)
 
   /** [[dslAggsCompositeOf]] SERVED from the index's doc-values (+
     * postings features for text clauses). */
   def dslAggsCompositeFromIndexes(spark: SparkSession,
-      indexDirs: Seq[String], json: String): DataFrame = {
-    val cs = compositeShape(json)
+      indexDirs: Seq[String], json: String): DataFrame =
+    compositeDsl(Served(spark, indexDirs), json)
+
+  private def compositeDsl(src: Source, json: String): DataFrame = {
+    val cs0 = compositeShape(json)
+    val cs =
+      if (!hasLookup(cs0.query)) cs0
+      else cs0.copy(query = resolveLookups(cs0.query, src.fetch))
     val p = filterPlanOf(cs.query)
     val fields = (cs.sources.map(_.field) ++ cs.subs.map(_._3))
       .distinct.filter(_ != "doc_id")
-    val parts = servedParts(spark, servedRoots(spark, indexDirs), p, fields)
-    compositeTail(parts.f, p, cs)
+    compositeTail(src.features(p, fields).f, p, cs)
   }
 
   /** Oracle for [[dslAggsCompositeOf]] — same AST, same key
@@ -10263,13 +10282,17 @@ object Dsl {
     * `after` keyset cursor. The oracle is the OFFSET form of the same
     * bucket ordering, so green IS the keyset ≡ offset proof for
     * buckets — the [[dslSearchAfter]] argument ported from hits. */
-  def dslAggsComposite(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsPar(spark, dir)
-    val page1 = dslAggsCompositeOf(docs, CompositePage1Query).collect()
+  def dslAggsComposite(spark: SparkSession, dir: String): DataFrame =
+    compositeWalk(Documents.scan(spark, dir), "dsl_aggs_composite")
+
+  /** The two-page walk over a source: page 1, then page 2 from page
+    * 1's last key. */
+  private def compositeWalk(src: Source, name: String): DataFrame = {
+    val page1 = compositeDsl(src, CompositePage1Query).collect()
     if (page1.length < 6)
       throw new IllegalStateException(
-        "dsl_aggs_composite: fewer than 6 buckets — no second page")
-    dslAggsCompositeOf(docs, compositePage2Body(page1.last))
+        s"$name: fewer than 6 buckets — no second page")
+    compositeDsl(src, compositePage2Body(page1.last))
   }
 
   /** The offset form of page 2: buckets 7-12 of the full ordering. */
@@ -10282,16 +10305,8 @@ object Dsl {
   /** Registered query: the same two-page composite walk SERVED from
     * the session index's doc-values; same offset oracle. */
   def dslAggsCompositeServed(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val idx = Seq(Search.sharedIndexDir(spark, dir))
-    val page1 =
-      dslAggsCompositeFromIndexes(spark, idx, CompositePage1Query)
-        .collect()
-    if (page1.length < 6)
-      throw new IllegalStateException(
-        "dsl_aggs_composite_served: fewer than 6 buckets")
-    dslAggsCompositeFromIndexes(spark, idx, compositePage2Body(page1.last))
-  }
+      : DataFrame =
+    compositeWalk(Documents.served(spark, dir), "dsl_aggs_composite_served")
 
   /** Registered composite WITH metric subs (r17) — language × source
     * pages carrying per-bucket avg/max/value_count: the canonical
@@ -10309,20 +10324,6 @@ object Dsl {
       |      "longest": {"max": {"field": "n_chars"}},
       |      "ids": {"value_count": {"field": "doc_id"}}}}}}"""
       .stripMargin
-
-  def dslAggsCompositeSubs(spark: SparkSession, dir: String): DataFrame =
-    dslAggsCompositeOf(Tables.documentsPar(spark, dir),
-      CompositeSubsQuery)
-
-  lazy val dslAggsCompositeSubsOracleSql: String =
-    dslAggsCompositeSqlOver(CompositeSubsQuery, "documents")
-
-  /** Registered query: [[CompositeSubsQuery]] SERVED from the session
-    * index's doc-values; same oracle. */
-  def dslAggsCompositeSubsServed(spark: SparkSession, dir: String)
-      : DataFrame =
-    dslAggsCompositeFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), CompositeSubsQuery)
 
   // ------------------------------------------------- DSL percolation
 
@@ -10371,12 +10372,11 @@ object Dsl {
       Seq.empty, exact, tfIdx, pfIdx, Map.empty,
       C(lit(true), "TRUE", None), zkeys = zkeys, zfIdx = zfIdx,
       rkeys = rkeys, rfIdx = rfIdx, skeys = skeys, sfIdx = sfIdx)
-    checkFields(docs, exact)
+    val f = Scan(docs).features(p).f
     val preds = parsed.map { case (id, q) =>
       (id, compile(q, scored = false, tfIdx, pfIdx, Map.empty, zfIdx,
         rfIdx, sfIdx))
     }
-    val f = scanF(docs, p, Seq.empty)
     val matchedIds = array(preds.map { case (id, c) =>
       when(c.pred, lit(id))
     }: _*)
@@ -10414,14 +10414,86 @@ object Dsl {
        |ORDER BY doc_id, query_id""".stripMargin
   }
 
+  // ------------------------------------------------------ the Source seam
+
+  /** Where a compiled body's rows come from. Each query kind has ONE
+    * compiler over a `Source`, so the scan path (the oracle twin, over
+    * a corpus frame: [[Scan]]) and the served path (over the persisted
+    * index: [[Served]]) differ only in these operations:
+    *  - `fetch`: a terms lookup's GET of one doc's values at a path;
+    *  - `runtime`: the source a body's `runtime_mappings` compile over
+    *    (the scan computes the columns, the index refuses them);
+    *  - `features`: the field checks, a plan's candidate frame and its
+    *    corpus statistics;
+    *  - `stored`: the stored text a highlight's fetch phase and
+    *    significant_text read;
+    *  - `share`: one materialization several consumers read;
+    *  - `groups`: how an `_msearch` batch splits into candidate
+    *    frames. */
+  sealed trait Source {
+    private[Dsl] def fetch(id: Long, path: String): Seq[Scalar]
+    private[Dsl] def runtime(b: Body): Source
+    /** `extra` columns ride the frame beside the plan's own; `text`
+      * names those of them analyzed from the stored text rather than
+      * read as doc-values (significant_text). `shared` makes the frame
+      * one materialization for several rank tails. */
+    private[Dsl] def features(p: Plan, extra: Seq[String] = Seq.empty,
+        text: Seq[String] = Seq.empty, shared: Boolean = false): Features
+    private[Dsl] def stored: DataFrame
+    private[Dsl] def share(df: DataFrame): DataFrame
+    /** Each group's frame plan with its (plan, request index) pairs. */
+    private[Dsl] def groups(frame: Plan, plans: Seq[Plan])
+        : Seq[(Plan, Seq[(Plan, Int)])]
+  }
+
+  /** A plan's candidate frame and its corpus statistics (None for a
+    * scoreless plan). */
+  private final case class Features(f: DataFrame, stats: Option[DataFrame])
+
+  /** The scan source: features computed from the corpus text per
+    * document ([[scanF]]), statistics aggregated over them. */
+  final case class Scan(docs: DataFrame) extends Source {
+    private[Dsl] def fetch(id: Long, path: String): Seq[Scalar] = {
+      checkFields(docs, Seq(path))
+      lookupValues(docs, id, path)
+    }
+    private[Dsl] def runtime(b: Body): Source = Scan(withRuntime(docs, b))
+    private[Dsl] def features(p: Plan, extra: Seq[String],
+        text: Seq[String], shared: Boolean): Features = {
+      checkFields(docs, (p.exact ++ extra).distinct)
+      val f0 = scanF(docs, p, extra)
+      val f = if (shared) share(f0) else f0
+      Features(f, scanStats(f, p))
+    }
+    private[Dsl] def stored: DataFrame = docs
+    /** persist(DISK_ONLY), not localCheckpoint: the barrier must
+      * survive executor loss. localCheckpoint TRUNCATES lineage and
+      * stores blocks on executors — losing one (preemption, dynamic
+      * allocation) fails the whole job; persist keeps the lineage, so a
+      * lost block recomputes its partition. The consumers then read ONE
+      * RDD over the persisted frame — the union deduplication otherwise
+      * defeats cached-plan matching and each consumer re-scans the
+      * corpus (the aggsOver barrier finding, measured: a 3-request
+      * msearch ran 4 corpus scans). */
+    private[Dsl] def share(df: DataFrame): DataFrame = {
+      val f0 = trackPersist(
+        df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      docs.sparkSession.createDataFrame(f0.rdd, f0.schema)
+    }
+    /** One group: the whole batch shares one corpus pass. */
+    private[Dsl] def groups(frame: Plan, plans: Seq[Plan])
+        : Seq[(Plan, Seq[(Plan, Int)])] =
+      Seq((frame, plans.zipWithIndex))
+  }
+
   // ------------------------------------------------ index-served path
 
-  /** The DSL compiled onto the PERSISTED inverted index — the
-    * deployment shape (the reference maintains its index precisely so
-    * queries don't scan, es.go:160-213). Same AST, same compiled
-    * predicate/score expressions, same [[rankTail]]; only the feature
-    * frame and statistics are built from index tables instead of the
-    * corpus text:
+  /** The served source: the DSL compiled onto the PERSISTED inverted
+    * index — the deployment shape (the reference maintains its index
+    * precisely so queries don't scan, es.go:160-213). Same AST, same
+    * compiled predicate/score expressions, same [[rankTail]]; only the
+    * feature frame and statistics are built from index tables instead
+    * of the corpus text:
     *
     *  - match/multi_match tf per (field, term) from bucket-pruned,
     *    term-filtered postings (pushed to parquet);
@@ -10455,7 +10527,88 @@ object Dsl {
     * doclen/docmeta are doc-grain and column-pruned; stats are 1-row
     * broadcast aggregates; candidates stay df-bounded for ranked
     * queries. Cost scales with term document frequency, not corpus
-    * breadth. */
+    * breadth.
+    *
+    * Each index's active version root resolves ONCE per source, on its
+    * first read: every read of the request (lookups, candidates,
+    * stats, fetch) takes these roots, so a concurrent compaction
+    * repoint can never mix two versions in one response — and a body
+    * refused at parse never touches an index. */
+  final case class Served(spark: SparkSession, indexDirs: Seq[String])
+      extends Source {
+    private[Dsl] lazy val roots: Seq[String] = {
+      require(indexDirs.nonEmpty, "served DSL: no indices given")
+      indexDirs.map(Search.requireIndex(spark, _))
+    }
+    /** The GET against the roots' docmeta doc-values — a footer probe
+      * per member for the path, then one pruned read across every
+      * member. */
+    private[Dsl] def fetch(id: Long, path: String): Seq[Scalar] = {
+      if (roots.exists(r =>
+          !Search.familyColumns(spark, r, "docmeta").contains(path)))
+        fail(s"terms lookup path '$path' is not a stored doc-value")
+      lookupValues(Search.indexTable(spark, roots, "docmeta"), id, path)
+    }
+    private[Dsl] def runtime(b: Body): Source = {
+      if (b.runtime.nonEmpty)
+        fail("runtime_mappings are scan-path only — the served pipeline " +
+          "reads stored doc-values, and a computed column would need " +
+          "per-member recomputation over docmeta; run the body through " +
+          "searchDslOf")
+      this
+    }
+    private[Dsl] def features(p: Plan, extra: Seq[String],
+        text: Seq[String], shared: Boolean): Features = {
+      val parts = servedParts(spark, roots, p, extra.filterNot(text.contains))
+      val f0 =
+        if (text.isEmpty) parts.f
+        else parts.f.join(stored.select("doc_id", text: _*), Seq("doc_id"),
+          "left")
+      val f = if (shared) share(f0) else f0
+      Features(f, servedStats(spark, parts, p, roots.size > 1))
+    }
+    /** The index's STORED `_source` table (one relation across
+      * members) — the ES fetch phase reads the shard's stored fields,
+      * never the live corpus. */
+    private[Dsl] def stored: DataFrame =
+      Search.indexTable(spark, roots, "stored")
+    private[Dsl] def share(df: DataFrame): DataFrame = sharedFrame(df)
+    /** The batch SPLIT by candidate universe: requests whose predicate
+      * implies a text hit ([[requiresText]]) share one df-bounded
+      * postings-driven frame; scoreless/filter-only requests share a
+      * doc-values (match-all) frame. One filter-only request in a batch
+      * therefore never widens the scored requests' candidates to the
+      * whole corpus — each group's frame stays as tight as a solo
+      * run's, and the batch still reads postings/doclen/docmeta once
+      * per GROUP, not per request. */
+    private[Dsl] def groups(frame: Plan, plans: Seq[Plan])
+        : Seq[(Plan, Seq[(Plan, Int)])] =
+      plans.zipWithIndex.groupBy { case (p, _) => requiresText(p.q) }
+        .toSeq.sortBy(!_._1).map { case (textBound, gp) =>
+          val gPlans = gp.map(_._1)
+          // the group frame keeps the SHARED index maps (column
+          // numbering is batch-global) but only this group's clause
+          // inventory — the other group's features never join this
+          // frame
+          (frame.copy(
+            q = if (textBound) gPlans.head.q else MatchAllQ,
+            tkeys = gPlans.flatMap(_.tkeys).distinct,
+            pkeys = gPlans.flatMap(_.pkeys).distinct,
+            zkeys = gPlans.flatMap(_.zkeys).distinct,
+            rkeys = gPlans.flatMap(_.rkeys).distinct,
+            stkeys = gPlans.flatMap(_.stkeys).distinct,
+            spkeys = gPlans.flatMap(_.spkeys).distinct,
+            szkeys = gPlans.flatMap(_.szkeys).distinct,
+            skts = gPlans.flatMap(_.skts).distinct,
+            exact = gPlans.flatMap(_.exact).distinct,
+            rndFields = gPlans.flatMap(_.rndFields).distinct,
+            sciFields = gPlans.flatMap(_.sciFields).distinct,
+            c = C(lit(true), "TRUE",
+              if (gPlans.exists(_.needsStats)) Some((lit(0.0), "0.0"))
+              else None)), gp)
+        }
+  }
+
   /** The index-side inputs of a served DSL evaluation: the candidate
     * frame `f` (features + doc-values + dl, tombstones excluded) and
     * the table handles the statistics derive from. */
@@ -10463,19 +10616,8 @@ object Dsl {
       posts: Option[DataFrame], phFrames: Seq[DataFrame],
       zPivot: Option[DataFrame], dlen: (String, String) => DataFrame)
 
-  /** Resolve each index's active version root ONCE per request: every
-    * read of the request (lookups, candidates, stats, fetch) takes
-    * these roots, so a concurrent compaction repoint can never mix two
-    * versions in one response. */
-  private def servedRoots(spark: SparkSession,
-      indexDirs: Seq[String]): Seq[String] = {
-    require(indexDirs.nonEmpty, "served DSL: no indices given")
-    indexDirs.map(Search.requireIndex(spark, _))
-  }
-
   /** Build [[ServedParts]] for a plan over the RESOLVED index roots
-    * ([[servedRoots]]) — shared by the served search and served
-    * aggregations paths. */
+    * ([[Served.roots]]). */
   private def servedParts(spark: SparkSession, roots: Seq[String],
       p: Plan, extraFields: Seq[String]): ServedParts = {
     import spark.implicits._
@@ -10756,220 +10898,17 @@ object Dsl {
     }
   }
 
-  def searchDslFromIndexes(spark: SparkSession, indexDirs: Seq[String],
-      json: String): DataFrame = {
-    val roots = servedRoots(spark, indexDirs)
-    val b = resolveBodyLookups(parseBody(json), servedFetcher(spark, roots))
-    if (b.aggs.nonEmpty)
-      fail("body has \"aggs\" — index-served aggregations are " +
-        "dslAggsFromIndexes' job; hits come from the DSL")
-    if (b.runtime.nonEmpty)
-      fail("runtime_mappings are scan-path only — the served pipeline " +
-        "reads stored doc-values, and a computed column would need " +
-        "per-member recomputation over docmeta; run the body through " +
-        "searchDslOf")
-    val p = planOfBody(b)
-    val parts = servedParts(spark, roots, p, Seq.empty)
-    val page =
-      rankTail(parts.f, servedStats(spark, parts, p, roots.size > 1), p)
-    p.highlight match {
-      case None => page
-      case Some(hf) =>
-        // the served fetch phase reads the index's STORED `_source`
-        // table (one relation across members), never the live corpus —
-        // same page-sized broadcast join as the scan path's fetch
-        highlightJoin(Search.indexTable(spark, roots, "stored"), page, p, hf)
-    }
-  }
-
-  /** [[msearchOf]] SERVED from the persisted index: one
-    * [[servedParts]] build for the UNION inventory — the postings read
-    * prunes to ALL requests' terms at once, the doc-values and length
-    * tables join once, and the persisted candidate frame feeds
-    * every request's rank tail; one union statistics aggregate serves
-    * every scored request. Multi-index capable (same disjointness
-    * gate). */
-  def msearchFromIndexes(spark: SparkSession, indexDirs: Seq[String],
-      bodies: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val pages = msearchGroups(spark, servedRoots(spark, indexDirs), bodies)
-        .flatMap {
-      case (_, f, stats, gp) => gp.map { case (p, i) =>
-        rankTail(f, if (p.needsStats) stats else None, p)
-          .withColumn("req", lit(i))
-          .select($"req", $"rk", $"doc_id", $"n_matched", $"tf_total",
-            $"dl")
-      }
-    }
-    pages.reduce(_ unionByName _).orderBy($"req", $"rk")
-  }
-
-  /** The served batch SPLIT by candidate universe: requests whose
-    * predicate implies a text hit ([[requiresText]]) share one
-    * df-bounded postings-driven frame; scoreless/filter-only requests
-    * share a doc-values (match-all) frame. One filter-only request in
-    * a batch therefore never widens the scored requests' candidates to
-    * the whole corpus — each group's frame stays as tight as a solo
-    * run's, and the batch still reads postings/doclen/docmeta once per
-    * GROUP, not per request. Returns (text-bound?, persisted candidate
-    * frame, group stats, that group's (plan, original index) pairs). */
-  private def msearchGroups(spark: SparkSession, roots: Seq[String],
-      bodies: Seq[String])
-      : Seq[(Boolean, DataFrame, Option[DataFrame], Seq[(Plan, Int)])] = {
-    val (framePlan0, plans) = msearchPlans(bodies)
-    plans.zipWithIndex.groupBy { case (p, _) => requiresText(p.q) }
-      .toSeq.sortBy(!_._1).map { case (textBound, gp) =>
-        val gPlans = gp.map(_._1)
-        // the group frame keeps the SHARED index maps (column numbering
-        // is batch-global) but only this group's clause inventory —
-        // the other group's features never join this frame
-        val gFrame = framePlan0.copy(
-          q = if (textBound) gPlans.head.q else MatchAllQ,
-          tkeys = gPlans.flatMap(_.tkeys).distinct,
-          pkeys = gPlans.flatMap(_.pkeys).distinct,
-          zkeys = gPlans.flatMap(_.zkeys).distinct,
-          rkeys = gPlans.flatMap(_.rkeys).distinct,
-          stkeys = gPlans.flatMap(_.stkeys).distinct,
-          spkeys = gPlans.flatMap(_.spkeys).distinct,
-          szkeys = gPlans.flatMap(_.szkeys).distinct,
-          skts = gPlans.flatMap(_.skts).distinct,
-          exact = gPlans.flatMap(_.exact).distinct,
-          rndFields = gPlans.flatMap(_.rndFields).distinct,
-          sciFields = gPlans.flatMap(_.sciFields).distinct,
-          c = C(lit(true), "TRUE",
-            if (gPlans.exists(_.needsStats)) Some((lit(0.0), "0.0"))
-            else None))
-        val parts = servedParts(spark, roots, gFrame, Seq.empty)
-        // one DISK_ONLY cache, lineage kept, shared by every rank tail
-        // of the group — the msearchOf union-sharing fix, served form
-        val f = sharedFrame(parts.f)
-        (textBound, f,
-          servedStats(spark, parts, gFrame, roots.size > 1), gp)
-      }
-  }
-
   /** Test seam: each served-batch group's (text-bound?, candidate
     * frame) — DslSpec pins that the text-bound frame stays df-bounded
     * when a filter-only request rides the same batch. */
   private[graft] def msearchServedFrames(spark: SparkSession,
       indexDirs: Seq[String], bodies: Seq[String])
-      : Seq[(Boolean, DataFrame)] =
-    msearchGroups(spark, servedRoots(spark, indexDirs), bodies)
-      .map(g => (g._1, g._2))
-
-  /** Registered query: [[MsearchBodies]] SERVED from the session
-    * index — same oracle as the scan batch. */
-  def dslMsearchServed(spark: SparkSession, dir: String): DataFrame =
-    msearchFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), MsearchBodies)
-
-  /** `"aggs"` SERVED from the persisted index: the match set comes
-    * from doc-values + (for text clauses) postings tf features —
-    * [[servedParts]], the same candidate construction the served
-    * search uses — and the one-pass [[aggsOver]] emission runs
-    * unchanged, so served aggregations reproduce the scan path's
-    * buckets bit-for-bit (same integers in, same arithmetic).
-    * Multi-index capable: bucket counts across members are plain
-    * sums over the union (no global statistic exists to guard — the
-    * members' disjointness contract is [[Search.syncIndex]]'s
-    * admission screen). Tombstoned docs never aggregate.
-    *
-    * Shape at 100 TB: postings prune to the referenced terms' buckets;
-    * docmeta is doc-grain and column-pruned to the referenced fields;
-    * then ONE hash aggregate — aggregations never touch the corpus
-    * text. */
-  def dslAggsFromIndexes(spark: SparkSession, indexDirs: Seq[String],
-      json: String): DataFrame = {
-    val roots = servedRoots(spark, indexDirs)
-    val b = resolveBodyLookups(parseBody(json), servedFetcher(spark, roots))
-    if (b.aggs.isEmpty)
-      fail("no aggs in body — hits are served by searchDslFromIndexes")
-    if (b.runtime.nonEmpty)
-      fail("runtime_mappings are scan-path only — the served pipeline " +
-        "reads stored doc-values, and a computed column would need " +
-        "per-member recomputation over docmeta; run the body through " +
-        "dslAggsOf")
-    if (b.size != 0)
-      fail("an aggregation body returns no hits — set size: 0 " +
-        "(ES convention); hits are served by searchDslFromIndexes")
-    if (b.from != 0 || b.sort.nonEmpty || b.source.nonEmpty ||
-        b.after.nonEmpty || b.highlight.nonEmpty || b.collapse.nonEmpty ||
-        b.rescore.nonEmpty || b.minScore.nonEmpty || b.trackTotal)
-      fail("an aggregation body returns no hits — from/sort/_source/" +
-        "search_after/highlight/collapse/rescore/min_score/" +
-        "track_total_hits have no meaning beside size: 0")
-    // post_filter is ACCEPTED and ignored here BY DESIGN: ES's
-    // faceted-search contract computes aggregations over the
-    // pre-post_filter match set — the same body runs its hits half
-    // through the search endpoint, where post_filter narrows
-    val filterNodes = aggClauseNodes(b)
-    val p = mergedFilterPlan(b.query +: filterNodes)
-    val aggFields = b.aggs.flatMap(aggSpecFields).distinct
-    // significant_terms needs BACKGROUND counts and global aggregates
-    // over the PRE-filter frame (parts.f): for both, the candidate
-    // universe must stay the whole corpus even when every match
-    // carries a query term — disable the df-bounded restriction by
-    // serving under a match_all universe (features still fill 0)
-    val pServe =
-      if (b.aggs.exists(s => s.agg.isInstanceOf[SigTermsAgg] ||
-          s.agg.isInstanceOf[SigTextAgg] ||
-          s.agg.isInstanceOf[GlobalAgg]))
-        p.copy(q = MatchAllQ)
-      else p
-    // significant_text re-analyzes the STORED `_source` (the ES
-    // semantics — text is never a doc-value): its field comes from the
-    // index's stored table, not docmeta, so drop it from the doc-value
-    // fetch list and join the stored text onto the candidate frame
-    val sigTextFields = b.aggs.map(_.agg).collect {
-      case SigTextAgg(f2, _) => f2
-    }.distinct
-    val parts = servedParts(spark, roots, pServe,
-      aggFields.filterNot(sigTextFields.contains))
-    val fFull =
-      if (sigTextFields.isEmpty) parts.f
-      else parts.f.join(
-        Search.indexTable(spark, roots, "stored").select("doc_id", "text"),
-        Seq("doc_id"), "left")
-    val matched = fFull.filter(p.c.pred)
-    val (samplers, rest) = b.aggs.partition(_.agg.isInstanceOf[SamplerAgg])
-    // multi-consumer match frame under samplers — the dslAggsOf
-    // persist, served form (base aggregate + per-sampler semi-joins)
-    val matchedS =
-      if (samplers.isEmpty) matched
-      else trackPersist(matched.persist(
-        org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val base =
-      if (rest.isEmpty) Seq.empty
-      else Seq(aggsOver(matchedS, fFull, b.copy(aggs = rest), p))
-    // sampler scopes draw through the index-SERVED search pipeline —
-    // all samplers rank the SAME query (only shard_size / the
-    // diversity collapse differ), so ONE servedParts candidate frame
-    // (built for the union field inventory, one [[sharedFrame]] — the
-    // msearchGroups barrier) and ONE statistics
-    // aggregate serve every sampler's rank tail. Before r18 each
-    // sampler ran a full searchDslFromIndexes: its own postings read,
-    // doclen/docmeta joins and stats aggregate per sampler.
-    val sFrames = if (samplers.isEmpty) Seq.empty else {
-      val sbs = samplers.map { spec =>
-        val sa = spec.agg.asInstanceOf[SamplerAgg]
-        resolveBodyLookups(parseBody(samplerHitsJson(json, sa)),
-          servedFetcher(spark, roots))
-      }
-      val sps = sbs.map(planOfBody)
-      // identical clause inventory across samplers (same query) — the
-      // union touches only the exact-field list (collapse fields)
-      val pU = sps.head.copy(exact = sps.flatMap(_.exact).distinct)
-      val sparts = servedParts(spark, roots, pU, Seq.empty)
-      val f = sharedFrame(sparts.f)
-      val stats = servedStats(spark, sparts, sps.head, roots.size > 1)
-      samplers.zip(sps).map { case (spec, sp) =>
-        val ids = rankTail(f, if (sp.needsStats) stats else None, sp)
-          .select(col("doc_id"))
-        samplerFrames(matchedS, fFull, spec, p, b, ids)
-      }
+      : Seq[(Boolean, DataFrame)] = {
+    val src = Served(spark, indexDirs)
+    val (framePlan, plans) = msearchPlans(bodies)
+    src.groups(framePlan, plans).map { case (g, _) =>
+      (requiresText(g.q), src.features(g, shared = true).f)
     }
-    (base ++ sFrames).reduce(_ unionByName _)
-      .orderBy(col("agg"), col("key"), col("key2"))
   }
 
   /** Registered query `dsl_served`: [[DslQuery]] SERVED from the
@@ -10983,29 +10922,32 @@ object Dsl {
 
   // --------------------------------------------------- registered form
 
-  /** How a registered body compiles: the scan compiler over a corpus
-    * frame, the index compiler over index dirs, and the oracle
-    * generator over the corpus's DuckDB relation. */
-  final case class Kind(
-      scan: (DataFrame, String) => DataFrame,
-      index: (SparkSession, Seq[String], String) => DataFrame,
+  /** How a registered body compiles: one compiler over a [[Source]]
+    * (the scan or the served one), and the oracle generator over the
+    * corpus's DuckDB relation. */
+  final case class Kind(compile: (Source, String) => DataFrame,
       oracle: (String, String) => String)
 
   /** Hits bodies: the search endpoint. */
-  val Hits: Kind = Kind(searchDslOf, searchDslFromIndexes, dslSqlOver)
+  val Hits: Kind = Kind(searchDsl, dslSqlOver)
 
   /** Aggregation bodies (`size: 0` + `aggs`). */
-  val Aggs: Kind = Kind(dslAggsOf, dslAggsFromIndexes, dslAggsSqlOver)
+  val Aggs: Kind = Kind(aggsDsl, dslAggsSqlOver)
 
   /** A terms agg whose sub is `top_hits`. */
-  val TopHits: Kind =
-    Kind(dslTopHitsOf, dslTopHitsFromIndexes, dslTopHitsSqlOver)
+  val TopHits: Kind = Kind(topHitsDsl, dslTopHitsSqlOver)
+
+  /** `_count` bodies (`query` only). */
+  val Count: Kind = Kind(countDsl, dslCountSqlOver)
+
+  /** One `composite` aggregation page. */
+  val Composite: Kind = Kind(compositeDsl, dslAggsCompositeSqlOver)
 
   /** `suggest` bodies; the served form reads ONE index's term
     * dictionary. */
-  val Suggest: Kind = Kind(dslSuggestOf,
-    (spark, dirs, json) => dirs match {
-      case Seq(dir) => dslSuggestFromIndex(spark, dir, json)
+  val Suggest: Kind = Kind((src, json) => src match {
+      case Scan(docs) => dslSuggestOf(docs, json)
+      case Served(spark, Seq(dir)) => dslSuggestFromIndex(spark, dir, json)
       case _ => fail("a suggest body is served from exactly one index")
     },
     dslSuggestSqlOver)
@@ -11017,7 +10959,13 @@ object Dsl {
     * computed column is not a stored doc-value. */
   final case class Corpus(frame: (SparkSession, String) => DataFrame,
       rel: String,
-      indexes: Option[(SparkSession, String) => Seq[String]] = None)
+      indexes: Option[(SparkSession, String) => Seq[String]] = None) {
+    def scan(spark: SparkSession, dir: String): Source =
+      Scan(frame(spark, dir))
+    def served(spark: SparkSession, dir: String): Source =
+      Served(spark, indexes.getOrElse(
+        fail(s"the corpus $rel is scan-only"))(spark, dir))
+  }
 
   /** The corpus and its one session-shared index. */
   val Documents: Corpus = Corpus(Tables.documentsPar, "documents",
@@ -12420,30 +12368,6 @@ object Dsl {
        |FROM (${dslSql(fromBody)}) AS kp ORDER BY rk""".stripMargin
   }
 
-  /** `_count` SERVED from the index: the same filter-context plan over
-    * doc-values (+ postings features for text clauses), tombstones
-    * excluded — one pruned index read + a 1-row count, never the
-    * corpus. */
-  def dslCountFromIndexes(spark: SparkSession, indexDirs: Seq[String],
-      json: String): DataFrame = {
-    JsonMethods.parse(json) match {
-      case o: JObject =>
-        o.obj.collectFirst { case (k, _) if k != "query" => k }
-          .foreach(k => fail(s"_count body supports only \"query\", " +
-            s"got '$k'"))
-      case other => fail(s"body must be a JSON object, got $other")
-    }
-    val p = filterPlanOf(parseBody(json).query)
-    val parts = servedParts(spark, servedRoots(spark, indexDirs), p, Seq.empty)
-    parts.f.filter(p.c.pred).agg(count(lit(1)).as("total"))
-  }
-
-  /** Registered query: [[CountQuery]] counted from the index — same
-    * oracle as the scan `_count`. */
-  def dslCountServed(spark: SparkSession, dir: String): DataFrame =
-    dslCountFromIndexes(spark,
-      Seq(Search.sharedIndexDir(spark, dir)), CountQuery)
-
   /** Registered `_msearch` batch — three heterogeneous requests
     * answered by ONE corpus pass: a scored match, a scoreless
     * filter-context body, and a field-sorted offset page. The oracle
@@ -12457,7 +12381,12 @@ object Dsl {
       |  "sort": [{"n_chars": "asc"}], "from": 3, "size": 7}""".stripMargin)
 
   def dslMsearch(spark: SparkSession, dir: String): DataFrame =
-    msearchOf(Tables.documentsPar(spark, dir), MsearchBodies)
+    msearch(Documents.scan(spark, dir), MsearchBodies)
+
+  /** Registered query: [[MsearchBodies]] SERVED from the session
+    * index — same oracle as the scan batch. */
+  def dslMsearchServed(spark: SparkSession, dir: String): DataFrame =
+    msearch(Documents.served(spark, dir), MsearchBodies)
 
   lazy val dslMsearchOracleSql: String = msearchSql(MsearchBodies)
 
@@ -12535,11 +12464,6 @@ object Dsl {
   val CountQuery: String =
     """{"query": {"bool": {"must": [{"match": {"text": "dup"}}],
       |  "filter": [{"range": {"n_chars": {"lt": 400}}}]}}}""".stripMargin
-
-  def dslCount(spark: SparkSession, dir: String): DataFrame =
-    dslCountOf(Tables.documentsPar(spark, dir), CountQuery)
-
-  lazy val dslCountOracleSql: String = dslCountSql(CountQuery)
 
   /** Registered `minimum_should_match` GRAMMAR body — "50%" of four
     * heterogeneous shoulds (two scored matches, a scored keyword term,
@@ -12859,9 +12783,9 @@ object Dsl {
 
   // ------------------------------------------------ registered bodies
 
-  /** One registered body. `name` runs the kind's scan compiler over
-    * the corpus frame; when `served`, `name_served` runs its index
-    * compiler over the corpus's indexes and must reproduce the scan
+  /** One registered body. `name` runs the kind's compiler over the
+    * corpus's scan source; when `served`, `name_served` runs the same
+    * compiler over its served source and must reproduce the scan
     * bit-for-bit. Both check against the one oracle the kind generates
     * over the corpus relation. */
   final case class Registered(name: String, kind: Kind, body: String,
@@ -12872,9 +12796,9 @@ object Dsl {
 
   /** Every registered body of regular shape, one row each; to register
     * a body, add its row. Bodies of irregular shape (the two-page
-    * cursors, search templates, knn, the single-request endpoints,
-    * the percolator, the alias read) keep their own functions and
-    * SparkEntry entries. */
+    * cursors, the `_msearch` batch, search templates, knn, the
+    * single-request endpoints, the percolator, the alias read) keep
+    * their own functions and SparkEntry entries. */
   lazy val registered: Seq[Registered] = Seq(
     Registered("dsl_search", Hits, DslQuery, served = false),
     Registered("dsl_filter_only", Hits, FilterQuery, served = false),
@@ -12957,23 +12881,23 @@ object Dsl {
     Registered("dsl_nested_aggs", Aggs, NestedAggsQuery, IngestDocs),
     Registered("dsl_top_hits", TopHits, TopHitsQuery),
     Registered("dsl_top_hits_scored", TopHits, TopHitsScoredQuery),
+    Registered("dsl_count", Count, CountQuery),
+    Registered("dsl_aggs_composite_subs", Composite, CompositeSubsQuery),
     Registered("dsl_suggest", Suggest, SuggestBodyQuery),
     Registered("dsl_suggest_phrase", Suggest, SuggestPhraseQuery)
   )
 
-  /** The registered bodies' queries: `name` and `name_served`. */
+  /** The registered bodies' queries: `name` over the corpus's scan
+    * source and `name_served` over its served one, one compiler. */
   lazy val registeredQueries
       : Map[String, (SparkSession, String) => DataFrame] =
     registered.flatMap { r =>
-      val scan = r.name -> { (spark: SparkSession, dir: String) =>
-        r.kind.scan(r.corpus.frame(spark, dir), r.body)
-      }
-      val served = r.corpus.indexes.filter(_ => r.served).map { idx =>
-        s"${r.name}_served" -> { (spark: SparkSession, dir: String) =>
-          r.kind.index(spark, idx(spark, dir), r.body)
-        }
-      }
-      scan +: served.toSeq
+      def over(src: (SparkSession, String) => Source)
+          : (SparkSession, String) => DataFrame =
+        (spark, dir) => r.kind.compile(src(spark, dir), r.body)
+      (r.name -> over(r.corpus.scan)) +:
+        (if (r.served) Seq(s"${r.name}_served" -> over(r.corpus.served))
+         else Seq.empty)
     }.toMap
 
   /** The registered bodies' oracle SQL, one string per query name.

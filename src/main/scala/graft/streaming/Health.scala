@@ -170,8 +170,9 @@ object Health {
     * metrics.go:9-41). The observed ingest metrics riding each stream's
     * progress (n_received / n_valid / n_dlq — the analogue of the
     * reference's received/inserted/failed message counters) surface as
-    * one family per metric with `stream`/`id` labels, holding the last
-    * batch's values; their running sums are the true counters
+    * one gauge family per metric with `stream`/`id` labels, holding
+    * the last batch's values (which can fall from one batch to the
+    * next); their running sums are the true counters
     * `graft_stream_{received,valid,dlq}_total`. Liveness and
     * last-batch progress ride along as gauges, the last batch's phase
     * durations with a further `phase` label. Families are emitted
@@ -228,7 +229,7 @@ object Health {
       if scala.util.Try(v.toDouble).isSuccess
     } yield (s"graft_observed_${sanitize(k)}", labels(i), v)
     observed.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (name, rows) =>
-      family(name, "counter",
+      family(name, "gauge",
         "Observed metric from the stream's last progress.",
         rows.map { case (_, l, v) => l -> v })
     }

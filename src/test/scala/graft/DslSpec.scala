@@ -1147,6 +1147,59 @@ class DslSpec extends SparkSpec {
     assert(Dsl.msearchServedFrames(spark, idx, scored).size == 1)
   }
 
+  test("terms lookups resolve in _count, top_hits and composite, scan and served") {
+    val idx = Seq(sys.props("java.io.tmpdir") + "/graft_searchidx_" +
+      Tables.viewSuffix(sfDir))
+    Dsl.searchDslServed(spark, sfDir) // memo warm (index built)
+    val docs = Tables.documentsPar(spark, sfDir)
+    val lang = docs.filter(col("doc_id") === 5).select("lang").head.getString(0)
+    val lookup =
+      """{"terms": {"lang": {"index": "documents", "id": 5, "path": "lang"}}}"""
+    val literal = s"""{"terms": {"lang": ["$lang"]}}"""
+    def countBody(t: String) =
+      s"""{"query": {"bool": {"must": [{"match": {"text": "dup"}}],
+        "filter": [$t]}}}"""
+    def topHitsBody(t: String) =
+      s"""{"query": {"bool": {"filter": [$t]}}, "size": 0,
+        "aggs": {"by_src": {"terms": {"field": "source", "size": 3},
+          "aggs": {"top": {"top_hits": {"size": 2,
+            "sort": [{"n_chars": "desc"}]}}}}}}"""
+    def compositeBody(t: String) =
+      s"""{"query": $t, "size": 0, "aggs": {"p": {"composite": {
+        "size": 10, "sources": [{"src": {"terms": {"field": "source"}}}]}}}}"""
+    val paths: Seq[(String, String => String, String => DataFrame)] = Seq(
+      ("scan _count", countBody, Dsl.dslCountOf(docs, _)),
+      ("served _count", countBody, Dsl.dslCountFromIndexes(spark, idx, _)),
+      ("scan top_hits", topHitsBody, Dsl.dslTopHitsOf(docs, _)),
+      ("served top_hits", topHitsBody,
+        Dsl.dslTopHitsFromIndexes(spark, idx, _)),
+      ("scan composite", compositeBody, Dsl.dslAggsCompositeOf(docs, _)),
+      ("served composite", compositeBody,
+        Dsl.dslAggsCompositeFromIndexes(spark, idx, _)))
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    paths.foreach { case (name, body, compile) =>
+      val want = rows(compile(body(literal)))
+      assert(want.nonEmpty && want != Seq(Seq(0L)),
+        s"$name: the literal body must match documents")
+      assert(rows(compile(body(lookup))) == want,
+        s"$name: the lookup body diverged from its literal form")
+    }
+  }
+
+  test("served top_hits refuses runtime_mappings like the scan path") {
+    val idx = Seq(sys.props("java.io.tmpdir") + "/graft_searchidx_" +
+      Tables.viewSuffix(sfDir))
+    Dsl.searchDslServed(spark, sfDir) // memo warm (index built)
+    val e = intercept[IllegalArgumentException](
+      Dsl.dslTopHitsFromIndexes(spark, idx, """{"runtime_mappings": {"x":
+        {"type": "double", "script": "emit(doc['n_chars'].value)"}},
+        "size": 0, "aggs": {"l": {"terms": {"field": "lang"},
+        "aggs": {"h": {"top_hits": {"size": 1, "sort":
+          [{"doc_id": "asc"}]}}}}}}"""))
+    assert(e.getMessage.contains("top_hits endpoint"), e.getMessage)
+  }
+
   test("highlight: fetch-phase snippets for the page only, clause-order anchor") {
     val out = Dsl.searchDslOf(tiny,
       """{"query": {"bool": {

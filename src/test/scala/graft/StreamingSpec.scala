@@ -304,8 +304,9 @@ class StreamingSpec extends SparkSpec {
         assert(body.contains("graft_up 1"), body)
         assert(body.contains("# TYPE graft_active_streams gauge"), body)
         // the reference's message counters (metrics.go:9-41) ride the
-        // stream's observed metrics: received/valid/dlq with stream labels
-        assert(body.contains("# TYPE graft_observed_ingest_metrics_n_received counter"), body)
+        // stream's observed metrics: received/valid/dlq with stream
+        // labels, each the last batch's value — a gauge
+        assert(body.contains("# TYPE graft_observed_ingest_metrics_n_received gauge"), body)
         val received = body.linesIterator
           .find(l => l.startsWith("graft_observed_ingest_metrics_n_received{") &&
             l.contains(q.id.toString))
