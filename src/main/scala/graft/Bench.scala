@@ -217,22 +217,10 @@ object Bench {
     // the caller's hard budget (the r15 failure mode)
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "3300").toDouble
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
-    val spark = SparkSession.builder()
+    val spark = SessionPosture(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE coalesce shuffle partitions INSIDE persisted plans
-      // too (default false): the DISK_ONLY barrier frames the
-      // shared-pass operators persist are bucket-/candidate-grain —
-      // without this every cached frame materializes and is read at
-      // full shuffle width (measured r18: funnel_steps 366 tasks → 29,
-      // dsl_aggs_sampler_served 1021 → 189). Scale-independent: AQE
-      // still targets its advisory byte size, so big cached frames
-      // keep their width (guide §2.2).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Logs.quietBoundedWindows()
@@ -305,8 +293,8 @@ object Bench {
     def onBail(pass: String): Unit = st.bailed ::= pass
 
     // ── COLD pass: the gated metric ─────────────────────────────────
-    // HONEST COLD (r18, VERDICT r17 #2): the DISK_ONLY barrier frames
-    // the shared-pass operators persist (Dsl.trackPersist ring) used to
+    // HONEST COLD (r18, VERDICT r17 #2): the DISK_ONLY frames the
+    // shared-pass operators persist (the Dsl.share ring) used to
     // survive from run 1 into run 2 — CacheManager matched run 2's
     // identical plan to run 1's cached blocks, so the best-of-2 min was
     // effectively a WARM number for every persist-bearing query (the

@@ -8,6 +8,10 @@ import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
   * codegen spans can be audited per round. `--summary` prints one
   * PLANS.md-ready line per query (operator counts) instead of the full
   * plan. Not part of the driver contract.
+  * In a summary line, `cached=` counts reads of a shared frame's cache
+  * (`InMemoryTableScan`) and `rdd=` counts RDD scans (`Scan
+  * ExistingRDD`: an RDD wrap or a `localCheckpoint`), so every
+  * materialization shows per query.
   * Usage: runMain graft.ExplainAudit [sfDir] [--summary] [query ...] */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
@@ -26,14 +30,9 @@ object ExplainAudit {
       .filterNot(a => a == "--summary" || a == "--formatted" ||
         a == "--executed").toSeq
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = SessionPosture(SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      // AQE-coalesce cached-plan output too — see Bench.scala note
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def count(s: String, needle: String): Int =
       s.sliding(needle.length).count(_ == needle)
@@ -54,7 +53,9 @@ object ExplainAudit {
           f"shuffles=$shuffles%d bcast=${count(plan, "BroadcastExchange")}%d " +
           f"bhj=${count(plan, "BroadcastHashJoin")}%d smj=${count(plan, "SortMergeJoin")}%d " +
           f"window=${count(plan, "Window")}%d agg=${count(plan, "HashAggregate")}%d " +
-          f"sortAgg=${count(plan, "SortAggregate")}%d")
+          f"sortAgg=${count(plan, "SortAggregate")}%d " +
+          f"cached=${count(plan, "InMemoryTableScan")}%d " +
+          f"rdd=${count(plan, "Scan ExistingRDD")}%d")
       } else {
         println(s"\n########## $name")
         println(plan)

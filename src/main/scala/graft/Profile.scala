@@ -19,15 +19,10 @@ object Profile {
       else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val b = SparkSession.builder()
+    val b = SessionPosture(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE-coalesce cached-plan output too — see Bench.scala note
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
     // A/B experiment knob: SPARK_GRAFT_CONF="k=v;k=v" extra session
     // confs. Empty entries (trailing ';') are skipped; an entry
     // without '=' fails with ITS text, not a bare MatchError (ADVICE

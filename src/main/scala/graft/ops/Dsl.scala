@@ -76,16 +76,14 @@ import graft.Tables
   * plan). */
 object Dsl {
 
-  /** Handles of the DISK_ONLY barrier frames the shared-pass paths
-    * persist ([[aggsOver]], [[msearchOf]], [[Source.share]]). Those
-    * functions return LAZY DataFrames — the final consuming action
-    * happens at the caller — so a frame cannot self-unpersist after
-    * "its" action. Instead every barrier persist registers here and
-    * (a) a bounded ring evicts (unpersists, non-blocking) the oldest
-    * beyond [[PersistedFrameCap]] — safe because the persist is an
-    * optimization barrier, never a correctness requirement: an
-    * evicted frame's lineage simply recomputes — and (b)
-    * [[releasePersisted]] drops everything, wired into
+  /** Handles of the frames [[share]] persists. The sharing operators
+    * return LAZY DataFrames — the final consuming action happens at
+    * the caller — so a frame cannot self-unpersist after "its" action.
+    * Instead every share registers here and (a) a bounded ring evicts
+    * (unpersists, non-blocking) the oldest beyond [[PersistedFrameCap]]
+    * — safe because a share is an optimization, never a correctness
+    * requirement: an evicted frame's lineage simply recomputes — and
+    * (b) [[releasePersisted]] drops everything, wired into
     * `Search.invalidate`, so a long-lived session serving many
     * agg/msearch calls does not accumulate disk-cached blocks for the
     * app lifetime. */
@@ -93,31 +91,51 @@ object Dsl {
     scala.collection.mutable.Queue.empty[DataFrame]
   private val PersistedFrameCap = 32
 
-  private[ops] def trackPersist(df: DataFrame): DataFrame = synchronized {
-    persistedFrames.enqueue(df)
-    while (persistedFrames.size > PersistedFrameCap)
-      persistedFrames.dequeue().unpersist(blocking = false)
-    df
+  /** The one way to share a frame: `df` materializes once and every
+    * consumer — the branches of one plan, the actions of one request —
+    * reads that materialization. `df` persists DISK_ONLY, registers in
+    * the ring, and the returned frame's plan IS the cached relation
+    * (`Bridge.cachedLeaf`), so:
+    *  - every branch reads the one cache, self-union and self-join
+    *    branches included. Nothing rests on CacheManager plan matching,
+    *    which union deduplication and grouping-sets re-aliasing defeat
+    *    (measured: a 3-request msearch ran 4 corpus scans, a 10-cell
+    *    adjacency matrix 11);
+    *  - reads stay columnar: an RDD wrap (`createDataFrame(df.rdd)`)
+    *    pays a Row↔InternalRow round-trip per consumer (measured on
+    *    `Search.queryExpansionOf`: slower than the six corpus tokenize
+    *    passes it replaced);
+    *  - nothing executes until an action: an RDD wrap runs the frame
+    *    under AQE when it is built;
+    *  - the planner sees the cached plan's statistics, not an RDD's
+    *    default huge size, so joins above it keep their broadcast;
+    *  - lineage is kept: a lost block, a ring eviction or
+    *    [[releasePersisted]] recomputes the frame, where a
+    *    `localCheckpoint` fails the job.
+    * DISK_ONLY because shared frames are corpus- or candidate-grain:
+    * local-disk blocks for the life of a request, never heap. */
+  private[ops] def share(df: DataFrame): DataFrame = {
+    val persisted = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // the leaf is taken before the frame enters the ring, which another
+    // thread's share may evict from
+    val leaf = org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(persisted)
+    synchronized {
+      persistedFrames.enqueue(persisted)
+      while (persistedFrames.size > PersistedFrameCap)
+        persistedFrames.dequeue().unpersist(blocking = false)
+    }
+    leaf
   }
 
-  /** Persist `df` DISK_ONLY (ring-tracked) and return a frame whose
-    * plan IS the cached relation: every consumer — self-union branches
-    * included — reads the one cache, lineage is kept, and nothing
-    * runs until an action. An RDD wrap (`createDataFrame(df.rdd)`)
-    * shares the same way but executes the frame when it is BUILT. */
-  private def sharedFrame(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(trackPersist(
-      df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)))
-
-  /** Unpersist every tracked barrier frame (lineage keeps later
-    * actions correct — they recompute). Called by `Search.invalidate`
+  /** Unpersist every shared frame (lineage keeps later actions
+    * correct — they recompute). Called by `Search.invalidate`
     * and usable directly by a serving layer between batches. */
   def releasePersisted(): Unit = synchronized {
     persistedFrames.dequeueAll(_ => true)
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Test seam: number of currently-tracked persisted barrier frames. */
+  /** Test seam: number of currently-tracked shared frames. */
   private[graft] def persistedFrameCount: Int =
     synchronized(persistedFrames.size)
 
@@ -5862,15 +5880,15 @@ object Dsl {
   }
 
   /** ES `_msearch`: N request bodies answered with ONE corpus pass —
-    * the union clause inventory builds one feature frame (persisted
-    * DISK_ONLY so the N rank tails and the statistics reuse the
-    * materialized integers instead of re-scanning), one union
+    * the union clause inventory builds one feature frame (shared, so
+    * the N rank tails and the statistics reuse the materialized
+    * integers instead of re-scanning, [[share]]), one union
     * statistics aggregate broadcasts to every scored tail, and each
     * request keeps its own predicate, score, sort, and paging. Output:
     * (req, rk, doc_id, n_matched, tf_total, dl), req = request index.
     *
     * Shape at 100 TB: the alternative is N corpus scans; here the
-    * corpus text is read ONCE and the persisted frame holds a few integers
+    * corpus text is read ONCE and the shared frame holds a few integers
     * per doc — the shared-scan batching a distributed engine can offer
     * that per-request ES cannot.
     *
@@ -5886,7 +5904,7 @@ object Dsl {
     msearch(Served(spark, indexDirs), bodies)
 
   /** The `_msearch` compiler: each of the source's groups shares one
-    * candidate frame ([[Source.share]]) and one statistics aggregate
+    * candidate frame ([[share]]) and one statistics aggregate
     * across its requests' rank tails. */
   private def msearch(src: Source, bodies: Seq[String]): DataFrame = {
     val (framePlan, plans) = msearchPlans(bodies)
@@ -6798,16 +6816,11 @@ object Dsl {
   def dslSuggestOf(docs: DataFrame, json: String): DataFrame = {
     import docs.sparkSession.implicits._
     val suggs = parseSuggestBody(json)
-    // vocab-grain barrier (the aggsOver mechanism): every suggester
-    // branch and every phrase-candidate derivation reads this frame,
-    // and the self-union would otherwise re-run the corpus tokenize
-    // per branch
-    val vocab0 = trackPersist(docs
+    // every suggester branch and every phrase-candidate derivation
+    // reads the vocabulary
+    val vocab = share(docs
       .select(explode(TextAnalysis.toks($"text")).as("token"))
-      .groupBy($"token").agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    val vocab = docs.sparkSession
-      .createDataFrame(vocab0.rdd, vocab0.schema)
+      .groupBy($"token").agg(count(lit(1)).as("freq")))
     // phrase freq, scan shape: one corpus bigram pass joined to the
     // BROADCAST candidate pairs (tiny), counted per pair — the corpus
     // never shuffles, only the matched pairs aggregate
@@ -6830,8 +6843,8 @@ object Dsl {
       .filter($"field" === Search.DefaultField)
       .join(Search.indexTable(spark, Seq(root), "tombstones"), Seq("doc_id"),
         "left_anti")
-    // vocab-grain barrier — the dslSuggestOf sharing, served form
-    val vocab = sharedFrame(live.select($"doc_id", $"tok", $"tf")
+    // the dslSuggestOf vocabulary, served form
+    val vocab = share(live.select($"doc_id", $"tok", $"tf")
       .groupBy($"tok".as("token")).agg(sum($"tf").as("freq")))
     // phrase freq, served shape: candidate-pair adjacency counted from
     // the POSITIONAL postings (y = x + 1), summed across docs — the
@@ -7508,14 +7521,9 @@ object Dsl {
     val (samplers, rest) = b.aggs.partition(_.agg.isInstanceOf[SamplerAgg])
     // sampler scopes make `matched` a multi-consumer frame (the base
     // aggregate plus each sampler's semi-join feeding a parent count
-    // AND a sub-aggregate) — persist it (DISK_ONLY, lineage kept,
-    // ring-released: the aggsOver convention) so the match pass runs
-    // once, not once per union branch. Sampler-less bodies keep the
-    // plain single-pass shape with no persist I/O.
-    val matchedS =
-      if (samplers.isEmpty) matched
-      else trackPersist(matched.persist(
-        org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // AND a sub-aggregate), so the match pass is shared. Sampler-less
+    // bodies keep the plain single-pass shape with no persist I/O.
+    val matchedS = if (samplers.isEmpty) matched else share(matched)
     val base =
       if (rest.isEmpty) Seq.empty
       else Seq(aggsOver(matchedS, fullF, b.copy(aggs = rest), p))
@@ -7525,7 +7533,7 @@ object Dsl {
     // passes the body's query through verbatim; only shard_size and
     // the diversity collapse differ), so the scored feature pass and
     // the BM25 statistics build ONCE (one shared frame for the union
-    // field inventory, [[Source.share]]) and each sampler runs only
+    // field inventory, [[share]]) and each sampler runs only
     // its own rank tail over them
     val sFrames = if (samplers.isEmpty) Seq.empty else {
       val sbs = samplers.map { spec =>
@@ -7859,16 +7867,12 @@ object Dsl {
     // distinct auto field ON TOP of the main aggregate's pass — the
     // match set was computed twice per auto request (r18, guide §2.4).
     // When (and only when) an auto agg needs the span, the matched
-    // frame persists (DISK_ONLY, lineage kept, ring-released — the
-    // aggsOver convention) and both the span job and the grouping-sets
-    // pass read the cache; every other aggs body keeps the plain
-    // single-pass shape with no persist I/O.
+    // frame is shared by the span job and the grouping-sets pass;
+    // every other aggs body keeps the plain single-pass shape with no
+    // persist I/O.
     val autoFields = b.aggs.collect {
       case AggSpec(_, AutoDateHistAgg(f, _), _, _) => f }.distinct
-    val matchedA =
-      if (autoFields.isEmpty) matched
-      else trackPersist(matched.persist(
-        org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    val matchedA = if (autoFields.isEmpty) matched else share(matched)
     val matchedK = autoFields.foldLeft(matchedA)((d, f) =>
       d.crossJoin(broadcast(matchedA.agg(
         datediff(max(col(f)), min(col(f))).as(adhSpanCol(f))))))
@@ -7889,14 +7893,11 @@ object Dsl {
       !s.agg.isInstanceOf[StringStatsAgg] &&
       !s.agg.isInstanceOf[TTestAgg] &&
       !s.agg.isInstanceOf[TopMetricsAgg])
-    // the persist makes the one corpus pass ACTUALLY one: the per-agg
-    // branches below filter this frame, and without a materialization
-    // barrier each branch would re-execute the whole scan+aggregate
-    // lineage (ExplainAudit r12 caught 4 scans). persist(DISK_ONLY),
-    // not localCheckpoint: lineage survives, so an executor loss
-    // recomputes instead of failing the job (the msearchOf contract);
-    // the frame is bucket-grain — tiny either way
-    val grouped = sharedFrame(
+    // the per-bucket/per-spec consumers below SELF-UNION this frame
+    // (one branch per bucket, one cut per spec); sharing it makes the
+    // one corpus pass actually one, and building the request runs
+    // nothing. The frame is bucket-grain — tiny.
+    val grouped = share(
       if (gkNames.isEmpty) prep.agg(statAgg.head, statAgg.tail: _*)
       else {
         // one set per parent key; {parent, child} for bucket subs —
@@ -7907,25 +7908,12 @@ object Dsl {
               .toSeq
         } ++ (if (hasGlobal) Seq(Seq.empty[Column]) else Seq.empty)
         // the grouping() indicators ride the aggregate output (they
-        // cannot resolve through the persist barrier below)
+        // cannot resolve through the share)
         val aggOut = statAgg ++ gkNames.map(n =>
           grouping(col(n)).as(s"g_$n"))
         prep.groupingSets(sets, gkNames.map(col): _*)
           .agg(aggOut.head, aggOut.tail: _*)
       })
-    // The per-bucket/per-spec consumers below SELF-UNION this frame
-    // (one branch per bucket, one cut per spec). Catalyst's cached-plan
-    // matching does not survive the union deduplication when the frame
-    // is a grouping-sets aggregate (the Expand branches re-alias and
-    // sameResult fails), so every branch beyond the first silently
-    // re-ran the whole scan+aggregate lineage — measured: the 10-cell
-    // adjacency matrix executed 11 corpus scans (PLANS r12 caught 4 on
-    // an earlier shape; the grouping-sets form re-opened it). Pinning
-    // the branches to the cached relation itself ([[sharedFrame]])
-    // makes the one corpus pass actually one: every branch reads the
-    // same DISK_ONLY cache, which keeps full lineage (the executor-loss
-    // stance of the persist is unchanged), and building the request
-    // runs nothing.
     val nullD = lit(null).cast("double")
     val nullL = lit(null).cast("long")
     // output (v_count…v_avg) for a metric kind, from lazily-built
@@ -10427,7 +10415,6 @@ object Dsl {
     *    corpus statistics;
     *  - `stored`: the stored text a highlight's fetch phase and
     *    significant_text read;
-    *  - `share`: one materialization several consumers read;
     *  - `groups`: how an `_msearch` batch splits into candidate
     *    frames. */
   sealed trait Source {
@@ -10436,11 +10423,10 @@ object Dsl {
     /** `extra` columns ride the frame beside the plan's own; `text`
       * names those of them analyzed from the stored text rather than
       * read as doc-values (significant_text). `shared` makes the frame
-      * one materialization for several rank tails. */
+      * one materialization for several rank tails ([[Dsl.share]]). */
     private[Dsl] def features(p: Plan, extra: Seq[String] = Seq.empty,
         text: Seq[String] = Seq.empty, shared: Boolean = false): Features
     private[Dsl] def stored: DataFrame
-    private[Dsl] def share(df: DataFrame): DataFrame
     /** Each group's frame plan with its (plan, request index) pairs. */
     private[Dsl] def groups(frame: Plan, plans: Seq[Plan])
         : Seq[(Plan, Seq[(Plan, Int)])]
@@ -10466,20 +10452,6 @@ object Dsl {
       Features(f, scanStats(f, p))
     }
     private[Dsl] def stored: DataFrame = docs
-    /** persist(DISK_ONLY), not localCheckpoint: the barrier must
-      * survive executor loss. localCheckpoint TRUNCATES lineage and
-      * stores blocks on executors — losing one (preemption, dynamic
-      * allocation) fails the whole job; persist keeps the lineage, so a
-      * lost block recomputes its partition. The consumers then read ONE
-      * RDD over the persisted frame — the union deduplication otherwise
-      * defeats cached-plan matching and each consumer re-scans the
-      * corpus (the aggsOver barrier finding, measured: a 3-request
-      * msearch ran 4 corpus scans). */
-    private[Dsl] def share(df: DataFrame): DataFrame = {
-      val f0 = trackPersist(
-        df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      docs.sparkSession.createDataFrame(f0.rdd, f0.schema)
-    }
     /** One group: the whole batch shares one corpus pass. */
     private[Dsl] def groups(frame: Plan, plans: Seq[Plan])
         : Seq[(Plan, Seq[(Plan, Int)])] =
@@ -10572,7 +10544,6 @@ object Dsl {
       * never the live corpus. */
     private[Dsl] def stored: DataFrame =
       Search.indexTable(spark, roots, "stored")
-    private[Dsl] def share(df: DataFrame): DataFrame = sharedFrame(df)
     /** The batch SPLIT by candidate universe: requests whose predicate
       * implies a text hit ([[requiresText]]) share one df-bounded
       * postings-driven frame; scoreless/filter-only requests share a

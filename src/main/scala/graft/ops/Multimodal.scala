@@ -344,16 +344,11 @@ object Multimodal {
     * shuffle keys on (band, key) — 4 rows per image, 8-byte values;
     * the verify step touches candidate pairs only. */
   def imageNearDup(spark: SparkSession, dir: String): DataFrame = {
-    // materialized: the banded self-join consumes the hash frame
-    // twice, and decode must not run twice for it. persist(DISK_ONLY)
-    // + one shared RDD (the aggsOver mechanism, r18 — replaces the
-    // lineage-truncating localCheckpoint: an executor loss now
-    // recomputes instead of failing the job), fed from the UNSORTED
-    // hash rows — the old form checkpointed imagePhash's ORDER BY,
-    // paying a range-partition sort the banded explode destroys.
-    val ph0 = Dsl.trackPersist(imagePhashRows(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-    nearDupOf(ph0.sparkSession.createDataFrame(ph0.rdd, ph0.schema))
+    // shared: the banded self-join consumes the hash frame twice, and
+    // decode must not run twice for it. Fed from the UNSORTED hash
+    // rows — imagePhash's ORDER BY would pay a range-partition sort
+    // the banded explode destroys.
+    nearDupOf(Dsl.share(imagePhashRows(spark, dir)))
   }
 
   /** The banded pairing on any (doc_id, phash_hi, phash_lo) frame.

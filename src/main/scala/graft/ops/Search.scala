@@ -252,17 +252,13 @@ object Search {
     val chunks = graft.ops.TrainPrep.chunksOf(docs)
     val nt = TextAnalysis.norm($"chunk_text")
     // the chunk feature frame feeds TWO consumers — the 1-row
-    // chunk-stats aggregate and the scored pass — and each would
-    // re-run the corpus chunk explosion + per-chunk tokenize without
-    // a barrier. persist(DISK_ONLY, lineage kept, ring-released — the
-    // msearchOf convention): the frame is a few integers per chunk;
-    // the corpus text is read and chunked ONCE (guide §2.4).
-    val f = Dsl.trackPersist(chunks.select(
+    // chunk-stats aggregate and the scored pass — so the corpus text
+    // is read and chunked ONCE; the frame is a few integers per chunk
+    val f = Dsl.share(chunks.select(
       ($"doc_id" +: $"chunk_id" +:
         $"n_chunk_tokens".cast("long").as("dl") +:
         terms.indices.map(i =>
-          TextAnalysis.hitCount(nt, Seq(terms(i))).as(s"tf${i + 1}"))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+          TextAnalysis.hitCount(nt, Seq(terms(i))).as(s"tf${i + 1}"))): _*))
     val statCols = Seq(count(lit(1)).as("n"), sum($"dl").as("sumdl")) ++
       terms.indices.map(i =>
         count(when(col(s"tf${i + 1}") > 0, 1)).as(s"df${i + 1}"))
@@ -855,13 +851,11 @@ object Search {
         .as(s"tf${i + 1}")
     }
     // per-chunk candidate tfs feed TWO consumers — the 1-row df
-    // aggregate and the scored join — and each would re-run the
-    // postings position explosion + regroup without a barrier.
-    // persist(DISK_ONLY, lineage kept, ring-released): the frame is
-    // df-bounded hit chunks only, a few integers each (guide §2.4).
-    val cand = Dsl.trackPersist(ctf.groupBy($"doc_id", $"chunk_id")
-      .agg(tfCols.head, tfCols.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // aggregate and the scored join — so the postings position
+    // explosion + regroup runs once; the frame is df-bounded hit
+    // chunks only, a few integers each
+    val cand = Dsl.share(ctf.groupBy($"doc_id", $"chunk_id")
+      .agg(tfCols.head, tfCols.tail: _*))
     val dfCols = terms.zipWithIndex.map { case (t, i) =>
       count(when(col(s"tf${i + 1}") > 0, 1)).as(s"df${i + 1}")
     }
@@ -1027,24 +1021,15 @@ object Search {
     // referenced twice (exp's join + qterms), the feedback mine and the
     // final tf pass each re-exploded, and dlF/stats re-tokenized — six
     // regex tokenization passes over the corpus for one query. The
-    // per-doc token ARRAY persists once (DISK_ONLY — lineage survives,
-    // an executor loss recomputes; the aggsOver mechanism) behind one
-    // shared RDD so every branch reads the same cached bytes instead of
-    // re-running the scan+regex lineage. Corpus-grain persist is the
-    // deliberate trade at 100 TB: ~input-sized local-disk blocks for
-    // the duration of one query vs six full corpus scans + regex
-    // passes; the ring (Dsl.PersistedFrameCap) bounds accumulation and
+    // per-doc token ARRAY is shared, so every branch reads the same
+    // cached bytes instead of re-running the scan+regex lineage.
+    // Corpus-grain sharing is the deliberate trade at 100 TB:
+    // ~input-sized local-disk blocks for the duration of one query vs
+    // six full corpus scans + regex passes; the ring
+    // (Dsl.PersistedFrameCap) bounds accumulation and
     // Search.invalidate / Dsl.releasePersisted drop it.
-    // plain persist, NO RDD wrap: consumers here are ordinary
-    // derivations of one frame (no self-union re-aliasing), so
-    // CacheManager substitutes the InMemoryRelation on every branch
-    // and reads stay COLUMNAR — an .rdd boundary would pay a
-    // Row↔InternalRow round-trip on every token array, per consumer
-    // (measured: the wrapped form was slower than the six passes it
-    // replaced)
-    val base = Dsl.trackPersist(docs
-      .select($"doc_id", TextAnalysis.toks($"text").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    val base = Dsl.share(docs
+      .select($"doc_id", TextAnalysis.toks($"text").as("t")))
     val tokRows = base.select($"doc_id", explode($"t").as("token"))
     val dlF = base.select($"doc_id", size($"t").cast("long").as("dl"))
     val stats = dlF.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
@@ -1695,12 +1680,10 @@ object Search {
     // ONE tokenization pass (r18): the token stream, the source doc's
     // term pull, the df table and the length table all re-tokenized
     // the corpus — the same six-pass shape queryExpansionOf had; the
-    // per-doc token array persists once (DISK_ONLY, lineage kept,
-    // ring-released) and every branch derives from the cache. See
-    // queryExpansionOf for the 100 TB trade.
-    val base = Dsl.trackPersist(docs
-      .select($"doc_id", TextAnalysis.toks($"text").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // per-doc token array is shared and every branch derives from it.
+    // See queryExpansionOf for the 100 TB trade.
+    val base = Dsl.share(docs
+      .select($"doc_id", TextAnalysis.toks($"text").as("t")))
     val tokRows = base.select($"doc_id", explode($"t").as("token"))
     val dlF = base.select($"doc_id", size($"t").cast("long").as("dl"))
     val stats = dlF.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
@@ -2616,15 +2599,12 @@ object Search {
     val idx = sharedIndexDir(spark, dir)
     // the cursor fetch (page 1's tail, a bounded collect — the ES
     // protocol) and the page-2 frame are TWO actions over the same
-    // scored pipeline; without a barrier each re-ran the whole
-    // index-scoring lineage (postings + doclen + stats + dfs).
-    // persist(DISK_ONLY, lineage kept, ring-released — the aggsOver
-    // convention): the frame is candidate-grain integers, and the
-    // keyset comparison now reads bit-identical doubles from the same
-    // materialized rows (guide §2.4).
-    val scored = Dsl.trackPersist(
-      scoredFromIndex(spark, requireIndex(spark, idx), QueryTerms)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // scored pipeline; sharing it runs the index-scoring lineage
+    // (postings + doclen + stats + dfs) once, and the keyset
+    // comparison reads bit-identical doubles from the same
+    // materialized rows. The frame is candidate-grain integers.
+    val scored = Dsl.share(
+      scoredFromIndex(spark, requireIndex(spark, idx), QueryTerms))
     val (s, d) = cursorOf(spark, scored, TopK)
       .getOrElse(throw new IllegalStateException(
         s"search_after: fewer than $TopK matches — no second page"))
@@ -3441,14 +3421,12 @@ object Search {
     * must hold across an alias exactly as within one index). */
   def searchAfterMulti(spark: SparkSession, dir: String): DataFrame = {
     val dirs = sharedDailyIndexDirs(spark, dir)._1
-    // cursor + page 2 share ONE persisted scored frame — the
-    // [[searchAfter]] barrier, multi-index form (the merged-statistics
-    // pipeline across the daily members is 3× the single-index
-    // lineage, so re-running it per action cost twice as much here)
-    val scored = Dsl.trackPersist(
+    // cursor + page 2 share ONE scored frame — the [[searchAfter]]
+    // sharing, multi-index form (the merged-statistics pipeline across
+    // the daily members is 3× the single-index lineage)
+    val scored = Dsl.share(
       scoredFromIndexes(spark, dirs.map(requireIndex(spark, _)),
-        QueryTerms)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+        QueryTerms))
     val (s, d) = cursorOf(spark, scored, TopK)
       .getOrElse(throw new IllegalStateException(
         s"search_after_multi: fewer than $TopK matches — no second page"))

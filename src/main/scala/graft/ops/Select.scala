@@ -268,10 +268,9 @@ object Select {
     import docs.sparkSession.implicits._
     // tokenize once for the model train + corpus probe (r18 — the
     // TextAnalysis.lmScoreOf treatment; see bigramRowsOfToks)
-    val base = Dsl.trackPersist(docs
+    val base = Dsl.share(docs
       .select($"doc_id", $"lang", $"source",
-        TextAnalysis.toks($"text").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+        TextAnalysis.toks($"text").as("t")))
     val bi = TextAnalysis.bigramRowsOfToks(base)
     val model = bi
       .filter($"source".isin(TextAnalysis.LmTrainSources: _*))

@@ -295,20 +295,16 @@ object TimeWindows {
     // its own survivor count branch — and the union's branches do NOT
     // share runtime exchanges (ExplainAudit --executed r18: 11 event
     // scans, 1 ReusedExchange), so without a barrier step 1's scan ran
-    // 3× and step 2's chain 2×. persist(DISK_ONLY, lineage kept,
-    // ring-released — the aggsOver convention): the frames are
-    // user-grain (user_id, ts), tiny next to the event scan they save
-    // (guide §2.4).
+    // 3× and step 2's chain 2×. Both are shared: the frames are
+    // user-grain (user_id, ts), tiny next to the event scan they save.
     // step 1: earliest 'view' per user
-    val s1 = Dsl.trackPersist(ev.filter($"event_type" === FunnelSteps(0))
-      .groupBy($"user_id").agg(min($"ts").as("t1"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    val s1 = Dsl.share(ev.filter($"event_type" === FunnelSteps(0))
+      .groupBy($"user_id").agg(min($"ts").as("t1")))
     // step 2: earliest 'click' strictly after t1
-    val s2 = Dsl.trackPersist(ev.filter($"event_type" === FunnelSteps(1))
+    val s2 = Dsl.share(ev.filter($"event_type" === FunnelSteps(1))
       .join(s1, "user_id")
       .filter($"ts" > $"t1")
-      .groupBy($"user_id").agg(min($"ts").as("t2"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      .groupBy($"user_id").agg(min($"ts").as("t2")))
     // step 3: earliest 'purchase' strictly after t2 — ONE consumer
     // (its count branch), no barrier needed
     val s3 = ev.filter($"event_type" === FunnelSteps(2))

@@ -1553,14 +1553,12 @@ object TextAnalysis {
     import docs.sparkSession.implicits._
     // Tokenize ONCE (r18): the model train and the corpus probe both
     // derive from bigramRows, so the regex tokenization used to run
-    // twice over the whole corpus. The doc-grain token arrays persist
-    // (DISK_ONLY, lineage kept, ring-released — the queryExpansionOf
-    // mechanism) and both bigram passes explode from the cache; the
-    // md5 bigram hashing still runs per pass, but at output grain from
-    // cached arrays, not behind a second scan+regex lineage.
-    val base = Dsl.trackPersist(docs
-      .select($"doc_id", $"lang", $"source", toks($"text").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    // twice over the whole corpus. The doc-grain token arrays are
+    // shared and both bigram passes explode from them; the md5 bigram
+    // hashing still runs per pass, but at output grain from cached
+    // arrays, not behind a second scan+regex lineage.
+    val base = Dsl.share(docs
+      .select($"doc_id", $"lang", $"source", toks($"text").as("t")))
     val bi = bigramRowsOfToks(base)
     // bigram + context counts from ONE training scan: group at bigram
     // grain (g determines h, mod collisions), then fold the checkpointed

@@ -207,13 +207,11 @@ object Boot {
     * graceful drain (main.go:306-324's SIGINT/SIGTERM → Shutdown). */
   def main(args: Array[String]): Unit = {
     val config = BootConfig.fromEnv()
-    val spark = SparkSession.builder()
+    val spark = graft.SessionPosture(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft")
       .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+        Runtime.getRuntime.availableProcessors.toString))
       .getOrCreate()
     val app = start(spark, config)
     // SIGINT/SIGTERM → graceful drain; Spark's own hook stops the

@@ -44,6 +44,12 @@ class BootSpec extends SparkSpec {
     assert(e.getMessage.contains("DATA_DLQ_TOPIC"))
   }
 
+  test("the shared session carries every session posture pair") {
+    SessionPosture.Pairs.foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, s"$k: ${spark.conf.get(k)}, not $v")
+    }
+  }
+
   test("alias over a freshly-created empty index dir answers (zero rows)") {
     val dir = tmp("emptyidx")
     Boot.pointBootAlias(spark, "empty_alias", dir, "2026-01-01")

@@ -37,6 +37,25 @@ class DslSpec extends SparkSpec {
     p +: kids.flatMap(physNodes)
   }
 
+  /** The executed plan of the collected `df` materializes each of its
+    * `shared` frames once: no parquet scan outside a cached relation,
+    * no RDD scan, and `shared` distinct caches across its in-memory
+    * scans. */
+  private def assertOneMaterialization(df: DataFrame, shared: Int,
+      what: String): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val nodes = physNodes(df.queryExecution.executedPlan)
+    val fileScans = nodes.count(_.isInstanceOf[FileSourceScanExec])
+    val rddScans = nodes.count(_.isInstanceOf[RDDScanExec])
+    val caches = nodes.collect { case s: InMemoryTableScanExec =>
+      s.relation.cacheBuilder.cachedColumnBuffers.id
+    }.distinct
+    assert(fileScans == 0 && rddScans == 0 && caches.size == shared,
+      s"$what must read $shared shared frame(s) once each: direct " +
+        s"scans=$fileScans, rdd scans=$rddScans, caches=${caches.size}")
+  }
+
   /** Controlled corpus: text + keyword + numeric fields. */
   private lazy val tiny = Seq(
     (0L, "rare alpha alpha", "en", "src0", 16L),
@@ -1082,23 +1101,14 @@ class DslSpec extends SparkSpec {
       assert(batched(i) == solo,
         s"request $i diverged from its solo run: ${batched(i)} vs $solo")
     }
-    // ONE corpus pass: every rank tail reads the SAME RDD over the
-    // persisted feature frame (r17: the tails are pinned to one RDD
-    // because union deduplication defeats cached-plan matching — each
-    // branch would otherwise re-run the whole scan), so the executed
-    // plan holds no direct parquet scan and every RDD scan shares one
-    // rdd id (one materialization, N readers).
+    // ONE corpus pass: every rank tail and the statistics read the one
+    // cache of the shared feature frame (union deduplication defeats
+    // cached-plan matching — each branch would otherwise re-run the
+    // whole scan), so the executed plan holds no direct parquet scan,
+    // no RDD scan, and one cache (one materialization, N readers).
     val msDf = Dsl.msearchOf(Tables.documentsPar(spark, sfDir), bodies)
     msDf.collect()
-    val nodes = physNodes(msDf.queryExecution.executedPlan)
-    val fileScans = nodes.count(
-      _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
-    val rddIds = nodes.collect {
-      case s: org.apache.spark.sql.execution.RDDScanExec => s.rdd.id
-    }.distinct
-    assert(fileScans == 0 && rddIds.size == 1,
-      s"_msearch must share one persisted corpus pass: " +
-        s"direct scans=$fileScans, distinct barrier rdds=${rddIds.size}")
+    assertOneMaterialization(msDf, 1, "_msearch")
     def msg(bs: Seq[String]): String =
       intercept[IllegalArgumentException](
         Dsl.msearchOf(tiny, bs)).getMessage
@@ -1106,6 +1116,52 @@ class DslSpec extends SparkSpec {
       "_source": ["lang"]}""")).contains("_source"),
       "the batched frame is uniform — _source refuses")
     assert(msg(Seq.empty).contains("empty"))
+  }
+
+  test("former RDD-wrap shares materialize once: near-dup, suggest, sampler") {
+    // each builds under an emptied ring, so the ring's size after the
+    // build is the number of frames the plan shares
+    def check(what: String, build: => DataFrame): Unit = {
+      Dsl.releasePersisted()
+      val df = build
+      val shared = Dsl.persistedFrameCount
+      df.collect()
+      assert(shared > 0, s"$what shares no frame")
+      assertOneMaterialization(df, shared, what)
+    }
+    val docs = Tables.documentsPar(spark, sfDir)
+    check("image_neardup", graft.ops.Multimodal.imageNearDup(spark, sfDir))
+    check("suggest", Dsl.dslSuggestOf(docs, Dsl.SuggestBodyQuery))
+    check("sampler aggs", Dsl.dslAggsOf(docs, Dsl.AggsSamplerQuery))
+    Dsl.releasePersisted()
+  }
+
+  test("a shared frame recomputes after its cache is released") {
+    val idx = Seq(sys.props("java.io.tmpdir") + "/graft_searchidx_" +
+      Tables.viewSuffix(sfDir))
+    Dsl.searchDslServed(spark, sfDir) // memo warm (index built)
+    val docs = Tables.documentsPar(spark, sfDir)
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    Seq[(String, () => DataFrame)](
+      "scan msearch" -> (() => Dsl.msearchOf(docs, Dsl.MsearchBodies)),
+      "served msearch" -> (() =>
+        Dsl.msearchFromIndexes(spark, idx, Dsl.MsearchBodies)),
+      "suggest" -> (() => Dsl.dslSuggestOf(docs, Dsl.SuggestBodyQuery)),
+      "image_neardup" -> (() =>
+        graft.ops.Multimodal.imageNearDup(spark, sfDir)),
+      "funnel_steps" -> (() =>
+        graft.ops.TimeWindows.funnelSteps(spark, sfDir))
+    ).foreach { case (what, build) =>
+      Dsl.releasePersisted()
+      val want = rows(build())
+      Dsl.releasePersisted()
+      val df = build()
+      assert(Dsl.persistedFrameCount > 0, s"$what shares no frame")
+      Dsl.releasePersisted()
+      assert(Dsl.persistedFrameCount == 0, s"$what: the ring still holds frames")
+      assert(rows(df) == want, s"$what: a released share read other rows")
+    }
   }
 
   test("served _msearch splits scoreless requests off the df-bounded pass") {

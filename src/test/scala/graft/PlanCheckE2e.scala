@@ -5,10 +5,10 @@ package graft
 
 object PlanCheckE2e {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = SessionPosture(org.apache.spark.sql.SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = "/root/testdata/sf0.01"

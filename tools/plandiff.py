@@ -15,7 +15,12 @@ assigns afresh on every run do not count as differences:
   - `plan_id=123`;
   - RDD ids (`rdd_12_3`, `[12] at`, `RDD 12`, `MapPartitionsRDD[12]`);
   - temporary-directory suffixes (`spark-<uuid>`, `blockmgr-<uuid>`,
-    any UUID, and the digits of `/tmp`-style names ending in a number).
+    any UUID, and the digits of `/tmp`-style names ending in a number);
+  - lambda class names (`$Lambda$123/0x...@abc`).
+A value Spark abbreviated with `...` (a long filter list, say) is cut at
+a fixed raw length, so its cut moves with the digits of the ids before
+it: two lines that differ only there count as equal when, field by
+field, each abbreviated value is a prefix of the other side's value.
 
 Prints the query names only in one audit, then each query whose
 normalized text differs (with the first differing line of each side),
@@ -37,6 +42,7 @@ NORMALIZE = [
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      "UUID"),
     (re.compile(r"\b((?:spark|blockmgr|temp|tmp)[-_][\w-]*?)\d+\b"), r"\1N"),
+    (re.compile(r"\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
 ]
 
 
@@ -70,11 +76,35 @@ def parse(path):
     return {k: [l for l in v if l.strip()] for k, v in out.items()}
 
 
+FIELD = re.compile(r", (?=[A-Z][A-Za-z]*: )")
+
+
+def same_line(la, lb):
+    """Equal, or equal but for where Spark cut its `...` abbreviations:
+    field by field (`, Key: ` boundaries), an abbreviated value matches
+    a value it is a prefix of."""
+    if la == lb:
+        return True
+    fa, fb = FIELD.split(la), FIELD.split(lb)
+    if len(fa) != len(fb):
+        return False
+    for x, y in zip(fa, fb):
+        if x == y:
+            continue
+        cx, cy = x.endswith("..."), y.endswith("...")
+        if not (cx or cy):
+            return False
+        x, y = x[:-3] if cx else x, y[:-3] if cy else y
+        if not ((cx and y.startswith(x)) or (cy and x.startswith(y))):
+            return False
+    return True
+
+
 def first_diff(a, b):
     for i in range(max(len(a), len(b))):
         la = a[i] if i < len(a) else "<end>"
         lb = b[i] if i < len(b) else "<end>"
-        if la != lb:
+        if not same_line(la, lb):
             return i, la, lb
     return None
 
