@@ -428,7 +428,7 @@ object Bench {
         val tb0 = System.nanoTime()
         graft.ops.Dedup.persistFunnel(spark, sfDir, fd)
         st.funnelBuild = (System.nanoTime() - tb0) / 1e9
-        graft.ops.Dedup.invalidate(spark, sfDir)
+        Tables.invalidate(spark, sfDir)
         spark.conf.set(graft.ops.Dedup.FunnelDirConf, fd)
         st.funnel = boundedPass("funnel", funnelQueryNames
             .flatMap(n => SparkEntry.queries.get(n).map(n -> _)),
@@ -447,7 +447,7 @@ object Bench {
         // half-built temp funnel for everything run later (ADVICE r7)
         try {
           spark.conf.unset(graft.ops.Dedup.FunnelDirConf)
-          graft.ops.Dedup.invalidate(spark, sfDir)
+          Tables.invalidate(spark, sfDir)
         } catch { case _: Throwable => () }
       }
       emit("funnel", toStdout = false)

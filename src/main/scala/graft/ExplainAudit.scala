@@ -12,6 +12,10 @@ import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
   * (`InMemoryTableScan`) and `rdd=` counts RDD scans (`Scan
   * ExistingRDD`: an RDD wrap or a `localCheckpoint`), so every
   * materialization shows per query.
+  * Each query is built after `Dsl.releasePersisted()`, so no query's
+  * plan reads a frame that an earlier query of the same audit shared:
+  * a query's plan is the same in a full audit and in an audit of it
+  * alone.
   * Usage: runMain graft.ExplainAudit [sfDir] [--summary] [query ...] */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
@@ -37,6 +41,7 @@ object ExplainAudit {
     def count(s: String, needle: String): Int =
       s.sliding(needle.length).count(_ == needle)
     names.foreach { name =>
+      graft.ops.Dsl.releasePersisted()
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       if (executed)
         try qe.toRdd.foreach(_ => ())

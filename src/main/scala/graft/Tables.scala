@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
 import org.apache.spark.sql.types.StructType
 
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+
 /** Test-table access for the driver's parquet fixtures (TESTDATA.md).
   * All queries take the sf directory as a parameter so the same code runs
   * at any scale factor — and, on a real cluster, against any warehouse
@@ -17,11 +20,102 @@ object Tables {
     * lossy ("/data/v1.2" and "/data/v1_2" both mangle to "_data_v1_2"),
     * so two distinct corpora could collide onto one cached view and the
     * second would silently serve the first's trained model. Every
-    * shared-view site and every invalidate path derives its name here. */
+    * memo name derives from it ([[shared]], [[artifactDir]]). */
   def viewSuffix(dir: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
+  }
+
+  // ------------------------------------------------- per-corpus memo
+  //
+  // Everything derived from a corpus dir and reused across queries —
+  // a trained model, a checkpointed dedup-funnel layer, an index built
+  // under java.io.tmpdir — is memoized here and nowhere else, so
+  // memoizing a derivation is what makes [[invalidate]] drop it.
+
+  /** The name of memo `name` for the corpus at `dir`: the session temp
+    * view of a [[shared]] frame, the directory of a [[built]] artifact. */
+  private def memoName(name: String, dir: String): String =
+    "graft_" + name + "_" + viewSuffix(dir)
+
+  /** The build lock of every (dir, view group) memoized so far. */
+  private val viewGroups =
+    new ConcurrentHashMap[(String, Seq[String]), AnyRef]()
+
+  /** The session temp views of `names` for the corpus at `dir`, built
+    * together by `build` (one frame per name, in order) when any of
+    * them is missing. One lock per (dir, group) makes concurrent first
+    * reads build once; a build may read another memo, and since every
+    * derivation reads only the layers below it the locks never cycle.
+    * CORPUS-VERSION CONTRACT: the views are keyed by corpus PATH, so a
+    * session that rewrites the dir in place keeps reading what was
+    * built from the old bytes until it calls [[invalidate]]. */
+  def shared(spark: SparkSession, dir: String, names: String*)(
+      build: => Seq[DataFrame]): Seq[DataFrame] = {
+    val views = names.map(memoName(_, dir))
+    def present = views.forall(spark.catalog.tableExists)
+    if (!present)
+      viewGroups.computeIfAbsent((dir, names), _ => new Object).synchronized {
+        if (!present) {
+          val frames = build
+          require(frames.size == views.size, s"memo $names: ${frames.size} frames")
+          views.zip(frames).foreach { case (v, df) => df.createOrReplaceTempView(v) }
+        }
+      }
+    views.map(spark.table)
+  }
+
+  /** Point memo `name` of `dir` at `df`, replacing what it held: for a
+    * derivation loaded instead of built (the durable dedup funnel,
+    * `Dedup.bootstrapFunnel`). Takes no build lock, since a build may
+    * be what loads it. */
+  def register(spark: SparkSession, dir: String, name: String,
+      df: DataFrame): Unit = {
+    viewGroups.computeIfAbsent((dir, Seq(name)), _ => new Object)
+    df.createOrReplaceTempView(memoName(name, dir))
+  }
+
+  /** Built flag of one artifact; its monitor is the artifact's build lock. */
+  private final class Artifact { @volatile var built = false }
+  private val artifacts = new ConcurrentHashMap[(String, String), Artifact]()
+
+  /** Run `build` once per application for the artifact `key`: `dir`,
+    * or `dir#variant` for another artifact of the same corpus. Keyed by
+    * application, not session, because the artifacts are files under
+    * [[artifactDir]], named by dir alone; a new application rebuilds,
+    * so files a dead one left never serve. */
+  def built(spark: SparkSession, key: String)(build: => Unit): Unit = {
+    val a = artifacts.computeIfAbsent(
+      (spark.sparkContext.applicationId, key), _ => new Artifact)
+    if (!a.built) a.synchronized {
+      if (!a.built) { build; a.built = true }
+    }
+  }
+
+  /** Where artifact `name` of the corpus at `dir` is built. */
+  def artifactDir(name: String, dir: String): String =
+    sys.props("java.io.tmpdir") + "/" + memoName(name, dir)
+
+  /** The one corpus-rewrite entry point: drop every view this session
+    * memoized for `dir`, forget every artifact keyed `dir` or `dir#…`
+    * in this application, and release the `Dsl.share` frames (same
+    * lifecycle: a long-lived serving session must not keep the old
+    * corpus's disk blocks). A group drops under its build lock, so a
+    * build in flight finishes first. The next read of each rebuilds
+    * from the dir's current bytes. */
+  def invalidate(spark: SparkSession, dir: String): Unit = {
+    viewGroups.asScala.foreach { case ((d, names), lock) =>
+      if (d == dir) lock.synchronized {
+        names.foreach(n => spark.catalog.dropTempView(memoName(n, dir)))
+      }
+    }
+    val app = spark.sparkContext.applicationId
+    artifacts.asScala.foreach { case ((a, key), artifact) =>
+      if (a == app && (key == dir || key.startsWith(dir + "#")))
+        artifact.synchronized(artifact.built = false)
+    }
+    graft.ops.Dsl.releasePersisted()
   }
 
   /** Opt-in warm-table cache, keyed per (session, dir, table). Bench

@@ -219,28 +219,14 @@ object Bpe {
     * train per (session, corpus), consumed by all three registered
     * queries (the [[Dedup.sharedSigSets]] pattern and its
     * CORPUS-VERSION CONTRACT: a session that rewrites the corpus in
-    * place must [[invalidate]] — one entry point, [[Dedup.invalidate]],
-    * drops every shared materialization). Returns (final vocab,
-    * merge table). */
-  def sharedTrain(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    val vv = "graft_bpe_vocab_" + suffix
-    val mv = "graft_bpe_merges_" + suffix
-    if (!spark.catalog.tableExists(vv) || !spark.catalog.tableExists(mv)) {
+    * place must call [[Tables.invalidate]], which drops every
+    * [[Tables.shared]] memo). Returns (final vocab, merge table). */
+  def sharedTrain(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val Seq(vocab, merges) = Tables.shared(spark, dir, "bpe_vocab", "bpe_merges") {
       val (w, merges) = bpeTrainFrames(Tables.documentsPar(spark, dir), NBpeMerges)
-      w.createOrReplaceTempView(vv)
-      merges.reduce(_ union _).createOrReplaceTempView(mv)
+      Seq(w, merges.reduce(_ union _))
     }
-    (spark.table(vv), spark.table(mv))
-  }
-
-  /** Drop the session-shared trained tokenizer for the corpus at `dir`
-    * (called from [[Dedup.invalidate]], the corpus-rewrite entry
-    * point). */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    Seq("graft_bpe_vocab_", "graft_bpe_merges_")
-      .foreach(p => spark.catalog.dropTempView(p + suffix))
+    (vocab, merges)
   }
 
   /** Registered query: the learned merge table — (sweep, pair, merged

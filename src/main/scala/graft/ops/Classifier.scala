@@ -119,29 +119,17 @@ object Classifier {
     * (session, corpus), consumed by classifier_weights,
     * quality_classifier and ensemble_select (the [[Bpe.sharedTrain]]
     * pattern and its corpus-version contract: a session that rewrites
-    * the corpus in place must go through [[Dedup.invalidate]], which
-    * chains to [[invalidate]]). Returns (checkpointed feature frame,
+    * the corpus in place must go through [[Tables.invalidate]]).
+    * Returns (checkpointed feature frame,
     * trained 1-row weight frame); both sit behind lazily-materialized
     * localCheckpoints, so the first consumer absorbs the GD sweeps and
     * every later one serves from cached blocks. */
-  def sharedFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    val xv = "graft_cls_x_" + suffix
-    val wv = "graft_cls_w_" + suffix
-    if (!spark.catalog.tableExists(xv) || !spark.catalog.tableExists(wv)) {
+  def sharedFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val Seq(x, w) = Tables.shared(spark, dir, "cls_x", "cls_w") {
       val (x, w) = fitAt(Tables.documentsPar(spark, dir), ClsIters)
-      x.createOrReplaceTempView(xv)
-      w.createOrReplaceTempView(wv)
+      Seq(x, w)
     }
-    (spark.table(xv), spark.table(wv))
-  }
-
-  /** Drop the session-shared fit for the corpus at `dir` (called from
-    * [[Dedup.invalidate]], the corpus-rewrite entry point). */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    Seq("graft_cls_x_", "graft_cls_w_")
-      .foreach(p => spark.catalog.dropTempView(p + suffix))
+    (x, w)
   }
 
   /** Registered query: the trained weights in row form (feature name,

@@ -256,23 +256,19 @@ object Dedup {
     * are garbage-collected; eager=false defers materialization to the
     * first consumer's first action. */
   /** CORPUS-VERSION CONTRACT: the shared tables ([[sharedSigSets]],
-    * [[sharedJaccardPairs]], [[sharedClusters]]) are keyed by corpus
-    * PATH and built once per session — a session that rewrites the
-    * corpus directory in place must call [[invalidate]] before reading
-    * again, or it will be served the signatures of the old bytes. This
-    * mirrors what the materializations stand in for at 100 TB: tables
-    * persisted NEXT TO a corpus version, refreshed when the corpus is
-    * (immutable versioned corpus dirs make invalidation structural). */
-  def sharedSigSets(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_sigsets_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view)) {
-      if (!bootstrapFromConf(spark, dir))
-        sigSetsOf(docsPar(spark, dir))
-          .localCheckpoint(eager = false)
-          .createOrReplaceTempView(view)
-    }
-    spark.table(view)
-  }
+    * [[sharedJaccardPairs]], [[sharedClusters]]) are [[Tables.shared]]
+    * memos, keyed by corpus PATH and built once per session — a session
+    * that rewrites the corpus directory in place must call
+    * [[Tables.invalidate]] before reading again, or it will be served
+    * the signatures of the old bytes. This mirrors what the
+    * materializations stand in for at 100 TB: tables persisted NEXT TO
+    * a corpus version, refreshed when the corpus is (immutable
+    * versioned corpus dirs make invalidation structural). */
+  def sharedSigSets(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "sigsets")(Seq(
+      if (bootstrapFromConf(spark, dir))
+        spark.table(funnelTableName(dir, "signatures"))
+      else sigSetsOf(docsPar(spark, dir)).localCheckpoint(eager = false))).head
 
   /** Session-shared df-capped posting table (doc_id, 60-bit gram) — the
     * containment funnel's analogue of [[sharedSigSets]]: built once per
@@ -280,37 +276,12 @@ object Dedup {
     * containment_incremental (three plan consumers each: two self-join
     * sides + the size aggregate). Bootstraps from a persisted funnel
     * like the other shared tables. */
-  def sharedPostings(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_postings_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view)) {
-      if (!bootstrapFromConf(spark, dir))
-        postingsOfSigs(sharedSigSets(spark, dir))
-          .localCheckpoint(eager = false)
-          .createOrReplaceTempView(view)
-    }
-    spark.table(view)
-  }
-
-  /** Drop the session-shared materializations for the corpus at `dir`
-    * (all layers — signatures, postings, verified pairs, cluster
-    * labels — since each is derived from the one below). The next
-    * consumer rebuilds from the directory's current bytes. */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    Seq("graft_sigsets_", "graft_postings_", "graft_jaccard_pairs_",
-      "graft_clusters_")
-      .foreach(p => spark.catalog.dropTempView(p + suffix))
-    // the semantic assignment, kmeans, and BPE views are derived from
-    // the same corpus dir — one rewrite entry point drops every
-    // materialization (ADVICE r6)
-    Similarity.invalidate(spark, dir)
-    Bpe.invalidate(spark, dir)
-    Pq.invalidate(spark, dir)
-    Classifier.invalidate(spark, dir)
-    Select.invalidate(spark, dir)
-    Unigram.invalidate(spark, dir)
-    Search.invalidate(spark, dir)
-  }
+  def sharedPostings(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "postings")(Seq(
+      if (bootstrapFromConf(spark, dir))
+        spark.table(funnelTableName(dir, "postings"))
+      else postingsOfSigs(sharedSigSets(spark, dir))
+        .localCheckpoint(eager = false))).head
 
   // ---------------------------------------------------------------------
   // Durable funnel: signatures/postings/pairs/clusters as BUCKETED
@@ -330,16 +301,16 @@ object Dedup {
     * tables from instead of rebuilding per session. */
   val FunnelDirConf = "spark.graft.funnel.dir"
 
-  /** (component, bucket column, shared-view prefix) of each persisted
+  /** (component, bucket column, shared-view memo) of each persisted
     * funnel table. `boilerplate` has no session view — it exists for
     * [[containmentAgainst]] callers, so arrival batches drop the same
     * grams the corpus postings dropped. */
   private val FunnelComponents = Seq(
-    ("signatures", "doc_id", Some("graft_sigsets_")),
-    ("postings", "g", Some("graft_postings_")),
+    ("signatures", "doc_id", Some("sigsets")),
+    ("postings", "g", Some("postings")),
     ("boilerplate", "g", None),
-    ("pairs", "id_a", Some("graft_jaccard_pairs_")),
-    ("clusters", "doc_id", Some("graft_clusters_")))
+    ("pairs", "id_a", Some("jaccard_pairs")),
+    ("clusters", "doc_id", Some("clusters")))
 
   private def funnelTableName(dir: String, comp: String): String =
     "graft_funnel_" + comp + "_" + graft.Tables.viewSuffix(dir)
@@ -462,8 +433,7 @@ object Dedup {
     val numBucketsOpt = meta.get("buckets").flatMap(_.toIntOption)
     if (numBucketsOpt.isEmpty) return false
     val numBuckets = numBucketsOpt.get
-    val suffix = graft.Tables.viewSuffix(dir)
-    FunnelComponents.foreach { case (comp, bucketCol, viewPrefix) =>
+    FunnelComponents.foreach { case (comp, bucketCol, memo) =>
       val tbl = funnelTableName(dir, comp)
       if (!spark.catalog.tableExists(tbl)) {
         // schema from the marker, NOT parquet inference: an empty
@@ -476,8 +446,7 @@ object Dedup {
              |INTO $numBuckets BUCKETS
              |LOCATION '$outDir/$comp'""".stripMargin)
       }
-      viewPrefix.foreach(p =>
-        spark.table(tbl).createOrReplaceTempView(p + suffix))
+      memo.foreach(Tables.register(spark, dir, _, spark.table(tbl)))
     }
     true
   }
@@ -843,16 +812,11 @@ object Dedup {
     * path: session-scoped state instead of a global map (nothing pins a
     * SparkSession), no CacheManager entry (the r2 persist leak), and the
     * checkpoint blocks die with the session. */
-  def sharedJaccardPairs(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_jaccard_pairs_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view)) {
-      val sigs = sharedSigSets(spark, dir) // may bootstrap ALL funnel views
-      if (!spark.catalog.tableExists(view))
-        jaccardOfSigSets(sigs, MaxBucketSize)
-          .localCheckpoint(eager = false)
-          .createOrReplaceTempView(view)
-    }
-    spark.table(view)
+  def sharedJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
+    // read first: it may bootstrap ALL funnel views, this one included
+    val sigs = sharedSigSets(spark, dir)
+    Tables.shared(spark, dir, "jaccard_pairs")(Seq(
+      jaccardOfSigSets(sigs, MaxBucketSize).localCheckpoint(eager = false))).head
   }
 
   def dedupJaccard(spark: SparkSession, dir: String): DataFrame = {
@@ -867,16 +831,12 @@ object Dedup {
     * corpus_curate) re-paid ~2 s of rounds even with the pairs cached.
     * In production this is the cluster-assignment table materialized
     * next to the pair table. */
-  def sharedClusters(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_clusters_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view)) {
-      import spark.implicits._
-      val pairs = sharedJaccardPairs(spark, dir) // may bootstrap ALL funnel views
-      if (!spark.catalog.tableExists(view))
-        clustersOf(pairs.select($"id_a", $"id_b"))
-          .createOrReplaceTempView(view)
-    }
-    spark.table(view)
+  def sharedClusters(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // read first: it may bootstrap ALL funnel views, this one included
+    val pairs = sharedJaccardPairs(spark, dir)
+    Tables.shared(spark, dir, "clusters")(Seq(
+      clustersOf(pairs.select($"id_a", $"id_b")))).head
   }
 
   val dedupJaccardSql: String =

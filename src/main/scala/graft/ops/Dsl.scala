@@ -84,7 +84,7 @@ object Dsl {
     * — safe because a share is an optimization, never a correctness
     * requirement: an evicted frame's lineage simply recomputes — and
     * (b) [[releasePersisted]] drops everything, wired into
-    * `Search.invalidate`, so a long-lived session serving many
+    * `Tables.invalidate`, so a long-lived session serving many
     * agg/msearch calls does not accumulate disk-cached blocks for the
     * app lifetime. */
   private val persistedFrames =
@@ -128,7 +128,7 @@ object Dsl {
   }
 
   /** Unpersist every shared frame (lineage keeps later actions
-    * correct — they recompute). Called by `Search.invalidate`
+    * correct — they recompute). Called by `Tables.invalidate`
     * and usable directly by a serving layer between batches. */
   def releasePersisted(): Unit = synchronized {
     persistedFrames.dequeueAll(_ => true)

@@ -173,23 +173,11 @@ object Pq {
   }
 
   /** Session-shared trained codebooks for the corpus at `dir` — ONE
-    * train per (session, corpus), the [[Dedup]] sharedSigSets pattern;
-    * dropped by [[invalidate]] on corpus rewrite. */
-  private def sharedPqRows(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_pq_rows_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view))
-      pqRowsAt(Tables.embeddings(spark, dir), PqIters)
-        .createOrReplaceTempView(view)
-    spark.table(view)
-  }
-
-  /** Corpus-rewrite hook (called from [[Dedup.invalidate]], the one
-    * entry point). */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    spark.catalog.dropTempView(
-      "graft_pq_rows_" + graft.Tables.viewSuffix(dir))
-    ()
-  }
+    * train per (session, corpus), a [[Tables.shared]] memo; dropped by
+    * [[Tables.invalidate]] on corpus rewrite. */
+  private def sharedPqRows(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "pq_rows")(Seq(
+      pqRowsAt(Tables.embeddings(spark, dir), PqIters))).head
 
   /** Registered query: the trained codebooks, row form (sub, cluster,
     * 1-based pos, exact mean) — [[Similarity.kmeansCentroids]]'s shape

@@ -1027,7 +1027,7 @@ object Search {
     // ~input-sized local-disk blocks for the duration of one query vs
     // six full corpus scans + regex passes; the ring
     // (Dsl.PersistedFrameCap) bounds accumulation and
-    // Search.invalidate / Dsl.releasePersisted drop it.
+    // Tables.invalidate / Dsl.releasePersisted drop it.
     val base = Dsl.share(docs
       .select($"doc_id", TextAnalysis.toks($"text").as("t")))
     val tokRows = base.select($"doc_id", explode($"t").as("token"))
@@ -1466,16 +1466,11 @@ object Search {
     * every percolator consumer (both registered forms and the bundle
     * seed), so its corpus-vocabulary derivation should not rerun per
     * query. Same corpus-version contract as every shared table
-    * (rewritten corpus dir ⇒ [[invalidate]] first). */
+    * (rewritten corpus dir ⇒ [[Tables.invalidate]] first). */
   def sharedRegistry(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val view = "graft_percreg_" + Tables.viewSuffix(dir)
-      if (!spark.catalog.tableExists(view))
-        derivedRegistry(Tables.documentsPar(spark, dir))
-          .localCheckpoint(eager = false)
-          .createOrReplaceTempView(view)
-      spark.table(view)
-    }
+    Tables.shared(spark, dir, "percreg")(Seq(
+      derivedRegistry(Tables.documentsPar(spark, dir))
+        .localCheckpoint(eager = false))).head
 
   /** Registered query: the ES percolator in its REGISTRY form — match
     * every document against the stored query set (search inverted:
@@ -3251,35 +3246,13 @@ object Search {
     pruneVersions(spark, indexDir, Set(ver) ++ keepPrev)
   }
 
-  /** Session-built index roots, keyed (appId, corpus dir) — rebuilt
-    * once per JVM so stale on-disk state from a dead session can never
-    * serve (the sharedKmeansRows freshness stance, applied to
-    * filesystem artifacts). */
-  private val builtIndexes =
-    scala.collection.mutable.Set.empty[(String, String)]
-
-  private[ops] def sharedIndexDir(spark: SparkSession, dir: String): String = synchronized {
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_searchidx_" + Tables.viewSuffix(dir)
-    val key = (spark.sparkContext.applicationId, dir)
-    if (!builtIndexes.contains(key)) {
-      buildSearchIndex(spark, dir, root)
-      builtIndexes += key
-    }
+  /** The session-built index root of `dir` — a [[Tables.built]]
+    * artifact keyed by the corpus dir, rebuilt once per application so
+    * stale on-disk state from a dead one can never serve. */
+  private[ops] def sharedIndexDir(spark: SparkSession, dir: String): String = {
+    val root = Tables.artifactDir("searchidx", dir)
+    Tables.built(spark, dir)(buildSearchIndex(spark, dir, root))
     root
-  }
-
-  /** Generic session memo for a derived artifact keyed `dir + "#…"` —
-    * the [[sharedIndexDir]] discipline (build once per app per corpus,
-    * [[invalidate]] drops every `#` variant) opened to the other ops
-    * modules' artifacts (e.g. [[Similarity]]'s ANN index). */
-  private[ops] def memoArtifact(spark: SparkSession, variantKey: String)
-      (build: => Unit): Unit = synchronized {
-    val key = (spark.sparkContext.applicationId, variantKey)
-    if (!builtIndexes.contains(key)) {
-      build
-      builtIndexes += key
-    }
   }
 
   /** Registered query: [[bm25TopK]] SERVED from the persisted inverted
@@ -3339,26 +3312,24 @@ object Search {
     * them): the corpus splits by the deterministic
     * [[withPersistDate]] date into [[PersistDays]] per-day indices,
     * and [[AliasFile]] points at the set. Memoized like
-    * [[sharedIndexDir]] under `dir + "#daily"` (so [[invalidate]]
-    * drops it too). Returns (member dirs, alias path). */
+    * [[sharedIndexDir]] under `dir + "#daily"` (so
+    * [[Tables.invalidate]] drops it too). Returns (member dirs, alias
+    * path). */
   private[ops] def sharedDailyIndexDirs(spark: SparkSession,
-      dir: String): (Seq[String], String) = synchronized {
+      dir: String): (Seq[String], String) = {
     import spark.implicits._
-    val base = sys.props("java.io.tmpdir") +
-      "/graft_dailyidx_" + Tables.viewSuffix(dir)
+    val base = Tables.artifactDir("dailyidx", dir)
     val dates = (0 until PersistDays).map(d =>
       java.time.LocalDate.parse(PersistEpoch).plusDays(d.toLong).toString)
     val dirs = dates.map(d => s"$base/idx-$d")
     val alias = s"$base/$AliasFile"
-    val key = (spark.sparkContext.applicationId, dir + "#daily")
-    if (!builtIndexes.contains(key)) {
+    Tables.built(spark, dir + "#daily") {
       val docs = withPersistDate(Tables.documentsPar(spark, dir))
       dates.zip(dirs).foreach { case (d, out) =>
         buildSearchIndexOf(
           docs.filter($"persist_date" === to_date(lit(d))), out)
       }
       writeAlias(spark, alias, dirs)
-      builtIndexes += key
     }
     (dirs, alias)
   }
@@ -3391,26 +3362,23 @@ object Search {
     * retained days). The engine indexes [[IngestWindowDates]] of the
     * events fixture's dates ([[Ingest.ingestDocs]] shape: docmeta
     * carries the NESTED tags array alongside persist_date). Memoized
-    * under `dir + "#ingestdaily"` so [[invalidate]] drops it. Returns
-    * (member dirs, alias path). */
+    * under `dir + "#ingestdaily"` so [[Tables.invalidate]] drops it.
+    * Returns (member dirs, alias path). */
   val IngestWindowDates: Seq[String] =
     Seq("2024-01-01", "2024-01-02", "2024-01-03")
 
   private[ops] def sharedIngestDailyIndexDirs(spark: SparkSession,
-      dir: String): (Seq[String], String) = synchronized {
+      dir: String): (Seq[String], String) = {
     import spark.implicits._
-    val base = sys.props("java.io.tmpdir") +
-      "/graft_ingestidx_" + Tables.viewSuffix(dir)
+    val base = Tables.artifactDir("ingestidx", dir)
     val dirs = IngestWindowDates.map(d => s"$base/idx-$d")
     val alias = s"$base/$AliasFile"
-    val key = (spark.sparkContext.applicationId, dir + "#ingestdaily")
-    if (!builtIndexes.contains(key)) {
+    Tables.built(spark, dir + "#ingestdaily") {
       val docs = Ingest.ingestDocs(spark, dir)
       IngestWindowDates.zip(dirs).foreach { case (d, out) =>
         buildSearchIndexOf(docs.filter($"persist_date" === d), out)
       }
       writeAlias(spark, alias, dirs)
-      builtIndexes += key
     }
     (dirs, alias)
   }
@@ -3439,25 +3407,4 @@ object Search {
   def facetsMulti(spark: SparkSession, dir: String): DataFrame =
     facetsAcrossIndexes(spark, sharedDailyIndexDirs(spark, dir)._1,
       QueryTerms)
-
-  /** Drop EVERY session-shared index memo for `dir` — the plain key
-    * AND all `dir + "#…"` variants (the daily layout's `#daily`, any
-    * future memo) — so a
-    * corpus mutation followed by invalidate() can never leave a
-    * variant serving stale bytes while its oracle reads fresh ones.
-    * The next consumer of each rebuilds from the directory's current
-    * bytes. */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val app = spark.sparkContext.applicationId
-    builtIndexes.filterInPlace { case (a, d) =>
-      !(a == app && (d == dir || d.startsWith(dir + "#")))
-    }
-    spark.catalog.dropTempView("graft_percreg_" + Tables.viewSuffix(dir))
-    // also drop the Dsl barrier-frame persists — same lifecycle: a
-    // corpus mutation invalidates them, and a long-lived serving
-    // session must not accumulate disk blocks (lineage keeps any
-    // still-lazy consumer correct; it recomputes)
-    Dsl.releasePersisted()
-    ()
-  }
 }

@@ -135,15 +135,12 @@ object Select {
   /** Session-shared per-doc DSIR weight frame for the corpus at `dir`
     * — ONE model build + probe per (session, corpus), the
     * [[Classifier.sharedFit]] convention, consumed by `dsir_weights`,
-    * `dsir_sample`, and `ensemble_select`; dropped by [[invalidate]]
-    * from the [[Dedup.invalidate]] corpus-rewrite entry point. */
-  private def sharedDsirRows(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_dsir_w_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view))
+    * `dsir_sample`, and `ensemble_select`; dropped by the
+    * [[Tables.invalidate]] corpus-rewrite entry point. */
+  private def sharedDsirRows(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "dsir_w")(Seq(
       dsirWeightRowsOf(Tables.documentsPar(spark, dir))
-        .localCheckpoint(eager = false).createOrReplaceTempView(view)
-    spark.table(view)
-  }
+        .localCheckpoint(eager = false))).head
 
   /** The trained DSIR model: the B-row (b, r_b) bucket-ratio table —
     * one conditional-count aggregate over the pool, p (target) and q
@@ -285,14 +282,11 @@ object Select {
   /** Session-shared scored frame — the LM model trained and probed
     * ONCE per (session, corpus), consumed by `lm_buckets` and
     * `ensemble_select` (20 bytes/doc checkpointed; dropped by
-    * [[invalidate]]). */
-  private def sharedLmScored(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_lm_scored_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view))
+    * [[Tables.invalidate]]). */
+  private def sharedLmScored(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "lm_scored")(Seq(
       lmScoredOf(Tables.documentsPar(spark, dir))
-        .localCheckpoint(eager = false).createOrReplaceTempView(view)
-    spark.table(view)
-  }
+        .localCheckpoint(eager = false))).head
 
   /** Histogram bars + labeling over a scored frame. */
   private def lmBucketsOfScored(scored: DataFrame): DataFrame = {
@@ -588,24 +582,11 @@ object Select {
     * corpus scan of the mixture family, built ONCE per (session,
     * corpus) and consumed by `mix_weights`, `mix_sample`, and
     * `anneal_schedule` (all further work is D-row sweeps); dropped by
-    * [[invalidate]]. */
-  private def sharedMixDom(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_mix_dom_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view))
+    * [[Tables.invalidate]]. */
+  private def sharedMixDom(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "mix_dom")(Seq(
       domainRows(Tables.documentsPar(spark, dir))
-        .localCheckpoint(eager = false).createOrReplaceTempView(view)
-    spark.table(view)
-  }
-
-  /** Drop the session-shared DSIR/LM/mixture materializations for the
-    * corpus at `dir` (called from [[Dedup.invalidate]], the one
-    * corpus-rewrite entry point). */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    Seq("graft_dsir_w_", "graft_lm_scored_", "graft_mix_dom_")
-      .foreach(p => spark.catalog.dropTempView(p + suffix))
-    ()
-  }
+        .localCheckpoint(eager = false))).head
 
   /** `sweeps` multiplicative-weight updates from an arbitrary weight
     * table — the seam that lets [[annealSchedule]] serve both phases

@@ -468,14 +468,13 @@ object Similarity {
       .filter(b => java.lang.Long.bitCount(b ^ queryBucket) <= radius)
 
   /** Session-shared [[persistIndex]] artifact for `dir` — built once
-    * per app ([[Search.memoArtifact]], key `dir + "#ann"`, dropped by
-    * `Search.invalidate`); the serving-side twin of the ingest-side
+    * per app ([[Tables.built]], key `dir + "#ann"`, dropped by
+    * [[Tables.invalidate]]); the serving-side twin of the ingest-side
     * index builds. */
   private[ops] def sharedAnnIndexDir(spark: SparkSession,
       dir: String): String = {
-    val root = sys.props("java.io.tmpdir") +
-      "/graft_annidx_" + graft.Tables.viewSuffix(dir)
-    Search.memoArtifact(spark, dir + "#ann")(persistIndex(spark, dir, root))
+    val root = Tables.artifactDir("annidx", dir)
+    Tables.built(spark, dir + "#ann")(persistIndex(spark, dir, root))
     root
   }
 
@@ -889,14 +888,11 @@ object Similarity {
     * derived from DATA rather than labels. */
   /** Session-shared trained quantizer rows for the corpus at `dir` —
     * ONE Lloyd's train per (session, corpus), consumed by both kmeans
-    * queries (the [[Dedup.sharedSigSets]] pattern; dropped by
-    * [[invalidate]] on corpus rewrite). */
-  private def sharedKmeansRows(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val view = "graft_kmeans_rows_" + graft.Tables.viewSuffix(dir)
-    if (!spark.catalog.tableExists(view))
-      kmeansRows(Tables.embeddings(spark, dir)).createOrReplaceTempView(view)
-    spark.table(view)
-  }
+    * queries (a [[Tables.shared]] memo, like [[Dedup.sharedSigSets]];
+    * dropped by [[Tables.invalidate]] on corpus rewrite). */
+  private def sharedKmeansRows(spark: SparkSession, dir: String): DataFrame =
+    Tables.shared(spark, dir, "kmeans_rows")(Seq(
+      kmeansRows(Tables.embeddings(spark, dir)))).head
 
   def kmeansCentroids(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1011,40 +1007,16 @@ object Similarity {
   def semanticDedup(spark: SparkSession, dir: String): DataFrame =
     dedupOfAssigned(sharedAssignments(spark, dir))
 
-  /** View name of the session-shared assignment table.
-    * [[graft.Tables.viewSuffix]] already embeds the collision-proof
-    * md5 fragment of the raw dir (the ADVICE-r6 fix lives THERE now),
-    * so every shared-view site — this one included — derives its name
-    * from that one function. */
-  private def assignView(dir: String): String =
-    "graft_semassign_" + graft.Tables.viewSuffix(dir)
-
   /** Session-shared (vec_id, embedding, n2, cluster, cscore) assignment
     * table — built once per (session, corpus) with a deferred
     * localCheckpoint, shared by [[semanticDedup]]'s three consumers.
     * Same corpus-version contract as Dedup.sharedSigSets: rewriting the
-    * corpus dir in place requires [[invalidate]] before reading again. */
+    * corpus dir in place requires [[Tables.invalidate]] before reading
+    * again. */
   def sharedAssignments(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val view = assignView(dir)
-      if (!spark.catalog.tableExists(view))
-        assignmentsOf(Tables.embeddings(spark, dir))
-          .localCheckpoint(eager = false)
-          .createOrReplaceTempView(view)
-      spark.table(view)
-    }
-
-  /** Drop the session-shared assignment view for the corpus at `dir` —
-    * the [[sharedAssignments]] half of Dedup.invalidate's contract (and
-    * called BY it: one corpus-rewrite entry point drops every derived
-    * materialization). The next consumer rebuilds from the directory's
-    * current bytes. */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    spark.catalog.dropTempView(assignView(dir))
-    spark.catalog.dropTempView(
-      "graft_kmeans_rows_" + graft.Tables.viewSuffix(dir))
-    ()
-  }
+    Tables.shared(spark, dir, "semassign")(Seq(
+      assignmentsOf(Tables.embeddings(spark, dir))
+        .localCheckpoint(eager = false))).head
 
   /** [[semanticDedup]] over an arbitrary (vec_id, embedding, label)
     * frame with label-derived centroids — the test seam (no session

@@ -278,33 +278,19 @@ object Unigram {
 
   /** Session-shared trained model for the corpus at `dir` — counts and
     * the per-word segmentation table under them (ONE train per
-    * (session, corpus); dropped by [[invalidate]] from
-    * [[Dedup.invalidate]]). */
-  private def sharedTrain(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    val cv = "graft_ug_cnt_" + suffix
-    val nv = "graft_ug_seg_" + suffix
-    if (!spark.catalog.tableExists(cv) || !spark.catalog.tableExists(nv)) {
+    * (session, corpus); dropped by [[Tables.invalidate]]). */
+  private def sharedTrain(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val Seq(cnt, seg) = Tables.shared(spark, dir, "ug_cnt", "ug_seg") {
       import spark.implicits._
       val docs = Tables.documentsPar(spark, dir)
       val words = wordHist(docs).localCheckpoint(eager = false)
       val cnt = trainedFrom(words, UgSweeps).localCheckpoint(eager = false)
-      cnt.createOrReplaceTempView(cv)
-      withCells(words, probsRow(cnt))
+      Seq(cnt, withCells(words, probsRow(cnt))
         .select($"word",
           element_at($"cells", length($"word") + 1)("np").as("np"))
-        .localCheckpoint(eager = false)
-        .createOrReplaceTempView(nv)
+        .localCheckpoint(eager = false))
     }
-    (spark.table(cv), spark.table(nv))
-  }
-
-  /** Corpus-rewrite hook (chained from [[Dedup.invalidate]]). */
-  def invalidate(spark: SparkSession, dir: String): Unit = synchronized {
-    val suffix = graft.Tables.viewSuffix(dir)
-    Seq("graft_ug_cnt_", "graft_ug_seg_")
-      .foreach(p => spark.catalog.dropTempView(p + suffix))
-    ()
+    (cnt, seg)
   }
 
   /** Registered query: the trained unigram vocabulary (piece, count)

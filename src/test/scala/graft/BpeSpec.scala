@@ -228,7 +228,7 @@ class BpeSpec extends SparkSpec {
     Bpe.bpeTrain(spark, sfDir).collect()
     assert(spark.catalog.tableExists("graft_bpe_vocab_" + suffix))
     assert(spark.catalog.tableExists("graft_bpe_merges_" + suffix))
-    graft.ops.Dedup.invalidate(spark, sfDir)
+    graft.Tables.invalidate(spark, sfDir)
     assert(!spark.catalog.tableExists("graft_bpe_vocab_" + suffix))
     assert(!spark.catalog.tableExists("graft_bpe_merges_" + suffix))
   }

@@ -102,10 +102,10 @@ class DedupSpec extends SparkSpec {
     // documented corpus-version contract: without invalidation the session
     // keeps serving the signatures of the old bytes
     assert(Dedup.sharedSigSets(spark, dir).count() == 4)
-    Dedup.invalidate(spark, dir)
+    Tables.invalidate(spark, dir)
     assert(Dedup.sharedSigSets(spark, dir).count() == 7,
       "invalidate did not force a re-read of the rewritten corpus")
-    Dedup.invalidate(spark, dir) // idempotent on absent views
+    Tables.invalidate(spark, dir) // idempotent on absent views
   }
 
   test("a second funnel consumer triggers zero new file-scan stages (shared materialization)") {
@@ -360,7 +360,7 @@ class DedupSpec extends SparkSpec {
       assert(joined.count() == gotClus.size.toLong)
     } finally s2.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
     // cleanup of this corpus's catalog entries in the main session
-    Dedup.invalidate(spark, dir)
+    Tables.invalidate(spark, dir)
   }
 
   test("appendToFunnel: arrival batches extend the durable funnel in place") {
@@ -400,7 +400,7 @@ class DedupSpec extends SparkSpec {
     intercept[IllegalStateException] {
       Dedup.appendToFunnel(spark, "/nonexistent/corpus", funnelDir, batch)
     }
-    Dedup.invalidate(spark, dir)
+    Tables.invalidate(spark, dir)
   }
 
   test("refreshFunnel: append + refresh == persistFunnel from scratch, component-wise") {
@@ -451,8 +451,8 @@ class DedupSpec extends SparkSpec {
     for (comp <- Seq("signatures", "postings", "boilerplate", "pairs", "clusters"))
       assert(normed(dirA, comp) == normed(dirB, comp),
         s"component $comp differs between append+refresh and from-scratch")
-    Dedup.invalidate(spark, dirA)
-    Dedup.invalidate(spark, dirB)
+    Tables.invalidate(spark, dirA)
+    Tables.invalidate(spark, dirB)
   }
 
   test("bootstrapFunnel refuses a funnel built from a different corpus") {
@@ -468,7 +468,7 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.bootstrapFunnel(s2, "/some/other/corpus", funnelDir),
       "funnel served a corpus it was not built from")
     assert(Dedup.bootstrapFunnel(s2, dir, funnelDir))
-    Dedup.invalidate(spark, dir)
+    Tables.invalidate(spark, dir)
   }
 
   test("containmentAgainst flags an arrival doc quoting a corpus doc") {

@@ -125,7 +125,7 @@ class MixtureSpec extends SparkSpec {
     val first = Select.mixWeights(spark, dir).collect()
       .map(r => r.getString(0) -> r.getDouble(3)).toMap
     writeDocs(flip = true)
-    graft.ops.Dedup.invalidate(spark, dir)
+    graft.Tables.invalidate(spark, dir)
     val second = Select.mixWeights(spark, dir).collect()
       .map(r => r.getString(0) -> r.getDouble(3)).toMap
     // flipping which domain carries the rare text must flip the tilt

@@ -259,7 +259,7 @@ class PqSpec extends SparkSpec {
     writeEmb(1)
     val first = Pq.pqCodebooks(spark, dir).collect()
     writeEmb(5)
-    graft.ops.Dedup.invalidate(spark, dir)
+    graft.Tables.invalidate(spark, dir)
     val second = Pq.pqCodebooks(spark, dir).collect()
     assert(!first.sameElements(second),
       "rewritten corpus must retrain the codebooks, not serve the stale view")

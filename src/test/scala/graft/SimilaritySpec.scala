@@ -405,9 +405,9 @@ class SimilaritySpec extends SparkSpec {
     val stale = Similarity.sharedAssignments(spark, dir)
       .select($"vec_id", $"cscore").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(stale == before, "shared view unexpectedly re-read the rewritten corpus")
-    // Dedup.invalidate is the one corpus-rewrite entry point — it must
+    // Tables.invalidate is the one corpus-rewrite entry point — it must
     // drop the semantic assignment view too (ADVICE r6)
-    Dedup.invalidate(spark, dir)
+    Tables.invalidate(spark, dir)
     val after = Similarity.sharedAssignments(spark, dir)
       .select($"vec_id", $"cscore").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(after != before, "post-invalidate assignments still reflect the old bytes")
@@ -433,8 +433,8 @@ class SimilaritySpec extends SparkSpec {
     val b = Similarity.sharedAssignments(spark, dirB)
       .select($"vec_id", $"cscore").collect().map(_.getDouble(1)).toSeq
     assert(a != b, "colliding view names served one corpus's assignments for the other")
-    Similarity.invalidate(spark, dirA)
-    Similarity.invalidate(spark, dirB)
+    Tables.invalidate(spark, dirA)
+    Tables.invalidate(spark, dirB)
   }
 
   test("semantic_incremental screens every batch vector against the corpus slice only") {

@@ -135,7 +135,7 @@ class UnigramSpec extends SparkSpec {
     write("abcd")
     val first = Unigram.unigramVocab(spark, dir).collect().map(_.getString(0)).toSet
     write("wxyz")
-    graft.ops.Dedup.invalidate(spark, dir)
+    graft.Tables.invalidate(spark, dir)
     val second = Unigram.unigramVocab(spark, dir).collect().map(_.getString(0)).toSet
     assert(first.contains("abcd") && !second.contains("abcd") && second.contains("wxyz"),
       s"rewritten corpus must retrain the vocabulary: $first vs $second")
