@@ -6177,13 +6177,13 @@ object Dsl {
     }
   }
 
-  /** The shared ranking tail of BOTH serving paths: broadcast-join
-    * the stats (when any), filter, top-k by (score desc, doc_id),
-    * emit the rank-plus-integer-provenance shape — (rk, doc_id,
-    * n_matched, tf_total, dl), the [[Search.bm25TopK]] convention
-    * (the double score stays internal; see Search's class doc). */
-  private def rankTail(f: DataFrame, stats: Option[DataFrame],
-      p: Plan): DataFrame = {
+  /** The gated scored rows of a plan, before any ranking: broadcast-
+    * join the stats (when any), keep the matching docs and project
+    * (doc_id, dl, n_matched, tf_total, score) plus the columns the
+    * ranking and the page need, then `keep`. [[rankTail]] ranks them;
+    * [[scored]] hands them to callers that read the score itself. */
+  private def scoredRows(f: DataFrame, stats: Option[DataFrame],
+      p: Plan, keep: Seq[Column] = Seq.empty): DataFrame = {
     import f.sparkSession.implicits._
     val joined = stats.map(s => f.crossJoin(broadcast(s))).getOrElse(f)
     // the score expression references stat columns — it exists only
@@ -6206,16 +6206,6 @@ object Dsl {
     val reserved = Seq("doc_id", "dl", "n_matched", "tf_total", "score")
     val extraCols = (p.sortFields ++ p.source.getOrElse(Seq.empty) ++
       p.collapse.toSeq).distinct.filterNot(reserved.contains)
-    // explicit NULLS LAST on sort keys — ES's missing:_last default,
-    // and DuckDB's own default, so both engines agree on null docs
-    def sortCol(fld: String, asc: Boolean): Column = {
-      val c0 = if (fld == "_score") $"score" else col(fld)
-      if (asc) c0.asc_nulls_last else c0.desc_nulls_last
-    }
-    val ord: Seq[Column] =
-      (if (p.sortKeys.isEmpty) Seq($"score".desc)
-       else p.sortKeys.map((sortCol _).tupled)) :+ $"doc_id".asc
-    val w = Window.orderBy(ord: _*)
     // keyset paging filters BEFORE the top-k — the skipped prefix
     // never materializes, the whole point of search_after; the page's
     // rk restarts at 1 (ES's search_after responses carry no offset).
@@ -6243,7 +6233,7 @@ object Dsl {
     val scoredRows0 = joined.filter(gate)
       .select(($"doc_id" +: dlC.as("dl") +: nMatched.as("n_matched") +:
         tfTotal.as("tf_total") +: score.as("score") +:
-        (rsc ++ extraCols.map(col) ++ sfCols ++ ihCols)): _*)
+        (rsc ++ extraCols.map(col) ++ sfCols ++ ihCols ++ keep)): _*)
     // min_score floors hits by the computed score (planOfBody refuses
     // it where no score exists)
     val floored = p.minScore
@@ -6252,10 +6242,30 @@ object Dsl {
     // track_total_hits: the exact pre-page hit count rides every row
     // as a column — ONE broadcast 1-row aggregate over the match set
     // (what ES pays for a tracked total), never a window over it
-    val scoredRows =
-      if (!p.trackTotal) floored
-      else floored.crossJoin(broadcast(
-        floored.agg(count(lit(1)).as("total_hits"))))
+    if (!p.trackTotal) floored
+    else floored.crossJoin(broadcast(
+      floored.agg(count(lit(1)).as("total_hits"))))
+  }
+
+  /** The shared ranking tail of BOTH serving paths: the
+    * [[scoredRows]], top-k by (score desc, doc_id), emitted in the
+    * rank-plus-integer-provenance shape — (rk, doc_id, n_matched,
+    * tf_total, dl), the [[Search.bm25TopK]] convention (the double
+    * score stays internal; see Search's class doc). */
+  private def rankTail(f: DataFrame, stats: Option[DataFrame],
+      p: Plan): DataFrame = {
+    import f.sparkSession.implicits._
+    val rows = scoredRows(f, stats, p)
+    // explicit NULLS LAST on sort keys — ES's missing:_last default,
+    // and DuckDB's own default, so both engines agree on null docs
+    def sortCol(fld: String, asc: Boolean): Column = {
+      val c0 = if (fld == "_score") $"score" else col(fld)
+      if (asc) c0.asc_nulls_last else c0.desc_nulls_last
+    }
+    val ord: Seq[Column] =
+      (if (p.sortKeys.isEmpty) Seq($"score".desc)
+       else p.sortKeys.map((sortCol _).tupled)) :+ $"doc_id".asc
+    val w = Window.orderBy(ord: _*)
     // field collapsing: each group's best-ranked doc survives BEFORE
     // the page cut — a per-key window (rank state is per-group top-1,
     // never a global distinct); docs missing the field share one null
@@ -6263,9 +6273,9 @@ object Dsl {
     val collapsed = p.collapse match {
       case Some(cf) =>
         val wg = Window.partitionBy(col(cf)).orderBy(ord: _*)
-        scoredRows.withColumn("g_rn", row_number().over(wg))
+        rows.withColumn("g_rn", row_number().over(wg))
           .filter($"g_rn" === 1).drop("g_rn")
-      case None => scoredRows
+      case None => rows
     }
     val ranked = p.rescore match {
       case Some(Rescore(_, wdw, qw, rw2)) =>
@@ -6328,6 +6338,19 @@ object Dsl {
     val c = srcR.features(p)
     val page = rankTail(c.f, c.stats, p)
     p.highlight.map(highlightJoin(srcR.stored, page, p, _)).getOrElse(page)
+  }
+
+  /** The hits compiler's gated scored rows ([[scoredRows]]) — (doc_id,
+    * dl, n_matched, tf_total, score) of every matching doc, unranked,
+    * plus tf1..tfk: each distinct (field, term) match key's tf, in
+    * first-appearance order ([[tkeysOf]]). The seam for callers that
+    * page or fuse on the score itself. */
+  private[ops] def scored(src: Source, b: Body): DataFrame = {
+    val srcR = src.runtime(b)
+    val p = planOfBody(b)
+    val c = srcR.features(p)
+    scoredRows(c.f, c.stats, p, p.tkeys.map { k =>
+      col(s"qtf${p.tfIdx(k)}").as(s"tf${p.tfIdx(k)}") })
   }
 
   /** The FETCH phase of highlighting: snippets compute for the PAGE's
@@ -10486,13 +10509,20 @@ object Dsl {
     * matches; otherwise the doc-grain docmeta table (a pure
     * doc-values filter — ES's filter-context execution). Tombstoned
     * docs are excluded from results; statistics keep them until
-    * compaction (Lucene's docFreq-includes-deletes convention, the
-    * [[Search.searchWithIndex]] stance).
+    * compaction (Lucene's docFreq-includes-deletes convention, which
+    * every served ranker of [[Search]] keeps too).
     *
     * Multi-index: every table unions across the resolved roots and
-    * the statistics derive from the union — [[Search.scoredFromIndexes]]'
-    * merged-statistics contract, so a DSL query across an alias's
-    * daily indices ranks exactly as one index.
+    * the statistics derive from the union — how ES serves an alias or
+    * `idx1,idx2` target: per-shard statistics merge into global ones
+    * before scoring, so a query across an alias's daily indices ranks
+    * exactly as one index. That holds only while a doc_id lives in
+    * exactly one member; [[servedStats]] refuses overlapping members.
+    *
+    * Search's served `match` entry points ([[Search.searchWithIndex]],
+    * [[Search.searchAcrossIndexes]], the search_after pages and
+    * cursors, the hybrid text leg and the expansion feedback leg)
+    * compile through this source too ([[scored]]).
     *
     * Shape at 100 TB: postings reads prune to ≤ |query terms| of
     * [[Search.IndexBuckets]] buckets with pushed term filters;
@@ -10775,8 +10805,12 @@ object Dsl {
     // ---- candidate universe
     val needDl = p.needsText
     val needHdl = p.scoredFields.contains(Search.HeadField)
+    // a text-bound plan reading no doc-value needs no docmeta row: its
+    // candidates are the postings matches (a plain match never reads
+    // docmeta)
     val base = (feat, requiresText(p.q)) match {
-      case (Some(ft), true) => ft.join(meta, "doc_id")
+      case (Some(ft), true) =>
+        if (metaFields.isEmpty) ft else ft.join(meta, "doc_id")
       case (Some(ft), false) =>
         meta.join(ft, Seq("doc_id"), "left").na.fill(0, featCols)
       case (None, _) => meta
@@ -10803,14 +10837,22 @@ object Dsl {
     import spark.implicits._
     if (!p.needsStats) None
     else {
+      // N counts docmeta rows when keyword dfs read its doc-values;
+      // otherwise the scored text field's doclen rows (one per doc, as
+      // in docmeta), folded into the Σdl aggregate that reads them
+      // anyway
+      val nFromDl = p.skts.isEmpty &&
+        p.scoredFields.contains(Search.DefaultField)
       val nAgg = {
         val cols = Seq(count(lit(1)).as("n")) ++
           (if (multi)
             Seq(countDistinct($"doc_id").as("graft_nd")) else Seq.empty) ++
+          (if (nFromDl) Seq(sum($"dl").as("sumdl")) else Seq.empty) ++
           p.skts.map { case kt @ (fld, v) =>
             count(when(col(fld) === v.column, 1)).as(s"qkd${p.ktIdx(kt)}")
           }
-        val agged = parts.meta.groupBy().agg(cols.head, cols.tail: _*)
+        val agged = (if (nFromDl) parts.dlen(Search.DefaultField, "dl")
+          else parts.meta).groupBy().agg(cols.head, cols.tail: _*)
         if (multi)
           agged.select(
             (when($"n" === $"graft_nd", $"n")
@@ -10824,7 +10866,7 @@ object Dsl {
         else agged
       }
       val pieces = Seq(nAgg) ++
-        (if (p.scoredFields.contains(Search.DefaultField))
+        (if (p.scoredFields.contains(Search.DefaultField) && !nFromDl)
           Seq(parts.dlen(Search.DefaultField, "dl")
             .agg(sum($"dl").as("sumdl")))
         else Seq.empty) ++
@@ -13055,7 +13097,7 @@ object Dsl {
     * retriever shape): the text leg is the ordinary DSL page (rank =
     * rk), the vector leg is [[dslKnnOf]]'s exact cosine ranked to the
     * knn k, fused top-`size` by Σ 1/(rank_constant + rank) — the
-    * [[Search.hybridRrf]] arithmetic with the DSL as both front-ends.
+    * one fusion [[Search.rrf]], with the DSL as both front-ends.
     *
     * Shape at 100 TB: each leg reduces to a ≤ window/k-row list
     * before fusion (one scan each; the vector leg's window sort runs
@@ -13098,12 +13140,7 @@ object Dsl {
       | "k": ${kn.k}}}""".stripMargin)
       .withColumn("r_vec", row_number().over(w))
       .select(col("vec_id").as("doc_id"), col("r_vec"))
-    text.join(vec, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("r_text"), col("r_vec"),
-        (coalesce(lit(1.0) / (lit(rc) + col("r_text")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rc) + col("r_vec")), lit(0.0)))
-          .as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(size)
+    Search.rrf(text, vec, rc, size)
   }
 
   /** Registered HYBRID text leg — sized to the default rrf window so

@@ -49,6 +49,12 @@ import org.apache.spark.sql.types.StructType
   * the driver).
   * The only windows run AFTER a limit, over ≤ pool rows (the bounded
   * single-partition-window convention of PLANS.md).
+  *
+  * Served from the persisted index, a BM25 `match` over raw terms
+  * ([[searchWithIndex]] and its multi-index, paging, hybrid and
+  * feedback callers) compiles through the DSL's one served engine,
+  * [[Dsl.Served]]; the scan path here ([[bm25ScoredOf]]) is the
+  * reference it is tested against.
   */
 object Search {
 
@@ -103,17 +109,13 @@ object Search {
 
   // ---------------------------------------------------------------- BM25
 
-  /** Per-doc BM25 frame over an arbitrary documents frame: doc_id,
-    * dl, per-term tfs, n_matched, tf_total, score. One scan + one
-    * broadcast 1-row stats aggregate (N, Σdl, df per term) — the
-    * corpus is never scanned twice and nothing doc×term-grained
-    * shuffles. */
   /** The ONE BM25 score expression, shared verbatim by the scan path
-    * ([[bm25ScoredOf]]) and the index serving path
-    * ([[searchWithIndex]]) so their arithmetic — and therefore their
-    * rankings — are bit-identical by construction, not by test alone.
-    * Expects columns tf1..tfk (integral), df1..dfk, n, sumdl, dl in
-    * scope. Literal discipline per class doc. */
+    * ([[bm25ScoredOf]]), the DSL's `match` scoring (scan and served,
+    * which answers [[searchWithIndex]]) and the served rankers here, so
+    * their arithmetic — and therefore their rankings — are
+    * bit-identical by construction, not by test alone. Expects columns
+    * tf1..tfk (integral), df1..dfk, n, sumdl, dl in scope. Literal
+    * discipline per class doc. */
   private[graft] def bm25ScoreOf(k: Int, tf: Int => Column, df: Int => Column,
       dl: Column, sumdl: Column, n: Column): Column = {
     val avgdl = sumdl.cast("double") / n.cast("double")
@@ -136,6 +138,12 @@ object Search {
   private def tfTotalCol(k: Int): Column =
     (0 until k).map(i => col(s"tf${i + 1}")).reduce(_ + _)
 
+  /** Per-doc BM25 frame over an arbitrary documents frame: doc_id,
+    * dl, n_matched, tf_total, score. One scan + one broadcast 1-row
+    * stats aggregate (N, Σdl, df per term) — the corpus is never
+    * scanned twice and nothing doc×term-grained shuffles. The
+    * reference implementation every served BM25 `match` is tested
+    * against. */
   private[graft] def bm25ScoredOf(docs: DataFrame, terms: Seq[String]): DataFrame = {
     import docs.sparkSession.implicits._
     val nt = TextAnalysis.norm($"text")
@@ -154,16 +162,20 @@ object Search {
         nMatchedCol(terms.size).as("n_matched"), bm25Score(terms.size).as("score"))
   }
 
-  /** Ranked candidate list (doc_id, rk) for the fusion: matched docs
-    * ordered by (score desc, doc_id), cut to `pool`, then ranked by a
-    * window over those ≤ pool rows (bounded single partition). */
+  /** Ranked candidate list for the fusion: matched docs ordered by
+    * (score desc, doc_id), cut to `pool`, then ranked by a window over
+    * those ≤ pool rows (bounded single partition). */
   private[graft] def bm25RankedOf(docs: DataFrame, terms: Seq[String],
-      pool: Int, rkName: String): DataFrame = {
-    import docs.sparkSession.implicits._
-    val w = Window.orderBy($"score".desc, $"doc_id")
-    bm25ScoredOf(docs, terms)
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(pool)
+      pool: Int, rkName: String): DataFrame =
+    topRanked(bm25ScoredOf(docs, terms).filter(col("n_matched") > 0), pool,
+      rkName)
+
+  /** The top `pool` of matched scored rows, ranked as `rkName` — shared
+    * by the scan ([[bm25RankedOf]]) and served ([[servedScored]]) legs. */
+  private def topRanked(matched: DataFrame, pool: Int,
+      rkName: String): DataFrame = {
+    val w = Window.orderBy(col("score").desc, col("doc_id"))
+    matched.orderBy(col("score").desc, col("doc_id")).limit(pool)
       .withColumn(rkName, row_number().over(w))
   }
 
@@ -549,17 +561,30 @@ object Search {
     * before fusion, so the full-outer fusion join touches ≤ 2·pool
     * rows — driver-scale by construction; everything corpus-sized
     * happened inside the modality pipelines (one scan each). */
-  def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val text = bm25RankedOf(Tables.documentsPar(spark, dir), QueryTerms,
-      RrfPool, "r_text").select($"doc_id", $"r_text")
-    val vec = vecRankedOf(Tables.embeddings(spark, dir), RrfPool)
+  def hybridRrf(spark: SparkSession, dir: String): DataFrame =
+    hybridOf(bm25RankedOf(Tables.documentsPar(spark, dir), QueryTerms,
+      RrfPool, "r_text"), Tables.embeddings(spark, dir))
+
+  /** The hybrid body of [[hybridRrf]] and [[hybridWithIndex]], which
+    * differ only in their text leg (doc_id, r_text): the vector leg and
+    * the fusion. */
+  private def hybridOf(text: DataFrame, emb: DataFrame): DataFrame =
+    rrf(text.select(col("doc_id"), col("r_text")), vecRankedOf(emb, RrfPool),
+      RrfK, RrfTopK)
+
+  /** Reciprocal-rank fusion of a text list (doc_id, r_text) and a
+    * vector list (doc_id, r_vec): full-outer join on doc_id, score
+    * Σ 1/(k + rank) over the lists a doc is on, top `size` by
+    * (rrf desc, doc_id). The one fusion expression — the hybrid
+    * queries here and the DSL's knn hybrid ([[Dsl.dslKnnHybridOf]])
+    * call it. */
+  private[ops] def rrf(text: DataFrame, vec: DataFrame, k: Int,
+      size: Int): DataFrame =
     text.join(vec, Seq("doc_id"), "full_outer")
-      .select($"doc_id", $"r_text", $"r_vec",
-        (coalesce(lit(1.0) / (lit(RrfK) + $"r_text"), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + $"r_vec"), lit(0.0))).as("rrf"))
-      .orderBy($"rrf".desc, $"doc_id").limit(RrfTopK)
-  }
+      .select(col("doc_id"), col("r_text"), col("r_vec"),
+        (coalesce(lit(1.0) / (lit(k) + col("r_text")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(k) + col("r_vec")), lit(0.0))).as("rrf"))
+      .orderBy(col("rrf").desc, col("doc_id")).limit(size)
 
   val hybridRrfSql: String = {
     val cos = s"${Similarity.dotSql("e.embedding", "q.qv")} / " +
@@ -735,7 +760,8 @@ object Search {
     * filter-context statistics (N, Σdl, per-term df) from
     * doclen/postings joined to the same lang set. Shared scoring
     * expressions ⇒ bit-identical to the scan path (SearchSpec pins
-    * it); tombstoned docs excluded like every serving path.
+    * it); tombstoned docs leave the results but stay in the
+    * statistics until compaction, like every serving path.
     *
     * Shape at 100 TB: postings prune to the query's buckets for
     * scoring AND veto terms; the lang set is a doc-grain docmeta
@@ -750,7 +776,6 @@ object Search {
     val post = indexTable(spark, Seq(root), "postings",
         Some(allTerms.map(tokBucket)))
       .filter($"tok".isin(allTerms: _*) && $"field" === DefaultField)
-      .join(dead, Seq("doc_id"), "left_anti")
     requireFamilyColumns(spark, Seq(root), "docmeta", Seq("lang"))
     val langDocs = indexTable(spark, Seq(root), "docmeta")
       .filter($"lang" === BoolFilterLang).select($"doc_id")
@@ -759,7 +784,6 @@ object Search {
     val veto = post.filter($"tok".isin(BoolMustNot: _*)).select($"doc_id")
     val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
-      .join(dead, Seq("doc_id"), "left_anti")
       .join(langDocs, "doc_id")
       .select($"doc_id", $"dl")
     val stats = doclen.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
@@ -773,6 +797,7 @@ object Search {
     }
     val cand = scoring.groupBy($"doc_id").agg(tfCols.head, tfCols.tail: _*)
       .join(veto, Seq("doc_id"), "left_anti")
+      .join(dead, Seq("doc_id"), "left_anti")
     val mustOk = BoolMust.indices
       .map(i => col(s"tf${i + 1}") > 0).reduce(_ && _)
     val nShould = BoolShould.indices
@@ -808,7 +833,9 @@ object Search {
     * divisions use Spark's `div` with a greatest(0, ·) clamp, exact
     * for the nonneg operands here. Shared [[passageRank]] +
     * bm25Score expressions ⇒ bit-identical to the scan path
-    * (SearchSpec pins it).
+    * (SearchSpec pins it). Tombstoned docs' chunks leave the results
+    * but stay in the chunk statistics until compaction, like every
+    * serving path.
     *
     * Shape at 100 TB: postings prune to the query terms' buckets and
     * position lists explode to ≤ 2 chunk rows per occurrence
@@ -825,10 +852,8 @@ object Search {
     val post = indexTable(spark, Seq(root), "postings",
         Some(terms.map(tokBucket)))
       .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
-      .join(dead, Seq("doc_id"), "left_anti")
     val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
-      .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"dl")
     val chunks = doclen
       .select($"doc_id", $"dl",
@@ -861,6 +886,7 @@ object Search {
     }
     val dfs = cand.agg(dfCols.head, dfCols.tail: _*)
     val scored = cand
+      .join(dead, Seq("doc_id"), "left_anti")
       .join(chunks.select($"doc_id", $"chunk_id", $"cdl".as("dl")),
         Seq("doc_id", "chunk_id"))
       .crossJoin(broadcast(stats)).crossJoin(broadcast(dfs))
@@ -1058,13 +1084,15 @@ object Search {
   }
 
   /** [[queryExpansion]] served FROM the index — the full PRF loop
-    * with zero corpus-text reads: the base ranking from
-    * [[scoredFromIndex]] (bit-identical ranks), feedback-term mining
-    * as a postings aggregate over the 10 broadcast feedback doc_ids
-    * (occurrence counts = Σ stored tf), term dfs from the vocab-grain
-    * postings aggregate, and the expanded-query rescore through the
-    * shared [[mltRank]] join-BM25. Tombstoned docs excluded from
-    * every stage. SearchSpec pins bit-equality with the scan path. */
+    * with zero corpus-text reads: the base ranking from the served
+    * `match` ([[servedScored]], bit-identical ranks), feedback-term
+    * mining as a postings aggregate over the 10 broadcast feedback
+    * doc_ids (occurrence counts = Σ stored tf), term dfs from the
+    * vocab-grain postings aggregate, and the expanded-query rescore
+    * through the shared [[mltRank]] join-BM25. Tombstoned docs leave
+    * every ranking at once but stay in the statistics (N, Σdl, df)
+    * until compaction — the one served convention ([[Dsl.Served]]).
+    * SearchSpec pins bit-equality with the scan path. */
   def expansionWithIndex(spark: SparkSession, indexDir: String,
       terms: Seq[String], fbDocs: Int, fbTerms: Int, k: Int): DataFrame = {
     import spark.implicits._
@@ -1073,16 +1101,12 @@ object Search {
     val post = indexTable(spark, Seq(root), "postings")
       .filter($"field" === DefaultField)
       .select($"doc_id", $"tok", $"tf")
-      .join(dead, Seq("doc_id"), "left_anti")
     val doclen = indexTable(spark, Seq(root), "doclen")
       .filter($"field" === DefaultField)
-      .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"dl")
     val stats = doclen.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
     val dfT = post.groupBy($"tok").agg(count(lit(1)).as("df"))
-    val fb = scoredFromIndex(spark, root, terms)
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(fbDocs)
+    val fb = topRanked(servedScored(spark, Seq(root), terms), fbDocs, "rk")
       .select($"doc_id")
     // dfT referenced ONCE (r18, the queryExpansionOf restructure): the
     // fbtf ordering never needed df — every mined token is in dfT by
@@ -1097,6 +1121,7 @@ object Search {
     val wanted = expToks.unionByName(terms.toDF("tok")).distinct()
     val qterms = dfT.join(broadcast(wanted), "tok").select($"tok", $"df")
     val tf = post.join(broadcast(qterms), "tok")
+      .join(dead, Seq("doc_id"), "left_anti")
       .select($"doc_id", $"df", $"tf")
     mltRank(tf, doclen, stats, k)
   }
@@ -2353,22 +2378,6 @@ object Search {
     moreLikeThisWithIndex(spark, sharedIndexDir(spark, dir),
       MltSourceDoc, MltTerms, MltTopK)
 
-  /** BM25 served FROM the index — the corpus text is never touched.
-    * Exactly [[bm25TopK]]'s output, bit-for-bit: the tf pivot
-    * (fixed-order conditional sums per query term), the df/N/Σdl
-    * statistics, and the shared [[bm25Score]] expression reproduce the
-    * scan path's arithmetic on the same integers.
-    *
-    * Shape at 100 TB: the postings scan prunes to the ≤ k(terms) of
-    * [[IndexBuckets]] partitions holding the query's terms, then
-    * row-filters to the terms themselves (pushed to parquet); the
-    * per-doc tf pivot is one map-side-combined aggregate over those
-    * postings only; doclen joins by doc_id for the candidates
-    * (shuffle hash join — candidates are term-df-sized, not
-    * corpus-sized); N/Σdl and the per-term dfs are two 1-row
-    * broadcast aggregates. Query cost scales with the query terms'
-    * document frequency — independent of corpus breadth, which is the
-    * entire point of an inverted index. */
   /** Loud integrity gate: an index missing either table (a build that
     * never committed its pointer, or a hand-deleted half) must fail
     * with the problem named, never rank against silently-absent
@@ -2391,107 +2400,64 @@ object Search {
     root
   }
 
-  def searchWithIndex(spark: SparkSession, indexDir: String,
-      terms: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
-    val w = Window.orderBy($"score".desc, $"doc_id")
-    scoredFromIndex(spark, requireIndex(spark, indexDir), terms)
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(k)
-      .withColumn("rk", row_number().over(w))
-      .select($"rk", $"doc_id", $"n_matched", $"tf_total", $"dl")
-      .orderBy($"rk")
-  }
-
-  /** Matched-candidate frame (doc_id, dl, tf_total, n_matched, score)
-    * served from a RESOLVED version root — the shared scoring core of
-    * [[searchWithIndex]] and [[searchAfterWithIndex]] (the same
-    * frame, so a page-2 keyset filter compares against bit-identical
-    * doubles). Cost shape documented at [[searchWithIndex]]. */
-  private def scoredFromIndex(spark: SparkSession, root: String,
-      terms: Seq[String]): DataFrame =
-    scoredFromIndexes(spark, Seq(root), terms)
-
-  /** The multi-index generalization: postings, lengths, and tombstones
-    * UNION across the resolved roots and the corpus statistics
-    * (N, Σdl, per-term df) derive from the union — so a query across
-    * k indices ranks exactly as if their documents lived in ONE index
-    * (SearchSpec pins the bit-equality). This is how ES serves an
-    * alias or `idx1,idx2` target: per-shard statistics merge into
-    * global ones before scoring. Assumes the admission-screening
-    * contract every index here is built under — a doc_id lives in
-    * exactly one index — so the union never double-counts a document.
+  /** BM25 `match` served FROM the index — the corpus text is never
+    * touched: exactly [[bm25TopK]]'s ranking and output, bit-for-bit,
+    * over one index. `terms` are raw index tokens ([[servedScored]]).
     *
-    * Shape at 100 TB: the per-index reads keep their pruning (one
-    * [[indexTable]] relation over every member's bucket-pruned
-    * listing, term filters pushed to parquet),
-    * the stats stay two 1-row broadcast aggregates over the union, and
-    * candidates stay term-df-sized. Cost is the sum of the per-index
-    * query costs — independent of how many OTHER indices exist, which
-    * is why daily-index layouts page this way. */
-  private def scoredFromIndexes(spark: SparkSession, roots: Seq[String],
-      terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val post = indexTable(spark, roots, "postings", Some(terms.map(tokBucket)))
-      .filter($"tok".isin(terms: _*) && $"field" === DefaultField)
-      .select($"tok", $"doc_id", $"tf")
-    val doclen = indexTable(spark, roots, "doclen")
-      .filter($"field" === DefaultField)
-      .select($"doc_id", $"dl")
-    val dead = indexTable(spark, roots, "tombstones")
-    // the merged statistics are only correct under the disjointness
-    // contract (one index per doc_id) — ENFORCE it on the aggregate
-    // the query already pays for, folded into n so the score
-    // expressions evaluate it: an overlapping member pair refuses
-    // loudly at execution instead of silently double-counting df/N
-    val stats =
-      if (roots.size == 1)
-        doclen.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
-      else doclen
-        .agg(count(lit(1)).as("cnt"), countDistinct($"doc_id").as("nd"),
-          sum($"dl").as("sumdl"))
-        .select(
-          when($"cnt" === $"nd", $"cnt").otherwise(
-            raise_error(concat(
-              lit("searchAcrossIndexes: member indices overlap on " +
-                "doc_id — "), ($"cnt" - $"nd").cast("string"),
-              lit(" duplicated docs; indices must partition the corpus")))
-              .cast("long")).as("n"),
-          $"sumdl")
-    val dfCols = terms.zipWithIndex.map { case (t, i) =>
-      count(when($"tok" === t, 1)).as(s"df${i + 1}")
-    }
-    val dfs = post.agg(dfCols.head, dfCols.tail: _*)
-    val tfCols = terms.zipWithIndex.map { case (t, i) =>
-      coalesce(sum(when($"tok" === t, $"tf")), lit(0L)).cast("int")
-        .as(s"tf${i + 1}")
-    }
-    val cand = post.groupBy($"doc_id").agg(tfCols.head, tfCols.tail: _*)
-      .join(dead, Seq("doc_id"), "left_anti")
-    cand.join(doclen, "doc_id")
-      .crossJoin(broadcast(stats)).crossJoin(broadcast(dfs))
-      .select($"doc_id", $"dl", tfTotalCol(terms.size).as("tf_total"),
-        nMatchedCol(terms.size).as("n_matched"), bm25Score(terms.size).as("score"))
-  }
+    * Shape at 100 TB ([[Dsl.Served]]): the postings read prunes to the
+    * ≤ k(terms) of [[IndexBuckets]] partitions holding the query's
+    * terms, then row-filters to the terms themselves (pushed to
+    * parquet); candidates are term-df-sized, N/Σdl/df are 1-row
+    * broadcast aggregates. Query cost scales with the query terms'
+    * document frequency — independent of corpus breadth, which is the
+    * entire point of an inverted index. */
+  def searchWithIndex(spark: SparkSession, indexDir: String,
+      terms: Seq[String], k: Int): DataFrame =
+    searchAcrossIndexes(spark, Seq(indexDir), terms, k)
 
   /** ES multi-index search (`GET /idx1,idx2/_search`, or an alias
     * spanning daily indices): rank across every given index under the
-    * MERGED statistics — see [[scoredFromIndexes]]. Each root resolves
+    * MERGED statistics ([[Dsl.Served]]'s multi-index contract: a query
+    * across k indices ranks exactly as if their documents lived in
+    * ONE index, and overlapping members refuse). Each root resolves
     * once, so a concurrent repoint of any member cannot tear the
     * query. */
   def searchAcrossIndexes(spark: SparkSession, indexDirs: Seq[String],
       terms: Seq[String], k: Int): DataFrame = {
-    import spark.implicits._
     require(indexDirs.nonEmpty, "searchAcrossIndexes: no indices given")
-    val roots = indexDirs.map(requireIndex(spark, _))
-    val w = Window.orderBy($"score".desc, $"doc_id")
-    scoredFromIndexes(spark, roots, terms)
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(k)
-      .withColumn("rk", row_number().over(w))
-      .select($"rk", $"doc_id", $"n_matched", $"tf_total", $"dl")
-      .orderBy($"rk")
+    hitPage(servedScored(spark, indexDirs, terms), k, 0)
   }
+
+  /** The gated scored rows (doc_id, dl, tf_total, n_matched, score) of
+    * a BM25 `match` on [[DefaultField]] over `terms` AS GIVEN, compiled
+    * by [[Dsl.Served]] over the resolved roots of `indexDirs` (each
+    * resolved once here; [[indexRoot]] is idempotent). The terms are
+    * raw index tokens, never re-analysed: a term matches exactly the
+    * postings token it spells. A repeated term scores once per
+    * occurrence in both engines, but the DSL's provenance counts it
+    * once, so n_matched/tf_total re-derive from the per-key tfs per
+    * occurrence — the [[bm25ScoredOf]] columns. */
+  private def servedScored(spark: SparkSession, indexDirs: Seq[String],
+      terms: Seq[String]): DataFrame = {
+    require(terms.nonEmpty, "served match: no terms given")
+    val keys = terms.distinct
+    Dsl.scored(Dsl.Served(spark, indexDirs.map(requireIndex(spark, _))),
+        Dsl.Body(Dsl.MatchQ(DefaultField, terms, BigDecimal(1), andOp = false),
+          0, Seq.empty, 0, Seq.empty, None, None, None))
+      .select((Seq(col("doc_id"), col("dl"), col("score")) ++
+        terms.zipWithIndex.map { case (t, i) =>
+          col(s"tf${keys.indexOf(t) + 1}").as(s"tf${i + 1}") }): _*)
+      .select(col("doc_id"), col("dl"), tfTotalCol(terms.size).as("tf_total"),
+        nMatchedCol(terms.size).as("n_matched"), col("score"))
+  }
+
+  /** Search's hit page (rk, doc_id, n_matched, tf_total, dl): the top
+    * `k` scored rows, ranked from `baseRank` + 1. */
+  private def hitPage(scored: DataFrame, k: Int, baseRank: Int): DataFrame =
+    topRanked(scored, k, "rk")
+      .select((col("rk") + baseRank).as("rk"), col("doc_id"),
+        col("n_matched"), col("tf_total"), col("dl"))
+      .orderBy(col("rk"))
 
   // ------------------------------------------------- search_after paging
 
@@ -2515,95 +2481,82 @@ object Search {
   def searchAfterWithIndex(spark: SparkSession, indexDir: String,
       terms: Seq[String], k: Int, afterScore: Double, afterDoc: Long,
       baseRank: Int): DataFrame =
-    pageAfter(spark, scoredFromIndex(spark,
-      requireIndex(spark, indexDir), terms), k, afterScore, afterDoc,
-      baseRank)
+    searchAfterAcrossIndexes(spark, Seq(indexDir), terms, k, afterScore,
+      afterDoc, baseRank)
 
   /** [[searchAfterWithIndex]] across MANY indices (an alias's daily
-    * members): keyset paging over [[scoredFromIndexes]]' merged-
-    * statistics frame — the cursor comparison re-computes the same
-    * bit-exact doubles whichever member a candidate lives in, so a
-    * page can span indices without missed or duplicated hits. */
+    * members): keyset paging over the merged-statistics scored rows —
+    * the cursor comparison re-computes the same bit-exact doubles
+    * whichever member a candidate lives in, so a page can span indices
+    * without missed or duplicated hits. */
   def searchAfterAcrossIndexes(spark: SparkSession, indexDirs: Seq[String],
       terms: Seq[String], k: Int, afterScore: Double, afterDoc: Long,
       baseRank: Int): DataFrame = {
     require(indexDirs.nonEmpty, "searchAfterAcrossIndexes: no indices given")
-    pageAfter(spark, scoredFromIndexes(spark,
-      indexDirs.map(requireIndex(spark, _)), terms), k, afterScore,
+    pageAfter(servedScored(spark, indexDirs, terms), k, afterScore,
       afterDoc, baseRank)
   }
 
-  private def pageAfter(spark: SparkSession, scored: DataFrame, k: Int,
-      afterScore: Double, afterDoc: Long, baseRank: Int): DataFrame = {
-    import spark.implicits._
-    val w = Window.orderBy($"score".desc, $"doc_id")
-    scored
-      .filter($"n_matched" > 0)
-      .filter($"score" < afterScore ||
-        ($"score" === afterScore && $"doc_id" > afterDoc))
-      .orderBy($"score".desc, $"doc_id").limit(k)
-      .withColumn("rk", row_number().over(w) + lit(baseRank))
-      .select($"rk", $"doc_id", $"n_matched", $"tf_total", $"dl")
-      .orderBy($"rk")
-  }
+  private def pageAfter(scored: DataFrame, k: Int, afterScore: Double,
+      afterDoc: Long, baseRank: Int): DataFrame =
+    hitPage(scored.filter(col("score") < afterScore ||
+      (col("score") === afterScore && col("doc_id") > afterDoc)), k, baseRank)
 
   /** The cursor a client would carry between pages: the k-th hit's
-    * (score, doc_id) — the LAST row of page 1 in the total order,
-    * fetched as the 1-row tail aggregate (total order reversed, limit
-    * 1). None when fewer than k docs match (no further pages). The
+    * (score, doc_id) — the LAST row of page 1 in the total order.
+    * None when fewer than k docs match (no further pages). The
     * single-row collect IS the protocol: ES returns the sort values
     * in the response and the client echoes them back — driver-sized
     * by definition, never a data-plane collect. */
   def searchCursor(spark: SparkSession, indexDir: String,
       terms: Seq[String], k: Int): Option[(Double, Long)] =
-    cursorOf(spark, scoredFromIndex(spark,
-      requireIndex(spark, indexDir), terms), k)
+    searchCursorAcross(spark, Seq(indexDir), terms, k)
 
   /** [[searchCursor]] across many indices — page 1's tail under the
     * merged statistics. */
   def searchCursorAcross(spark: SparkSession, indexDirs: Seq[String],
       terms: Seq[String], k: Int): Option[(Double, Long)] = {
     require(indexDirs.nonEmpty, "searchCursorAcross: no indices given")
-    cursorOf(spark, scoredFromIndexes(spark,
-      indexDirs.map(requireIndex(spark, _)), terms), k)
+    cursorOf(servedScored(spark, indexDirs, terms), k)
   }
 
-  private def cursorOf(spark: SparkSession, scored: DataFrame,
-      k: Int): Option[(Double, Long)] = {
-    import spark.implicits._
+  private def cursorOf(scored: DataFrame, k: Int): Option[(Double, Long)] = {
     // ONE job: the page is bounded by limit(k), so collecting it and
     // reading both the row count and the tail from the array costs k
     // driver rows — running a separate count() would re-execute the
     // whole index-scoring pipeline a second time per cursor fetch
     val rows = scored
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(k)
-      .select($"score", $"doc_id").collect()
+      .orderBy(col("score").desc, col("doc_id")).limit(k)
+      .select(col("score"), col("doc_id")).collect()
     if (rows.length < k) None
     else Some((rows.last.getDouble(0), rows.last.getLong(1)))
   }
 
   /** Registered query: page TWO of the [[bm25Served]] ranking via
-    * [[searchAfterWithIndex]] — cursor from [[searchCursor]] (page
-    * 1's last hit), emitting absolute ranks [[TopK]]+1..2·[[TopK]].
+    * keyset paging ([[searchAfterWithIndex]]'s) — cursor from page
+    * 1's last hit ([[searchCursor]]'s), emitting absolute ranks
+    * [[TopK]]+1..2·[[TopK]].
     * The ORACLE deliberately computes the page by global ROW_NUMBER
     * offset instead: keyset ≡ offset under a total order is exactly
     * the invariant `search_after` promises, so the oracle-green here
     * is the pagination-correctness proof itself. */
-  def searchAfter(spark: SparkSession, dir: String): DataFrame = {
-    val idx = sharedIndexDir(spark, dir)
-    // the cursor fetch (page 1's tail, a bounded collect — the ES
-    // protocol) and the page-2 frame are TWO actions over the same
-    // scored pipeline; sharing it runs the index-scoring lineage
-    // (postings + doclen + stats + dfs) once, and the keyset
-    // comparison reads bit-identical doubles from the same
-    // materialized rows. The frame is candidate-grain integers.
-    val scored = Dsl.share(
-      scoredFromIndex(spark, requireIndex(spark, idx), QueryTerms))
-    val (s, d) = cursorOf(spark, scored, TopK)
+  def searchAfter(spark: SparkSession, dir: String): DataFrame =
+    pageTwo(spark, Seq(sharedIndexDir(spark, dir)), "search_after")
+
+  /** Page two of the [[QueryTerms]] ranking served across `indexDirs`:
+    * the cursor fetch (page 1's tail, a bounded collect — the ES
+    * protocol) and the page-2 frame are TWO actions over the same
+    * scored rows; sharing them runs the index-scoring lineage
+    * (postings + doclen + stats + dfs) once, and the keyset comparison
+    * reads bit-identical doubles from the same materialized rows. The
+    * frame is candidate-grain integers. */
+  private def pageTwo(spark: SparkSession, indexDirs: Seq[String],
+      name: String): DataFrame = {
+    val scored = Dsl.share(servedScored(spark, indexDirs, QueryTerms))
+    val (s, d) = cursorOf(scored, TopK)
       .getOrElse(throw new IllegalStateException(
-        s"search_after: fewer than $TopK matches — no second page"))
-    pageAfter(spark, scored, TopK, s, d, TopK)
+        s"$name: fewer than $TopK matches — no second page"))
+    pageAfter(scored, TopK, s, d, TopK)
   }
 
   val searchAfterSql: String =
@@ -2833,27 +2786,15 @@ object Search {
     suggestWithIndex(spark, sharedIndexDir(spark, dir), SuggestPrefix, SuggestK)
 
   /** [[hybridRrf]] with the TEXT leg served from the index — the
-    * deployment shape of hybrid retrieval: BM25 ranks come from
-    * bucket-pruned postings via the shared [[scoredFromIndex]]
-    * expressions (bit-identical ranks to the scan leg), the vector
-    * leg and the RRF fusion are unchanged, and the fusion join still
-    * touches only the two pooled lists (≤ 2·[[RrfPool]] rows). */
+    * deployment shape of hybrid retrieval: BM25 ranks come from the
+    * served `match` ([[servedScored]], bit-identical ranks to the scan
+    * leg), the vector leg and the RRF fusion are [[hybridRrf]]'s, and
+    * the fusion join still touches only the two pooled lists
+    * (≤ 2·[[RrfPool]] rows). */
   def hybridWithIndex(spark: SparkSession, indexDir: String,
-      emb: DataFrame, terms: Seq[String]): DataFrame = {
-    import emb.sparkSession.implicits._
-    val w = Window.orderBy($"score".desc, $"doc_id")
-    val text = scoredFromIndex(spark, requireIndex(spark, indexDir), terms)
-      .filter($"n_matched" > 0)
-      .orderBy($"score".desc, $"doc_id").limit(RrfPool)
-      .withColumn("r_text", row_number().over(w))
-      .select($"doc_id", $"r_text")
-    val vec = vecRankedOf(emb, RrfPool)
-    text.join(vec, Seq("doc_id"), "full_outer")
-      .select($"doc_id", $"r_text", $"r_vec",
-        (coalesce(lit(1.0) / (lit(RrfK) + $"r_text"), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + $"r_vec"), lit(0.0))).as("rrf"))
-      .orderBy($"rrf".desc, $"doc_id").limit(RrfTopK)
-  }
+      emb: DataFrame, terms: Seq[String]): DataFrame =
+    hybridOf(topRanked(servedScored(spark, Seq(indexDir), terms),
+      RrfPool, "r_text"), emb)
 
   /** Registered query: [[hybridRrf]] with its text leg SERVED from the
     * session-shared index — oracle-checked against the same SQL. */
@@ -3384,22 +3325,11 @@ object Search {
   }
 
   /** Registered query: PAGE TWO of the ranking across the daily
-    * indices — [[searchCursorAcross]] + [[searchAfterAcrossIndexes]],
-    * same oracle as the single-index `search_after` (keyset paging
+    * indices — [[searchAfter]]'s body over the members' merged
+    * statistics, same oracle as the single-index `search_after` (keyset paging
     * must hold across an alias exactly as within one index). */
-  def searchAfterMulti(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = sharedDailyIndexDirs(spark, dir)._1
-    // cursor + page 2 share ONE scored frame — the [[searchAfter]]
-    // sharing, multi-index form (the merged-statistics pipeline across
-    // the daily members is 3× the single-index lineage)
-    val scored = Dsl.share(
-      scoredFromIndexes(spark, dirs.map(requireIndex(spark, _)),
-        QueryTerms))
-    val (s, d) = cursorOf(spark, scored, TopK)
-      .getOrElse(throw new IllegalStateException(
-        s"search_after_multi: fewer than $TopK matches — no second page"))
-    pageAfter(spark, scored, TopK, s, d, TopK)
-  }
+  def searchAfterMulti(spark: SparkSession, dir: String): DataFrame =
+    pageTwo(spark, sharedDailyIndexDirs(spark, dir)._1, "search_after_multi")
 
   /** Registered query: [[searchFacets]] served across the daily
     * indices ([[facetsAcrossIndexes]]) — same oracle as the scan and

@@ -150,6 +150,25 @@ class SearchSpec extends SparkSpec {
       "index serving must equal the corpus-scan ranking exactly")
   }
 
+  test("served match takes raw terms as given: a repeated term counts per occurrence, an unanalysed one matches nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graftrawterms")
+      .resolve("idx").toString
+    val docs = Seq((0L, "alpha beta"), (1L, "alpha alpha gamma"),
+      (2L, "beta gamma"), (3L, "delta")).toDF("doc_id", "text")
+    Search.buildSearchIndexOf(docs, root)
+    val terms = Seq("alpha", "beta", "alpha", "Alpha")
+    val served = Search.searchWithIndex(spark, root, terms, 10)
+      .collect().map(_.toSeq).toSeq
+    val scanned = Search.bm25RankedOf(docs, terms, 10, "rk")
+      .select($"rk", $"doc_id", $"n_matched", $"tf_total", $"dl")
+      .orderBy($"rk").collect().map(_.toSeq).toSeq
+    assert(served == scanned,
+      "served rows must equal the scan reference's for the same raw terms")
+    assert(served.map(r => (r(1), r(2), r(3))).toSet ==
+      Set((0L, 3, 3), (1L, 2, 4), (2L, 1, 1)),
+      s"n_matched/tf_total count each occurrence of a repeated term: $served")
+  }
+
   test("served multi-field bm25 reproduces the scan path bit-for-bit; head boost reorders") {
     val root = java.nio.file.Files.createTempDirectory("graftmfidx")
       .resolve("idx").toString
@@ -702,6 +721,38 @@ class SearchSpec extends SparkSpec {
       "post-merge index must be bit-identical to a rebuild without the deleted docs")
   }
 
+  test("served rankers keep tombstoned docs in the statistics: a delete removes only the victim") {
+    import spark.implicits._
+    // deleting doc 2 would drop merge's df 2 → 1 and N 4 → 3 under the
+    // other convention (tombstones out of the statistics), raising
+    // merge's idf enough to lift doc 1 (dup merge) above doc 0 (dup
+    // vector alpha)
+    val root = java.nio.file.Files.createTempDirectory("grafttombstats")
+      .resolve("idx").toString
+    Search.buildSearchIndexOf(Seq((0L, "dup vector alpha"), (1L, "dup merge"),
+        (2L, "merge"), (3L, "alpha")).toDF("doc_id", "text")
+      .withColumn("lang", lit("en")), root)
+    val terms = Search.QueryTerms
+    // every served ranker's rows without rk (ranks below the victim
+    // shift up by one), in rank order
+    def served(): Seq[(String, Seq[Seq[Any]])] = Seq(
+      "search" -> Search.searchWithIndex(spark, root, terms, 10),
+      "multifield" -> Search.multifieldWithIndex(spark, root, terms, 10),
+      "bool" -> Search.boolWithIndex(spark, root),
+      "passage" -> Search.passageWithIndex(spark, root, terms, 10),
+      "expansion" -> Search.expansionWithIndex(spark, root, terms, 2, 1, 10))
+      .map { case (n, df) => n -> df.collect().map(_.toSeq.tail).toSeq }
+    val before = served()
+    assert(before.head._2.map(_.head) == Seq(0L, 1L, 2L),
+      s"fixture: doc 0 outranks doc 1 before the delete: ${before.head}")
+    Search.deleteFromSearchIndex(spark, root, Seq(2L).toDF("doc_id"), "d1")
+    val moved = before.zip(served()).collect {
+      case ((n, b), (_, a)) if a != b.filterNot(_.head == 2L) => s"$n: $b → $a"
+    }
+    assert(moved.isEmpty, "a delete must leave the survivors' rows and " +
+      s"order as they were: ${moved.mkString("; ")}")
+  }
+
   test("tombstoned docs are unservable through term vectors and MLT seeding") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("grafttombserve")
@@ -1059,7 +1110,9 @@ class SearchSpec extends SparkSpec {
       try {
         val frames = Seq(matchB, boolB, phraseB).map(Dsl.searchDslFromIndexes(spark, Seq(root), _)) ++
           Seq(Dsl.dslAggsFromIndexes(spark, Seq(root), aggB),
-            Dsl.msearchFromIndexes(spark, Seq(root), Seq(matchB, boolB, phraseB)))
+            Dsl.msearchFromIndexes(spark, Seq(root), Seq(matchB, boolB, phraseB)),
+            Search.searchWithIndex(spark, root, terms, 10),
+            Search.searchAcrossIndexes(spark, Seq(root), terms, 10))
         org.apache.spark.graftbench.BenchBridge.drainListeners(sc)
         frames
       } finally sc.removeSparkListener(listener)
@@ -1071,6 +1124,10 @@ class SearchSpec extends SparkSpec {
       assert(rows(df) == rows(Dsl.searchDslOf(docs, b)), s"served != scan for $b")
     }
     assert(rows(built(3)) == rows(Dsl.dslAggsOf(docs, aggB)), "served aggs != scan")
+    Seq(built(5), built(6)).foreach { df =>
+      assert(rows(df) == rows(Dsl.searchDslOf(docs, matchB)),
+        "Search's served match != the scan DSL match")
+    }
   }
 
   test("index reads are fresh: appends show on the next request, a re-append replaces its epoch") {
